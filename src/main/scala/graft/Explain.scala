@@ -1,21 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
 /** Plan-inspection aid: `runMain graft.Explain <query> [sfDir]` prints the
-  * formatted plan for one SparkEntry query (local iteration only).
+  * formatted plan for one SparkEntry query, planned by the product session
+  * ([[graft.core.GraftSession.local]]).
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      // same extensions surface as Verify/Bench: queries that resolve
-      // graft_topk & co through SQL registration must be explainable too
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local(cores = 4)
     SparkEntry.queries(name)(spark, sfDir).explain("formatted")
     spark.stop()
   }

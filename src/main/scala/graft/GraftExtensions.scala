@@ -13,9 +13,12 @@ import graft.functions.{DotProduct, Hash60, MinhashBands}
   * spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
   * }}}
   *
-  * so `graft_dot` works from plain SQL cluster-wide without per-session
-  * registration (`VectorOps.register` remains the programmatic route),
-  * plus the [[graft.plans.RewriteIntervalJoin]] optimizer rule, which
+  * so `graft_dot`, `graft_hash60` & co resolve by name from plain SQL
+  * text. This is the only place the names are registered: the DataFrame
+  * API builds the same expressions directly through their Column
+  * constructors (`VectorOps.dot`, `TextHash.hash60`,
+  * `MinhashBands.bandsCol`), so library operators need no registration.
+  * Also installs the [[graft.plans.RewriteIntervalJoin]] optimizer rule, which
   * turns naive `abs(a.ts - b.ts) <= w` inner joins written in plain SQL
   * into the bucketed equi-join shape instead of a nested-loop plan.
   */

@@ -11,9 +11,8 @@ object Verify {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
-      // the library's cluster-wide registration path: native expressions
-      // (graft_dot, graft_hash60) resolve through the extensions hook here,
-      // not just via the programmatic VectorOps.register
+      // the library's cluster-wide SQL surface: native expressions resolve
+      // by name (graft_dot, graft_hash60) in SQL text through this hook
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.warehouse.dir", "target/warehouse")
       .config("spark.ui.enabled", "false")

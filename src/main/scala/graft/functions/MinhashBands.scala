@@ -1,9 +1,11 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.graft.ColumnShim
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -48,6 +50,15 @@ case class MinhashBands(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): MinhashBands =
     copy(child = newChild)
+}
+
+object MinhashBands {
+
+  /** Column builder: the band-hash array of a string column (SQL text
+    * spells it `graft_minhash_bands`, via graft.GraftExtensions).
+    */
+  def bandsCol(text: Column): Column =
+    ColumnShim.column(MinhashBands(ColumnShim.expression(text)))
 }
 
 object MinhashBandsUtil {

@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnShim
 
 /** Deterministic content hashing shared by the dedup / similarity /
   * fingerprinting operators (extension tier — the reference's unused fuzzy
@@ -43,17 +44,12 @@ object TextHash {
   /** Non-negative 60-bit hash of a column's UTF-8 bytes (first 15 hex chars
     * of md5), via the native codegen expression graft.functions.Hash60 —
     * same value as `conv(substring(md5(c),1,15),16,10)` without the per-call
-    * hex-string/parse allocations. Callers must have run
-    * VectorOps.register(spark) (all query modules do).
+    * hex-string/parse allocations. Builds the expression directly, so it
+    * composes anywhere a Column does, higher-order-function lambdas
+    * included; SQL text spells it `graft_hash60` (graft.GraftExtensions).
     */
   def hash60(c: Column): Column =
-    call_function("graft_hash60", c)
-
-  /** [[hash60]] as a SQL-expression string (for use inside higher-order
-    * function lambdas, where only expression text composes).
-    */
-  def hash60Expr(x: String): String =
-    s"graft_hash60($x)"
+    ColumnShim.column(Hash60(ColumnShim.expression(c)))
 
   /** DuckDB twin of [[hash60]]; `x` is a SQL expression string. */
   def hash60Sql(x: String): String =

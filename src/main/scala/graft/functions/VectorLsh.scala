@@ -44,8 +44,8 @@ object VectorLsh {
       s"(${hash60Sql(s"'${p}_' || CAST(d AS VARCHAR)")} % 2001 - 1000) / CAST(1000 AS DOUBLE))"
 
   /** Bucket id = sign bits of the dot products against the fixed planes,
-    * over a double-array column named `v`. Uses the native graft_dot against
-    * literal coefficient arrays (callers register VectorOps first).
+    * over a double-array column named `v`. Uses the native dot product
+    * ([[VectorOps.dot]]) against literal coefficient arrays.
     * The plane-count parameter is the production sizing dial documented on
     * [[NumPlanes]]; ScaleStress drives it as planes ≈ NumPlanes + log2(k)
     * so bucket occupancy stays constant while the corpus grows.
@@ -53,7 +53,7 @@ object VectorLsh {
   def bucketColFor(planes: Int): Column =
     (0 until planes).map { p =>
       val coefs = array(planeCoefs(p).map(lit(_)): _*)
-      val dot = call_function("graft_dot", col("v"), coefs)
+      val dot = VectorOps.dot(col("v"), coefs)
       when(dot >= 0, lit(1L << p)).otherwise(lit(0L))
     }.reduce(_ + _)
 

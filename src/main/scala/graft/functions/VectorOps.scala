@@ -1,10 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graft.ColumnShim
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Native dot product over two double-array columns.
@@ -90,28 +91,11 @@ case class DotProduct(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Registration for the graft native expressions: `graft_dot(a, b)` and
-  * `graft_hash60(s)` become callable from any Column/SQL expression after
-  * [[VectorOps.register]]. Idempotent; the dedup/similarity/text query
-  * modules call it before building their plans.
+/** Column constructor for [[DotProduct]]: `dot(a, b)` builds the
+  * expression directly, with no session state involved. SQL text reaches
+  * the same expression as `graft_dot(a, b)` through [[graft.GraftExtensions]].
   */
 object VectorOps {
-  def register(spark: SparkSession): Unit = spark match {
-    case s: org.apache.spark.sql.classic.SparkSession =>
-      s.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_dot", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-      s.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_hash60", exprs => Hash60(exprs(0)), "built-in")
-      s.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_minhash_bands", exprs => MinhashBands(exprs(0)), "built-in")
-    case _ =>
-      // no caller has a built-in fallback — every site unconditionally
-      // emits call_function("graft_..."), so a silent no-op here would
-      // surface later as an "undefined function" AnalysisException far
-      // from the cause; refuse loudly at registration instead
-      throw new UnsupportedOperationException(
-        "graft native expressions require a classic (JVM) SparkSession: " +
-          "this session type cannot host internal Expression registration " +
-          s"(got ${spark.getClass.getName})")
-  }
+  def dot(a: Column, b: Column): Column =
+    ColumnShim.column(DotProduct(ColumnShim.expression(a), ColumnShim.expression(b)))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
-import graft.functions.{TextHash, VectorOps}
+import graft.functions.{MinhashBands, TextHash}
 import graft.functions.TextHash.hash60
 
 /** Reusable text-deduplication OPERATORS over any (doc_id, text) frame —
@@ -58,7 +58,6 @@ object TextDedup {
     * unaffected by duplicate shingles, so that shuffle is pure waste.
     */
   private[graft] def minhashSigsAgg(docs: DataFrame): DataFrame = {
-    VectorOps.register(docs.sparkSession) // graft_hash60
     // shingles via explode(sequence) + substring: identical values to
     // charShingles but fully codegen'd — no interpreted transform building
     // a ~|text|-element string array per row before the explode
@@ -98,7 +97,6 @@ object TextDedup {
     * must land in the child projection, referenced by attribute.
     */
   def minhashBandsInRow(docs: DataFrame, keep: Seq[String] = Nil): DataFrame = {
-    VectorOps.register(docs.sparkSession) // graft_minhash_bands
     val keepCols = keep.map(col)
     // spread BEFORE the per-row shingle loop: a single-file micro-batch (or
     // an unsplit scan) otherwise runs the corpus's entire per-shingle hash
@@ -107,7 +105,7 @@ object TextDedup {
     // signature stage's spread.
     Tables.spread(docs.select(col("doc_id") +: keepCols :+ col("text"): _*))
       .select(col("doc_id") +: keepCols :+
-        call_function("graft_minhash_bands", col("text")).as("bhs"): _*)
+        MinhashBands.bandsCol(col("text")).as("bhs"): _*)
       .select(col("doc_id") +: keepCols :+ posexplode(col("bhs")): _*)
       .select(col("doc_id") +: keepCols :+
         col("pos").cast("int").as("band") :+ col("col").as("bh"): _*)
@@ -190,7 +188,7 @@ object TextDedup {
   }
 
   /** [[incrementalVerdicts]] for a caller that already holds the batch's
-    * MATERIALIZED banded signature frame (band, bh, doc_id). Contract: the
+    * MATERIALIZED banded signature frame (doc_id, band, bh). Contract: the
     * frame must be exactly `minhashBandsAgg(batch)` for the ingested batch
     * and must be cheap to re-derive (materialized, or a filter over a
     * materialized frame) — every consumer below re-reads it, including two

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.VectorOps
+import graft.functions.VectorOps.dot
 
 /** Reusable cosine similarity-search OPERATORS over any (id, v) vector
   * frames — the generic forms of the n1/n2 query shapes
@@ -31,10 +31,9 @@ object VectorSearch {
 
   private def prep(df: DataFrame, idAs: String, vAs: String,
       nAs: String): DataFrame = {
-    VectorOps.register(df.sparkSession)
     df.withColumnRenamed("id", idAs)
       .withColumnRenamed("v", vAs)
-      .withColumn(nAs, sqrt(expr(s"graft_dot($vAs, $vAs)")))
+      .withColumn(nAs, sqrt(dot(col(vAs), col(vAs))))
       // Spark orders NaN ABOVE every number, so `> 0` alone would admit a
       // NaN-component vector (NaN norm) and its NaN scores would rank
       // first — the exact hazard the zero-norm filter exists to kill
@@ -60,7 +59,7 @@ object VectorSearch {
     val c = prep(corpus, "neighbor_id", "v2", "n2")
     val scored = broadcast(q).join(c, col("query_id") =!= col("neighbor_id"))
       .withColumn("cos",
-        round(expr("graft_dot(v1, v2)") / (col("n1") * col("n2")), 4))
+        round(dot(col("v1"), col("v2")) / (col("n1") * col("n2")), 4))
     rank(scored, k, Nil)
   }
 
@@ -84,33 +83,32 @@ object VectorSearch {
     */
   def quantizedRescoreTopK(queries: DataFrame, corpus: DataFrame,
       k: Int, pool: Int): DataFrame = {
-    VectorOps.register(queries.sparkSession)
     def quantize(df: DataFrame): DataFrame =
       df.withColumn("amax", expr("array_max(transform(v, x -> abs(x)))"))
         .filter(col("amax") > 0 && !isnan(col("amax")))
         .withColumn("qv", expr(
           "transform(v, x -> CAST(CAST(round(x * 127.0 / amax, 0) AS BIGINT) AS DOUBLE))"))
-        .withColumn("nrm", sqrt(expr("graft_dot(v, v)")))
+        .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
     val q = quantize(queries).select(col("id").as("query_id"),
       col("qv").as("q_qv"), col("amax").as("q_amax"), col("nrm").as("q_nrm"))
     val c = quantize(corpus).select(col("id").as("neighbor_id"),
       col("qv").as("c_qv"), col("amax").as("c_amax"), col("nrm").as("c_nrm"))
     val scored = broadcast(q).join(c, col("query_id") =!= col("neighbor_id"))
       .withColumn("qcos", round(
-        expr("graft_dot(q_qv, c_qv)") * col("q_amax") * col("c_amax") /
+        dot(col("q_qv"), col("c_qv")) * col("q_amax") * col("c_amax") /
           lit(16129.0) / (col("q_nrm") * col("c_nrm")), 4))
     val wq = Window.partitionBy("query_id").orderBy(desc("qcos"), asc("neighbor_id"))
     val cand = scored.withColumn("crank", row_number().over(wq))
       .filter(col("crank") <= pool)
       .select("query_id", "neighbor_id", "qcos")
     val qf = queries.select(col("id").as("query_id"), col("v").as("v1"),
-      sqrt(expr("graft_dot(v, v)")).as("n1"))
+      sqrt(dot(col("v"), col("v"))).as("n1"))
     val cf = corpus.select(col("id").as("neighbor_id"), col("v").as("v2"),
-      sqrt(expr("graft_dot(v, v)")).as("n2"))
+      sqrt(dot(col("v"), col("v"))).as("n2"))
     val rescored = cf.join(broadcast(cand), Seq("neighbor_id"))
       .join(broadcast(qf), Seq("query_id"))
       .withColumn("cos",
-        round(expr("graft_dot(v1, v2)") / (col("n1") * col("n2")), 4))
+        round(dot(col("v1"), col("v2")) / (col("n1") * col("n2")), 4))
     val w = Window.partitionBy("query_id").orderBy(desc("cos"), asc("neighbor_id"))
     rescored.withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
@@ -136,7 +134,7 @@ object VectorSearch {
       .withColumnRenamed("label", "neighbor_label")
     val scored = broadcast(q).join(c, col("query_label") =!= col("neighbor_label"))
       .withColumn("cos",
-        round(expr("graft_dot(v1, v2)") / (col("n1") * col("n2")), 4))
+        round(dot(col("v1"), col("v2")) / (col("n1") * col("n2")), 4))
     val w = Window.partitionBy("query_id").orderBy(desc("cos"), asc("neighbor_id"))
     scored
       .withColumn("rank", row_number().over(w).cast("long"))
@@ -157,7 +155,7 @@ object VectorSearch {
     val scored = broadcast(q).join(c, Seq("bucket"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("cos",
-        round(expr("graft_dot(v1, v2)") / (col("n1") * col("n2")), 4))
+        round(dot(col("v1"), col("v2")) / (col("n1") * col("n2")), 4))
     rank(scored, k, Seq("bucket"))
   }
 }

@@ -8,7 +8,6 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextHash.hash60
-import graft.functions.VectorOps
 import graft.queries.Sampling
 
 /** Training-shard EXPORT — the terminal sink of the corpus pipeline: the
@@ -409,7 +408,6 @@ object ExportJob {
         "SPARK_GRAFT_EXPORT_SHARDS to the count the zone was written " +
         "with (maintenance will then persist it), or rebuild the zone")
     if (ids.max >= n) fail(s"directory shard_id=${ids.max} exists")
-    VectorOps.register(spark)
     val probes = Seq(ids.head, ids(ids.size / 2), ids.last).distinct
     val sample = readShards(spark, root, probes)
     val bad = sample.filter(
@@ -464,7 +462,6 @@ object ExportJob {
     */
   def writeTrainingShardsIncremental(spark: SparkSession, dir: String,
       outDir: String, requestedShards: Option[Int] = None): DataFrame = {
-    VectorOps.register(spark) // graft_hash60
     val root = zoneDataRoot(outDir)
     val nShards = resolveRootShards(spark, root, requestedShards)
     val docs = graft.core.Tables(spark, dir).documents
@@ -557,7 +554,6 @@ object ExportJob {
     */
   def upsertShards(spark: SparkSession, outDir: String,
       upserts: DataFrame): Unit = {
-    VectorOps.register(spark)
     val root = zoneDataRoot(outDir)
     val nShards = resolveRootShards(spark, root, None)
     val up = upserts
@@ -679,7 +675,6 @@ object ExportJob {
       n
     }
     if (cur == newShards) return
-    VectorOps.register(spark)
     val nextV = pointed.map { name =>
       val LayoutDirPattern(v) = name: @unchecked
       v.toInt + 1

@@ -5,7 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.{BoundedMemo, Tables}
-import graft.functions.{TextHash, VectorLsh, VectorOps}
+import graft.functions.{TextHash, VectorLsh}
+import graft.functions.VectorOps.dot
 import graft.functions.TextHash.{hash60, hash60Sql, P}
 
 /** Document deduplication — the training-data-pipeline operator family
@@ -310,10 +311,8 @@ object Dedup {
     })
 
   /** SimHash signatures per document. */
-  def simhash(spark: SparkSession, dir: String): DataFrame = {
-    VectorOps.register(spark) // graft_hash60
+  def simhash(spark: SparkSession, dir: String): DataFrame =
     sigsFor(spark, dir).orderBy("doc_id")
-  }
 
   val simhashSql: String =
     s"""WITH $simhashSigsSql
@@ -328,10 +327,8 @@ object Dedup {
     * shuffles on a small integer key over a 131k-bucket space, so it
     * survives a 100x corpus (measured: ScaleStress x100).
     */
-  def simhashPairs(spark: SparkSession, dir: String): DataFrame = {
-    VectorOps.register(spark) // graft_hash60
+  def simhashPairs(spark: SparkSession, dir: String): DataFrame =
     pairsFor(spark, dir).orderBy("d1", "d2")
-  }
 
   val simhashPairsSql: String =
     s"""WITH $simhashSigsSql
@@ -452,10 +449,9 @@ object Dedup {
     * twin via [[embeddingNearDupSqlFor]].
     */
   def embeddingNearDup(spark: SparkSession, dir: String, planes: Int): DataFrame = {
-    VectorOps.register(spark)
     val e = Tables(spark, dir).embeddings
       .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-      .withColumn("norm", sqrt(expr("graft_dot(v, v)")))
+      .withColumn("norm", sqrt(dot(col("v"), col("v"))))
       // zero-norm and NaN-norm vectors have no defined cosine: 0/0 = NaN,
       // and BOTH engines rank NaN above every real similarity under
       // ORDER BY cos DESC, so one broken vector would evict every genuine
@@ -470,7 +466,7 @@ object Dedup {
     a.join(b, Seq("bucket"))
       .filter(col("id1") < col("id2"))
       .withColumn("cos",
-        round(expr("graft_dot(v1, v2)") / (col("n1") * col("n2")), 4))
+        round(dot(col("v1"), col("v2")) / (col("n1") * col("n2")), 4))
       .select(col("id1"), col("id2"), col("cos"))
       .orderBy(desc("cos"), asc("id1"), asc("id2"))
       .limit(20)
@@ -539,7 +535,6 @@ object Dedup {
     * records the curve.
     */
   def semanticDedup(spark: SparkSession, dir: String, numCells: Int): DataFrame = {
-    VectorOps.register(spark)
     // cells + vectors off one scan (semanticCellsFull): the previous
     // e ⋈ cells join re-shuffled the whole corpus by vec_id just to pair
     // each vector with its own cell id — assignment is an inline
@@ -559,7 +554,7 @@ object Dedup {
     a.join(b, Seq("cell"))
       .filter(col("id2") < col("id1"))
       .withColumn("cos",
-        round(expr("graft_dot(v1, v2)") / (col("n1") * col("n2")), 4))
+        round(dot(col("v1"), col("v2")) / (col("n1") * col("n2")), 4))
       // NOT isnan too: a zero-norm vector's 0/0 cosine is NaN, which BOTH
       // engines call >= threshold (NaN is greatest), so one broken vector
       // would mark every cell-mate a "semantic dup" on a NaN witness
@@ -601,7 +596,6 @@ object Dedup {
     * the group-by key domain is the distinct-window space.
     */
   def substringDups(spark: SparkSession, dir: String): DataFrame = {
-    VectorOps.register(spark) // graft_hash60
     val wins = Tables.spread(
       Tables(spark, dir).documents.select("doc_id", "text"))
       .filter(length(col("text")) >= 64)
@@ -807,7 +801,6 @@ object Dedup {
     * proving the iterative propagation exact, not approximate.
     */
   def dupClusters(spark: SparkSession, dir: String): DataFrame = {
-    VectorOps.register(spark) // graft_hash60
     val labels = connectedComponents(pairsFor(spark, dir).select("d1", "d2"))
     // populate the composition memo as a side effect: a session that runs
     // d9 hands its fixpoint to downstream consumers (t14) for free

@@ -235,7 +235,6 @@ object EventStreaming {
     * arrival). Drained replay = batch t25 row-for-row; shared oracle.
     */
   def streamTemperatureMix(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorOps.register(spark)
     val rates = Sampling.temperatureRates(spark, dir)
     val stream = DocumentStreams.readDocuments(spark, dir)
       .select(col("doc_id"), col("source"),

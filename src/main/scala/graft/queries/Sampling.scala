@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Tables
 import graft.functions.TextHash.{hash60, hash60Sql}
-import graft.functions.VectorOps
 
 /** Corpus sampling and sharding — the two selection operators every
   * large-scale training-data pipeline runs between "cleaned" and "trained"
@@ -28,7 +27,6 @@ object Sampling {
     * groupBy gives a stratified variant for free.
     */
   def hashSample(spark: SparkSession, dir: String): DataFrame = {
-    VectorOps.register(spark) // graft_hash60
     Tables(spark, dir).documents
       .filter(
         hash60(concat(lit("graft-sample|"), col("doc_id").cast("string"))) % 20 === 0)
@@ -193,7 +191,6 @@ object Sampling {
     * OTHER strata change.
     */
   def stratifiedSample(spark: SparkSession, dir: String): DataFrame = {
-    VectorOps.register(spark) // graft_hash60
     val rate = StratumPermille.foldLeft(lit(DefaultPermille)) {
       case (acc, (lang, pm)) => when(col("lang") === lang, lit(pm)).otherwise(acc)
     }
@@ -238,7 +235,6 @@ object Sampling {
     * construction, partitioned by (source, block).
     */
   def tokenMix(spark: SparkSession, dir: String): DataFrame = {
-    VectorOps.register(spark) // graft_hash60
     val t = Tables(spark, dir).documents
       .select(col("doc_id"), col("source"),
         size(split(col("text"), " ")).cast("long").as("n_tok"),
@@ -359,7 +355,6 @@ object Sampling {
     * the driver, NO global sort shuffle. At 100 TB the cost is one scan.
     */
   def weightedSample(spark: SparkSession, dir: String): DataFrame = {
-    VectorOps.register(spark) // graft_hash60
     Tables(spark, dir).documents
       .filter(col("n_chars") > 0)
       .select(col("doc_id"), col("source"), col("n_chars"),
@@ -404,7 +399,6 @@ object Sampling {
     * [[tokenMix]]'s note.
     */
   def sourceCap(spark: SparkSession, dir: String): DataFrame = {
-    VectorOps.register(spark) // graft_hash60
     val w = Window.partitionBy("source").orderBy("h", "doc_id")
     Tables(spark, dir).documents
       .select(col("doc_id"), col("source"),
@@ -459,7 +453,6 @@ object Sampling {
     * √n·[[CapPerCell]] while per-cell window width stays Θ(√n).
     */
   def clusterCap(spark: SparkSession, dir: String, numCells: Int): DataFrame = {
-    VectorOps.register(spark) // graft_hash60
     val w = Window.partitionBy("cell").orderBy("h", "vec_id")
     Similarity.semanticCells(spark, dir, numCells = numCells)
       .withColumn("h",
@@ -537,7 +530,6 @@ object Sampling {
     * — the property that makes the eval comparable across experiments.
     */
   def leakageSplit(spark: SparkSession, dir: String): DataFrame = {
-    VectorOps.register(spark)
     val docs = Tables(spark, dir).documents.select("doc_id")
     docs.join(Dedup.clustersFor(spark, dir), Seq("doc_id"), "left")
       .withColumn("group_id", coalesce(col("cluster_id"), col("doc_id")))
@@ -661,7 +653,6 @@ object Sampling {
       .select("doc_id", "source", "n_tok", "rate_permille")
 
   def temperatureMix(spark: SparkSession, dir: String): DataFrame = {
-    VectorOps.register(spark)
     val docs = Tables(spark, dir).documents
       .select(col("doc_id"), col("source"),
         size(split(col("text"), " ")).cast("long").as("n_tok"))

@@ -5,7 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.{BoundedMemo, Tables}
-import graft.functions.{PqNearest, TopCells, TopKAgg, VectorLsh, VectorOps}
+import graft.functions.{PqNearest, TopCells, TopKAgg, VectorLsh}
+import graft.functions.VectorOps.dot
 
 /** Approximate-nearest-neighbor search over the embedding column
   * (training-data-pipeline extension; `Array[Float]` embeddings as a
@@ -34,8 +35,6 @@ object Similarity {
 
   private def asDouble(c: String): Column =
     expr(s"transform($c, x -> CAST(x AS DOUBLE))")
-
-  private val dotExpr = "graft_dot(v1, v2)"
 
   /** Exact cosine top-k for each query vector (vec_id < 20), excluding self.
     * The query side is tiny and broadcast; ranking uses row_number with an
@@ -74,7 +73,6 @@ object Similarity {
     * graft.functions.VectorLsh, shared with the d6 embedding dedup.
     */
   def lshBucketTopK(spark: SparkSession, dir: String): DataFrame = {
-    VectorOps.register(spark)
     val e = Tables(spark, dir).embeddings
       .select(col("vec_id").as("id"), asDouble("embedding").as("v"))
       .withColumn("bucket", VectorLsh.bucketCol)
@@ -109,18 +107,17 @@ object Similarity {
     * aggregation via element-wise avg over posexploded dims).
     */
   def labelCentroids(spark: SparkSession, dir: String): DataFrame = {
-    VectorOps.register(spark)
     val e = Tables(spark, dir).embeddings
       .select(col("label"), posexplode(asDouble("embedding")).as(Seq("d", "x")))
     val cent = e.groupBy("label", "d").agg(avg("x").as("m"))
       .groupBy("label")
       .agg(array_sort(collect_list(struct(col("d"), col("m")))).as("s"))
       .select(col("label"), expr("transform(s, e -> e.m)").as("v"))
-      .withColumn("norm", sqrt(expr("graft_dot(v, v)")))
+      .withColumn("norm", sqrt(dot(col("v"), col("v"))))
     val a = cent.select(col("label").as("l1"), col("v").as("v1"), col("norm").as("n1"))
     val b = cent.select(col("label").as("l2"), col("v").as("v2"), col("norm").as("n2"))
     a.join(b, col("l1") < col("l2"))
-      .withColumn("cos", round(expr(dotExpr) / (col("n1") * col("n2")), 4))
+      .withColumn("cos", round(dot(col("v1"), col("v2")) / (col("n1") * col("n2")), 4))
       .select("l1", "l2", "cos")
       .orderBy("l1", "l2")
   }
@@ -357,10 +354,9 @@ object Similarity {
     */
   def ivfTopK(spark: SparkSession, dir: String, nprobe: Int,
       lloydIters: Int = LloydIters, numCells: Int = NumCells): DataFrame = {
-    VectorOps.register(spark)
     val e0 = Tables(spark, dir).embeddings
       .select(col("vec_id"), asDouble("embedding").as("v"))
-      .withColumn("norm", sqrt(expr("graft_dot(v, v)")))
+      .withColumn("norm", sqrt(dot(col("v"), col("v"))))
     // corpus-side work (Lloyd rounds, inverted-list assignment) is widened;
     // the query side stays on the raw scan so its vec_id filter pushes down
     val e = widen(e0)
@@ -387,7 +383,7 @@ object Similarity {
     val scored = assign.join(broadcast(probe), Seq("cell"))
       .filter(col("vec_id") =!= col("query_id"))
       .join(broadcast(q), Seq("query_id"))
-      .withColumn("cos", round(expr(dotExpr) / (col("n1") * col("n2")), 4))
+      .withColumn("cos", round(dot(col("v1"), col("v2")) / (col("n1") * col("n2")), 4))
     val w = Window.partitionBy("query_id").orderBy(desc("cos"), asc("vec_id"))
     scored
       .withColumn("rank", row_number().over(w).cast("long"))
@@ -449,10 +445,9 @@ object Similarity {
     */
   private[queries] def semanticCellsFull(spark: SparkSession, dir: String,
       numCells: Int = NumCells, lloydIters: Int = LloydIters): DataFrame = {
-    VectorOps.register(spark)
     val e = widen(Tables(spark, dir).embeddings
       .select(col("vec_id"), asDouble("embedding").as("v"))
-      .withColumn("norm", sqrt(expr("graft_dot(v, v)"))))
+      .withColumn("norm", sqrt(dot(col("v"), col("v")))))
     val cents = refinedCentroidsFor(spark, dir, e, numCells, lloydIters)
     e.withColumn("cell", cellExpr(cents, col("v"), col("norm")))
   }
@@ -751,11 +746,10 @@ object Similarity {
 
   private def buildIvfIndexCold(spark: SparkSession, dir: String,
       indexDir: String, numCells: Int, lloydIters: Int): Seq[Centroid] = {
-    VectorOps.register(spark)
     import spark.implicits._
     val e = widen(Tables(spark, dir).embeddings
       .select(col("vec_id"), asDouble("embedding").as("v"))
-      .withColumn("norm", sqrt(expr("graft_dot(v, v)"))))
+      .withColumn("norm", sqrt(dot(col("v"), col("v")))))
     val cents = refinedCentroidsFor(spark, dir, e, numCells, lloydIters)
     cents.map(c => (c.cid, c.cv.toSeq, c.cnorm)).toDF("cid", "cv", "cnorm")
       .coalesce(1).write.mode("overwrite")
@@ -774,7 +768,6 @@ object Similarity {
     */
   def probeIvfIndex(spark: SparkSession, dir: String, indexDir: String,
       nprobe: Int): DataFrame = {
-    VectorOps.register(spark)
     val cents = spark.read.parquet(s"$indexDir/centroids.parquet")
       .collect().toSeq
       .map(r => Centroid(r.getLong(0), r.getSeq[Double](1).toArray, r.getDouble(2)))
@@ -814,13 +807,12 @@ object Similarity {
 
   private def probeWithCents(spark: SparkSession, dir: String,
       indexDir: String, cents: Seq[Centroid], nprobe: Int): DataFrame = {
-    VectorOps.register(spark)
     import spark.implicits._
     val memoKey = (sessionKey(spark), indexDir, dir, nprobe, centsSig(cents))
     val (probeTuples, probedCells) = probeMemo.getOrElseUpdate(memoKey, {
       val probeRows = Tables(spark, dir).embeddings
         .select(col("vec_id"), asDouble("embedding").as("v"))
-        .withColumn("norm", sqrt(expr("graft_dot(v, v)")))
+        .withColumn("norm", sqrt(dot(col("v"), col("v"))))
         .filter(col("vec_id") < NumQueries)
         .select(col("vec_id").as("query_id"),
           explode(TopCells.cellsCol(
@@ -839,7 +831,7 @@ object Similarity {
       .select(col("vec_id"), col("v").as("v2"), col("norm").as("n2"), col("cell"))
     val scored = corpus.join(broadcast(probe), Seq("cell"))
       .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cos", round(expr(dotExpr) / (col("n1") * col("n2")), 4))
+      .withColumn("cos", round(dot(col("v1"), col("v2")) / (col("n1") * col("n2")), 4))
     val w = Window.partitionBy("query_id").orderBy(desc("cos"), asc("vec_id"))
     scored
       .withColumn("rank", row_number().over(w).cast("long"))
@@ -1294,23 +1286,22 @@ object Similarity {
     */
   private def ivfPqScored(spark: SparkSession, dir: String,
       numCells: Int): DataFrame = {
-    VectorOps.register(spark)
     // coarse quantizer: IDENTICAL construction to semanticCellsFull so
     // the memoized centroids are shared, not retrained; numCells follows
     // the same √n scale schedule as n4/d11 (ScaleStress passes d11Cells)
     val eAll = widen(Tables(spark, dir).embeddings
       .select(col("vec_id"), asDouble("embedding").as("v"))
-      .withColumn("norm", sqrt(expr("graft_dot(v, v)"))))
+      .withColumn("norm", sqrt(dot(col("v"), col("v")))))
     val cents = refinedCentroidsFor(spark, dir, eAll, numCells, LloydIters)
     val e = widen(pqCorpus(spark, dir))
     val book = pqBookFor(spark, dir, e)
     // one projection: cell + M codes off the same scan
     val cands = e
-      .withColumn("norm", sqrt(expr("graft_dot(v, v)")))
+      .withColumn("norm", sqrt(dot(col("v"), col("v"))))
       .withColumn("cell", cellExpr(cents, col("v"), col("norm")))
       .select(col("vec_id") +: col("cell") +: pqCodeCols(book): _*)
     val q = pqCorpus(spark, dir).filter(col("vec_id") < NumQueries)
-      .withColumn("norm", sqrt(expr("graft_dot(v, v)")))
+      .withColumn("norm", sqrt(dot(col("v"), col("v"))))
       .select(col("vec_id").as("query_id"), col("v").as("v1"), col("norm").as("n1"))
     val probe = q.select(col("query_id"),
       explode(TopCells.cellsCol(
@@ -1455,13 +1446,13 @@ object Similarity {
     val fetched = nbr.join(broadcast(pooled), nbr("vec_id") === pooled("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"), col("adist"),
         col("v").as("nv"))
-      .withColumn("nn", sqrt(expr("graft_dot(nv, nv)")))
+      .withColumn("nn", sqrt(dot(col("nv"), col("nv"))))
     val q = pqCorpus(spark, dir).filter(col("vec_id") < NumQueries)
-      .withColumn("norm", sqrt(expr("graft_dot(v, v)")))
+      .withColumn("norm", sqrt(dot(col("v"), col("v"))))
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("norm").as("qn"))
     val rescored = fetched.join(broadcast(q), Seq("query_id"))
       .withColumn("cos",
-        round(expr("graft_dot(qv, nv)") / (col("qn") * col("nn")), 4))
+        round(dot(col("qv"), col("nv")) / (col("qn") * col("nn")), 4))
     // ≤ |Q|·pool rows reach this window — pool-bounded, not corpus
     val w = Window.partitionBy("query_id").orderBy(desc("cos"), asc("neighbor_id"))
     rescored
@@ -1598,11 +1589,10 @@ object Similarity {
 
   private def buildIvfPqIndexCold(spark: SparkSession, dir: String,
       indexDir: String, numCells: Int): (Seq[Centroid], PqBook) = {
-    VectorOps.register(spark)
     import spark.implicits._
     val eAll = widen(Tables(spark, dir).embeddings
       .select(col("vec_id"), asDouble("embedding").as("v"))
-      .withColumn("norm", sqrt(expr("graft_dot(v, v)"))))
+      .withColumn("norm", sqrt(dot(col("v"), col("v")))))
     val cents = refinedCentroidsFor(spark, dir, eAll, numCells, LloydIters)
     cents.map(c => (c.cid, c.cv.toSeq, c.cnorm)).toDF("cid", "cv", "cnorm")
       .coalesce(1).write.mode("overwrite")
@@ -1615,7 +1605,7 @@ object Similarity {
     // leave a cell partition from a PREVIOUS artifact under this dir alive
     // whenever the new build assigns it no rows — a rebuild must truncate
     // codes/ wholly, stale cells included
-    e.withColumn("norm", sqrt(expr("graft_dot(v, v)")))
+    e.withColumn("norm", sqrt(dot(col("v"), col("v"))))
       .withColumn("cell", cellExpr(cents, col("v"), col("norm")))
       .select(col("vec_id") +: col("cell") +: pqCodeCols(book): _*)
       .write.mode("overwrite")
@@ -1683,7 +1673,6 @@ object Similarity {
 
   private def probeIvfPqScored(spark: SparkSession, dir: String,
       indexDir: String, nprobe: Int): DataFrame = {
-    VectorOps.register(spark)
     import spark.implicits._
     val (cents, book) = readIvfPqQuantizers(spark, indexDir)
     // probe-plan memo, the n7 probeMemo discipline: for a fixed corpus,
@@ -1694,7 +1683,7 @@ object Similarity {
     val memoKey = (sessionKey(spark), indexDir, dir, nprobe, centsSig(cents))
     val (probePairs, probedCells) = pqProbeMemo.getOrElseUpdate(memoKey, {
       val probeRows = pqCorpus(spark, dir).filter(col("vec_id") < NumQueries)
-        .withColumn("norm", sqrt(expr("graft_dot(v, v)")))
+        .withColumn("norm", sqrt(dot(col("v"), col("v"))))
         .select(col("vec_id").as("query_id"),
           explode(TopCells.cellsCol(
             cents.map(c => (c.cid, c.cv, c.cnorm)), nprobe,
@@ -1817,12 +1806,11 @@ object Similarity {
     */
   private[graft] def buildIvfPqBaseIndex(spark: SparkSession, dir: String,
       indexDir: String, numCells: Int = NumCells): Unit = {
-    VectorOps.register(spark)
     import spark.implicits._
     val eAll = widen(Tables(spark, dir).embeddings
       .filter(appendBasePredicate)
       .select(col("vec_id"), asDouble("embedding").as("v"))
-      .withColumn("norm", sqrt(expr("graft_dot(v, v)"))))
+      .withColumn("norm", sqrt(dot(col("v"), col("v")))))
     val cents = refinedCentroidsFor(spark, appendBaseKey(dir), eAll,
       numCells, LloydIters)
     cents.map(c => (c.cid, c.cv.toSeq, c.cnorm)).toDF("cid", "cv", "cnorm")
@@ -1834,7 +1822,7 @@ object Similarity {
       .parquet(s"$indexDir/codebooks.parquet")
     // static overwrite for the same reason as buildIvfPqIndexCold's codes
     // write (r19 advice): a rebuild truncates codes/, stale cells included
-    e.withColumn("norm", sqrt(expr("graft_dot(v, v)")))
+    e.withColumn("norm", sqrt(dot(col("v"), col("v"))))
       .withColumn("cell", cellExpr(cents, col("v"), col("norm")))
       .select(col("vec_id") +: col("cell") +: pqCodeCols(book): _*)
       .write.mode("overwrite")
@@ -1916,7 +1904,7 @@ object Similarity {
         .filter(col("amax") > 0 && !isnan(col("amax")) &&
           col("amax") =!= lit(Double.PositiveInfinity))
         .drop("amax"))
-      .withColumn("norm", sqrt(expr("graft_dot(v, v)")))
+      .withColumn("norm", sqrt(dot(col("v"), col("v"))))
       .withColumn("cell", cellExpr(cents, col("v"), col("norm")))
       .select(col("vec_id") +: col("cell") +: pqCodeCols(book): _*)
 
@@ -2096,7 +2084,6 @@ object Similarity {
     */
   def appendToIvfPqIndex(spark: SparkSession, indexDir: String,
       delta: DataFrame): Seq[Long] = {
-    VectorOps.register(spark)
     val (cents, book) = readIvfPqQuantizers(spark, indexDir)
     ensureLedger(spark, indexDir)
     // localCheckpoint, NOT persist: the coded delta feeds the
@@ -2347,7 +2334,6 @@ object Similarity {
     */
   def upsertIvfPqIndex(spark: SparkSession, indexDir: String,
       batch: DataFrame): Seq[Long] = {
-    VectorOps.register(spark)
     val (cents, book) = readIvfPqQuantizers(spark, indexDir)
     ensureLedger(spark, indexDir)
     // PRE-guard ids: a guard-rejected update must still delete its stale
@@ -2421,11 +2407,10 @@ object Similarity {
     */
   def maintainIvfPqIndex(spark: SparkSession, indexDir: String,
       delta: DataFrame, corpus: DataFrame): (String, Seq[Long]) = {
-    VectorOps.register(spark)
     val (cents, _) = readIvfPqQuantizers(spark, indexDir)
     val priced = widen(delta
         .select(col("vec_id"), asDouble("embedding").as("v")))
-      .withColumn("norm", sqrt(expr("graft_dot(v, v)")))
+      .withColumn("norm", sqrt(dot(col("v"), col("v"))))
       .withColumn("cell", cellExpr(cents, col("v"), col("norm")))
       .groupBy("cell").count().collect()
     val deltaRows = priced.map(_.getLong(1)).sum.toDouble
@@ -2517,13 +2502,12 @@ object Similarity {
     */
   def assignCellsToStream(spark: SparkSession, dir: String,
       vecs: DataFrame, numCells: Int = NumCells): DataFrame = {
-    VectorOps.register(spark)
     val eAll = widen(Tables(spark, dir).embeddings
       .select(col("vec_id"), asDouble("embedding").as("v"))
-      .withColumn("norm", sqrt(expr("graft_dot(v, v)"))))
+      .withColumn("norm", sqrt(dot(col("v"), col("v")))))
     val cents = refinedCentroidsFor(spark, dir, eAll, numCells, LloydIters)
     vecs.select(col("vec_id"), asDouble("embedding").as("v"))
-      .withColumn("norm", sqrt(expr("graft_dot(v, v)")))
+      .withColumn("norm", sqrt(dot(col("v"), col("v"))))
       .withColumn("cell", cellExpr(cents, col("v"), col("norm")))
       .select("vec_id", "cell")
   }

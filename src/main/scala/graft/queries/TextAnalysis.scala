@@ -151,13 +151,12 @@ object TextAnalysis {
     * Shared by t4 (the projection itself) and t5 (a tiny group-by over it).
     */
   private def fingerprints(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorOps.register(spark) // graft_hash60
     // spread the narrow (doc_id, text) projection first: the md5-per-shingle
     // work is the cost, and a single-split scan would run it on one core
     Tables.spread(Tables(spark, dir).documents.select("doc_id", "text")).select(
       col("doc_id"),
-      expr(s"array_min(transform(${TextHash.charShinglesExpr("text", 8)}, " +
-        s"g -> ${TextHash.hash60Expr("g")}))").as("fp"))
+      array_min(transform(TextHash.charShingles("text", 8), g => hash60(g)))
+        .as("fp"))
       // cache the narrow (doc_id, fp) frame: the downstream ORDER BY's
       // range-partitioner sampling job otherwise re-executes the md5-heavy
       // projection a second time (measured 2x). Two longs per document —

@@ -50,6 +50,17 @@ object AuditScan {
     }
   }
 
+  /** Pattern occurrences in source TEXT under the same rule (the specs'
+    * fixtures for the rule and the patterns).
+    */
+  def countIn(src: String, pattern: Regex): Int = {
+    val f = Files.createTempFile("auditscan", ".scala")
+    try {
+      Files.write(f, src.getBytes("UTF-8"))
+      codeLines(f).map(l => pattern.findAllIn(l).size).sum
+    } finally Files.delete(f)
+  }
+
   /** Per-file pattern-occurrence counts over [[codeLines]] for every
     * `.scala` under `root`, dropping zero-count files. Paths are
     * root-relative strings, matching the specs' Audited maps.

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins [[AuditScan]]'s counting rule — the r16 advice fixes over the
@@ -16,13 +14,7 @@ class AuditScanSpec extends AnyFunSuite {
 
   private val Pattern = "\\bbroadcast\\(".r
 
-  private def countOf(src: String): Int = {
-    val f = Files.createTempFile("auditscan", ".scala")
-    try {
-      Files.write(f, src.getBytes("UTF-8"))
-      AuditScan.codeLines(f).map(l => Pattern.findAllIn(l).size).sum
-    } finally Files.delete(f)
-  }
+  private def countOf(src: String): Int = AuditScan.countIn(src, Pattern)
 
   test("counts a plain call site once") {
     assert(countOf("val x = broadcast(dim)") == 1)

@@ -6,11 +6,16 @@ import graft.SparkTestBase
 
 class DotProductSpec extends SparkTestBase {
 
-  private def viaSql(a: Seq[Double], b: Seq[Double]): java.lang.Double = {
-    VectorOps.register(spark)
+  /** The dot product of one row through both routes to the expression:
+    * the Column constructor and the SQL name (resolved by GraftExtensions,
+    * which TestSpark installs). They must agree before either is checked.
+    */
+  private def dotOf(a: Seq[Double], b: Seq[Double]): java.lang.Double = {
     import spark.implicits._
     val r = Seq((a, b)).toDF("a", "b")
-      .select(expr("graft_dot(a, b)")).collect()(0)
+      .select(VectorOps.dot(col("a"), col("b")), expr("graft_dot(a, b)"))
+      .collect()(0)
+    assert(r.get(0) === r.get(1), "Column constructor and SQL name disagree")
     if (r.isNullAt(0)) null else r.getDouble(0)
   }
 
@@ -18,7 +23,7 @@ class DotProductSpec extends SparkTestBase {
     val a = Seq(0.1, 0.2, 0.3, 1e-9)
     val b = Seq(3.0, -2.5, 0.25, 1e9)
     val fold = a.zip(b).foldLeft(0.0) { case (acc, (x, y)) => acc + x * y }
-    assert(viaSql(a, b) === fold)
+    assert(dotOf(a, b) === fold)
   }
 
   test("interpreted eval equals codegen result") {
@@ -31,15 +36,15 @@ class DotProductSpec extends SparkTestBase {
     val interp = DotProduct(
       Literal.create(ArrayData.toArrayData(a.toArray), ArrayType(DoubleType)),
       Literal.create(ArrayData.toArrayData(b.toArray), ArrayType(DoubleType))).eval(null)
-    assert(interp === viaSql(a, b)) // viaSql goes through whole-stage codegen
+    assert(interp === dotOf(a, b)) // dotOf goes through whole-stage codegen
   }
 
   test("null array yields null; length mismatch yields null like the built-in chain") {
-    assert(viaSql(null, Seq(1.0)) === null)
+    assert(dotOf(null, Seq(1.0)) === null)
     // aggregate(zip_with(a, b, (x,y) -> x*y), ...) null-pads the shorter
     // side and the fold propagates the null — a truncated partial sum
     // would silently score a malformed embedding row
-    assert(viaSql(Seq(2.0, 3.0), Seq(10.0)) === null)
+    assert(dotOf(Seq(2.0, 3.0), Seq(10.0)) === null)
     val builtin = {
       import spark.implicits._
       val r = Seq((Seq(2.0, 3.0), Seq(10.0))).toDF("a", "b")
@@ -52,11 +57,11 @@ class DotProductSpec extends SparkTestBase {
   }
 
   test("rejects non-double-array inputs at analysis time") {
-    VectorOps.register(spark)
     import spark.implicits._
-    val err = intercept[Exception] {
-      Seq(("x", "y")).toDF("a", "b").select(expr("graft_dot(a, b)")).collect()
+    val strings = Seq(("x", "y")).toDF("a", "b")
+    Seq(VectorOps.dot(col("a"), col("b")), expr("graft_dot(a, b)")).foreach { c =>
+      val err = intercept[Exception](strings.select(c).collect())
+      assert(err.getMessage.toLowerCase.contains("array"))
     }
-    assert(err.getMessage.toLowerCase.contains("array"))
   }
 }

@@ -15,17 +15,18 @@ class Hash60Spec extends SparkTestBase {
     "a" * 100, "", "13_February_-_15_February_2026")
 
   test("graft_hash60 equals conv(substring(md5(s),1,15),16,10) for all samples") {
-    VectorOps.register(spark)
     import spark.implicits._
     val rows = samples.toDF("s").select(
       expr("graft_hash60(s)").as("fast"),
-      conv(substring(md5(col("s")), 1, 15), 16, 10).cast("long").as("builtin"))
+      conv(substring(md5(col("s")), 1, 15), 16, 10).cast("long").as("builtin"),
+      TextHash.hash60(col("s")).as("ctor"))
       .collect()
     rows.foreach(r => assert(r.getLong(0) === r.getLong(1)))
+    // the Column constructor and the SQL name build the same expression
+    rows.foreach(r => assert(r.getLong(2) === r.getLong(0)))
   }
 
   test("driver-side Hash60Util matches the expression (same code both paths)") {
-    VectorOps.register(spark)
     import spark.implicits._
     val viaSpark = samples.toDF("s")
       .select(expr("graft_hash60(s)")).collect().map(_.getLong(0))

@@ -7,13 +7,24 @@ import graft.SparkTestBase
 class TextHashSpec extends SparkTestBase {
 
   test("hash60 is non-negative and stable") {
-    VectorOps.register(spark) // hash60 resolves via graft_hash60
     import spark.implicits._
     val rows = Seq("", "a", "hello world").toDF("x")
       .select(TextHash.hash60(col("x")).as("h")).collect()
     rows.foreach(r => assert(r.getLong(0) >= 0))
     // stability pin: md5("a") starts 0cc175b9c0f1b6a8 -> first 15 hex digits
     assert(rows(1).getLong(0) === java.lang.Long.parseLong("0cc175b9c0f1b6a", 16))
+  }
+
+  test("MinhashBands.bandsCol and the SQL name graft_minhash_bands agree") {
+    import spark.implicits._
+    val rows = Seq(Some(""), Some("abc"), Some("Pick n Pay specials ™✓"),
+        Some("the quick brown fox jumps over the lazy dog" * 3), None).toDF("t")
+      .select(MinhashBands.bandsCol(col("t")), expr("graft_minhash_bands(t)"))
+      .collect()
+    assert(rows.length === 5)
+    rows.foreach(r => assert(r.get(0) === r.get(1)))
+    assert(rows.head.getSeq[Long](0).length === graft.operators.TextDedup.Bands)
+    assert(rows.last.isNullAt(0), "null in, null out")
   }
 
   test("charShingles of short text yields one (whole-text) shingle") {

@@ -24,7 +24,6 @@ class StreamTempMixSpec extends SparkTestBase {
       ReplayFixtures.writeOne(docs.filter(pmod(col("doc_id"), lit(5L)) === i),
         f"$dir/slice_$i.parquet", t0 + i * 60000L)
     }
-    graft.functions.VectorOps.register(spark)
     val rates = Sampling.temperatureRates(spark, SfDir)
     val stream = DocumentStreams.readDocuments(
         spark, dir, glob = "*.parquet", maxFilesPerTrigger = Some(1))
