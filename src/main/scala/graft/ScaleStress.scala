@@ -405,16 +405,14 @@ object ScaleStress {
       }
 
     // Index-maintenance A/B (SPARK_GRAFT_N16=k1,k2,...): n16's claim is
-    // that APPENDING a batch into the persisted IVF+PQ index costs the
-    // DELTA (kernel work) plus the touched cells' code rows (read +
-    // rewrite), never the corpus — while the frozen-quantizer REBUILD
-    // (the only alternative before n16: recode everything) pays the whole
-    // corpus every time. Same session, same base artifact per form; both
-    // forms are one appendToIvfPqIndex call (delta split vs union corpus)
-    // so the machinery is identical and only the batch size differs. Each
-    // form min-of-2 with sec_runs (the n15 lesson: run 1 pays one-time
-    // plan/collect costs); a re-landed append is content-idempotent, so
-    // rep 2 measures the same work shape as rep 1.
+    // that LANDING an insert batch into the persisted IVF+PQ index
+    // (upsertIvfPqIndex) costs the DELTA (kernel work) plus the touched
+    // cells' code rows (read + rewrite), never the corpus — while the
+    // frozen-quantizer REBUILD (recodeIvfPqIndex: recode everything) pays
+    // the whole corpus every time. Same session, same base artifact per
+    // form. Each form min-of-2 with sec_runs (the n15 lesson: run 1 pays
+    // one-time plan/collect costs); a re-landed batch is
+    // content-idempotent, so rep 2 touches the same cells as rep 1.
     sys.env.get("SPARK_GRAFT_N16").map(_.split(",").map(_.trim.toInt).toSeq)
       .foreach { ks =>
         ks.foreach { k =>
@@ -445,7 +443,7 @@ object ScaleStress {
             .filter(f => f.isDirectory && f.getName.startsWith("cell="))
             .map(_.getName.stripPrefix("cell=").toLong).min
           // materialized to scratch parquet BEFORE timing (r19 advice):
-          // rep 1's append rewrites the very cell partition this batch
+          // rep 1's upsert rewrites the very cell partition this batch
           // derives from, so a lazy frame would re-derive rep 2's batch
           // (and the logged batch_rows) from the mutated index
           val localPath = s"target/scale/n16_local_batch_x$k"
@@ -456,22 +454,28 @@ object ScaleStress {
             .select("vec_id", "embedding")
             .write.parquet(localPath)
           val local = spark.read.parquet(localPath)
-          def timedAppend(label: String, batch: DataFrame): Double = {
-            var touched = 0
+          // run returns the touched cells, or None for the recode (which
+          // rewrites every cell)
+          def timedForm(label: String, batch: DataFrame)(
+              run: => Option[Int]): Double = {
+            var touched: Option[Int] = None
             val secs = (1 to 2).map { _ =>
               spark.catalog.clearCache(); System.gc()
               val t0 = System.nanoTime()
-              touched = graft.queries.Similarity
-                .appendToIvfPqIndex(spark, idx, batch).size
+              touched = run
               (System.nanoTime() - t0) / 1e9
             }
             val sec = secs.min
-            println(s"""{"scale":$k,"query":"$label","sec":${f2(sec)},"sec_runs":[${secs.map(f2).mkString(",")}],"cells":${d11Cells(k)},"touched_cells":$touched,"batch_rows":${batch.count()}}""")
+            println(s"""{"scale":$k,"query":"$label","sec":${f2(sec)},"sec_runs":[${secs.map(f2).mkString(",")}],"cells":${d11Cells(k)},"touched_cells":${touched.getOrElse("null")},"batch_rows":${batch.count()}}""")
             sec
           }
-          val localSec = timedAppend("n16_append_local", local)
-          val appendSec = timedAppend("n16_append_delta", delta)
-          val rebuildSec = timedAppend("n16_recode_union", union)
+          def upsert(batch: DataFrame): Option[Int] =
+            Some(graft.queries.Similarity.upsertIvfPqIndex(spark, idx, batch).size)
+          val localSec = timedForm("n16_append_local", local)(upsert(local))
+          val appendSec = timedForm("n16_append_delta", delta)(upsert(delta))
+          val rebuildSec = timedForm("n16_recode_union", union) {
+            graft.queries.Similarity.recodeIvfPqIndex(spark, idx, union); None
+          }
           println(s"""{"scale":$k,"query":"append_vs_recode","build_sec":${f2(buildSec)},"local_sec":${f2(localSec)},"append_sec":${f2(appendSec)},"recode_sec":${f2(rebuildSec)},"delta_rows":${delta.count()},"corpus_rows":${union.count()}}""")
         }
         spark.stop()
@@ -535,99 +539,30 @@ object ScaleStress {
           val local = spark.read.parquet(localPath)
           val uniform = graft.queries.Similarity.upsertBatch(spark, dir)
           val post = graft.queries.Similarity.postUpsertCorpus(spark, dir)
-          def timedForm(label: String,
-              run: () => Int, batch: DataFrame): Double = {
-            var touched = 0
+          // run returns the touched cells, or None for the recode (which
+          // rewrites every cell)
+          def timedForm(label: String, batch: DataFrame)(
+              run: => Option[Int]): Double = {
+            var touched: Option[Int] = None
             val secs = (1 to 2).map { _ =>
               rebuildBase()
               spark.catalog.clearCache(); System.gc()
               val t0 = System.nanoTime()
-              touched = run()
+              touched = run
               (System.nanoTime() - t0) / 1e9
             }
             val sec = secs.min
-            println(s"""{"scale":$k,"query":"$label","sec":${f2(sec)},"sec_runs":[${secs.map(f2).mkString(",")}],"cells":${d11Cells(k)},"touched_cells":$touched,"batch_rows":${batch.count()}}""")
+            println(s"""{"scale":$k,"query":"$label","sec":${f2(sec)},"sec_runs":[${secs.map(f2).mkString(",")}],"cells":${d11Cells(k)},"touched_cells":${touched.getOrElse("null")},"batch_rows":${batch.count()}}""")
             sec
           }
-          val localSec = timedForm("n17_upsert_local", () =>
-            graft.queries.Similarity.upsertIvfPqIndex(spark, idx, local).size,
-            local)
-          val uniformSec = timedForm("n17_upsert_uniform", () =>
-            graft.queries.Similarity.upsertIvfPqIndex(spark, idx, uniform).size,
-            uniform)
-          val recodeSec = timedForm("n17_recode_post", () =>
-            graft.queries.Similarity.appendToIvfPqIndex(spark, idx, post).size,
-            post)
+          def upsert(batch: DataFrame): Option[Int] =
+            Some(graft.queries.Similarity.upsertIvfPqIndex(spark, idx, batch).size)
+          val localSec = timedForm("n17_upsert_local", local)(upsert(local))
+          val uniformSec = timedForm("n17_upsert_uniform", uniform)(upsert(uniform))
+          val recodeSec = timedForm("n17_recode_post", post) {
+            graft.queries.Similarity.recodeIvfPqIndex(spark, idx, post); None
+          }
           println(s"""{"scale":$k,"query":"upsert_vs_recode","build_sec":${f2(buildSec)},"local_sec":${f2(localSec)},"uniform_sec":${f2(uniformSec)},"recode_sec":${f2(recodeSec)}}""")
-        }
-        spark.stop()
-        return
-      }
-
-    // Router A/B (SPARK_GRAFT_N17R=k1,k2,...): maintainIvfPqIndex must
-    // (a) route a cell-local INSERT batch to append and a corpus-uniform
-    // one to the frozen recode, and (b) cost what the cheaper direct form
-    // costs plus the delta-bounded pricing pass. Same base/delta split as
-    // the N16 study; rebuild between reps (appends mutate the artifact).
-    sys.env.get("SPARK_GRAFT_N17R").map(_.split(",").map(_.trim.toInt).toSeq)
-      .foreach { ks =>
-        ks.foreach { k =>
-          val dir = s"target/scale/x$k"
-          generate(spark, baseDir, dir, k)
-          val idx = s"target/scale/ivfpq_router_x$k"
-          graft.queries.Similarity.clearQuantMemo()
-          def rebuildBase(): Unit = {
-            graft.core.FsUtil.deleteRecursively(idx)
-            spark.catalog.clearCache(); System.gc()
-            graft.queries.Similarity.buildIvfPqBaseIndex(spark, dir, idx,
-              numCells = d11Cells(k))
-          }
-          rebuildBase()
-          val firstCell = new java.io.File(s"$idx/codes").listFiles()
-            .filter(f => f.isDirectory && f.getName.startsWith("cell="))
-            .map(_.getName.stripPrefix("cell=").toLong).min
-          val localPath = s"target/scale/n17r_local_batch_x$k"
-          graft.core.FsUtil.deleteRecursively(localPath)
-          spark.read.parquet(s"$dir/embeddings.parquet")
-            .join(spark.read.parquet(s"$idx/codes/cell=$firstCell")
-              .select("vec_id"), Seq("vec_id"), "left_semi")
-            .select("vec_id", "embedding")
-            .write.parquet(localPath)
-          val local = spark.read.parquet(localPath)
-          val delta = graft.queries.Similarity.appendDelta(spark, dir)
-          val union = spark.read.parquet(s"$dir/embeddings.parquet")
-            .select("vec_id", "embedding")
-          def timedForm(label: String, run: () => (String, Int)): Double = {
-            var route = ""
-            var touched = 0
-            val secs = (1 to 2).map { _ =>
-              rebuildBase()
-              spark.catalog.clearCache(); System.gc()
-              val t0 = System.nanoTime()
-              val r = run()
-              route = r._1; touched = r._2
-              (System.nanoTime() - t0) / 1e9
-            }
-            val sec = secs.min
-            println(s"""{"scale":$k,"query":"$label","sec":${f2(sec)},"sec_runs":[${secs.map(f2).mkString(",")}],"cells":${d11Cells(k)},"route":"$route","touched_cells":$touched}""")
-            sec
-          }
-          timedForm("n17r_direct_local", () =>
-            ("append",
-              graft.queries.Similarity.appendToIvfPqIndex(spark, idx, local).size))
-          timedForm("n17r_router_local", () => {
-            val (r, t) = graft.queries.Similarity
-              .maintainIvfPqIndex(spark, idx, local, union)
-            (r, t.size)
-          })
-          timedForm("n17r_direct_uniform", () =>
-            ("recode",
-              graft.queries.Similarity.appendToIvfPqIndex(spark, idx, union).size))
-          timedForm("n17r_router_uniform", () => {
-            val (r, t) = graft.queries.Similarity
-              .maintainIvfPqIndex(spark, idx, delta, union)
-            (r, t.size)
-          })
         }
         spark.stop()
         return

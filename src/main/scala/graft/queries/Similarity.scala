@@ -326,8 +326,7 @@ object Similarity {
     pqMemo.clear()
     pqIndexMemo.clear()
     pqProbeMemo.clear()
-    appendIdxMemo.clear()
-    upsertIdxMemo.clear()
+    maintainedIdxMemo.clear()
     quantReadMemo.clear()
   }
 
@@ -974,20 +973,26 @@ object Similarity {
   private[queries] final case class PqBook(
       cids: Array[Long], cbs: Array[Array[Array[Double]]])
 
-  /** The corpus PQ operates on: n5's degenerate-vector guard extended to
-    * FINITENESS — zero/NaN amax vectors carry no direction, and an ±Inf
-    * component (abs-max = +Inf) would feed non-finite squared distances
-    * into the assignment and ADC kernels just as NaN would. NaN and +Inf
-    * are excluded explicitly (amax is an abs-max, so those are the only
-    * non-finite values), applied identically in every PQ oracle CTE.
+  /** (vec_id, v) of the (vec_id, embedding) rows PQ can code: n5's
+    * degenerate-vector guard extended to FINITENESS — zero/NaN amax
+    * vectors carry no direction, and an ±Inf component (abs-max = +Inf)
+    * would feed non-finite squared distances into the assignment and ADC
+    * kernels just as NaN would. NaN and +Inf are excluded explicitly
+    * (amax is an abs-max, so those are the only non-finite values),
+    * applied identically in every PQ oracle CTE. The one guard shared by
+    * training ([[pqCorpus]]) and every coding pass ([[codedBatch]]).
     */
-  private[queries] def pqCorpus(spark: SparkSession, dir: String): DataFrame =
-    Tables(spark, dir).embeddings
+  private def pqVectors(embeddings: DataFrame): DataFrame =
+    embeddings
       .select(col("vec_id"), asDouble("embedding").as("v"))
       .withColumn("amax", expr("array_max(transform(v, x -> abs(x)))"))
       .filter(col("amax") > 0 && !isnan(col("amax")) &&
         col("amax") =!= lit(Double.PositiveInfinity))
       .drop("amax")
+
+  /** The corpus PQ operates on: the embeddings table through [[pqVectors]]. */
+  private[queries] def pqCorpus(spark: SparkSession, dir: String): DataFrame =
+    pqVectors(Tables(spark, dir).embeddings)
 
   /** (vec_id, m, sv) sub-vector explosion — M narrow rows per vector, a
     * projection over the scan (no shuffle). Two selects for the same
@@ -1581,38 +1586,35 @@ object Similarity {
           .filter(k => k._3 == indexDir && k != key)
           .foreach(pqIndexMemo.remove)
         pqProbeMemo.keys.filter(_._2 == indexDir).foreach(pqProbeMemo.remove)
-        val v = buildIvfPqIndexCold(spark, dir, indexDir, numCells)
+        val v = buildIvfPqIndexCold(spark, dir, indexDir, numCells,
+          trainKey = dir, keep = lit(true))
         pqIndexMemo.put(key, v)
         v
     }
   }
 
+  /** The one cold build: train both quantizers on the embeddings rows
+    * `keep` selects (memoized under `trainKey`), persist them, then code
+    * the same rows into `codes/` + `ledger/` through [[writeCodes]]. n13
+    * trains on the whole corpus under its own dir key; n16's base build
+    * ([[buildIvfPqBaseIndex]]) on the BASE split under its own namespace.
+    */
   private def buildIvfPqIndexCold(spark: SparkSession, dir: String,
-      indexDir: String, numCells: Int): (Seq[Centroid], PqBook) = {
+      indexDir: String, numCells: Int, trainKey: String,
+      keep: Column): (Seq[Centroid], PqBook) = {
     import spark.implicits._
-    val eAll = widen(Tables(spark, dir).embeddings
+    val rows = Tables(spark, dir).embeddings.filter(keep)
+    val eAll = widen(rows
       .select(col("vec_id"), asDouble("embedding").as("v"))
       .withColumn("norm", sqrt(dot(col("v"), col("v")))))
-    val cents = refinedCentroidsFor(spark, dir, eAll, numCells, LloydIters)
+    val cents = refinedCentroidsFor(spark, trainKey, eAll, numCells, LloydIters)
     cents.map(c => (c.cid, c.cv.toSeq, c.cnorm)).toDF("cid", "cv", "cnorm")
       .coalesce(1).write.mode("overwrite")
       .parquet(s"$indexDir/centroids.parquet")
-    val e = widen(pqCorpus(spark, dir))
-    val book = pqBookFor(spark, dir, e)
+    val book = pqBookFor(spark, trainKey, widen(pqVectors(rows)))
     pqBookDf(spark, book).coalesce(1).write.mode("overwrite")
       .parquet(s"$indexDir/codebooks.parquet")
-    // STATIC overwrite (r19 advice): the session-global dynamic mode would
-    // leave a cell partition from a PREVIOUS artifact under this dir alive
-    // whenever the new build assigns it no rows — a rebuild must truncate
-    // codes/ wholly, stale cells included
-    e.withColumn("norm", sqrt(dot(col("v"), col("v"))))
-      .withColumn("cell", cellExpr(cents, col("v"), col("norm")))
-      .select(col("vec_id") +: col("cell") +: pqCodeCols(book): _*)
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "static")
-      .partitionBy("cell")
-      .parquet(s"$indexDir/codes")
-    writeLedgerFromCodes(spark, indexDir)
+    writeCodes(spark, indexDir, rows, cents, book)
     (cents, book)
   }
 
@@ -1630,15 +1632,15 @@ object Similarity {
   /** The frozen quantizers read back from a persisted IVF+PQ index — two
     * metadata-scale collects (the n7 centroid-read class: K·Dim +
     * M·K·subDim doubles, never data). Shared by the disk probe (n13/n15)
-    * and the append path (n16), which must code deltas under EXACTLY the
-    * artifact's quantizers.
+    * and the maintenance and recode writers, which must code batches
+    * under EXACTLY the artifact's quantizers.
     */
   /** Process-resident cache of [[readIvfPqQuantizersCold]], keyed by the
     * quantizer files' own fs metadata (every part file's path+length+mtime
     * — [[graft.core.FsUtil.filesSig]], two cheap listings, no jobs): a
     * REBUILD rewrites those files (fresh part-file UUIDs), so a stale
     * entry can never match a mutated artifact, while repeat probes and
-    * append/upsert maintenance (which never touch quantizers by contract)
+    * upsert/recode maintenance (which never touch quantizers by contract)
     * skip the two collect jobs — measured 0.24 s per probe at sf0.1. This
     * is exactly what an ANN serving tier does: quantizers are
     * process-resident for the server's lifetime, revalidated against the
@@ -1792,7 +1794,7 @@ object Similarity {
     col("vec_id") % AppendMod =!= AppendRem
 
   /** The delta batch of [[ivfPqAppendTopK]]'s split, in the
-    * embeddings-table shape [[appendToIvfPqIndex]] ingests.
+    * embeddings-table shape [[upsertIvfPqIndex]] ingests.
     */
   private[graft] def appendDelta(spark: SparkSession, dir: String): DataFrame =
     Tables(spark, dir).embeddings
@@ -1802,35 +1804,12 @@ object Similarity {
   /** Build the persisted IVF+PQ index over the BASE split only — the
     * pre-append deployment state: quantizers trained on, and `codes/`
     * covering, the corpus minus the delta. [[buildIvfPqIndexCold]] with
-    * the split applied to both training frames.
+    * the split as its row filter and training namespace.
     */
   private[graft] def buildIvfPqBaseIndex(spark: SparkSession, dir: String,
-      indexDir: String, numCells: Int = NumCells): Unit = {
-    import spark.implicits._
-    val eAll = widen(Tables(spark, dir).embeddings
-      .filter(appendBasePredicate)
-      .select(col("vec_id"), asDouble("embedding").as("v"))
-      .withColumn("norm", sqrt(dot(col("v"), col("v")))))
-    val cents = refinedCentroidsFor(spark, appendBaseKey(dir), eAll,
-      numCells, LloydIters)
-    cents.map(c => (c.cid, c.cv.toSeq, c.cnorm)).toDF("cid", "cv", "cnorm")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"$indexDir/centroids.parquet")
-    val e = widen(pqCorpus(spark, dir).filter(appendBasePredicate))
-    val book = pqBookFor(spark, appendBaseKey(dir), e)
-    pqBookDf(spark, book).coalesce(1).write.mode("overwrite")
-      .parquet(s"$indexDir/codebooks.parquet")
-    // static overwrite for the same reason as buildIvfPqIndexCold's codes
-    // write (r19 advice): a rebuild truncates codes/, stale cells included
-    e.withColumn("norm", sqrt(dot(col("v"), col("v"))))
-      .withColumn("cell", cellExpr(cents, col("v"), col("norm")))
-      .select(col("vec_id") +: col("cell") +: pqCodeCols(book): _*)
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "static")
-      .partitionBy("cell")
-      .parquet(s"$indexDir/codes")
-    writeLedgerFromCodes(spark, indexDir)
-  }
+      indexDir: String, numCells: Int = NumCells): Unit =
+    buildIvfPqIndexCold(spark, dir, indexDir, numCells,
+      trainKey = appendBaseKey(dir), keep = appendBasePredicate)
 
   // -------------------------------------------------- the id→cell ledger
 
@@ -1846,8 +1825,8 @@ object Similarity {
   private[queries] val LedgerBuckets = 16L
 
   /** The persisted IVF+PQ artifact's full shape — ONE definition shared
-    * by every memo family's freshness probe (the n13 build memo, the n16
-    * append and n17 upsert composition memos), so the families can never
+    * by every memo family's freshness probe (the n13 build memo, the
+    * n16/n17 composition memo), so the families can never
     * drift into validating different artifact shapes (the r20 review's
     * lockstep-edit hazard: adding `ledger` meant editing three scattered
     * copies identically).
@@ -1891,22 +1870,52 @@ object Similarity {
     if (!graft.core.FsUtil.allExist(spark, Seq(s"$indexDir/ledger")))
       writeLedgerFromCodes(spark, indexDir)
 
-  /** The delta batch coded under FROZEN quantizers: finiteness guard
-    * (identical to [[pqCorpus]]'s), then cell + M codes in one projection
-    * — the build's own TopCells/PqNearest kernels. Shared by append
-    * (n16), upsert (n17) and the router's pricing pass.
+  /** A (vec_id, embedding) batch coded under FROZEN quantizers: the
+    * [[pqVectors]] finiteness guard, then cell + M codes in one
+    * projection — the build's own TopCells/PqNearest kernels. Shared by
+    * the cold build, the frozen recode and upsert (n16/n17).
     */
   private def codedBatch(batch: DataFrame, cents: Seq[Centroid],
       book: PqBook): DataFrame =
-    widen(batch
-        .select(col("vec_id"), asDouble("embedding").as("v"))
-        .withColumn("amax", expr("array_max(transform(v, x -> abs(x)))"))
-        .filter(col("amax") > 0 && !isnan(col("amax")) &&
-          col("amax") =!= lit(Double.PositiveInfinity))
-        .drop("amax"))
+    widen(pqVectors(batch))
       .withColumn("norm", sqrt(dot(col("v"), col("v"))))
       .withColumn("cell", cellExpr(cents, col("v"), col("norm")))
       .select(col("vec_id") +: col("cell") +: pqCodeCols(book): _*)
+
+  /** The one WHOLE-artifact writer of `codes/`: `corpus` coded under the
+    * given quantizers replaces every cell partition, then `ledger/` is
+    * re-derived from the committed codes ([[writeLedgerFromCodes]]).
+    * STATIC overwrite (r19 advice): the session-global dynamic mode would
+    * leave a cell partition from a PREVIOUS artifact under this dir alive
+    * whenever the new coding assigns it no rows — a rebuild must truncate
+    * codes/ wholly, stale cells included.
+    */
+  private def writeCodes(spark: SparkSession, indexDir: String,
+      corpus: DataFrame, cents: Seq[Centroid], book: PqBook): Unit = {
+    codedBatch(corpus, cents, book)
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "static")
+      .partitionBy("cell")
+      .parquet(s"$indexDir/codes")
+    writeLedgerFromCodes(spark, indexDir)
+  }
+
+  /** FROZEN RECODE: replace the artifact's `codes/` and `ledger/` with
+    * `corpus` (vec_id, embedding) coded under the quantizers the artifact
+    * already holds — the cold build's own writer ([[writeCodes]]) with no
+    * retraining. It is the reference a maintained index must equal (every
+    * [[upsertIvfPqIndex]] chain serves what one recode of the resulting
+    * corpus serves) and the repair for a crash inside a maintenance
+    * commit. It shares no merge logic with upsert: the corpus is read
+    * once and the whole artifact rewritten, so its cost tracks the
+    * corpus, never a batch. `corpus` must not be read from `codes/`
+    * itself (the static overwrite truncates its own input).
+    */
+  private[graft] def recodeIvfPqIndex(spark: SparkSession, indexDir: String,
+      corpus: DataFrame): Unit = {
+    val (cents, book) = readIvfPqQuantizers(spark, indexDir)
+    writeCodes(spark, indexDir, corpus, cents, book)
+  }
 
   /** Rewrite ONLY the `touched` cell partitions of `codes/`: their
     * existing rows — read through explicit `cell=N` paths, so untouched
@@ -1916,19 +1925,24 @@ object Similarity {
     * paths are the cell dirs, the output path their parent, so the
     * self-overwrite guard stays quiet). ONE FileSystem handle for the
     * whole batch of existence probes, resolved through the root's own
-    * scheme like every FsUtil probe.
+    * scheme like every FsUtil probe. The write is repartitioned by cell,
+    * so every rewritten cell is ONE file: without the shuffle a touched
+    * cell keeps its existing files' count and each call adds up to one
+    * more file per batch partition, so repeated maintenance would pile
+    * up small files.
     *
-    * `deleteEmptied` is the UPSERT-only epilogue: dynamic overwrite only
-    * replaces partitions PRESENT in the written frame, so a touched cell
-    * whose every row moved out would keep its stale directory. Upsert
-    * therefore pins the merged frame, collects the ≤K cells that still
-    * receive rows (quantizer-bounded metadata), and deletes the
-    * touched-minus-present dirs after the commit. Append skips all of it:
-    * every cell it touches receives delta rows by construction.
+    * `vacated` are the touched cells no `d` row lands in (old cells of
+    * moved or guard-rejected ids). Dynamic overwrite only replaces
+    * partitions PRESENT in the written frame, so such a cell whose every
+    * row left would keep its stale directory: when `vacated` is non-empty
+    * the merged frame is pinned, the ≤K cells that still receive rows are
+    * collected (quantizer-bounded metadata), and the vacated-and-absent
+    * dirs are deleted after the commit. An insert-only batch vacates
+    * nothing and skips all of it.
     */
   private def rewriteTouchedCells(spark: SparkSession, indexDir: String,
-      touched: Seq[Long], ids: DataFrame, d: DataFrame,
-      deleteEmptied: Boolean): Unit = {
+      touched: Seq[Long], vacated: Seq[Long], ids: DataFrame,
+      d: DataFrame): Unit = {
     val codesRoot = s"$indexDir/codes"
     val rootPath = new org.apache.hadoop.fs.Path(codesRoot)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
@@ -1945,11 +1959,11 @@ object Similarity {
         .select(cols: _*)
         .unionByName(d.select(cols: _*))
     def write(df: DataFrame): Unit =
-      df.write.mode("overwrite")
+      df.repartition(col("cell")).write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("cell")
         .parquet(codesRoot)
-    if (!deleteEmptied) write(merged)
+    if (vacated.isEmpty) write(merged)
     else {
       // pin the merged frame: the present-cells job and the write must
       // see ONE evaluation (the write's input paths are the partitions
@@ -1959,207 +1973,102 @@ object Similarity {
         val present = merged.select("cell").distinct()
           .collect().map(_.getLong(0)).toSet
         write(merged)
-        touched.filterNot(present).foreach { c =>
+        vacated.filterNot(present).foreach { c =>
           fs.delete(new org.apache.hadoop.fs.Path(s"$codesRoot/cell=$c"), true)
         }
       } finally merged.unpersist()
     }
   }
 
-  /** Merge a batch into `ledger/`: the batch's ≤ [[LedgerBuckets]] bucket
-    * partitions read through explicit `b=N` paths, rows for `ids` dropped
-    * (so moved, re-landed and guard-rejected ids leave no stale mapping),
-    * the fresh (vec_id, cell) pairs unioned in, dynamic overwrite — the
-    * codes rewrite's own shape on the 2-long ledger rows. A bucket
-    * emptied by a pure delete keeps its rows on disk (dynamic overwrite
-    * cannot truncate an absent partition) — a DELIBERATE asymmetry with
-    * the codes rewrite's deleteEmptied epilogue, because the two
-    * artifacts' stale rows differ in kind: a stale CODES row changes
-    * probe answers, while a superfluous ledger row only ever WIDENS a
-    * later upsert's touched set (its anti-join then no-ops) — so the
-    * codes side pays a collect + dir deletes and the ledger side does
-    * not. `probedDirs` lets a caller that already existence-probed the
-    * bucket dirs (upsert) pass them through instead of paying the ≤16
-    * exists() round-trips twice.
+  /** Merge a batch into `ledger/`: the batch's existing bucket partitions
+    * (`bucketDirs`, probed once by the caller) read back, rows for `ids`
+    * dropped (so moved, re-landed and guard-rejected ids leave no stale
+    * mapping), the fresh (vec_id, cell) pairs unioned in, dynamic
+    * overwrite — the codes rewrite's own shape (one file per bucket) on
+    * the 2-long ledger rows. A bucket emptied by a pure delete keeps its rows on disk (dynamic
+    * overwrite cannot truncate an absent partition) — a DELIBERATE
+    * asymmetry with the codes rewrite's vacated-cell epilogue, because
+    * the two artifacts' stale rows differ in kind: a stale CODES row
+    * changes probe answers, while a superfluous ledger row only ever
+    * WIDENS a later upsert's touched set (its anti-join then no-ops) — so
+    * the codes side pays a collect + dir deletes and the ledger side does
+    * not.
     */
   private def mergeLedger(spark: SparkSession, indexDir: String,
-      buckets: Seq[Long], ids: DataFrame, d: DataFrame,
-      probedDirs: Option[Seq[String]] = None): Unit = {
+      bucketDirs: Seq[String], ids: DataFrame, d: DataFrame): Unit = {
     val ledgerRoot = s"$indexDir/ledger"
-    val existingDirs = probedDirs.getOrElse {
-      val rootPath = new org.apache.hadoop.fs.Path(ledgerRoot)
-      val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-      buckets.map(b => s"$ledgerRoot/b=$b")
-        .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
-    }
     val fresh = d.select(col("vec_id"), col("cell"))
       .withColumn("b", ledgerBucket(col("vec_id")))
     val merged =
-      if (existingDirs.isEmpty) fresh
+      if (bucketDirs.isEmpty) fresh
       else spark.read.option("basePath", ledgerRoot)
-        .parquet(existingDirs: _*)
+        .parquet(bucketDirs: _*)
         .withColumn("b", col("b").cast("long"))
         .join(ids, Seq("vec_id"), "left_anti")
         .select("vec_id", "cell", "b")
         .unionByName(fresh)
-    merged.write.mode("overwrite")
+    merged.repartition(col("b")).write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("b")
       .parquet(ledgerRoot)
   }
 
-  /** APPEND a delta batch of vectors into an EXISTING persisted IVF+PQ
-    * index with FROZEN quantizers — the online-maintenance path st16's
-    * census watches for ("index built offline, maintained online"): new
-    * vectors enter `codes/` through this until the per-cell census says
-    * the quantizers have drifted, and only that drift signal triggers
-    * [[buildIvfPqIndex]]'s full retrain+rebuild. `delta` carries
-    * (vec_id, embedding) — the embeddings-table shape st16's ingest
-    * stream projects. Every step is bounded by the DELTA (and the cells
-    * it touches), never the corpus:
-    *
-    *  1. read the quantizers from the index ([[readIvfPqQuantizers]], two
-    *     metadata-scale collects) — FROZEN: retraining here would silently
-    *     pair every previously written code with foreign codewords;
-    *  2. assign cell + M codes inline over the delta scan (TopCells +
-    *     PqNearest in one projection — the build's own kernels, zero new
-    *     ones), after the corpus-wide finiteness guard;
-    *  3. gather the touched (cell, ledger-bucket) pairs: ONE
-    *     ≤ K·[[LedgerBuckets]]-row collect, bounded by the quantizer size
-    *     times a constant (metadata, the CleanJob partition-key class);
-    *  4. rewrite ONLY the touched cell partitions: their existing rows —
-    *     read through explicit `cell=N` paths, so untouched directories
-    *     are never listed, let alone opened — anti-joined against the
-    *     delta's ids (the delta side is batch-sized, AQE broadcasts it),
-    *     unioned with the delta's fresh codes, written back via dynamic
-    *     partition overwrite ([[rewriteTouchedCells]]);
-    *  5. merge the delta's (vec_id, cell) pairs into `ledger/` the same
-    *     way, pruned to the batch's bucket partitions ([[mergeLedger]])
-    *     — the id→cell map [[upsertIvfPqIndex]] reads old cells from.
-    *
-    * Redelivery contract — upsert WITHIN the frozen assignment: cell
-    * assignment is deterministic under frozen quantizers, so a
-    * redelivered id with an UNCHANGED embedding lands in its own cell
-    * and the anti-join replaces its row exactly (content-idempotent,
-    * spec-pinned). A redelivered id whose embedding CHANGED CELL is a
-    * vector UPDATE, which THIS operator does not handle: the stale row
-    * in the old cell is outside the delta's cell set and would survive
-    * as a duplicate id. Route updates through [[upsertIvfPqIndex]]
-    * (n17), which reads the old cells from the `ledger/` artifact this
-    * method maintains and widens the touched set with them. Intra-batch
-    * id uniqueness is the CALLER's obligation (r19 advice): two rows
-    * sharing a vec_id within ONE batch both survive the union — there
-    * is no order column to arbitrate a winner, so the operator refuses
-    * to pick one silently; dedupe upstream (d1's digest discipline)
-    * before landing a batch.
-    *
-    * Crash-consistency contract (the reference's idempotent
-    * partition-granular overwrite — `pnp-cleanerLambda.py:116` — applied
-    * to the ANN artifact): dynamic overwrite stages files and commits by
-    * per-partition delete+rename, so a crash BEFORE commit leaves every
-    * old partition intact, and re-running the same append then lands the
-    * identical content. A crash INSIDE the commit window can leave a
-    * touched partition deleted-but-not-renamed — and a re-run does NOT
-    * resurrect that partition's prior rows (it only re-lands the delta's).
-    * That is an acceptable contract precisely because `codes/` is DERIVED
-    * data: the raw corpus remains the source of truth, and the repair is
-    * the frozen recode (no retraining — quantizer artifacts are never
-    * touched by any append, so concurrent probes keep resolving
-    * throughout). A zone that needs crash-EVIDENT state instead pairs the
-    * artifact with ExportJob's manifest discipline. The `codes/` and
-    * `ledger/` writes commit SEPARATELY (codes first): a crash between
-    * them leaves the ledger behind the codes, and a later upsert reading
-    * that stale map could miss a moved id's true partition — so the
-    * repair after ANY mid-maintenance crash is [[writeLedgerFromCodes]]
-    * (artifact-bounded, no retraining) before the next maintenance call;
-    * a zone needing the two commits atomic pairs them with a manifest,
-    * same discipline as above.
-    *
-    * Returns the touched cell ids — the cost surface a maintainer
-    * monitors, and what the A/B scale study logs. At 100 TB: an appended
-    * batch costs (|delta| kernel work) + (touched cells' code rows read +
-    * rewritten, each cell ~4 bytes/vector of n/K vectors) — a full
-    * rebuild costs the corpus scan PLUS quantizer retraining, so the
-    * maintenance loop runs appends until the census drift check fails.
+  /** Composition memo of the MAINTAINED registry twins (n16, n17): one
+    * entry per (session, corpus, index dir) — each twin owns its own
+    * index dir, so one memo serves both.
     */
-  def appendToIvfPqIndex(spark: SparkSession, indexDir: String,
-      delta: DataFrame): Seq[Long] = {
-    val (cents, book) = readIvfPqQuantizers(spark, indexDir)
-    ensureLedger(spark, indexDir)
-    // localCheckpoint, NOT persist: the coded delta feeds the
-    // touched-cells gather and BOTH merge writes, and the codes commit
-    // ends in a refreshByPath that invalidates — and lazily RE-EXECUTES —
-    // any cached plan whose lineage reads the artifact. A batch derived
-    // from the index itself (the natural "re-land these rows" shape, and
-    // exactly what the maintenance specs feed) would then re-read
-    // partitions the commit just replaced; truncating the lineage pins
-    // the coded batch to its pre-write evaluation instead. Eager, so the
-    // assignment kernels run exactly once.
-    val d = codedBatch(delta, cents, book).localCheckpoint()
-    // ONE ≤ K·LedgerBuckets-row collect (quantizer- and constant-bounded)
-    // serves both the codes rewrite's touched-cell set and the ledger
-    // merge's bucket pruning
-    val cellBuckets = d
-      .select(col("cell"), ledgerBucket(col("vec_id")).as("b"))
-      .distinct().collect()
-    val touched = cellBuckets.map(_.getLong(0)).distinct.sorted.toSeq
-    if (touched.nonEmpty) {
-      rewriteTouchedCells(spark, indexDir, touched, d.select("vec_id"), d,
-        deleteEmptied = false)
-      mergeLedger(spark, indexDir,
-        cellBuckets.map(_.getLong(1)).distinct.sorted.toSeq,
-        d.select("vec_id"), d)
-    }
-    touched
-  }
+  private val maintainedIdxMemo =
+    new BoundedMemo[(String, String, String), Unit](MemoCapacity)
 
-  private val appendIdxMemo = new BoundedMemo[
-    (String, String, String, Int), Seq[Long]](MemoCapacity)
-
-  /** The n16 artifact, built once per (session, corpus, dir, schedule):
-    * the BASE-split index plus one frozen-quantizer append of the delta
-    * split — memo honored only while the artifact survives on disk, the
-    * [[buildIvfPqIndex]] discipline (sibling schedules evicted before the
-    * artifact is rewritten; probe plans for the dir dropped with them).
+  /** A registry twin's maintained artifact, composed once per (session,
+    * corpus, index dir): `compose` (a cold build plus one maintenance
+    * batch) runs unless a memo entry exists AND the artifact survives on
+    * disk — the [[buildIvfPqIndex]] discipline (sibling entries for the
+    * dir evicted before the artifact is rewritten; probe plans for the
+    * dir dropped with them).
     */
-  private def appendedIvfPqIndex(spark: SparkSession, dir: String,
-      indexDir: String, numCells: Int = NumCells): Unit = {
-    val key = (sessionKey(spark), dir, indexDir, numCells)
+  private def maintainedIvfPqIndex(spark: SparkSession, dir: String,
+      indexDir: String)(compose: => Unit): Unit = {
+    val key = (sessionKey(spark), dir, indexDir)
     def artifactIntact: Boolean = ivfPqArtifactIntact(spark, indexDir)
-    appendIdxMemo.get(key) match {
+    maintainedIdxMemo.get(key) match {
       case Some(_) if artifactIntact => ()
       case _ =>
-        appendIdxMemo.keys
+        maintainedIdxMemo.keys
           .filter(k => k._3 == indexDir && k != key)
-          .foreach(appendIdxMemo.remove)
+          .foreach(maintainedIdxMemo.remove)
         pqProbeMemo.keys.filter(_._2 == indexDir).foreach(pqProbeMemo.remove)
-        buildIvfPqBaseIndex(spark, dir, indexDir, numCells)
-        val touched = appendToIvfPqIndex(spark, indexDir,
-          appendDelta(spark, dir))
-        appendIdxMemo.put(key, touched)
+        compose
+        maintainedIdxMemo.put(key, ())
     }
   }
 
   /** n16: INCREMENTAL INDEX MAINTENANCE — the persisted IVF+PQ index
-    * built over the BASE split, the DELTA split appended under frozen
-    * quantizers ([[appendToIvfPqIndex]]), then probed exactly like n13.
+    * built over the BASE split, the DELTA split landed under frozen
+    * quantizers ([[upsertIvfPqIndex]] — its ledger lookup finds no old
+    * cell for a new id, so an insert batch rewrites only its destination
+    * cells), then probed exactly like n13.
     *
     * Oracle: n12's CTE chain over the UNION corpus with every quantizer
     * CTE pinned to the BASE corpus — with frozen quantizers,
-    * append-then-probe must reproduce rebuild-then-probe bit-for-bit
+    * insert-then-probe must reproduce rebuild-then-probe bit-for-bit
     * (codes are integers; the quantizer doubles round-trip parquet
     * exactly — n13's round-trip argument with training corpus ≠ coded
-    * corpus). That equivalence is what makes online maintenance SAFE: an
-    * appended index can never drift from what a frozen-quantizer rebuild
-    * would serve. IvfPqAppendSpec pins the same claim on disk
-    * (append == one-shot frozen rebuild, content-idempotent re-append,
-    * untouched partitions byte-unchanged, a poisoned foreign partition
-    * never read), and the SPARK_GRAFT_N16 ScaleStress A/B measures append
-    * cost tracking the DELTA while the frozen rebuild tracks the corpus.
+    * corpus). That equivalence is what makes online maintenance SAFE: a
+    * maintained index can never drift from what a frozen-quantizer
+    * rebuild would serve. IvfPqUpsertSpec pins the same claim on disk
+    * for insert batches (insert == frozen recode, content-idempotent
+    * re-land, untouched partitions byte-unchanged, a poisoned foreign
+    * partition never read), and the SPARK_GRAFT_N16 ScaleStress A/B
+    * measures insert cost tracking the DELTA while the frozen recode
+    * tracks the corpus.
     */
   def ivfPqAppendTopK(spark: SparkSession, dir: String): DataFrame = {
     val idx = appendIndexDirFor(spark, dir)
-    appendedIvfPqIndex(spark, dir, idx)
+    maintainedIvfPqIndex(spark, dir, idx) {
+      buildIvfPqBaseIndex(spark, dir, idx)
+      upsertIvfPqIndex(spark, idx, appendDelta(spark, dir))
+    }
     probeIvfPqIndex(spark, dir, idx, NumProbe)
   }
 
@@ -2171,11 +2080,11 @@ object Similarity {
     */
   /** The frozen-quantizer probe chain over a served-corpus CTE `eu`,
     * against base-trained `cent*`/`pcent*` CTEs — shared VERBATIM by n16
-    * (append) and n17 (upsert): both operators' contract is "maintenance
-    * under frozen quantizers serves exactly what a frozen rebuild over
-    * the post-maintenance corpus serves", so both oracles run this same
-    * text and differ only in `e` (the quantizer-training corpus) and
-    * `eu` (the served corpus).
+    * (insert batch) and n17 (update batch): both twins' contract is
+    * "maintenance under frozen quantizers serves exactly what a frozen
+    * rebuild over the post-maintenance corpus serves", so both oracles
+    * run this same text and differ only in `e` (the quantizer-training
+    * corpus) and `eu` (the served corpus).
     */
   private def frozenProbeOverEuSql: String =
     s"""nu AS (
@@ -2247,7 +2156,7 @@ object Similarity {
     * query ids, which stay fixed so the probe side is identical on both
     * engines — to its NEGATION. Negating a vector flips its cosine to
     * every centroid, so the batch is all but guaranteed to change cells:
-    * the exact case n16's contract names unsupported and n17 exists for.
+    * the case an insert batch never exercises and n17 exists for.
     * Mod-based (not hashed) and rem ≠ [[AppendRem]], so the oracle spells
     * it verbatim and the two demo splits never collide.
     */
@@ -2287,17 +2196,26 @@ object Similarity {
     s"${indexRoot(spark)}/ivfpq_upsert_index/${mangledCorpusName(dir)}"
 
   /** UPSERT a batch of vectors into an EXISTING persisted IVF+PQ index
-    * with FROZEN quantizers — n16's append completed for UPDATES: a
+    * with FROZEN quantizers — the ONE writer that maintains a built
+    * index, for inserts and updates alike. `batch` carries (vec_id,
+    * embedding) — the embeddings-table shape st16's ingest stream
+    * projects. New vectors enter `codes/` through this until st16's
+    * per-cell census says the quantizers have drifted, and only that
+    * drift signal triggers [[buildIvfPqIndex]]'s full retrain+rebuild. A
     * batch id may already live in the index in a DIFFERENT cell (its
     * embedding changed), and that stale row must go. The old cells come
     * from the `ledger/` artifact (the id→cell map every build and
     * maintenance write keeps next to `codes/`), so locating them costs a
-    * bucket-pruned ledger lookup — never the corpus-wide id scan n16's
-    * contract refused to hide. Every step is bounded by the BATCH, the
-    * cells it touches, and the ledger buckets its ids hash to:
+    * bucket-pruned ledger lookup — never a corpus-wide id scan; a new id
+    * finds no old cell and costs only that lookup. Every step is bounded
+    * by the BATCH, the cells it touches, and the ledger buckets its ids
+    * hash to:
     *
-    *  1. quantizers read FROZEN from the artifact, ledger self-healed if
-    *     absent ([[ensureLedger]] — pre-r20 artifacts);
+    *  1. quantizers read FROZEN from the artifact ([[readIvfPqQuantizers]],
+    *     two metadata-scale collects — retraining here would silently
+    *     pair every previously written code with foreign codewords),
+    *     ledger self-healed if absent ([[ensureLedger]] — pre-r20
+    *     artifacts);
     *  2. the batch coded inline ([[codedBatch]] — the build's own
     *     kernels) after the finiteness guard;
     *  3. the batch's ledger BUCKETS gathered: ONE ≤ [[LedgerBuckets]]-row
@@ -2305,32 +2223,66 @@ object Similarity {
     *  4. OLD cells looked up: the bucket partitions of `ledger/` read
     *     through explicit `b=N` paths, semi-joined against the batch's
     *     ids (batch-sized, AQE broadcasts it);
-    *  5. the touched set gathered: new cells ∪ old cells, ONE ≤K-row
-    *     collect (quantizer-bounded);
+    *  5. the touched set gathered: new cells ∪ old cells, each flagged
+    *     by whether a batch row lands in it, ONE ≤K-row collect
+    *     (quantizer-bounded);
     *  6. the touched cell partitions rewritten ([[rewriteTouchedCells]]):
     *     anti-join drops every batch id wherever it lived — the stale
     *     row in a moved id's OLD cell included — and the fresh codes
-    *     land in the NEW cells; a partition left EMPTY by the moves is
-    *     deleted outright (dynamic overwrite cannot truncate a partition
-    *     it writes no rows for — stale-dir hazard, spec-pinned);
+    *     land in the NEW cells; an old cell no batch row lands in and
+    *     left EMPTY is deleted outright (dynamic overwrite cannot
+    *     truncate a partition it writes no rows for — stale-dir hazard,
+    *     spec-pinned). An insert-only batch vacates no cell and skips
+    *     that epilogue;
     *  7. the ledger merged the same way ([[mergeLedger]]).
     *
     * DELETE semantics fall out of the guard: an update to a
     * non-representable embedding (zero/NaN/±Inf) codes no row, so the
     * anti-join removes the id from codes AND ledger and nothing re-lands
     * — exactly what a frozen rebuild over the post-update corpus serves,
-    * the F6-quarantine shape. Intra-batch id uniqueness is the caller's
-    * obligation, as for append. Crash contract: identical to append's
-    * (codes commits, then ledger; repair = [[writeLedgerFromCodes]]),
-    * plus the emptied-dir deletes run AFTER the codes commit — a crash
+    * the F6-quarantine shape.
+    *
+    * Redelivery contract: cell assignment is deterministic under frozen
+    * quantizers, so a redelivered batch lands every id in the cell the
+    * first landing chose and the anti-join replaces its row exactly
+    * (content-idempotent, spec-pinned). Intra-batch id uniqueness is the
+    * CALLER's obligation (r19 advice): two rows sharing a vec_id within
+    * ONE batch both survive the union — there is no order column to
+    * arbitrate a winner, so the operator refuses to pick one silently;
+    * dedupe upstream (d1's digest discipline) before landing a batch.
+    *
+    * Crash-consistency contract (the reference's idempotent
+    * partition-granular overwrite — `pnp-cleanerLambda.py:116` — applied
+    * to the ANN artifact): dynamic overwrite stages files and commits by
+    * per-partition delete+rename, so a crash BEFORE commit leaves every
+    * old partition intact, and re-running the same upsert then lands the
+    * identical content. A crash INSIDE the commit window can leave a
+    * touched partition deleted-but-not-renamed — and a re-run does NOT
+    * resurrect that partition's prior rows (it only re-lands the
+    * batch's). That is an acceptable contract precisely because `codes/`
+    * is DERIVED data: the raw corpus remains the source of truth, and
+    * the repair is the frozen recode ([[recodeIvfPqIndex]] — no
+    * retraining; quantizer artifacts are never touched by maintenance,
+    * so concurrent probes keep resolving throughout). A zone that needs
+    * crash-EVIDENT state instead pairs the artifact with ExportJob's
+    * manifest discipline. The `codes/` and `ledger/` writes commit
+    * SEPARATELY (codes first): a crash between them leaves the ledger
+    * behind the codes, and a later upsert reading that stale map could
+    * miss a moved id's true partition — so the repair after ANY
+    * mid-maintenance crash is [[writeLedgerFromCodes]] (artifact-bounded,
+    * no retraining) before the next maintenance call; a zone needing the
+    * two commits atomic pairs them with a manifest, same discipline as
+    * above. The vacated-dir deletes run AFTER the codes commit — a crash
     * between them leaves stale dirs that the SAME upsert re-landed
     * (content-idempotent) removes, because the still-stale ledger keeps
     * their cells in the touched set.
     *
     * Returns the touched cell ids (old ∪ new), the maintainer's cost
     * surface. At 100 TB: |batch| kernel work + (touched cells' code
-    * rows) + (batch buckets' ledger rows) — the corpus artifact is never
-    * scanned, and the raw corpus never opened at all.
+    * rows, each cell ~4 bytes/vector of n/K vectors, read + rewritten) +
+    * (batch buckets' ledger rows) — the corpus artifact is never scanned,
+    * and the raw corpus never opened at all, while a full rebuild costs
+    * the corpus scan PLUS quantizer retraining.
     */
   def upsertIvfPqIndex(spark: SparkSession, indexDir: String,
       batch: DataFrame): Seq[Long] = {
@@ -2338,11 +2290,16 @@ object Similarity {
     ensureLedger(spark, indexDir)
     // PRE-guard ids: a guard-rejected update must still delete its stale
     // row, so the anti-joins and the ledger lookup run on every batch id.
-    // localCheckpoint for the same reason as append's coded batch: an
-    // update batch NATURALLY derives from the index ("move the ids this
-    // query surfaced"), and the commit's refreshByPath would re-execute
-    // a merely-cached lineage over partitions the commit replaced or the
-    // emptied-dir epilogue deleted.
+    // localCheckpoint, NOT persist: the ids and the coded batch feed the
+    // touched-cells gather and BOTH merge writes, and the codes commit
+    // ends in a refreshByPath that invalidates — and lazily RE-EXECUTES —
+    // any cached plan whose lineage reads the artifact. A batch derived
+    // from the index itself (the natural "re-land / move the ids this
+    // query surfaced" shape, and exactly what the maintenance specs feed)
+    // would then re-read partitions the commit just replaced or the
+    // vacated-dir epilogue deleted; truncating the lineage pins the batch
+    // to its pre-write evaluation instead. Eager, so the assignment
+    // kernels run exactly once.
     val ids = batch.select("vec_id").distinct().localCheckpoint()
     val d = codedBatch(batch, cents, book).localCheckpoint()
     val buckets = ids.select(ledgerBucket(col("vec_id")).as("b"))
@@ -2359,96 +2316,28 @@ object Similarity {
         .parquet(bucketDirs: _*)
         .join(ids, Seq("vec_id"), "left_semi")
         .select(col("cell").cast("long").as("cell"))
-    val touched = d.select("cell").unionByName(oldCells).distinct()
-      .collect().map(_.getLong(0)).sorted.toSeq
+    val cells = d.select(col("cell"), lit(true).as("lands"))
+      .unionByName(oldCells.select(col("cell"), lit(false).as("lands")))
+      .groupBy("cell").agg(max("lands"))
+      .collect().map(r => r.getLong(0) -> r.getBoolean(1)).sortBy(_._1)
+    val touched = cells.map(_._1).toSeq
+    val vacated = cells.collect { case (c, false) => c }.toSeq
     if (touched.nonEmpty) {
-      rewriteTouchedCells(spark, indexDir, touched, ids, d,
-        deleteEmptied = true)
-      mergeLedger(spark, indexDir, buckets, ids, d, Some(bucketDirs))
+      rewriteTouchedCells(spark, indexDir, touched, vacated, ids, d)
+      mergeLedger(spark, indexDir, bucketDirs, ids, d)
     }
     touched
   }
 
-  /** Router crossover: append wins when its rewrite volume (touched
-    * cells at average occupancy, plus the batch) is under this fraction
-    * of the frozen recode's (the whole codes table, plus the batch).
-    * SCALESTRESS_r19 brackets the real crossover — a batch touching
-    * 100% of cells costs 1.28× the recode (append pays read-back +
-    * anti-join on every partition the recode blindly overwrites), a
-    * batch touching one cell costs 5–8× LESS — and 0.5 splits the
-    * bracket conservatively. A mis-route costs time, never answers:
-    * both routes are the same frozen-quantizer coding (IvfPqAppendSpec's
-    * equivalence proof), which is why this needs no oracle of its own.
-    */
-  private[queries] val RouterTheta = 0.5
-
-  /** The append-vs-recode ROUTER — the decision rule SCALING.md's r19
-    * study derived, now in code: price a batch of NEW vectors with the
-    * same one-projection cell assignment the append itself would run,
-    * compare the volumes, and route. `corpus` is the full post-batch
-    * corpus (base ∪ delta), consumed only on the recode route — the
-    * frozen recode is [[appendToIvfPqIndex]] with the corpus as the
-    * batch, replacing every row under the unchanged quantizers.
-    *
-    * Pricing cost, priced honestly: one |delta| pass through the coarse
-    * kernel (the PQ kernels are skipped — cells alone decide the route)
-    * collecting ≤K (cell, count) rows, plus a parquet row-COUNT of
-    * `codes/` (footer statistics — no data pages read). On the append
-    * route the delta then pays its assignment kernels again inside the
-    * append; at 100 TB that double kernel work is |delta|·K multiply-adds
-    * against the terabytes of rewrite I/O the routing decision governs.
-    * The estimate prices guard-rejected rows too (they cost a touched
-    * cell in the estimate but code no row) — an over-count, never under.
-    *
-    * Returns (route, touched cells). The maintenance loop this slots
-    * into: route inserts here, updates through [[upsertIvfPqIndex]], and
-    * full retrain+rebuild ([[buildIvfPqIndex]]) only when st16's census
-    * says the quantizers drifted.
+  /** Kept only because the benchmark harness (`perfbench/`) calls it with
+    * this exact signature: a delegate to
+    * [[upsertIvfPqIndex]]`(spark, indexDir, delta)` that returns
+    * `("upsert", touched)`. `corpus` is unused. The delegate is deleted
+    * once the harness is switched to call [[upsertIvfPqIndex]] directly.
     */
   def maintainIvfPqIndex(spark: SparkSession, indexDir: String,
-      delta: DataFrame, corpus: DataFrame): (String, Seq[Long]) = {
-    val (cents, _) = readIvfPqQuantizers(spark, indexDir)
-    val priced = widen(delta
-        .select(col("vec_id"), asDouble("embedding").as("v")))
-      .withColumn("norm", sqrt(dot(col("v"), col("v"))))
-      .withColumn("cell", cellExpr(cents, col("v"), col("norm")))
-      .groupBy("cell").count().collect()
-    val deltaRows = priced.map(_.getLong(1)).sum.toDouble
-    val total = spark.read.parquet(s"$indexDir/codes").count().toDouble
-    val appendVolume = priced.length * (total / cents.size) + deltaRows
-    val recodeVolume = total + deltaRows
-    if (appendVolume <= RouterTheta * recodeVolume)
-      ("append", appendToIvfPqIndex(spark, indexDir, delta))
-    else
-      ("recode", appendToIvfPqIndex(spark, indexDir, corpus))
-  }
-
-  private val upsertIdxMemo = new BoundedMemo[
-    (String, String, String, Int), Seq[Long]](MemoCapacity)
-
-  /** The n17 artifact, built once per (session, corpus, dir, schedule):
-    * the FULL-corpus index (n13's quantizer training, memo-shared) plus
-    * one upsert of the negated split — the [[appendedIvfPqIndex]]
-    * discipline (memo honored only while the artifact survives; sibling
-    * schedules and the dir's probe plans evicted before a rewrite).
-    */
-  private def upsertedIvfPqIndex(spark: SparkSession, dir: String,
-      indexDir: String, numCells: Int = NumCells): Unit = {
-    val key = (sessionKey(spark), dir, indexDir, numCells)
-    def artifactIntact: Boolean = ivfPqArtifactIntact(spark, indexDir)
-    upsertIdxMemo.get(key) match {
-      case Some(_) if artifactIntact => ()
-      case _ =>
-        upsertIdxMemo.keys
-          .filter(k => k._3 == indexDir && k != key)
-          .foreach(upsertIdxMemo.remove)
-        pqProbeMemo.keys.filter(_._2 == indexDir).foreach(pqProbeMemo.remove)
-        buildIvfPqIndexCold(spark, dir, indexDir, numCells)
-        val touched = upsertIvfPqIndex(spark, indexDir,
-          upsertBatch(spark, dir))
-        upsertIdxMemo.put(key, touched)
-    }
-  }
+      delta: DataFrame, corpus: DataFrame): (String, Seq[Long]) =
+    ("upsert", upsertIvfPqIndex(spark, indexDir, delta))
 
   /** n17: VECTOR UPDATE on the persisted IVF+PQ index — the full-corpus
     * index built once, the negated split UPSERTED under frozen quantizers
@@ -2473,7 +2362,11 @@ object Similarity {
     */
   def ivfPqUpsertTopK(spark: SparkSession, dir: String): DataFrame = {
     val idx = upsertIndexDirFor(spark, dir)
-    upsertedIvfPqIndex(spark, dir, idx)
+    maintainedIvfPqIndex(spark, dir, idx) {
+      buildIvfPqIndexCold(spark, dir, idx, NumCells,
+        trainKey = dir, keep = lit(true))
+      upsertIvfPqIndex(spark, idx, upsertBatch(spark, dir))
+    }
     probeIvfPqIndex(spark, dir, idx, NumProbe)
   }
 

@@ -49,7 +49,7 @@ class DriverCollectAuditSpec extends AnyFunSuite {
     "graft/queries/Events.scala" -> 1,
     "graft/queries/Layout.scala" -> 1,
     "graft/queries/Sampling.scala" -> 2,
-    "graft/queries/Similarity.scala" -> 14,
+    "graft/queries/Similarity.scala" -> 12,
     "graft/queries/Sketches.scala" -> 5,
     "graft/queries/TextAnalysis.scala" -> 1)
 

@@ -120,7 +120,7 @@ class IvfPqIndexSpec extends SparkTestBase {
         "the scheme-rooted twin must reproduce the from-scratch n12")
       assert(fsFingerprint(s"$root/ivfpq_index").nonEmpty,
         "the artifacts must land under the scheme-qualified root")
-      // and the n16 twin's append path end-to-end under the same root
+      // and the n16 twin's insert path end-to-end under the same root
       assert(norm(Similarity.ivfPqAppendTopK(spark, SfDir)).nonEmpty)
       assert(fsFingerprint(s"$root/ivfpq_append_index").nonEmpty)
       // and the n17 twin's upsert path (r20): its ledger bucket probes,

@@ -1,20 +1,13 @@
 package graft.queries
 
-import java.io.File
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
-import graft.core.Tables
 
-/** Contracts for the append-vs-recode router
-  * ([[Similarity.maintainIvfPqIndex]]) — the decision rule SCALING.md's
-  * r19 A/B derived, pinned at both regimes: a cell-LOCAL insert batch
-  * routes to the partition-granular append, a corpus-UNIFORM one to the
-  * frozen recode, and EITHER route lands the artifact a direct call of
-  * the chosen form lands (answer-identity is inherited from
-  * IvfPqAppendSpec's append == frozen-recode equivalence, so the router
-  * needs no oracle of its own — a mis-route could only ever cost time).
+/** [[Similarity.maintainIvfPqIndex]] survives only as the benchmark
+  * harness's entry point: a delegate to [[Similarity.upsertIvfPqIndex]].
+  * Pinned here so the delegate can never drift from the writer it names —
+  * it must land exactly the direct upsert's codes and ledger.
   */
 class IvfPqMaintainSpec extends SparkTestBase {
 
@@ -27,50 +20,25 @@ class IvfPqMaintainSpec extends SparkTestBase {
       .collect().map(_.toSeq).toSeq.sortBy(_.toString)
   }
 
-  private def firstCell(idx: String): Long =
-    new File(s"$idx/codes").listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("cell="))
-      .map(_.getName.stripPrefix("cell=").toLong).min
+  private def ledgerRows(idx: String): Seq[(Long, Long)] =
+    spark.read.parquet(s"$idx/ledger")
+      .select(col("vec_id"), col("cell").cast("long"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
 
-  /** The members of one base cell in embeddings-table shape — a batch
-    * whose touched set is ONE cell of K (content-idempotent re-land).
-    */
-  private def localBatch(idx: String): org.apache.spark.sql.DataFrame =
-    Tables(spark, SfDir).embeddings.select("vec_id", "embedding")
-      .join(spark.read.parquet(s"$idx/codes/cell=${firstCell(idx)}")
-        .select("vec_id"), Seq("vec_id"), "left_semi")
-
-  private def union: org.apache.spark.sql.DataFrame =
-    Tables(spark, SfDir).embeddings.select("vec_id", "embedding")
-
-  test("a cell-local batch routes to append and lands the direct append's artifact") {
-    val idxR = scratch("ivfpq_route_local_r")
-    val idxD = scratch("ivfpq_route_local_d")
-    Similarity.buildIvfPqBaseIndex(spark, SfDir, idxR)
+  test("maintainIvfPqIndex lands the direct upsert's codes and ledger") {
+    val idxM = scratch("ivfpq_maintain_m")
+    val idxD = scratch("ivfpq_maintain_d")
+    Similarity.buildIvfPqBaseIndex(spark, SfDir, idxM)
     Similarity.buildIvfPqBaseIndex(spark, SfDir, idxD)
-    val c0 = firstCell(idxR)
-    val (route, touched) =
-      Similarity.maintainIvfPqIndex(spark, idxR, localBatch(idxR), union)
-    assert(route == "append",
-      s"one touched cell of K at ~1/K of the corpus must price under the recode, got $route")
-    assert(touched == Seq(c0), s"the local batch must touch only cell $c0")
-    Similarity.appendToIvfPqIndex(spark, idxD, localBatch(idxD))
-    assert(codesRows(idxR) == codesRows(idxD),
-      "the routed artifact must equal the direct append's")
-  }
-
-  test("a corpus-uniform batch routes to recode and lands the direct recode's artifact") {
-    val idxR = scratch("ivfpq_route_uni_r")
-    val idxD = scratch("ivfpq_route_uni_d")
-    Similarity.buildIvfPqBaseIndex(spark, SfDir, idxR)
-    Similarity.buildIvfPqBaseIndex(spark, SfDir, idxD)
-    val (route, touched) = Similarity.maintainIvfPqIndex(spark, idxR,
-      Similarity.appendDelta(spark, SfDir), union)
-    assert(route == "recode",
-      s"a mod-split delta spread over ~every cell must price over theta, got $route")
-    assert(touched.nonEmpty)
-    Similarity.appendToIvfPqIndex(spark, idxD, union)
-    assert(codesRows(idxR) == codesRows(idxD),
-      "the routed artifact must equal the direct frozen recode's")
+    val delta = Similarity.appendDelta(spark, SfDir)
+    val (label, touched) = Similarity.maintainIvfPqIndex(spark, idxM, delta,
+      corpus = spark.emptyDataFrame)
+    assert(label == "upsert")
+    assert(touched.nonEmpty &&
+      touched == Similarity.upsertIvfPqIndex(spark, idxD, delta))
+    assert(codesRows(idxM) == codesRows(idxD),
+      "the delegate must land the direct upsert's codes")
+    assert(ledgerRows(idxM) == ledgerRows(idxD),
+      "and exactly its ledger")
   }
 }

@@ -84,24 +84,12 @@ class IvfPqUpsertSequenceSpec extends SparkTestBase {
     // every class must be non-trivially exercised by the fixture
     assert(b1.count() > 0 && b2.count() > 0 && b3.count() > 0 && b4.count() > 0)
 
-    // reference: a fresh artifact's frozen quantizers, codes dropped AND
-    // the ledger emptied (left as an existing-but-empty dir so the
-    // self-heal doesn't try to re-derive it from the dropped codes),
-    // then ONE recode of the model corpus — a pure coding into an empty
-    // artifact. Emptying the ledger matters: the first draft kept the
-    // base build's ledger, and the recode's anti-join only covers the
-    // model's ids — so rows for ids the chain DELETED and never
-    // re-inserted survived in the BASELINE ledger, exactly the documented
-    // benign-stale semantics, while the sequential arm had correctly
-    // removed them at delete time. (The implementation was right; the
-    // reference was stale — recorded because it demonstrates the
-    // stale-ledger contract live.)
+    // reference: a fresh artifact's frozen quantizers, then ONE recode of
+    // the model corpus, which replaces codes/ and ledger/ wholesale — a
+    // pure coding, so ids the chain DELETED and never re-inserted have no
+    // row in either artifact
     Similarity.buildIvfPqIndex(spark, SfDir, idxR)
-    graft.core.FsUtil.deleteRecursively(s"$idxR/codes")
-    graft.core.FsUtil.deleteRecursively(s"$idxR/ledger")
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(s"$idxR/ledger"))
-    Similarity.appendToIvfPqIndex(spark, idxR, model)
+    Similarity.recodeIvfPqIndex(spark, idxR, model)
 
     assert(codesRows(idx) == codesRows(idxR),
       "four chained upserts must land exactly the one-shot frozen recode's codes")

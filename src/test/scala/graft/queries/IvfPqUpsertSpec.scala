@@ -1,21 +1,27 @@
 package graft.queries
 
 import java.io.File
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
 import graft.core.Tables
 
-/** Contracts for n17's vector UPDATE on the persisted IVF+PQ index
-  * ([[Similarity.upsertIvfPqIndex]]): an upserted index must be
-  * indistinguishable from a frozen-quantizer rebuild over the POST-update
-  * corpus — which means a moved id leaves NO stale row in its old cell, a
-  * cell emptied by the moves loses its partition directory, a
-  * guard-rejected update deletes, a re-landed batch is content-idempotent
-  * — and the `ledger/` artifact that makes the old-cell lookup batch-
-  * bounded stays equal to the codes projection through build, append and
-  * upsert (self-healing when absent).
+/** Contracts for [[Similarity.upsertIvfPqIndex]], the one writer that
+  * maintains a persisted IVF+PQ index. For UPDATE batches (n17) an
+  * upserted index must be indistinguishable from a frozen-quantizer
+  * rebuild ([[Similarity.recodeIvfPqIndex]]) over the POST-update corpus
+  * — which means a moved id leaves NO stale row in its old cell, a cell
+  * emptied by the moves loses its partition directory, a guard-rejected
+  * update deletes, a re-landed batch is content-idempotent. For INSERT
+  * batches (n16's delta split onto its base index) the same frozen-rebuild
+  * equivalence holds, a re-land is content-idempotent, and the write
+  * touches ONLY the batch's cell partitions — proven byte-wise (untouched
+  * partition fingerprints) and behaviorally (a poisoned foreign partition
+  * never read). The `ledger/` artifact that makes the old-cell lookup
+  * batch-bounded stays equal to the codes projection through build,
+  * insert and update (self-healing when absent).
   */
 class IvfPqUpsertSpec extends SparkTestBase {
 
@@ -58,18 +64,11 @@ class IvfPqUpsertSpec extends SparkTestBase {
       Similarity.upsertBatch(spark, SfDir))
     assert(touched.nonEmpty, "the fixture batch must touch some cell")
     // frozen rebuild over the POST-update corpus: a fresh full-corpus
-    // base gives the artifact its (frozen) quantizers + ledger, then
-    // codes/ is DROPPED before the recode append so the baseline is a
-    // pure fresh coding of (originals minus the split) ∪ (negated
-    // split). Appending onto the populated base instead would be
-    // fixture-fragile: append cannot truncate a cell wholly emptied by
-    // the update (its touched set is the batch's destination cells), so
-    // a cell whose entire membership fell in the split would keep stale
-    // rows in the BASELINE while the upsert correctly removes them
-    // (r20 review finding).
+    // base gives the artifact its (frozen) quantizers, then the recode
+    // replaces codes/ and ledger/ wholesale with a pure fresh coding of
+    // (originals minus the split) ∪ (negated split)
     Similarity.buildIvfPqIndex(spark, SfDir, idxR)
-    graft.core.FsUtil.deleteRecursively(s"$idxR/codes")
-    Similarity.appendToIvfPqIndex(spark, idxR,
+    Similarity.recodeIvfPqIndex(spark, idxR,
       Similarity.postUpsertCorpus(spark, SfDir))
     val u = norm(Similarity.probeIvfPqIndex(spark, SfDir, idxU, nprobe = 2))
     val r = norm(Similarity.probeIvfPqIndex(spark, SfDir, idxR, nprobe = 2))
@@ -204,10 +203,10 @@ class IvfPqUpsertSpec extends SparkTestBase {
       "the ledger must be written hash-bucket-partitioned")
     assert(ledgerMap(idx) == codesProjection(idx),
       "build must write ledger == codes projection")
-    Similarity.appendToIvfPqIndex(spark, idx,
+    Similarity.upsertIvfPqIndex(spark, idx,
       Similarity.appendDelta(spark, SfDir))
     assert(ledgerMap(idx) == codesProjection(idx),
-      "append must keep ledger == codes projection")
+      "an insert batch must keep ledger == codes projection")
     // self-heal (the documented crash repair): ledger removed, the next
     // upsert re-derives it from codes before its old-cell lookup
     graft.core.FsUtil.deleteRecursively(s"$idx/ledger")
@@ -223,5 +222,88 @@ class IvfPqUpsertSpec extends SparkTestBase {
     Similarity.upsertIvfPqIndex(spark, idx, Similarity.upsertBatch(spark, SfDir))
     val explicit = norm(Similarity.probeIvfPqIndex(spark, SfDir, idx, nprobe = 2))
     assert(norm(Similarity.ivfPqUpsertTopK(spark, SfDir)) == explicit)
+  }
+
+  // ---- insert batches: n16's delta split landed onto its base index
+
+  private def unionCorpus =
+    Tables(spark, SfDir).embeddings.select("vec_id", "embedding")
+
+  test("insert batch: upsert-then-probe equals frozen-quantizer rebuild-then-probe") {
+    val idxA = scratch("ivfpq_insert_eq_a")
+    val idxR = scratch("ivfpq_insert_eq_r")
+    Similarity.buildIvfPqBaseIndex(spark, SfDir, idxA)
+    val touched = Similarity.upsertIvfPqIndex(spark, idxA,
+      Similarity.appendDelta(spark, SfDir))
+    assert(touched.nonEmpty, "the fixture delta must land somewhere")
+    // frozen-quantizer REBUILD: the whole union corpus recoded under the
+    // base index's (frozen) quantizers
+    Similarity.buildIvfPqBaseIndex(spark, SfDir, idxR)
+    Similarity.recodeIvfPqIndex(spark, idxR, unionCorpus)
+    val a = norm(Similarity.probeIvfPqIndex(spark, SfDir, idxA, nprobe = 2))
+    val r = norm(Similarity.probeIvfPqIndex(spark, SfDir, idxR, nprobe = 2))
+    assert(a.nonEmpty && a == r,
+      "a maintained index must serve exactly what a frozen-quantizer rebuild serves")
+    assert(codesRows(idxA) == codesRows(idxR) && ledgerMap(idxA) == ledgerMap(idxR),
+      "and hold identical code rows and ledger")
+  }
+
+  test("insert batch: re-landing the same batch is content-idempotent") {
+    val idx = scratch("ivfpq_insert_idem")
+    Similarity.buildIvfPqBaseIndex(spark, SfDir, idx)
+    val delta = Similarity.appendDelta(spark, SfDir)
+    val t1 = Similarity.upsertIvfPqIndex(spark, idx, delta)
+    val once = norm(Similarity.probeIvfPqIndex(spark, SfDir, idx, nprobe = 2))
+    val codesOnce = spark.read.parquet(s"$idx/codes").count()
+    val t2 = Similarity.upsertIvfPqIndex(spark, idx, delta)
+    assert(t2 == t1, "a redelivered batch must touch the same cells")
+    assert(spark.read.parquet(s"$idx/codes").count() == codesOnce,
+      "a redelivered batch must not duplicate any row (upsert semantics)")
+    assert(norm(Similarity.probeIvfPqIndex(spark, SfDir, idx, nprobe = 2)) == once)
+  }
+
+  test("insert batch: one vector rewrites exactly its cell partition") {
+    val idx = scratch("ivfpq_insert_one")
+    Similarity.buildIvfPqBaseIndex(spark, SfDir, idx)
+    val cellDirs = new File(s"$idx/codes").listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("cell="))
+      .map(_.getName).toSeq
+    assert(cellDirs.size > 1, "fixture must spread the base over >1 cell")
+    val before = cellDirs.map(d => d -> fsFingerprint(s"$idx/codes/$d")).toMap
+    val one = Similarity.appendDelta(spark, SfDir).limit(1)
+    val touched = Similarity.upsertIvfPqIndex(spark, idx, one)
+    assert(touched.size == 1, s"one vector must touch one cell, got $touched")
+    val touchedDir = s"cell=${touched.head}"
+    cellDirs.filterNot(_ == touchedDir).foreach { d =>
+      assert(fsFingerprint(s"$idx/codes/$d") == before(d),
+        s"untouched partition $d was rewritten by the insert")
+    }
+    assert(fsFingerprint(s"$idx/codes/$touchedDir") != before.get(touchedDir).orNull,
+      "the touched partition must actually change")
+  }
+
+  test("insert batch: a poisoned foreign partition is never read") {
+    val idx = scratch("ivfpq_insert_poison")
+    Similarity.buildIvfPqBaseIndex(spark, SfDir, idx)
+    val poison = Paths.get(s"$idx/codes/cell=999/garbage.parquet")
+    Files.createDirectories(poison.getParent)
+    Files.write(poison, "this is not a parquet file".getBytes("UTF-8"))
+    intercept[Throwable] {
+      spark.read.parquet(s"$idx/codes").count()
+    }
+    val touched = Similarity.upsertIvfPqIndex(spark, idx,
+      Similarity.appendDelta(spark, SfDir))
+    assert(touched.nonEmpty && !touched.contains(999L))
+    // the poison survives the insert untouched — dynamic overwrite swapped
+    // only the delta's partitions
+    assert(Files.exists(poison), "the foreign partition must be left alone")
+  }
+
+  test("insert batch: the n16 registry twin serves the explicitly composed artifact") {
+    val idx = scratch("ivfpq_insert_twin")
+    Similarity.buildIvfPqBaseIndex(spark, SfDir, idx)
+    Similarity.upsertIvfPqIndex(spark, idx, Similarity.appendDelta(spark, SfDir))
+    val explicit = norm(Similarity.probeIvfPqIndex(spark, SfDir, idx, nprobe = 2))
+    assert(norm(Similarity.ivfPqAppendTopK(spark, SfDir)) == explicit)
   }
 }
