@@ -1,5 +1,8 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
+
+import graft.core.GraftSession
+
 object Bench {
   /** Force execution of EVERY output column. A bare count() lets Catalyst
     * prune away projection-only work (the scan short-circuits to row
@@ -27,26 +30,11 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      // same AQE sizing posture as GraftSession.local (see its scaladoc):
-      // oversized pre-coalesce partition count + realistic broadcast ceiling
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (cpus.toInt * 16).toString)
-      .config("spark.sql.autoBroadcastJoinThreshold",
-        (128 * 1024 * 1024).toString)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.warehouse.dir", "target/warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-bench", cores = cpus.toInt)
     // Untimed warm-up: absorb JVM classloading + codegen compilation so the
     // first timed query isn't charged for it (it was ~5 s of noise).
     SparkEntry.queries.get("q6_revenue_forecast").foreach { fn =>
-      try materialize(fn(spark, sfDir)) catch { case _: Throwable => () }
+      materialize(fn(spark, sfDir))
     }
     // SPARK_GRAFT_ONLY=q1,q2 limits the run (local iteration aid)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
@@ -118,10 +106,8 @@ object Bench {
       def canary(): Unit = {
         System.gc()
         val t0 = System.nanoTime()
-        try {
-          materialize(canaryFn(spark, sfDir))
-          canaryTimes += (System.nanoTime() - t0) / 1e9
-        } catch { case _: Throwable => () }
+        materialize(canaryFn(spark, sfDir))
+        canaryTimes += (System.nanoTime() - t0) / 1e9
       }
       (1 to 3).foreach(_ => canary())
       val startSpread = spread(canaryTimes.toSeq)
@@ -129,7 +115,7 @@ object Bench {
       // of scheduler jitter is intrinsic (measured on an idle box) — only a
       // spread big in seconds AND in ratio indicates actual load
       val startNoisy = startSpread > 0.15 &&
-        canaryTimes.nonEmpty && (canaryTimes.max - canaryTimes.min) > 0.1
+        (canaryTimes.max - canaryTimes.min) > 0.1
       val reps = if (startNoisy) 3 else 2
       val mid = selected.size / 2
       val results = selected.zipWithIndex.map { case ((name, fn), qi) =>
@@ -172,8 +158,7 @@ object Bench {
       // canary drifted across the sweep (the BENCH_r06 signature: calm
       // start, loaded middle)
       val noisy = startNoisy ||
-        (runSpread > 0.15 && canaryTimes.nonEmpty &&
-          (canaryTimes.max - canaryTimes.min) > 0.1)
+        (runSpread > 0.15 && (canaryTimes.max - canaryTimes.min) > 0.1)
       Pass(results, canaryTimes.toSeq, startSpread, runSpread, noisy,
         if (startNoisy) "median-of-3" else "min-of-2")
     }

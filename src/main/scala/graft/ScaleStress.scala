@@ -291,7 +291,7 @@ object ScaleStress {
 
     // untimed warm-up at the base scale: absorb classloading + codegen
     SparkEntry.queries.get("d1_exact_dedup").foreach { fn =>
-      try materialize(fn(spark, baseDir)) catch { case _: Throwable => () }
+      materialize(fn(spark, baseDir))
     }
 
     // Persisted-index scale experiment (SPARK_GRAFT_N7=k1,k2,...): n7's

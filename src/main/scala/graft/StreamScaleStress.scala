@@ -230,7 +230,6 @@ object StreamScaleStress {
     // state bound, so the study session raises it
     val spark = GraftSession.local("graft-stream-scale",
       extraConfs = Map("spark.driver.maxResultSize" -> "8g"))
-    spark.sparkContext.setLogLevel("WARN")
     // SPARK_GRAFT_STATE_PROVIDER=rocksdb runs the study on the production
     // state backend (changelog-checkpointed native store, bounded heap)
     // instead of the default in-memory HDFSBackedStateStore — the backend

@@ -36,8 +36,9 @@ final case class Tables(spark: SparkSession, dir: String) {
   // session-tz TIMESTAMP as UTC-adjusted ones — not TIMESTAMP_NTZ — or the
   // writer's flag would silently change event-time semantics (and diverge
   // from how the DuckDB oracle reads the identical files). Set here, not
-  // only in GraftSession, because harness-owned sessions (Verify/Bench)
-  // build their own builder and still route every read through Tables.
+  // only in GraftSession, because a session the factory did not build
+  // (one handed to SparkEntry.entry or straight to a query function)
+  // still routes every read through Tables.
   spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
 
   def table(name: String): DataFrame = spark.read.parquet(s"$dir/$name.parquet")

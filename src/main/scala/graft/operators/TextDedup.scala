@@ -200,6 +200,10 @@ object TextDedup {
     */
   private[graft] def incrementalVerdictsFromBands(bands: DataFrame,
       ledger: DataFrame): (DataFrame, DataFrame) = {
+    import org.apache.spark.sql.types.{IntegerType, LongType}
+    val shape = bands.schema.map(f => f.name -> f.dataType)
+    require(shape == Seq("doc_id" -> LongType, "band" -> IntegerType, "bh" -> LongType),
+      s"banded signatures must be (doc_id: long, band: int, bh: long), got ${bands.schema.simpleString}")
     val buckets = bands.select("band", "bh").distinct()
     val touched = ledger
       .join(broadcast(buckets), Seq("band", "bh"), "left_semi")

@@ -4,27 +4,17 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local session for the whole test run (SparkSession.builder is
-  * a process-wide singleton anyway); warehouse + temp dirs under target/.
+import graft.core.GraftSession
+
+/** The one session the whole test run shares, built by the product's
+  * only session factory ([[graft.core.GraftSession.local]]) with the same
+  * posture Bench and Verify run under, so every suite plans the way the
+  * timed and oracle-checked queries do. Its warehouse and every suite's
+  * scratch dir live under the running checkout's `target/` (sbt forks the
+  * test JVM with the project base as working directory).
   */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // same extensions surface as Verify/Bench/GraftSession: native
-      // functions + the interval-join rewrite rule are active in every
-      // suite, so a rule regression surfaces anywhere it matters
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      .config("spark.sql.warehouse.dir", "/root/repo/target/test-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.local("graft-test", cores = 4)
 }
 
 abstract class SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
@@ -35,9 +25,10 @@ abstract class SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
     * not a sweep over hardcoded paths.
     */
   def testData(sf: String): String = s"/root/testdata/sf$sf"
-  /** Unique scratch dir per suite under target/. */
+  /** Unique scratch dir per suite under this checkout's target/. */
   def scratch(name: String): String = {
-    val dir = s"/root/repo/target/test-scratch/$name"
+    val dir = java.nio.file.Paths.get("target", "test-scratch", name)
+      .toAbsolutePath.toString
     graft.core.FsUtil.deleteRecursively(dir)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
     dir

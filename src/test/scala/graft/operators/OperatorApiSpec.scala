@@ -167,6 +167,36 @@ class OperatorApiSpec extends SparkTestBase {
     assert(ledgerMap.values.toSet.contains(2L), "doc 2's buckets survive untouched")
   }
 
+  test("TextDedup.incrementalVerdictsFromBands: rejects bands that are not (doc_id: long, band: int, bh: long)") {
+    import spark.implicits._
+    val ledger = TextDedup.emptyNearDupLedger(spark)
+    val intIds = Seq((1, 0, 7L)).toDF("doc_id", "band", "bh")
+    val e = intercept[IllegalArgumentException] {
+      TextDedup.incrementalVerdictsFromBands(intIds, ledger)
+    }
+    assert(e.getMessage.contains("doc_id:int"), e.getMessage)
+    val longBands = Seq((1L, 0L, 7L)).toDF("doc_id", "band", "bh")
+    intercept[IllegalArgumentException] {
+      TextDedup.incrementalVerdictsFromBands(longBands, ledger)
+    }
+  }
+
+  test("Dedup.ingestStep: a ledger whose band is widened to long fails instead of truncating") {
+    import spark.implicits._
+    val batch = Seq((1L, "the quick brown fox jumps over the lazy dog again"),
+      (2L, "the quick brown fox jumps over the lazy dog again"))
+      .toDF("doc_id", "text")
+    val ledger = TextDedup.emptyNearDupLedger(spark)
+    val (v, next) = graft.queries.Dedup.ingestStep(batch, ledger)
+    assert(v.orderBy("doc_id").collect().map(_.getInt(1)).toSeq === Seq(0, 1))
+    assert(next.schema.simpleString === ledger.schema.simpleString)
+    val widened = ledger.withColumn("band", col("band").cast("long"))
+    val e = intercept[IllegalArgumentException] {
+      graft.queries.Dedup.ingestStep(batch, widened)
+    }
+    assert(e.getMessage.contains("band:bigint"), e.getMessage)
+  }
+
   test("VectorSearch.cosineTopK: ranks by exact cosine with id tiebreak, excludes self") {
     import spark.implicits._
     val corpus = Seq(

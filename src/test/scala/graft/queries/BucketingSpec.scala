@@ -16,14 +16,21 @@ class BucketingSpec extends SparkTestBase {
   private lazy val sf = testData("0.001")
 
   test("bucketed fact tables join with zero exchanges and match the shuffle join") {
-    spark.conf.set("spark.sql.sources.bucketing.enabled", "true")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force the issue
+    // both confs are restored to what the shared session had, so suites
+    // that run after this one plan under the same posture as those before
+    val confs = Map(
+      "spark.sql.sources.bucketing.enabled" -> "true",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") // no broadcast: force the bucketed join
+    val saved = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    val warehouse = new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir"))
     try {
       Seq("orders_b" -> "orders", "lineitem_b" -> "lineitem").foreach {
         case (tbl, src) =>
           spark.sql(s"DROP TABLE IF EXISTS $tbl")
           graft.core.FsUtil.deleteRecursively(
-            s"/root/repo/target/test-warehouse/$tbl")
+            new org.apache.hadoop.fs.Path(warehouse, tbl).toUri.getPath)
           val keyCol = if (src == "orders") "o_orderkey" else "l_orderkey"
           spark.read.parquet(s"$sf/$src.parquet")
             .write.bucketBy(8, keyCol).sortBy(keyCol)
@@ -50,7 +57,10 @@ class BucketingSpec extends SparkTestBase {
       val got = joined.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
       assert(got === expected)
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
+      saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
     }
   }
 }
