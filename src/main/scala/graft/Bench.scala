@@ -1,7 +1,7 @@
 package graft
 import org.apache.spark.sql.DataFrame
 
-import graft.core.GraftSession
+import graft.core.{GraftSession, WorkDirs}
 
 object Bench {
   /** Force execution of EVERY output column. A bare count() lets Catalyst
@@ -28,7 +28,7 @@ object Bench {
     if (ts.isEmpty || ts.min == 0) 0.0 else (ts.max - ts.min) / ts.min
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", WorkDirs.testData("0.1"))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession.local("graft-bench", cores = cpus.toInt)
     // Untimed warm-up: absorb JVM classloading + codegen compilation so the
@@ -100,8 +100,7 @@ object Bench {
       // drift to exactly this family. Dropping the parent per pass gives
       // every pass fresh directory state, so the family's timings
       // measure the operators, not the session's age.
-      graft.core.FsUtil.deleteRecursively(
-        new java.io.File(graft.queries.Sampling.ExportRoot).getParent)
+      graft.core.FsUtil.deleteRecursively(graft.queries.Sampling.ExportZonesRoot)
       val canaryTimes = scala.collection.mutable.ArrayBuffer.empty[Double]
       def canary(): Unit = {
         System.gc()
@@ -242,7 +241,7 @@ object Bench {
       if (passes.size == 1) "single-pass" else "min-of-passes"
     val detail =
       s"""{"sf":"$sfName","n_queries":${ok.size},"total":${f3(total)},"headline":"$headlineProto","failed":$failedJson,"stream_protocol_floor":${f3(protocolFloor)},"canary":$canaryJson,"passes":$passesJson,"queries":${qjson(ok)}}"""
-    val detailPath = java.nio.file.Paths.get("target", "bench_detail.json")
+    val detailPath = java.nio.file.Paths.get(WorkDirs.target("bench_detail.json"))
     java.nio.file.Files.createDirectories(detailPath.getParent)
     java.nio.file.Files.write(detailPath, detail.getBytes("UTF-8"))
     println(s"""{"metric":"total","value":${f3(total)},"unit":"sec","headline":"$headlineProto","queries":${qjson(slowest)},"n_queries":${ok.size},"failed":$failedJson,"stream_protocol_floor":${f3(protocolFloor)},"canary":$canaryJson,"passes":$passesJson,"sf":"$sfName"}""")

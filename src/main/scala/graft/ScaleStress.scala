@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.GraftSession
+import graft.core.{GraftSession, WorkDirs}
 import graft.queries.Dedup
 
 /** Scale-stress harness: measures the dedup/graph/ANN family on synthetic
@@ -45,6 +45,8 @@ import graft.queries.Dedup
 object ScaleStress {
 
   /** doc_id/vec_id replica offset; far above any base id (max 4999). */
+  private[graft] val ScaleRoot: String = WorkDirs.target("scale")
+
   private val IdOffset = 1000000L
 
   /** The permuted character set. 62 = 2 x 31, so any odd multiplier not
@@ -279,7 +281,7 @@ object ScaleStress {
   }
 
   def main(args: Array[String]): Unit = {
-    val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", WorkDirs.testData("0.1"))
     val scales = sys.env.getOrElse("SPARK_GRAFT_SCALES", "1,10,100")
       .split(",").map(_.trim.toInt).toSeq
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
@@ -304,9 +306,9 @@ object ScaleStress {
     sys.env.get("SPARK_GRAFT_N7").map(_.split(",").map(_.trim.toInt).toSeq)
       .foreach { ks =>
         ks.foreach { k =>
-          val dir = s"target/scale/x$k"
+          val dir = s"$ScaleRoot/x$k"
           generate(spark, baseDir, dir, k)
-          val idx = s"target/scale/ivf_index_x$k"
+          val idx = s"$ScaleRoot/ivf_index_x$k"
           // cold build: no warm quantizer/index memo may subsidize the
           // build number this table reports
           graft.queries.Similarity.clearQuantMemo()
@@ -335,9 +337,9 @@ object ScaleStress {
     sys.env.get("SPARK_GRAFT_N13").map(_.split(",").map(_.trim.toInt).toSeq)
       .foreach { ks =>
         ks.foreach { k =>
-          val dir = s"target/scale/x$k"
+          val dir = s"$ScaleRoot/x$k"
           generate(spark, baseDir, dir, k)
-          val idx = s"target/scale/ivfpq_index_x$k"
+          val idx = s"$ScaleRoot/ivfpq_index_x$k"
           graft.core.FsUtil.deleteRecursively(idx)
           // cold build: no warm quantizer/codebook memo may subsidize it
           graft.queries.Similarity.clearQuantMemo()
@@ -370,9 +372,9 @@ object ScaleStress {
     sys.env.get("SPARK_GRAFT_N15").map(_.split(",").map(_.trim.toInt).toSeq)
       .foreach { ks =>
         ks.foreach { k =>
-          val dir = s"target/scale/x$k"
+          val dir = s"$ScaleRoot/x$k"
           generate(spark, baseDir, dir, k)
-          val idx = s"target/scale/ivfpq_index_x$k"
+          val idx = s"$ScaleRoot/ivfpq_index_x$k"
           graft.core.FsUtil.deleteRecursively(idx)
           graft.queries.Similarity.clearQuantMemo()
           spark.catalog.clearCache(); System.gc()
@@ -416,9 +418,9 @@ object ScaleStress {
     sys.env.get("SPARK_GRAFT_N16").map(_.split(",").map(_.trim.toInt).toSeq)
       .foreach { ks =>
         ks.foreach { k =>
-          val dir = s"target/scale/x$k"
+          val dir = s"$ScaleRoot/x$k"
           generate(spark, baseDir, dir, k)
-          val idx = s"target/scale/ivfpq_append_x$k"
+          val idx = s"$ScaleRoot/ivfpq_append_x$k"
           // fresh artifact dir (r19 advice): under the session-global
           // dynamic overwrite mode a base build over a dir left by a
           // prior run would keep that run's full-union partitions alive,
@@ -446,7 +448,7 @@ object ScaleStress {
           // rep 1's upsert rewrites the very cell partition this batch
           // derives from, so a lazy frame would re-derive rep 2's batch
           // (and the logged batch_rows) from the mutated index
-          val localPath = s"target/scale/n16_local_batch_x$k"
+          val localPath = s"$ScaleRoot/n16_local_batch_x$k"
           graft.core.FsUtil.deleteRecursively(localPath)
           spark.read.parquet(s"$dir/embeddings.parquet")
             .join(spark.read.parquet(s"$idx/codes/cell=$firstCell")
@@ -498,9 +500,9 @@ object ScaleStress {
     sys.env.get("SPARK_GRAFT_N17").map(_.split(",").map(_.trim.toInt).toSeq)
       .foreach { ks =>
         ks.foreach { k =>
-          val dir = s"target/scale/x$k"
+          val dir = s"$ScaleRoot/x$k"
           generate(spark, baseDir, dir, k)
-          val idx = s"target/scale/ivfpq_upsert_x$k"
+          val idx = s"$ScaleRoot/ivfpq_upsert_x$k"
           graft.queries.Similarity.clearQuantMemo()
           var buildSec = -1.0
           def rebuildBase(): Unit = {
@@ -528,7 +530,7 @@ object ScaleStress {
             .map(_.getName.stripPrefix("cell=").toLong).sorted
           val firstCell = cellIds(0)
           val donorCell = cellIds(1)
-          val localPath = s"target/scale/n17_local_batch_x$k"
+          val localPath = s"$ScaleRoot/n17_local_batch_x$k"
           graft.core.FsUtil.deleteRecursively(localPath)
           spark.read.parquet(s"$idx/codes/cell=$firstCell").select("vec_id")
             .crossJoin(spark.read.parquet(s"$dir/embeddings.parquet")
@@ -579,7 +581,7 @@ object ScaleStress {
       .foreach { ks =>
         import org.apache.spark.sql.functions.{broadcast, col}
         ks.foreach { k =>
-          val dir = s"target/scale/j4x$k"
+          val dir = s"$ScaleRoot/j4x$k"
           val done = new java.io.File(s"$dir/_GENERATED")
           if (!done.exists()) {
             val reps = spark.range(0, k).select(col("id").as("rep"))
@@ -613,7 +615,7 @@ object ScaleStress {
       .foreach { ks =>
         import org.apache.spark.sql.functions.col
         ks.foreach { k =>
-          val dir = s"target/scale/x$k"
+          val dir = s"$ScaleRoot/x$k"
           generate(spark, baseDir, dir, k)
           generateTpch(spark, baseDir, dir, k)
           def run(label: String, df: DataFrame): Unit = {
@@ -656,7 +658,7 @@ object ScaleStress {
           date_trunc("hour", col("ts")).as("hour"),
           col("event_type"), col("value"))
         ks.foreach { k =>
-          val dir = s"target/scale/x$k"
+          val dir = s"$ScaleRoot/x$k"
           generate(spark, baseDir, dir, k)
           generateEvents(spark, baseDir, dir, k)
           val state = graft.operators.Rollups.fold(
@@ -693,10 +695,10 @@ object ScaleStress {
       .foreach { ks =>
         import org.apache.spark.sql.functions.{col, date_format, round => fround, to_timestamp, lit, unix_timestamp}
         ks.foreach { k =>
-          val dir = s"target/scale/x$k"
+          val dir = s"$ScaleRoot/x$k"
           generate(spark, baseDir, dir, k)
           generateEvents(spark, baseDir, dir, k)
-          val ld = s"target/scale/zorder_x$k"
+          val ld = s"$ScaleRoot/zorder_x$k"
           spark.catalog.clearCache(); System.gc()
           val b0 = System.nanoTime()
           graft.queries.Layout.buildZorderLayout(spark, dir, ld)
@@ -742,7 +744,7 @@ object ScaleStress {
     sys.env.get("SPARK_GRAFT_Z3").map(_.split(",").map(_.trim.toInt).toSeq)
       .foreach { ks =>
         ks.foreach { k =>
-          val dir = s"target/scale/z_x$k"
+          val dir = s"$ScaleRoot/z_x$k"
           val done = new java.io.File(s"$dir/_GENERATED")
           if (!done.exists()) {
             spark.read.parquet(s"$baseDir/lineitem.parquet")
@@ -782,7 +784,7 @@ object ScaleStress {
     sys.env.get("SPARK_GRAFT_Z3G").map(_.split(",").map(_.trim.toInt).toSeq)
       .foreach { ks =>
         ks.foreach { k =>
-          val dir = s"target/scale/zg_x$k"
+          val dir = s"$ScaleRoot/zg_x$k"
           val done = new java.io.File(s"$dir/_GENERATED")
           if (!done.exists()) {
             spark.read.parquet(s"$baseDir/lineitem.parquet")
@@ -820,9 +822,9 @@ object ScaleStress {
         val victimIds = Seq(83L, 166L, 249L, 332L)
         val shards = victimIds.map(graft.pipeline.ExportJob.shardOf).distinct
         ks.foreach { k =>
-          val dir = s"target/scale/x$k"
+          val dir = s"$ScaleRoot/x$k"
           generate(spark, baseDir, dir, k)
-          val zone = s"target/scale/export_x$k"
+          val zone = s"$ScaleRoot/export_x$k"
           graft.core.FsUtil.deleteRecursively(zone)
           spark.catalog.clearCache(); System.gc()
           val b0 = System.nanoTime()
@@ -865,9 +867,9 @@ object ScaleStress {
         val victimIds = Seq(83L, 166L, 249L, 332L)
         val to = 256
         ks.foreach { k =>
-          val dir = s"target/scale/x$k"
+          val dir = s"$ScaleRoot/x$k"
           generate(spark, baseDir, dir, k)
-          val zone = s"target/scale/reshard_x$k"
+          val zone = s"$ScaleRoot/reshard_x$k"
           graft.core.FsUtil.deleteRecursively(zone)
           spark.catalog.clearCache(); System.gc()
           val b0 = System.nanoTime()
@@ -903,10 +905,10 @@ object ScaleStress {
     // Skew experiment (SPARK_GRAFT_SKEW=<k>): a corpus where one 8-token
     // boilerplate sentence appears in EVERY document, so each of its
     // word-3-grams has df = 5000k/k per replica — far over MaxGramDf. Run
-    // d5 on it; pair with SPARK_GRAFT_MAX_GRAM_DF=10000000 in a second
-    // invocation to measure the unguarded hot-bucket blow-up.
+    // d5 on it; pair with a second invocation built with Dedup.MaxGramDf
+    // raised to 10000000 to measure the unguarded hot-bucket blow-up.
     sys.env.get("SPARK_GRAFT_SKEW").map(_.toInt).foreach { k =>
-      val dir = s"target/scale/x${k}skew"
+      val dir = s"$ScaleRoot/x${k}skew"
       generate(spark, baseDir, dir, k, boilerplate = true)
       Dedup.clearMemos(); graft.queries.Similarity.clearQuantMemo(); spark.catalog.clearCache(); System.gc()
       val q0 = System.nanoTime()
@@ -927,7 +929,7 @@ object ScaleStress {
       .foreach { ks =>
         import org.apache.spark.sql.functions.{col, min => fmin}
         ks.foreach { k =>
-          val dir = s"target/scale/x$k"
+          val dir = s"$ScaleRoot/x$k"
           generate(spark, baseDir, dir, k)
           val corpus = spark.read.parquet(s"$dir/documents.parquet")
           val ledger = graft.operators.TextDedup
@@ -996,7 +998,7 @@ object ScaleStress {
     val needsTpch = selected.exists(q =>
       q.startsWith("q") || q == "pr4_fk_integrity")
     scales.foreach { k =>
-      val dir = s"target/scale/x$k"
+      val dir = s"$ScaleRoot/x$k"
       val t0 = System.nanoTime()
       generate(spark, baseDir, dir, k)
       if (needsEvents) generateEvents(spark, baseDir, dir, k)
@@ -1051,7 +1053,7 @@ object ScaleStress {
       }
     }
     val out = results.mkString("[\n  ", ",\n  ", "\n]")
-    val p = java.nio.file.Paths.get("target", "scaling.json")
+    val p = java.nio.file.Paths.get(WorkDirs.target("scaling.json"))
     java.nio.file.Files.createDirectories(p.getParent)
     java.nio.file.Files.write(p, out.getBytes("UTF-8"))
     println(s"""{"event":"done","n":${results.size}}""")

@@ -2,15 +2,15 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.core.GraftSession
+import graft.core.{GraftSession, WorkDirs}
 import graft.queries.{BinaryPipeline, Dedup, Entity, Events, EventStreaming, Layout, Multimodal, ProductPipeline, Profiling, Relational, Sampling, Scrape, SetOps, Similarity, Sketches, Strings, Temporal, TextAnalysis, Windows}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
+/** Driver contract — see SURVEY.md §7. */
 object SparkEntry {
-  /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
+  /** Flagship query on the sf0.001 tables; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame = {
     GraftSession.tune(spark)
-    Relational.localSupplierVolume(spark, "/root/testdata/sf0.001")
+    Relational.localSupplierVolume(spark, WorkDirs.testData("0.001"))
   }
 
   /** One entry per implemented operator from SURVEY.md §2. */

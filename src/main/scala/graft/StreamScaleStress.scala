@@ -7,7 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
-import graft.core.{FsUtil, GraftSession}
+import graft.core.{FsUtil, GraftSession, WorkDirs}
 import graft.queries.{Dedup, Events, EventStreaming, Temporal}
 import graft.streaming.{DocumentStreams, EventStreams, StreamMetrics}
 
@@ -220,7 +220,7 @@ object StreamScaleStress {
     a.count() == b.count() && a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
 
   def main(args: Array[String]): Unit = {
-    val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", WorkDirs.testData("0.1"))
     val scales = sys.env.getOrElse("SPARK_GRAFT_STREAM_SCALES", "1,10")
       .split(",").map(_.trim.toInt).toSeq
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
@@ -268,14 +268,14 @@ object StreamScaleStress {
       "st16_vector_ingest")
 
     scales.foreach { k =>
-      val dir = s"target/scale/streams/x$k"
+      val dir = s"${ScaleStress.ScaleRoot}/streams/x$k"
       generateEvents(spark, baseDir, dir, k)
       if (!only.exists(_.subsetOf(eventOnly))) {
-        generateDocs(spark, s"target/scale/x$k", dir)
-        generateDocsTs(spark, s"target/scale/x$k", dir)
+        generateDocs(spark, s"${ScaleStress.ScaleRoot}/x$k", dir)
+        generateDocsTs(spark, s"${ScaleStress.ScaleRoot}/x$k", dir)
       }
       if (only.forall(_.contains("st16_vector_ingest")))
-        generateEmbeddings(spark, s"target/scale/x$k", dir)
+        generateEmbeddings(spark, s"${ScaleStress.ScaleRoot}/x$k", dir)
       val evZone = s"$dir/events.parquet"
       val docZone = s"$dir/documents.parquet"
       val embZone = s"$dir/embeddings.parquet"
@@ -668,7 +668,7 @@ object StreamScaleStress {
       val st16Cells = ScaleStress.d11Cells(k)
       run("st16_vector_ingest", {
           val assigned = graft.queries.Similarity.assignCellsToStream(
-            spark, s"target/scale/x$k",
+            spark, s"${ScaleStress.ScaleRoot}/x$k",
             DocumentStreams.readEmbeddings(spark, embZone,
               glob = "*.parquet", maxFilesPerTrigger = Some(1)),
             numCells = st16Cells)
@@ -679,7 +679,7 @@ object StreamScaleStress {
         EventStreaming.collapseVectorIngest,
         Some {
           graft.queries.Similarity.assignCellsToStream(
-            spark, s"target/scale/x$k",
+            spark, s"${ScaleStress.ScaleRoot}/x$k",
             spark.read.parquet(embZone).select("vec_id", "embedding"),
             numCells = st16Cells)
             .groupBy("cell").agg(
@@ -739,7 +739,7 @@ object StreamScaleStress {
           FsUtil.deleteRecursively(root)
           val zones = graft.pipeline.Pipeline.Zones(root)
           val fixRoot = s"$root/fixtures/PnP"
-          val srcFix = "/root/repo/fixtures/silver/PnP"
+          val srcFix = WorkDirs.fixture("silver/PnP")
           val keys = Seq(
             "Gauteng/13_February_-_15_February_2026",
             "Eastern_Cape/20_February_-_22_February_2026")
@@ -782,9 +782,9 @@ object StreamScaleStress {
     }
 
     val out = summary.mkString("[\n  ", ",\n  ", "\n]")
-    Files.createDirectories(Paths.get("target"))
-    Files.write(Paths.get("target", "stream_scaling.json"), out.getBytes("UTF-8"))
-    Files.write(Paths.get("target", "stream_scaling_detail.jsonl"),
+    Files.createDirectories(Paths.get(WorkDirs.Target))
+    Files.write(Paths.get(WorkDirs.target("stream_scaling.json")), out.getBytes("UTF-8"))
+    Files.write(Paths.get(WorkDirs.target("stream_scaling_detail.jsonl")),
       detail.mkString("", "\n", "\n").getBytes("UTF-8"))
     println(s"""{"event":"done","n":${summary.size}}""")
     spark.stop()

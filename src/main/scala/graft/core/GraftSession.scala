@@ -60,9 +60,8 @@ object GraftSession {
       // the library's full extension surface: native expressions + the
       // interval-join rewrite rule
       .config("spark.sql.extensions", "graft.GraftExtensions")
-      // relative, so it resolves under the checkout the JVM runs in; one
-      // per app, so the test suite's tables never meet Bench's or Verify's
-      .config("spark.sql.warehouse.dir", s"target/warehouse/$appName")
+      // one per app, so the test suite's tables never meet Bench's or Verify's
+      .config("spark.sql.warehouse.dir", WorkDirs.target(s"warehouse/$appName"))
       .config("spark.ui.enabled", "false")
     // extraConfs LAST so a caller's conf beats any factory default above
     // (builder semantics: later config() wins) — an extraConf overlapping

@@ -21,12 +21,11 @@ object VectorLsh {
     * buckets) is sized for the synthetic corpus (~125 vectors/bucket); the
     * within-bucket self-join in d6 is quadratic PER BUCKET, so production
     * sizing is planes ≈ log2(n / target_bucket_size) — e.g. 1B vectors at
-    * ~1k/bucket wants ~20 planes. Env-overridable so ScaleStress can
-    * measure the dial; the DuckDB oracle interpolates the same value, so
-    * parity holds at any setting.
+    * ~1k/bucket wants ~20 planes. Callers that size the dial pass it
+    * explicitly ([[bucketColFor]], `Dedup.embeddingNearDup`); the DuckDB
+    * oracle interpolates the same value, so parity holds at any setting.
     */
-  val NumPlanes: Int =
-    sys.env.get("SPARK_GRAFT_LSH_PLANES").map(_.toInt).getOrElse(4)
+  val NumPlanes: Int = 4
 
   /** Deterministic pseudo-random hyperplane coefficient array for plane p:
     * coef[d] = (hash60("p_d") mod 2001 - 1000) / 1000 ∈ [-1, 1].

@@ -196,7 +196,8 @@ object TextDedup {
     * pending batches in ONE corpus pass (signatures are per-doc, so
     * slicing the combined frame by the batch key is identical to
     * per-batch computation) folds them through here one at a time without
-    * paying one signature scan per batch.
+    * paying one signature scan per batch — as d14's driver
+    * (`Dedup.incrementalVerdictsQuery`) does.
     */
   private[graft] def incrementalVerdictsFromBands(bands: DataFrame,
       ledger: DataFrame): (DataFrame, DataFrame) = {

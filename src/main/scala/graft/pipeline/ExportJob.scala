@@ -242,20 +242,6 @@ object ExportJob {
       .getOrElse(new Path(base.getName + suffix))
   }
 
-  /** Explicit env override of the creation-time shard count, clamped to
-    * ≥ 1 (0 would make every pmod-by-shards assignment null/throw). A
-    * malformed value fails with a message naming the variable — a bare
-    * toInt here would surface as ExceptionInInitializerError on the first
-    * unrelated ExportJob touch, far from the cause.
-    */
-  private val ShardsEnvOverride: Option[Int] =
-    sys.env.get("SPARK_GRAFT_EXPORT_SHARDS").map { raw =>
-      val v = raw.trim
-      require(v.nonEmpty && v.forall(_.isDigit),
-        s"SPARK_GRAFT_EXPORT_SHARDS must be a positive integer, got '$raw'")
-      math.max(1, v.toInt)
-    }
-
   /** CREATION-TIME shard count in incremental mode; once a zone exists its
     * authoritative count is the persisted [[zoneShards]] marker, and this
     * value only matters for brand-new zones.
@@ -266,11 +252,12 @@ object ExportJob {
     * bounded (16 suits the fixture; a 100 TB zone runs thousands, sized
     * to a few hundred MB each). Measured in SCALESTRESS_r11: at x100 the
     * same 4-id delete costs 12.1 s against 16 shards but 3–4× less
-    * against 64, tracking shard size exactly. Env-overridable for the
-    * scale study (SPARK_GRAFT_EXPORT_SHARDS); fixed per zone lifetime —
-    * [[reshard]] is the migration.
+    * against 64, tracking shard size exactly. A zone that needs another
+    * count is created with `writeTrainingShardsIncremental(…,
+    * requestedShards = Some(n))`; fixed per zone lifetime — [[reshard]] is
+    * the migration.
     */
-  val IncrementalShards: Int = ShardsEnvOverride.getOrElse(16)
+  val IncrementalShards: Int = 16
 
   /** Name of the zone's persisted shard-count marker; underscore-prefixed
     * like the manifest so Spark's file listing never sees it as data.
@@ -347,8 +334,8 @@ object ExportJob {
 
   /** Resolve the shard count an operation on `outDir` must use, enforcing
     * the fixed-per-zone-lifetime contract: the zone's marker wins; a
-    * conflicting EXPLICIT request (API argument or the
-    * SPARK_GRAFT_EXPORT_SHARDS override) throws, pointing at [[reshard]].
+    * conflicting EXPLICIT request (the `requestedShards` argument) throws,
+    * pointing at [[reshard]].
     * A marker-less zone that already holds data (written before markers
     * existed) verifies the adopted count against the zone itself
     * ([[verifyAdoptedShards]]) and then persists it — otherwise the
@@ -366,7 +353,7 @@ object ExportJob {
 
   private def resolveRootShards(spark: SparkSession,
       root: String, requested: Option[Int]): Int = {
-    val explicit = requested.map(v => math.max(1, v)).orElse(ShardsEnvOverride)
+    val explicit = requested.map(v => math.max(1, v))
     rootShards(root) match {
       case Some(n) =>
         explicit.filter(_ != n).foreach { m =>
@@ -404,9 +391,10 @@ object ExportJob {
     if (ids.isEmpty) return
     def fail(detail: String): Nothing = throw new IllegalStateException(
       s"export zone $root predates shard markers and its layout is " +
-        s"inconsistent with the configured count $n ($detail): set " +
-        "SPARK_GRAFT_EXPORT_SHARDS to the count the zone was written " +
-        "with (maintenance will then persist it), or rebuild the zone")
+        s"inconsistent with the configured count $n ($detail): pass the " +
+        "count the zone was written with to writeTrainingShardsIncremental(" +
+        "..., requestedShards = Some(n)) (it will then persist it), or " +
+        "rebuild the zone")
     if (ids.max >= n) fail(s"directory shard_id=${ids.max} exists")
     val probes = Seq(ids.head, ids(ids.size / 2), ids.last).distinct
     val sample = readShards(spark, root, probes)

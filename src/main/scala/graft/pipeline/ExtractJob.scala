@@ -27,7 +27,7 @@ trait VisionExtractor extends Serializable {
   * fixture for the page key (FIXTURES.md A1), `[]` for unknown pages —
   * `DeterministicFixtureExtractor` per SURVEY §7.1 step 6.
   */
-class FixtureExtractor(fixtureRoot: String = "/root/repo/fixtures/silver/PnP")
+class FixtureExtractor(fixtureRoot: String = graft.core.WorkDirs.fixture("silver/PnP"))
     extends VisionExtractor {
   override def extract(imageBytes: Array[Byte], pageKey: String): String = {
     val p = Paths.get(s"$fixtureRoot/$pageKey.json")

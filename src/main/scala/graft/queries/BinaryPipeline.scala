@@ -3,38 +3,42 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.{FsUtil, WorkDirs}
 import graft.functions.{BboxOps, ProductNormalize}
 import graft.pipeline.{ConvertJob, CropJob, ExtractJob, FixtureBinaries, FixtureExtractor, ImageOps, PhotoRasterizer, StubRasterizer}
+import graft.pipeline.Pipeline.Zones
 
 /** The binary (multimodal) pipeline exercised as oracle-checked queries:
   * raw PDFs → page images (ConvertJob, stub-rendered but really encoded
   * JPEGs) → image⋈product crop join (CropJob, real javax.imageio crops).
   *
-  * Fixture binaries are generated deterministically under target/ at query
-  * time; the DuckDB oracles verify everything EXCEPT raw pixels — page
-  * fan-out counts from the actual PDF object structure, and crop geometry /
-  * dimensions / filenames recomputed independently from the silver JSON.
+  * Fixture binaries are generated deterministically under the work root
+  * at query time; the DuckDB oracles verify everything EXCEPT raw pixels —
+  * page fan-out counts from the actual PDF object structure, and crop
+  * geometry / dimensions / filenames recomputed independently from the
+  * silver JSON.
   * Pixel-level assertions (JPEG magic, decodability) live in the ScalaTest
   * specs.
   */
 object BinaryPipeline {
 
-  val RawRoot = "/root/repo/target/fixtures-bin/raw"
-  val InterimRoot = "/root/repo/target/fixtures-bin/interim/images"
-  val ShrRoot = "/root/repo/target/fixtures-bin/shr/products"
+  /** c1, c2, x1 and x2's zones: stub-rendered pages and their crops. Its
+    * raw zone holds the fixture PDFs for every query here, c3 and c4
+    * included, so c1's oracle finds them whichever query ran last.
+    */
+  val StubZones: Zones = Zones(WorkDirs.target("fixtures-bin/stub"))
 
-  /** c3's own interim/shr zones. The photo-rendered pipeline MUST NOT
-    * share paths with the stub-rendered one (c2): CropJob.run caches its
-    * crops frame, and Spark's CacheManager matches by ANALYZED PLAN — a
-    * same-path rerun is served the PREVIOUS query's cached crops, so c3
+  /** c3 and c4's page and crop zones. The photo-rendered pipeline MUST
+    * NOT share them with the stub-rendered one (c2): CropJob.run caches
+    * its crops frame, and Spark's CacheManager matches by ANALYZED PLAN —
+    * a same-path rerun is served the PREVIOUS query's cached crops, so c3
     * ran over c2's stub pixels whenever c2 executed first in the same
     * session (caught when a fresh-session run produced different aHashes
     * than a full Verify sweep). Distinct paths make the plans distinct,
     * which both defeats the stale cache hit and decouples the two
     * queries' on-disk zones in either execution order.
     */
-  val PhotoInterimRoot = "/root/repo/target/fixtures-bin/interim-photo/images"
-  val PhotoShrRoot = "/root/repo/target/fixtures-bin/shr-photo/products"
+  val PhotoZones: Zones = Zones(WorkDirs.target("fixtures-bin/photo"))
 
   private val W = StubRasterizer.PageWidth
   private val H = StubRasterizer.PageHeight
@@ -45,9 +49,7 @@ object BinaryPipeline {
     * stale-state-masks-truth failure mode Verify's out-dir clearing fixes.
     */
   private def resetZones(): Unit =
-    Seq(RawRoot, InterimRoot, ShrRoot, PhotoInterimRoot, PhotoShrRoot,
-      s"$RawRoot/../pro/json")
-      .foreach(graft.core.FsUtil.deleteRecursively)
+    Seq(StubZones.root, PhotoZones.root).foreach(FsUtil.deleteRecursively)
 
   // ------------------------------------------------------------------ c1
 
@@ -57,9 +59,9 @@ object BinaryPipeline {
     */
   def pdfPages(spark: SparkSession, dir: String): DataFrame = {
     resetZones()
-    FixtureBinaries.writeRawPdfs(RawRoot)
+    FixtureBinaries.writeRawPdfs(StubZones.raw)
     val dims = udf((b: Array[Byte]) => ImageOps.decodeDims(b))
-    ConvertJob.pages(ConvertJob.readPdfs(spark, RawRoot))
+    ConvertJob.pages(ConvertJob.readPdfs(spark, StubZones.raw))
       .withColumn("_d", dims(col("image")))
       .select(col("province"), col("flyer"), col("page_number"),
         col("_d._1").as("width"), col("_d._2").as("height"))
@@ -69,7 +71,7 @@ object BinaryPipeline {
   val pdfPagesSql: String =
     s"""WITH f AS (
        |  SELECT content, string_split(filename, '/') AS _p
-       |  FROM read_text('$RawRoot/PnP/*/*.pdf')),
+       |  FROM read_text('${StubZones.raw}/PnP/*/*.pdf')),
        |c AS (
        |  SELECT _p[-2] AS province,
        |    regexp_replace(_p[-1], '\\.pdf$$', '') AS flyer,
@@ -93,9 +95,10 @@ object BinaryPipeline {
     */
   def productCrops(spark: SparkSession, dir: String): DataFrame = {
     resetZones()
-    FixtureBinaries.writeRawPdfs(RawRoot)
-    ConvertJob.run(spark, RawRoot, InterimRoot)
-    val crops = CropJob.run(spark, InterimRoot, ProductPipeline.SilverGlob, ShrRoot)
+    FixtureBinaries.writeRawPdfs(StubZones.raw)
+    ConvertJob.run(spark, StubZones.raw, StubZones.interim)
+    val crops = CropJob.run(spark, StubZones.interim, ProductPipeline.SilverGlob,
+      StubZones.shr)
     val k = split(col("page_key"), "/")
     crops.select(
       try_element_at(k, lit(1)).as("province"),
@@ -165,14 +168,14 @@ object BinaryPipeline {
     */
   private def photoCropHashes(spark: SparkSession): DataFrame = {
     resetZones()
-    FixtureBinaries.writeRawPdfs(RawRoot)
+    FixtureBinaries.writeRawPdfs(StubZones.raw)
     // photographic-ish pages (seeded gradient + noise), not flat stub
     // fills: the perceptual hash must see realistic luminance
     ConvertJob.writeImages(
-      ConvertJob.pages(ConvertJob.readPdfs(spark, RawRoot), PhotoRasterizer),
-      PhotoInterimRoot)
-    val crops = CropJob.run(spark, PhotoInterimRoot, ProductPipeline.SilverGlob,
-      PhotoShrRoot)
+      ConvertJob.pages(ConvertJob.readPdfs(spark, StubZones.raw), PhotoRasterizer),
+      PhotoZones.interim)
+    val crops = CropJob.run(spark, PhotoZones.interim, ProductPipeline.SilverGlob,
+      PhotoZones.shr)
     val ah = udf((b: Array[Byte]) => ImageOps.aHash(b))
     crops
       .withColumn("ahash", ah(col("crop")))
@@ -318,8 +321,8 @@ object BinaryPipeline {
     */
   private def pagesWithKey(spark: SparkSession): DataFrame = {
     resetZones()
-    FixtureBinaries.writeRawPdfs(RawRoot)
-    ConvertJob.pages(ConvertJob.readPdfs(spark, RawRoot))
+    FixtureBinaries.writeRawPdfs(StubZones.raw)
+    ConvertJob.pages(ConvertJob.readPdfs(spark, StubZones.raw))
       .select(concat_ws("/", col("province"), col("flyer"),
         concat(lit("page_"), col("page_number"))).as("page_key"),
         col("image"))
@@ -339,7 +342,7 @@ object BinaryPipeline {
     // with the rows returned (ExtractJob.extract's scaladoc contract)
     val extracted = ExtractJob.extract(pagesWithKey(spark), new FixtureExtractor())
       .persist()
-    ExtractJob.writeSilver(extracted, s"$RawRoot/../pro/json")
+    ExtractJob.writeSilver(extracted, StubZones.silver)
     val k = split(col("page_key"), "/")
     ExtractJob.products(extracted).select(
       try_element_at(k, lit(1)).as("province"),

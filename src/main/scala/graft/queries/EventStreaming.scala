@@ -349,7 +349,7 @@ object EventStreaming {
     */
   def streamRollupFold(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Rollups
-    val base = s"target/st11/run_${runSeq.incrementAndGet()}"
+    val base = graft.core.WorkDirs.target(s"st11/run_${runSeq.incrementAndGet()}")
     graft.core.FsUtil.deleteRecursively(base)
     graft.core.Tables(spark, dir).events
       .repartition(4, org.apache.spark.sql.functions.pmod(col("event_id"),

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Tables, WorkDirs}
 import graft.operators.DataLayout
 
 /** Data-layout optimization (SURVEY §2.6's clean-zone rewrite taken to its
@@ -25,7 +25,7 @@ import graft.operators.DataLayout
 object Layout {
 
   private def layoutDirFor(dir: String): String =
-    "target/zorder/" + dir.replaceAll("[^A-Za-z0-9.]", "_")
+    WorkDirs.target("zorder/") + dir.replaceAll("[^A-Za-z0-9.]", "_")
 
   /** Rewrite events z-ordered by (user_id, epoch-seconds(ts)). The rank
     * bounds come from one metadata aggregate (min/max — driver scalars);
@@ -90,8 +90,8 @@ object Layout {
     * contract are DataLayoutSpec's job; the gate checks the rows.
     */
   def compactRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val frag = "target/compact/" + dir.replaceAll("[^A-Za-z0-9.]", "_") + "_frag"
-    val out = "target/compact/" + dir.replaceAll("[^A-Za-z0-9.]", "_") + "_out"
+    val frag = WorkDirs.target("compact/") + dir.replaceAll("[^A-Za-z0-9.]", "_") + "_frag"
+    val out = WorkDirs.target("compact/") + dir.replaceAll("[^A-Za-z0-9.]", "_") + "_out"
     graft.core.FsUtil.deleteRecursively(frag)
     graft.core.FsUtil.deleteRecursively(out)
     Tables(spark, dir).events.repartition(64)

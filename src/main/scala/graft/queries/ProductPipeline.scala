@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.ArrayType
 
+import graft.core.WorkDirs
 import graft.functions.{BboxOps, ProductNormalize}
 import graft.pipeline.{CleanJob, ProductSchema}
 
@@ -19,8 +20,9 @@ import graft.pipeline.{CleanJob, ProductSchema}
   */
 object ProductPipeline {
 
-  val SilverGlob = "/root/repo/fixtures/silver/PnP/*/*/*.json"
-  val CleanRoot = "/root/repo/target/pipeline/clean"
+  val SilverGlob = WorkDirs.fixture("silver/PnP/*/*/*.json")
+  private val PipelineRoot = WorkDirs.target("pipeline")
+  val CleanRoot = s"$PipelineRoot/clean"
 
   /** DuckDB read of the silver zone with ProductSchema's types (its
     * `columns` option = the conformance contract: missing keys → NULL).
@@ -279,8 +281,8 @@ object ProductPipeline {
     * independent recomputation.
     */
   def streamClean(spark: SparkSession, dir: String): DataFrame = {
-    val cleanRoot = "/root/repo/target/pipeline/clean_stream"
-    val checkpoint = "/root/repo/target/pipeline/ckpt_stream"
+    val cleanRoot = s"$PipelineRoot/clean_stream"
+    val checkpoint = s"$PipelineRoot/ckpt_stream"
     graft.core.FsUtil.deleteRecursively(cleanRoot)
     graft.core.FsUtil.deleteRecursively(checkpoint)
     graft.streaming.PipelineStreams.backfill(spark, SilverGlob, cleanRoot, checkpoint)
@@ -297,7 +299,7 @@ object ProductPipeline {
     * the batch pipeline produces from the same bytes.
     */
   def streamDag(spark: SparkSession, dir: String): DataFrame = {
-    val root = "/root/repo/target/pipeline/dag"
+    val root = s"$PipelineRoot/dag"
     graft.core.FsUtil.deleteRecursively(root)
     val zones = graft.pipeline.Pipeline.Zones(root)
     graft.pipeline.FixtureBinaries.writeRawPdfs(zones.raw)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Tables, WorkDirs}
 import graft.functions.TextHash.{hash60, hash60Sql}
 
 /** Corpus sampling and sharding — the two selection operators every
@@ -478,7 +478,9 @@ object Sampling {
 
   // ------------------------------------------------------------------ x3
 
-  val ExportRoot = "/root/repo/target/fixtures-export/shards"
+  /** Parent of the x3/x4/x6 export zones (Bench drops it per pass). */
+  val ExportZonesRoot: String = WorkDirs.target("fixtures-export")
+  val ExportRoot = s"$ExportZonesRoot/shards"
 
   /** K7 ROUND-TRIP: run the training-shard export sink, read the
     * JSONL-gz layout back off disk, and re-derive (doc_id, n_tokens,
@@ -552,7 +554,7 @@ object Sampling {
 
   // ----------------------------------------------------------------- x4
 
-  val DeleteRoot = "/root/repo/target/fixtures-export/delete-shards"
+  val DeleteRoot = s"$ExportZonesRoot/delete-shards"
 
   /** Victim selector for the x4 fixture: every doc_id ≡ 0 (mod 83) — a
     * deterministic stand-in for "the ids in today's deletion requests".
@@ -767,7 +769,7 @@ object Sampling {
 
   // ----------------------------------------------------------------- x6
 
-  val UpsertRoot = "/root/repo/target/fixtures-export/upsert-shards"
+  val UpsertRoot = s"$ExportZonesRoot/upsert-shards"
 
   /** x6: row-level UPSERT roundtrip — build an incremental export zone,
     * land the x5 perturbation's UPSERT HALF (the %89 modifications and

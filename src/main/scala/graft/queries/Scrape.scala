@@ -10,7 +10,7 @@ import graft.pipeline.ScrapeFeeder
   */
 object Scrape {
 
-  val LinksGlob = "/root/repo/fixtures/links/catalogue_links.json"
+  val LinksGlob = graft.core.WorkDirs.fixture("links/catalogue_links.json")
 
   /** F1 link filter + P1/P2 derivations + J2 dedup-rejoin + K1 key
     * convention, end-to-end: which rows fetch, which copy, and where each

@@ -662,7 +662,7 @@ object Similarity {
     * never drift from the from-scratch computation.
     */
   def ivfIndexTopK(spark: SparkSession, dir: String): DataFrame = {
-    val idx = indexDirFor(spark, dir)
+    val idx = indexDirFor(spark, "ivf_index", dir)
     // build returns the centroids it just wrote (doubles round-trip parquet
     // exactly), so the in-process build→probe path skips the read-back job;
     // a standalone probe ([[probeIvfIndex]]) still reads them from the index
@@ -674,15 +674,15 @@ object Similarity {
     * [[ivfIndexTopK]]/[[ivfPqIndexTopK]]/[[ivfPqIndexRescoreTopK]] take
     * only a corpus dir (the `(SparkSession, String) => DataFrame` registry
     * shape), so they must derive an indexDir — a HARNESS PLACEMENT, not an
-    * index contract. The default is CWD-relative `target/` (right for the
-    * local driver, Verify, Bench); a deployment sets `graft.index.root`
+    * index contract. The default is the checkout's work root
+    * ([[graft.core.WorkDirs.Target]]); a deployment sets `graft.index.root`
     * once (runtime conf; any Hadoop FS scheme — the freshness probes and
     * writers resolve through the path's own FileSystem) and every derived
     * dir follows. The build/probe APIs take an explicit indexDir and never
     * consult this.
     */
   private def indexRoot(spark: SparkSession): String =
-    spark.conf.get("graft.index.root", "target")
+    spark.conf.get("graft.index.root", graft.core.WorkDirs.Target)
 
   /** Collision-proof artifact name for a corpus dir: the readable mangle
     * plus a short hash of the RAW string. The mangle alone maps distinct
@@ -696,8 +696,17 @@ object Similarity {
   private def mangledCorpusName(dir: String): String =
     dir.replaceAll("[^A-Za-z0-9.]", "_") + f"_${dir.hashCode}%08x"
 
-  private[queries] def indexDirFor(spark: SparkSession, dir: String): String =
-    s"${indexRoot(spark)}/ivf_index/${mangledCorpusName(dir)}"
+  /** A registry twin's index dir: `<indexRoot>/<family>/<corpus name>`.
+    * Each twin owns its artifact family — ivf_index (n7), ivfpq_index
+    * (n13/n15), ivfpq_append_index (n16: BASE-trained quantizers, so
+    * sharing n13's dir would make the twins alternate-evict each other's
+    * artifacts under the sibling-eviction rebuild rule) and
+    * ivfpq_upsert_index (n17: the demo MUTATES its index, so sharing
+    * would hand n13/n15 a corpus the oracle they pin never saw).
+    */
+  private[queries] def indexDirFor(spark: SparkSession, family: String,
+      dir: String): String =
+    s"${indexRoot(spark)}/$family/${mangledCorpusName(dir)}"
 
   private val indexMemo = new BoundedMemo[
     (String, String, String, Int, Int), Seq[Centroid]](MemoCapacity)
@@ -1539,12 +1548,6 @@ object Similarity {
 
   // ----------------------------------------------------------- n13
 
-  /** [[indexDirFor]]'s PQ twin — same harness-placement contract, same
-    * `graft.index.root` override.
-    */
-  private[queries] def pqIndexDirFor(spark: SparkSession, dir: String): String =
-    s"${indexRoot(spark)}/ivfpq_index/${mangledCorpusName(dir)}"
-
   private val pqIndexMemo = new BoundedMemo[
     (String, String, String, Int), (Seq[Centroid], PqBook)](MemoCapacity)
 
@@ -1725,7 +1728,7 @@ object Similarity {
     * reproduce n12's from-scratch result exactly (shared oracle).
     */
   def ivfPqIndexTopK(spark: SparkSession, dir: String): DataFrame = {
-    val idx = pqIndexDirFor(spark, dir)
+    val idx = indexDirFor(spark, "ivfpq_index", dir)
     buildIvfPqIndex(spark, dir, idx)
     probeIvfPqIndex(spark, dir, idx, NumProbe)
   }
@@ -1747,7 +1750,7 @@ object Similarity {
     * the rescore: a corrupted unprobed cell directory never fails n15.
     */
   def ivfPqIndexRescoreTopK(spark: SparkSession, dir: String): DataFrame = {
-    val idx = pqIndexDirFor(spark, dir)
+    val idx = indexDirFor(spark, "ivfpq_index", dir)
     buildIvfPqIndex(spark, dir, idx)
     rescoreProbedIndex(spark, dir, idx)
   }
@@ -1773,14 +1776,6 @@ object Similarity {
     */
   private[queries] val AppendMod = 10L
   private[queries] val AppendRem = 7L
-
-  /** [[pqIndexDirFor]]'s append twin — a SEPARATE artifact family: the
-    * appended index holds BASE-trained quantizers, so sharing n13's dir
-    * would make the two registry twins alternate-evict each other's
-    * artifacts (the sibling-eviction rebuild rule).
-    */
-  private[queries] def appendIndexDirFor(spark: SparkSession, dir: String): String =
-    s"${indexRoot(spark)}/ivfpq_append_index/${mangledCorpusName(dir)}"
 
   /** Memo-key namespace for the BASE-split quantizers: quantMemo/pqMemo
     * key on the corpus STRING (the frame rides alongside), so training on
@@ -2064,7 +2059,7 @@ object Similarity {
     * tracks the corpus.
     */
   def ivfPqAppendTopK(spark: SparkSession, dir: String): DataFrame = {
-    val idx = appendIndexDirFor(spark, dir)
+    val idx = indexDirFor(spark, "ivfpq_append_index", dir)
     maintainedIvfPqIndex(spark, dir, idx) {
       buildIvfPqBaseIndex(spark, dir, idx)
       upsertIvfPqIndex(spark, idx, appendDelta(spark, dir))
@@ -2187,13 +2182,6 @@ object Similarity {
       .filter(!upsertPredicate)
       .select("vec_id", "embedding")
       .unionByName(upsertBatch(spark, dir))
-
-  /** [[pqIndexDirFor]]'s upsert twin — a third artifact family: the
-    * registry demo MUTATES its index, so sharing n13's dir would hand
-    * n13/n15 a corpus the oracle they pin never saw.
-    */
-  private[queries] def upsertIndexDirFor(spark: SparkSession, dir: String): String =
-    s"${indexRoot(spark)}/ivfpq_upsert_index/${mangledCorpusName(dir)}"
 
   /** UPSERT a batch of vectors into an EXISTING persisted IVF+PQ index
     * with FROZEN quantizers — the ONE writer that maintains a built
@@ -2361,7 +2349,7 @@ object Similarity {
     * touched cells against the recode's corpus.
     */
   def ivfPqUpsertTopK(spark: SparkSession, dir: String): DataFrame = {
-    val idx = upsertIndexDirFor(spark, dir)
+    val idx = indexDirFor(spark, "ivfpq_upsert_index", dir)
     maintainedIvfPqIndex(spark, dir, idx) {
       buildIvfPqIndexCold(spark, dir, idx, NumCells,
         trainKey = dir, keep = lit(true))

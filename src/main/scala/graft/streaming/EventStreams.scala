@@ -333,11 +333,12 @@ object EventStreams {
       .select(outCols: _*)
   }
 
-  /** Default state-shard count for [[replayToTable]] (env-overridable via
-    * SPARK_GRAFT_REPLAY_SHARDS). Stateful operators pin their state-store
-    * partition count from `spark.sql.shuffle.partitions` at query birth —
-    * a DEPLOYMENT decision sized to the stream's key cardinality and
-    * executor count, independent of the session's batch-shuffle sizing.
+  /** Default state-shard count for [[replayToTable]] (a caller passes
+    * `stateShards` for another count). Stateful operators pin their
+    * state-store partition count from `spark.sql.shuffle.partitions` at
+    * query birth — a DEPLOYMENT decision sized to the stream's key
+    * cardinality and executor count, independent of the session's
+    * batch-shuffle sizing.
     * Each state partition carries fixed per-batch cost (4 stores per
     * stream-stream-join partition, each paying commit + eviction scans),
     * so a fixture-scale replay under a batch-sized conf pays 32-200 shards
@@ -346,8 +347,7 @@ object EventStreams {
     * harness therefore sizes shards to the replayed zone; a production
     * stream sets this once at its own birth.
     */
-  def replayStateShards: Int =
-    math.max(1, sys.env.get("SPARK_GRAFT_REPLAY_SHARDS").map(_.toInt).getOrElse(4))
+  val replayStateShards: Int = 4
 
   /** Drain an events zone through a streaming query into an in-memory table
     * (complete/update modes — the finite-replay harness used by the st*
@@ -395,18 +395,12 @@ object EventStreams {
     * of the measured operator cost. Durability is NOT weakened where it
     * matters: production-shaped streams (PipelineStreams, startReseeded)
     * take caller-owned durable checkpoint locations and are untouched.
-    * Env-overridable (SPARK_GRAFT_REPLAY_CKPT=dir, or `default` for
-    * Spark's temp-dir behavior).
     */
-  private def replayCheckpointBase: Option[String] =
-    sys.env.get("SPARK_GRAFT_REPLAY_CKPT") match {
-      case Some("default") => None
-      case Some(dir) => Some(dir)
-      case None =>
-        val shm = new java.io.File("/dev/shm")
-        if (shm.isDirectory && shm.canWrite) Some("/dev/shm/graft-replay-ckpt")
-        else None
-    }
+  private def replayCheckpointBase: Option[String] = {
+    val shm = new java.io.File("/dev/shm")
+    if (shm.isDirectory && shm.canWrite) Some("/dev/shm/graft-replay-ckpt")
+    else None
+  }
 
   private def replayImpl(stream: DataFrame, name: String, mode: OutputMode,
       stateShards: Int, trigger: Trigger): DataFrame = {

@@ -4,14 +4,14 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.GraftSession
+import graft.core.{GraftSession, WorkDirs}
 
 /** The one session the whole test run shares, built by the product's
   * only session factory ([[graft.core.GraftSession.local]]) with the same
   * posture Bench and Verify run under, so every suite plans the way the
   * timed and oracle-checked queries do. Its warehouse and every suite's
-  * scratch dir live under the running checkout's `target/` (sbt forks the
-  * test JVM with the project base as working directory).
+  * scratch dir live under the running checkout's work root
+  * ([[graft.core.WorkDirs]]).
   */
 object TestSpark {
   lazy val spark: SparkSession = GraftSession.local("graft-test", cores = 4)
@@ -24,11 +24,10 @@ abstract class SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
     * specs name fixtures through this so a relocation is one edit here,
     * not a sweep over hardcoded paths.
     */
-  def testData(sf: String): String = s"/root/testdata/sf$sf"
-  /** Unique scratch dir per suite under this checkout's target/. */
+  def testData(sf: String): String = WorkDirs.testData(sf)
+  /** Unique scratch dir per suite under this checkout's work root. */
   def scratch(name: String): String = {
-    val dir = java.nio.file.Paths.get("target", "test-scratch", name)
-      .toAbsolutePath.toString
+    val dir = WorkDirs.target(s"test-scratch/$name")
     graft.core.FsUtil.deleteRecursively(dir)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
     dir

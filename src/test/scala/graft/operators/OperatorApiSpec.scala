@@ -187,12 +187,12 @@ class OperatorApiSpec extends SparkTestBase {
       (2L, "the quick brown fox jumps over the lazy dog again"))
       .toDF("doc_id", "text")
     val ledger = TextDedup.emptyNearDupLedger(spark)
-    val (v, next) = graft.queries.Dedup.ingestStep(batch, ledger)
+    val (v, next) = graft.queries.Dedup.ingestStep(TextDedup.minhashBandsAgg(batch), ledger)
     assert(v.orderBy("doc_id").collect().map(_.getInt(1)).toSeq === Seq(0, 1))
     assert(next.schema.simpleString === ledger.schema.simpleString)
     val widened = ledger.withColumn("band", col("band").cast("long"))
     val e = intercept[IllegalArgumentException] {
-      graft.queries.Dedup.ingestStep(batch, widened)
+      graft.queries.Dedup.ingestStep(TextDedup.minhashBandsAgg(batch), widened)
     }
     assert(e.getMessage.contains("band:bigint"), e.getMessage)
   }

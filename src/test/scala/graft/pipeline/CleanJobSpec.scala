@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
+import graft.core.WorkDirs
 
 /** Golden end-to-end tests of the clean job over the checked-in silver
   * fixtures, plus the partitioned-sink semantics the reference relies on
@@ -12,7 +13,7 @@ import graft.SparkTestBase
   */
 class CleanJobSpec extends SparkTestBase {
 
-  private val SilverGlob = "/root/repo/fixtures/silver/PnP/*/*/*.json"
+  private val SilverGlob = WorkDirs.fixture("silver/PnP/*/*/*.json")
 
   private def cleanedFixtures =
     CleanJob.clean(CleanJob.readSilver(spark, SilverGlob))
@@ -74,7 +75,7 @@ class CleanJobSpec extends SparkTestBase {
     CleanJob.writeClean(cleanedFixtures, root)
     // re-clean ONE file (one partition) with one row dropped
     val gauteng = CleanJob.clean(CleanJob.readSilver(
-      spark, "/root/repo/fixtures/silver/PnP/Gauteng/*/page_2.json"))
+      spark, WorkDirs.fixture("silver/PnP/Gauteng/*/page_2.json")))
       .filter(col("product_name") =!= "Mystery Item")
     CleanJob.writeClean(gauteng, root)
     val after = spark.read.parquet(root)
@@ -144,12 +145,12 @@ class CleanJobSpec extends SparkTestBase {
   test("mergeWriteClean swaps via temp root and leaves no residue") {
     val root = scratch("clean-merge-atomic")
     val gauteng = CleanJob.clean(CleanJob.readSilver(
-      spark, "/root/repo/fixtures/silver/PnP/Gauteng/*/page_1.json"))
+      spark, WorkDirs.fixture("silver/PnP/Gauteng/*/page_1.json")))
     CleanJob.mergeWriteClean(gauteng, root)
     assert(spark.read.parquet(root).count() === 4)
     // second file, same partition: merge keeps the sibling's rows
     val page2 = CleanJob.clean(CleanJob.readSilver(
-      spark, "/root/repo/fixtures/silver/PnP/Gauteng/*/page_2.json"))
+      spark, WorkDirs.fixture("silver/PnP/Gauteng/*/page_2.json")))
     CleanJob.mergeWriteClean(page2, root)
     assert(spark.read.parquet(root).count() === 8)
     // the temp merge root is gone and nothing parked inside the live zone
@@ -163,7 +164,7 @@ class CleanJobSpec extends SparkTestBase {
   test("mergeWriteClean recovers a partition parked by a mid-swap crash") {
     val root = scratch("clean-merge-recover")
     val page1 = CleanJob.clean(CleanJob.readSilver(
-      spark, "/root/repo/fixtures/silver/PnP/Gauteng/*/page_1.json"))
+      spark, WorkDirs.fixture("silver/PnP/Gauteng/*/page_1.json")))
     CleanJob.mergeWriteClean(page1, root)
     assert(spark.read.parquet(root).count() === 4)
     // simulate a crash between park and install: the live partition dir is
@@ -178,7 +179,7 @@ class CleanJobSpec extends SparkTestBase {
     assert(spark.read.parquet(root).count() === 4)
     // sibling-file rows survive the recovered partition on the next merge
     val page2 = CleanJob.clean(CleanJob.readSilver(
-      spark, "/root/repo/fixtures/silver/PnP/Gauteng/*/page_2.json"))
+      spark, WorkDirs.fixture("silver/PnP/Gauteng/*/page_2.json")))
     CleanJob.mergeWriteClean(page2, root)
     assert(spark.read.parquet(root).count() === 8)
     assert(!Files.exists(Paths.get(s"$root.__merge_tmp")))
@@ -248,7 +249,7 @@ class CleanJobSpec extends SparkTestBase {
     Seq((1, "x")).toDF("a", "b").write.mode("overwrite")
       .partitionBy("b").parquet(cleanRoot)
     val batch = CleanJob.clean(
-      CleanJob.readSilver(spark, "/root/repo/fixtures/silver/PnP/*/*/*.json"))
+      CleanJob.readSilver(spark, SilverGlob))
     intercept[org.apache.spark.sql.AnalysisException] {
       CleanJob.mergeWriteClean(batch, cleanRoot)
     }

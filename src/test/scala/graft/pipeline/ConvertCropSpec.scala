@@ -5,10 +5,11 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
+import graft.core.WorkDirs
 
 class ConvertCropSpec extends SparkTestBase {
 
-  private val SilverGlob = "/root/repo/fixtures/silver/PnP/*/*/*.json"
+  private val SilverGlob = WorkDirs.fixture("silver/PnP/*/*/*.json")
 
   test("stub rasterizer: page count parses real PDF object structure") {
     assert(StubRasterizer.pageCount(FixtureBinaries.minimalPdf(1)) === 1)

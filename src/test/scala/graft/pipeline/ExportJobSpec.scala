@@ -475,6 +475,8 @@ class ExportJobSpec extends SparkTestBase {
       ExportJob.deleteFromShards(spark, out, Seq(first.head.getAs[Long]("doc_id")))
     }
     assert(e.getMessage.contains("inconsistent"))
+    // and it names the route that fixes it, the API argument
+    assert(e.getMessage.contains("requestedShards"), e.getMessage)
     assert(ExportJob.zoneShards(out) === None, "wrong adoption was persisted")
     assert(shardMtimes(out) === t0, "failed adoption touched the zone")
     // same for reshard's adoption path (an adopted-equals-target count
@@ -766,6 +768,8 @@ class ExportJobSpec extends SparkTestBase {
         Seq(first.head.getAs[Long]("doc_id")))
     }
     assert(e.getMessage.contains("inconsistent"))
+    // and it names the route that fixes it, the API argument
+    assert(e.getMessage.contains("requestedShards"), e.getMessage)
     assert(ExportJob.zoneShards(out) === None, "wrong adoption was persisted")
     // correct re-adoption restores the marker through the scheme
     ExportJob.writeTrainingShardsIncremental(spark, corpus, out,

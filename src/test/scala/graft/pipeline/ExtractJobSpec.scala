@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
+import graft.core.WorkDirs
 
 class ExtractJobSpec extends SparkTestBase {
 
@@ -60,7 +61,7 @@ class ExtractJobSpec extends SparkTestBase {
     val ex = new FixtureExtractor()
     val key = "Gauteng/13_February_-_15_February_2026/page_1"
     val expected = Files.readString(
-      Paths.get(s"/root/repo/fixtures/silver/PnP/$key.json"))
+      Paths.get(WorkDirs.fixture(s"silver/PnP/$key.json")))
     assert(ex.extract(Array.emptyByteArray, key) === expected)
     assert(ex.extract(Array.emptyByteArray, "No/Such/page_9") === "[]")
   }

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
+import graft.core.WorkDirs
 
 /** Whole-DAG batch test (E1/E3): links → fetch (stub) → rasterize (stub) →
   * extract (fixture replay) → clean → crops, across all five medallion
@@ -17,7 +18,7 @@ class PipelineSpec extends SparkTestBase {
   test("runAll: scraped links to clean table and crop files end-to-end") {
     val zones = Pipeline.Zones(scratch("pipeline-e2e"))
     val links = ScrapeFeeder.readLinks(
-      spark, "/root/repo/fixtures/links/catalogue_links.json")
+      spark, WorkDirs.fixture("links/catalogue_links.json"))
     val clean = Pipeline.runAll(spark, links, zones)
 
     // raw zone: one PDF per (province, date_slug) target incl. J2 copies
@@ -43,7 +44,7 @@ class PipelineSpec extends SparkTestBase {
 
   test("fetch plan: stub fetcher downloads each URL once, copies fan out (S2/J2/K1)") {
     val plan = ScrapeFeeder.fetchPlan(ScrapeFeeder.readLinks(
-      spark, "/root/repo/fixtures/links/catalogue_links.json"))
+      spark, WorkDirs.fixture("links/catalogue_links.json")))
     val fetched = FetchJob.fetchAll(plan, new StubFetcher)
     assert(fetched.count() === 4) // every kept target got bytes
     // the shared URL produced byte-identical copies for both provinces

@@ -3,11 +3,12 @@ package graft.pipeline
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
+import graft.core.WorkDirs
 
 class ScrapeFeederSpec extends SparkTestBase {
 
   private def plan = ScrapeFeeder.fetchPlan(
-    ScrapeFeeder.readLinks(spark, "/root/repo/fixtures/links/catalogue_links.json"))
+    ScrapeFeeder.readLinks(spark, WorkDirs.fixture("links/catalogue_links.json")))
 
   test("F1 filter: null href, non-pdf href, and Shop_now rows dropped") {
     val provinces = plan.select("province").collect().map(_.getString(0)).toSet

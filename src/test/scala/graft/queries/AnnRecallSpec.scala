@@ -72,7 +72,7 @@ class AnnRecallSpec extends SparkTestBase {
       }
       (id.toLong, emb, b)
     }
-    val dir = "target/ann_clustered"
+    val dir = scratch("ann_clustered")
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
 

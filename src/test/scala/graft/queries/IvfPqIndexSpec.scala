@@ -4,6 +4,7 @@ import java.io.File
 import java.nio.file.{Files, Paths}
 
 import graft.SparkTestBase
+import graft.core.WorkDirs
 
 /** Contracts for the persisted IVF+PQ index (n13), mirroring IvfIndexSpec:
   * the disk probe must reproduce n12's from-scratch result exactly, run
@@ -94,15 +95,17 @@ class IvfPqIndexSpec extends SparkTestBase {
   }
 
   test("the registry twins' derived index dirs follow graft.index.root") {
-    // the derived dirs are harness placements: CWD-relative target/ by
-    // default, one conf away from any scheme-qualified root
-    assert(Similarity.pqIndexDirFor(spark, SfDir).startsWith("target/"))
-    assert(Similarity.indexDirFor(spark, SfDir).startsWith("target/"))
+    // the derived dirs are harness placements: the checkout's work root
+    // by default, one conf away from any scheme-qualified root
+    assert(Similarity.indexDirFor(spark, "ivfpq_index", SfDir)
+      .startsWith(WorkDirs.Target + "/"))
+    assert(Similarity.indexDirFor(spark, "ivf_index", SfDir)
+      .startsWith(WorkDirs.Target + "/"))
     spark.conf.set("graft.index.root", "file:/idx/root")
     try {
-      assert(Similarity.pqIndexDirFor(spark, SfDir)
+      assert(Similarity.indexDirFor(spark, "ivfpq_index", SfDir)
         .startsWith("file:/idx/root/ivfpq_index/"))
-      assert(Similarity.indexDirFor(spark, SfDir)
+      assert(Similarity.indexDirFor(spark, "ivf_index", SfDir)
         .startsWith("file:/idx/root/ivf_index/"))
     } finally spark.conf.unset("graft.index.root")
   }
@@ -138,10 +141,10 @@ class IvfPqIndexSpec extends SparkTestBase {
     // `data/x_y` and `data_x/y` mangle to one readable name; the raw-dir
     // hash suffix keeps their artifacts apart so alternating registry
     // twins stay build-once/probe-many instead of rebuild-per-alternation
-    for (f <- Seq[(org.apache.spark.sql.SparkSession, String) => String](
-        Similarity.indexDirFor, Similarity.pqIndexDirFor,
-        Similarity.appendIndexDirFor, Similarity.upsertIndexDirFor))
-      assert(f(spark, "data/x_y") != f(spark, "data_x/y"))
+    for (family <- Seq("ivf_index", "ivfpq_index", "ivfpq_append_index",
+        "ivfpq_upsert_index"))
+      assert(Similarity.indexDirFor(spark, family, "data/x_y") !=
+        Similarity.indexDirFor(spark, family, "data_x/y"))
   }
 
   test("index layout: hive-partitioned codes, metadata-scale quantizer tables") {

@@ -142,7 +142,7 @@ class PqSpec extends SparkTestBase {
       }
       (id.toLong, emb, b)
     }
-    val dir = "target/pq_clustered"
+    val dir = scratch("pq_clustered")
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
 

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
+import graft.core.WorkDirs
 
 /** Streaming semantics tests (§2.10): exactly-once file handling via the
   * checkpoint (replacing the reference's F3 existence checks) and idempotent
@@ -12,7 +13,7 @@ import graft.SparkTestBase
   */
 class PipelineStreamsSpec extends SparkTestBase {
 
-  private val FixtureRoot = "/root/repo/fixtures/silver/PnP"
+  private val FixtureRoot = WorkDirs.fixture("silver/PnP")
 
   private def copyFixture(rel: String, silverRoot: String): Unit = {
     val src = Paths.get(s"$FixtureRoot/$rel")
