@@ -51,12 +51,7 @@ object StreamScaleStress {
     * deterministic — same slices, same batches); every rep's wall time is
     * recorded in `sec_runs` and the protocol named per row.
     */
-  private val Reps = {
-    val r = sys.env.get("SPARK_GRAFT_STREAM_REPS").map(_.toInt).getOrElse(3)
-    require(r > 0, s"SPARK_GRAFT_STREAM_REPS must be positive, got $r " +
-      "(zero reps would generate the corpora and then die at secs.min)")
-    r
-  }
+  private val Reps = 3
   private val UserOffset = 10000L   // base user_id < 1500
   private val EventOffset = 10000000L // base event_id < 100k
   private val DocOffset = 1000000L  // base doc_id < 5000 (matches ScaleStress)
@@ -230,17 +225,6 @@ object StreamScaleStress {
     // state bound, so the study session raises it
     val spark = GraftSession.local("graft-stream-scale",
       extraConfs = Map("spark.driver.maxResultSize" -> "8g"))
-    // SPARK_GRAFT_STATE_PROVIDER=rocksdb runs the study on the production
-    // state backend (changelog-checkpointed native store, bounded heap)
-    // instead of the default in-memory HDFSBackedStateStore — the backend
-    // a real cluster would run the unbounded ledgers (st6/st9) on.
-    sys.env.get("SPARK_GRAFT_STATE_PROVIDER").foreach { p =>
-      val cls =
-        if (p == "rocksdb")
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-        else p
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass", cls)
-    }
     def f2(v: Double): String =
       java.math.BigDecimal.valueOf(v)
         .setScale(2, java.math.RoundingMode.HALF_UP).toPlainString()

@@ -289,9 +289,10 @@ object Dedup {
     */
   private val pairMemo = newFrameMemo
 
-  /** Drop the signature/pair memos (benchmark hook: ScaleStress times every
-    * query COLD so a scaling curve measures end-to-end cost, not whichever
-    * query happened to run first and warm the memo for the rest).
+  /** Drop the signature, pair and cluster memos (benchmark hook:
+    * ScaleStress times every query COLD so a scaling curve measures
+    * end-to-end cost, not whichever query happened to run first and warm
+    * the memo for the rest).
     */
   private[graft] def clearMemos(): Unit = {
     sigMemo.clear()  // clear() releases via the memo's unpersist hook
@@ -359,8 +360,9 @@ object Dedup {
     * fixture max DF (25 at sf0.1) so test-scale results are unchanged; at
     * production scale it redefines jaccard over the sub-boilerplate gram
     * vocabulary, which is the standard near-dup practice. The oracle SQL
-    * interpolates the same value, so parity holds at any setting (the
-    * ScaleStress skew run's guardless counterfactual raises it here).
+    * interpolates the same value, so parity holds at any setting
+    * (SCALING.md's skew section measures the guard against a build with
+    * this value raised).
     */
   val MaxGramDf: Long = 1000L
 

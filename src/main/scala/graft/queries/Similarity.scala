@@ -2054,7 +2054,7 @@ object Similarity {
     * rebuild would serve. IvfPqUpsertSpec pins the same claim on disk
     * for insert batches (insert == frozen recode, content-idempotent
     * re-land, untouched partitions byte-unchanged, a poisoned foreign
-    * partition never read), and the SPARK_GRAFT_N16 ScaleStress A/B
+    * partition never read), and SCALING.md's SCALESTRESS_r19 record
     * measures insert cost tracking the DELTA while the frozen recode
     * tracks the corpus.
     */
@@ -2344,9 +2344,9 @@ object Similarity {
     * matter how many ids changed cells. IvfPqUpsertSpec pins the same
     * claim on disk (upsert == frozen recode byte-content-wise, moved ids
     * leave no stale row, emptied partitions leave no stale dir,
-    * content-idempotent re-land, guard-rejects delete), and the
-    * SPARK_GRAFT_N17 ScaleStress A/B measures cost tracking the batch's
-    * touched cells against the recode's corpus.
+    * content-idempotent re-land, guard-rejects delete), and SCALING.md's
+    * SCALESTRESS_r20 record measures cost tracking the batch's touched
+    * cells against the recode's corpus.
     */
   def ivfPqUpsertTopK(spark: SparkSession, dir: String): DataFrame = {
     val idx = indexDirFor(spark, "ivfpq_upsert_index", dir)

@@ -9,14 +9,16 @@ import org.scalatest.funsuite.AnyFunSuite
   *   - Library packages read no environment variable or system property.
   *     A tuning value is a constant or an API argument, so every run of
   *     the same code plans the same way; only the harness mains (Bench,
-  *     Verify, the scale studies) read their own environment.
+  *     Verify, ScaleStress, StreamScaleStress) read their own
+  *     environment, and the number of reads in each is pinned, so a new
+  *     harness knob is a visible decision rather than a silent one.
   *   - Work directories are named only by [[graft.core.WorkDirs]]: no
   *     absolute machine path and no hand-built `target` path elsewhere in
   *     `src/main` or `src/test`, so a second checkout never reads or
   *     deletes the first one's files.
   *
-  * All pinned counts are zero. Counting follows [[AuditScan]]'s rule,
-  * comments excluded.
+  * Every pinned count outside the harness mains is zero. Counting follows
+  * [[AuditScan]]'s rule, comments excluded.
   */
 class ConfigAuditSpec extends AnyFunSuite {
 
@@ -24,6 +26,16 @@ class ConfigAuditSpec extends AnyFunSuite {
 
   private val LibraryPackages =
     Seq("core", "functions", "operators", "pipeline", "plans", "queries", "streaming")
+
+  // Environment reads per top-level harness file: Bench's sf dir, cores,
+  // query filter, verbose flag and retry switch; Verify's cores and query
+  // filter; each scale harness's sf dir, scale list and query filter.
+  // Every other top-level file reads none.
+  private val HarnessEnvReads = Map(
+    "Bench.scala" -> 5,
+    "Verify.scala" -> 2,
+    "ScaleStress.scala" -> 3,
+    "StreamScaleStress.scala" -> 3)
 
   private val EnvRead =
     "\\bsys\\s*\\.\\s*(env|props)\\b|\\bSystem\\s*\\.\\s*(getenv|getProperty)\\b".r
@@ -50,6 +62,16 @@ class ConfigAuditSpec extends AnyFunSuite {
     assert(found.isEmpty,
       "environment reads in library code:\n  " + listing(found) +
         "\nMake the value a constant or an API argument; harness mains may read env.")
+  }
+
+  test("harness mains read only their pinned environment variables") {
+    val found = AuditScan.scan(src.resolve("main/scala/graft"), EnvRead)
+      .filter { case (f, _) => !f.contains('/') }
+    val drift = AuditScan.drift(found, HarnessEnvReads)
+    assert(drift.isEmpty,
+      "environment reads in harness mains drifted from the pins:\n  " +
+        drift.mkString("\n  ") +
+        "\nMake a value nothing sets a constant; pin a read only if a run needs it.")
   }
 
   test("absolute machine paths are spelled only in WorkDirs") {

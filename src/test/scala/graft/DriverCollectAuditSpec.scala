@@ -41,7 +41,6 @@ class DriverCollectAuditSpec extends AnyFunSuite {
   // or moved WITHOUT updating the audit table.
   private val Audited = Map(
     "graft/Bench.scala" -> 1,
-    "graft/ScaleStress.scala" -> 1,
     "graft/StreamScaleStress.scala" -> 3,
     "graft/pipeline/CleanJob.scala" -> 1,
     "graft/pipeline/ExportJob.scala" -> 2,

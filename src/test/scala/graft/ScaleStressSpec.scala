@@ -65,6 +65,18 @@ class ScaleStressSpec extends SparkTestBase {
     }
   }
 
+  test("every curve query resolves to a runner without running a job") {
+    // a renamed or deleted query fails here, not hours into an x100 run;
+    // the scale-adapted runners must also keep their registry name, since
+    // the x10 oracle gate and the scale oracle look queries up by it
+    val unresolved = ScaleStress.Queries.filter { q =>
+      scala.util.Try(ScaleStress.fnFor(q, 1)).isFailure
+    }
+    assert(unresolved.isEmpty, s"curve queries with no runner: $unresolved")
+    val unregistered = ScaleStress.Queries.filterNot(SparkEntry.queries.contains)
+    assert(unregistered.isEmpty, s"curve queries missing from SparkEntry: $unregistered")
+  }
+
   test("the d11/d6 tuning schedules are pinned at the measured anchor points") {
     assert(ScaleStress.d11Cells(1) === 8)
     assert(ScaleStress.d11Cells(10) === 25)
