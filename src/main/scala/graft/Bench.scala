@@ -15,9 +15,12 @@ object Bench {
 
   /** One full timed sweep over the selected queries, with its own
     * calibration canary (3 shots at the start, 1 mid-run, 1 at the end).
+    * `firsts` holds each query's rep-1 seconds beside the reported
+    * `results`.
     */
   private final case class Pass(
       results: Seq[(String, Option[Double])],
+      firsts: Seq[(String, Double)],
       canaryTimes: Seq[Double],
       startSpread: Double,
       runSpread: Double,
@@ -117,14 +120,14 @@ object Bench {
         (canaryTimes.max - canaryTimes.min) > 0.1
       val reps = if (startNoisy) 3 else 2
       val mid = selected.size / 2
-      val results = selected.zipWithIndex.map { case ((name, fn), qi) =>
+      val timed = selected.zipWithIndex.map { case ((name, fn), qi) =>
         if (qi == mid) canary()
         // best of two runs: single-shot numbers swing ±15% from GC/JIT
         // noise (measured across identical runs); min-of-2 reports the
         // query's actual cost, not whichever pause landed on it. A run that
         // throws contributes NO time — a broken query must read as failed,
         // not as a fast time-to-exception.
-        val times = (1 to reps).flatMap { rep =>
+        val shots = (1 to reps).map { rep =>
           // clean slate between queries: prior queries' garbage (shuffle
           // buffers, codegen classes) otherwise bills GC pauses to whoever
           // runs next — measured up to 8x inflation on trivial projections
@@ -136,11 +139,12 @@ object Bench {
             if (sys.env.contains("SPARK_GRAFT_VERBOSE"))
               System.err.println(f"[bench] $name rep$rep: $sec%.3f s")
             Some(sec)
-          } catch { case e: Throwable =>
+          } catch { case scala.util.control.NonFatal(e) =>
             System.err.println(s"[bench] $name failed: ${e.getMessage}")
             None
           }
         }
+        val times = shots.flatten
         // min-of-2 on a calm box (a rep's actual cost); median-of-3 on a
         // noisy one (min would still pick up a lucky gap, median can't be
         // swung by one stall)
@@ -149,8 +153,9 @@ object Bench {
           else if (startNoisy && times.size >= 3)
             Some(times.sorted.apply(times.size / 2))
           else Some(times.min)
-        name -> t
+        (name -> t, shots.head.map(name -> _))
       }
+      val results = timed.map(_._1)
       canary()
       val runSpread = spread(canaryTimes.toSeq)
       // run-level noise: either the start shots already disagreed, or the
@@ -158,7 +163,8 @@ object Bench {
       // start, loaded middle)
       val noisy = startNoisy ||
         (runSpread > 0.15 && (canaryTimes.max - canaryTimes.min) > 0.1)
-      Pass(results, canaryTimes.toSeq, startSpread, runSpread, noisy,
+      Pass(results, timed.flatMap(_._2), canaryTimes.toSeq, startSpread,
+        runSpread, noisy,
         if (startNoisy) "median-of-3" else "min-of-2")
     }
 
@@ -239,8 +245,13 @@ object Bench {
     // a timing history across rounds too.
     val headlineProto =
       if (passes.size == 1) "single-pass" else "min-of-passes"
+    // COLD-SIDE RECORD beside the headline: each query's first timed run
+    // in this process (pass 1, rep 1). A memo that another query fills
+    // within the pass still makes rep 2 cheaper than rep 1, so `first`
+    // minus `queries` shows what the remaining warm hits save.
+    val firsts = pass1.firsts
     val detail =
-      s"""{"sf":"$sfName","n_queries":${ok.size},"total":${f3(total)},"headline":"$headlineProto","failed":$failedJson,"stream_protocol_floor":${f3(protocolFloor)},"canary":$canaryJson,"passes":$passesJson,"queries":${qjson(ok)}}"""
+      s"""{"sf":"$sfName","n_queries":${ok.size},"total":${f3(total)},"headline":"$headlineProto","failed":$failedJson,"stream_protocol_floor":${f3(protocolFloor)},"canary":$canaryJson,"passes":$passesJson,"queries":${qjson(ok)},"first_total":${f3(firsts.map(_._2).sum)},"first":${qjson(firsts)}}"""
     val detailPath = java.nio.file.Paths.get(WorkDirs.target("bench_detail.json"))
     java.nio.file.Files.createDirectories(detailPath.getParent)
     java.nio.file.Files.write(detailPath, detail.getBytes("UTF-8"))

@@ -3,13 +3,15 @@ package graft.core
 import scala.util.Try
 
 /** A small bounded LRU memo for per-session derived artifacts — the r15
-  * verdict's memo-hygiene item: the six session memos (Dedup's
-  * signature/pair/cluster frames, Similarity's quantizer/index/probe
-  * plans) cached per (session, corpus dir) in plain `TrieMap`s and never
-  * evicted. Harmless in the one-dir driver harness; in a long-lived
-  * multi-tenant session the entries accumulate and, for the DataFrame
-  * memos, pin lineage and cached blocks for corpora nobody will ask
-  * about again.
+  * verdict's memo-hygiene item: the session memos (Dedup's
+  * signature/pair/cluster frames, Similarity's quantizer and index
+  * metadata) were cached per (session, corpus dir) in plain `TrieMap`s
+  * and never evicted. Harmless in the one-dir driver harness; in a
+  * long-lived multi-tenant session the entries accumulate and, for the
+  * DataFrame memos, pin lineage and cached blocks for corpora nobody will
+  * ask about again. Each memo exists because another query or call
+  * reuses its artifact within one pass; `SessionAuditSpec` pins the memo
+  * fields per file.
   *
   * Semantics, deliberately inherited from the TrieMaps they replace:
   *

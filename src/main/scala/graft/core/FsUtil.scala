@@ -11,13 +11,13 @@ object FsUtil {
   /** Whether every path exists, each resolved through the Hadoop
     * [[FileSystem]] of the path's OWN scheme — `file:`, `hdfs://`,
     * `s3a://` alike — with ONE Hadoop conf construction for the batch
-    * (the index memos' intactness probes run on every warm build request,
-    * and newHadoopConf copies the whole session conf per call). The
+    * (n13's build memo probes on every warm build request, and
+    * newHadoopConf copies the whole session conf per call). The
     * java.nio spelling this replaces is scheme-blind: on a remote FS it
     * reports every artifact missing, so a build-once/probe-many memo
     * silently rebuilds its index on every probe — the exact hazard class
     * the round-15 sweep killed in Layout.compactRoundtrip (SCALING.md).
-    * This is the probe entry point both index freshness checks call.
+    * n13's build memo and the ledger self-heal probe through it.
     */
   def allExist(spark: org.apache.spark.sql.SparkSession,
       paths: Seq[String]): Boolean = {

@@ -302,7 +302,7 @@ object Similarity {
     * UUID, not the session object — values are plain doubles, so a
     * stopped session leaves nothing retained but a short string.
     */
-  /** r16 memo hygiene (r15 verdict item 2): the three memos here are
+  /** r16 memo hygiene (r15 verdict item 2): the memos here are
     * LRU-capped [[BoundedMemo]]s — keys are session-UUID strings (never
     * the session object) and values driver-side metadata, so unlike
     * Dedup's frame memos there is no lineage to unpersist and no live
@@ -315,18 +315,14 @@ object Similarity {
   private val quantMemo = new BoundedMemo[
     (String, String, Int, Int), Seq[Centroid]](MemoCapacity)
 
-  /** Drop the quantizer AND persisted-index memos (one benchmark hook,
-    * mirroring Dedup.clearMemos — both memos exist for the same
-    * build-once-per-session discipline, so cold studies clear both).
+  /** Drop every memo here (one benchmark hook, mirroring
+    * Dedup.clearMemos, so cold studies time every query cold).
     */
   private[graft] def clearQuantMemo(): Unit = {
     quantMemo.clear()
-    indexMemo.clear()
-    probeMemo.clear()
     pqMemo.clear()
     pqIndexMemo.clear()
     pqProbeMemo.clear()
-    maintainedIdxMemo.clear()
     quantReadMemo.clear()
   }
 
@@ -659,7 +655,9 @@ object Similarity {
     * fails a pruned probe. Scoring is identical to n4 (same refined
     * centroids round-tripped exactly through parquet doubles, same
     * rounded-cosine ranking), so n7 shares n4's oracle — the index can
-    * never drift from the from-scratch computation.
+    * never drift from the from-scratch computation. The registry twin
+    * builds on every call, so its Bench entry times build + probe; the
+    * "probe many" half is [[probeIvfIndex]] against a built dir.
     */
   def ivfIndexTopK(spark: SparkSession, dir: String): DataFrame = {
     val idx = indexDirFor(spark, "ivf_index", dir)
@@ -687,11 +685,11 @@ object Similarity {
   /** Collision-proof artifact name for a corpus dir: the readable mangle
     * plus a short hash of the RAW string. The mangle alone maps distinct
     * corpora like `data/x_y` and `data_x/y` to one name — answers stayed
-    * right (the build memos' sibling-eviction rule forces a rebuild when a
-    * different corpus claims the dir) but two such registry-twin corpora
-    * alternating in a session would rebuild per alternation instead of
-    * build-once/probe-many. `String.hashCode` is JLS-specified, so the
-    * derived name is stable across JVMs and sessions.
+    * right (the n13 build memo's sibling-eviction rule forces a rebuild
+    * when a different corpus claims the dir) but two such registry-twin
+    * corpora alternating in a session would overwrite each other's
+    * artifacts. `String.hashCode` is JLS-specified, so the derived name
+    * is stable across JVMs and sessions.
     */
   private def mangledCorpusName(dir: String): String =
     dir.replaceAll("[^A-Za-z0-9.]", "_") + f"_${dir.hashCode}%08x"
@@ -699,61 +697,22 @@ object Similarity {
   /** A registry twin's index dir: `<indexRoot>/<family>/<corpus name>`.
     * Each twin owns its artifact family — ivf_index (n7), ivfpq_index
     * (n13/n15), ivfpq_append_index (n16: BASE-trained quantizers, so
-    * sharing n13's dir would make the twins alternate-evict each other's
-    * artifacts under the sibling-eviction rebuild rule) and
-    * ivfpq_upsert_index (n17: the demo MUTATES its index, so sharing
-    * would hand n13/n15 a corpus the oracle they pin never saw).
+    * sharing n13's dir would overwrite the artifact n13's build memo
+    * serves) and ivfpq_upsert_index (n17: the demo MUTATES its index, so
+    * sharing would hand n13/n15 a corpus the oracle they pin never saw).
     */
   private[queries] def indexDirFor(spark: SparkSession, family: String,
       dir: String): String =
     s"${indexRoot(spark)}/$family/${mangledCorpusName(dir)}"
 
-  private val indexMemo = new BoundedMemo[
-    (String, String, String, Int, Int), Seq[Centroid]](MemoCapacity)
-
-  /** Build the index artifacts, once per (session, corpus, index dir,
-    * schedule): the persisted artifact is immutable for a fixed corpus +
-    * schedule, so a session that already wrote it serves every later
-    * build request from the artifact — "build once, probe many" made
-    * literal, which is what the n7 bench entry then measures (first call
-    * pays the cold build + write; repeats pay the probe, the serving
-    * path). A memo hit is honored only while the artifact still EXISTS
-    * on disk — a caller that deleted the index dir gets a real rebuild,
-    * not a dangling promise. ScaleStress clears the memo (with the
-    * quantizer's, [[clearQuantMemo]]) so its curves keep timing the COLD
-    * build — that cost is recorded in SCALING.md's n7 study, not hidden.
+  /** Build the index artifacts cold: train (or take the session's
+    * memoized) quantizer, then write `centroids.parquet` and the
+    * cell-partitioned `cells/`, overwriting whatever the dir held. It
+    * returns the centroids it wrote. ScaleStress's curve times this build
+    * as part of n7; SCALING.md's n7 study records its cost.
     */
   def buildIvfIndex(spark: SparkSession, dir: String, indexDir: String,
       numCells: Int = NumCells, lloydIters: Int = LloydIters): Seq[Centroid] = {
-    val key = (sessionKey(spark), dir, indexDir, numCells, lloydIters)
-    // a memo hit is honored only while BOTH artifacts survive on disk —
-    // centroids alone would pair memoized centroids with missing (or, per
-    // the rebuild rule below, foreign) inverted lists. The probe resolves
-    // through the indexDir's OWN FileSystem scheme (FsUtil.allExist): a
-    // scheme-blind java.nio check reports remote artifacts missing and
-    // turns build-once/probe-many into rebuild-every-probe.
-    def artifactIntact: Boolean =
-      graft.core.FsUtil.allExist(spark,
-        Seq(s"$indexDir/centroids.parquet", s"$indexDir/cells"))
-    indexMemo.get(key) match {
-      case Some(cents) if artifactIntact => cents
-      case _ =>
-        // the on-disk artifact is about to reflect THIS schedule; every
-        // other schedule's memo entry for the same indexDir would pair its
-        // stale centroids with the new cells/ — silently wrong neighbors.
-        // Evict all sibling keys for this dir before writing.
-        indexMemo.keys
-          .filter(k => k._3 == indexDir && k != key)
-          .foreach(indexMemo.remove)
-        probeMemo.keys.filter(_._2 == indexDir).foreach(probeMemo.remove)
-        val cents = buildIvfIndexCold(spark, dir, indexDir, numCells, lloydIters)
-        indexMemo.put(key, cents)
-        cents
-    }
-  }
-
-  private def buildIvfIndexCold(spark: SparkSession, dir: String,
-      indexDir: String, numCells: Int, lloydIters: Int): Seq[Centroid] = {
     import spark.implicits._
     val e = widen(Tables(spark, dir).embeddings
       .select(col("vec_id"), asDouble("embedding").as("v"))
@@ -794,45 +753,23 @@ object Similarity {
     * broadcast probe relation, and the query vectors themselves — so the
     * scoring job touches ONLY the probed index partitions.
     */
-  /** Probe-plan memo: the ≤ |Q|·nprobe collected probe rows, keyed by
-    * (session, index dir, corpus dir, nprobe, quantizer signature). The
-    * one remaining fixed cost of a warm n7 probe was the probe-plan JOB
-    * (scan queries + TopCells + collect) — for a fixed corpus, schedule
-    * and nprobe its result is immutable, so repeat probes (the bench's
-    * min-of-2 reps, every consumer after the first) skip the collect
-    * entirely and go straight to the pruned scoring job. The signature
-    * (cid, cnorm pairs) ties the entry to the EXACT centroid set used, so
-    * a rebuild under a different schedule — or probeIvfIndex reading a
-    * different artifact — can never be served another quantizer's plan;
-    * [[buildIvfIndex]] additionally evicts the dir's entries on rebuild.
-    */
-  private val probeMemo = new BoundedMemo[
-    (String, String, String, Int, Int),
-    (Seq[(Long, Long, Seq[Double], Double)], Seq[Long])](MemoCapacity)
-
-  private def centsSig(cents: Seq[Centroid]): Int =
-    cents.map(c => (c.cid, c.cnorm)).hashCode()
-
   private def probeWithCents(spark: SparkSession, dir: String,
       indexDir: String, cents: Seq[Centroid], nprobe: Int): DataFrame = {
     import spark.implicits._
-    val memoKey = (sessionKey(spark), indexDir, dir, nprobe, centsSig(cents))
-    val (probeTuples, probedCells) = probeMemo.getOrElseUpdate(memoKey, {
-      val probeRows = Tables(spark, dir).embeddings
-        .select(col("vec_id"), asDouble("embedding").as("v"))
-        .withColumn("norm", sqrt(dot(col("v"), col("v"))))
-        .filter(col("vec_id") < NumQueries)
-        .select(col("vec_id").as("query_id"),
-          explode(TopCells.cellsCol(
-            cents.map(c => (c.cid, c.cv, c.cnorm)), nprobe,
-            col("v"), col("norm"))).as("cell"),
-          col("v").as("v1"), col("norm").as("n1"))
-        .collect()
-      (probeRows.toSeq.map(r =>
-         (r.getLong(0), r.getLong(1), r.getSeq[Double](2), r.getDouble(3))),
-        probeRows.map(_.getLong(1)).distinct.toSeq)
-    })
-    val probe = probeTuples.toDF("query_id", "cell", "v1", "n1")
+    val probeRows = Tables(spark, dir).embeddings
+      .select(col("vec_id"), asDouble("embedding").as("v"))
+      .withColumn("norm", sqrt(dot(col("v"), col("v"))))
+      .filter(col("vec_id") < NumQueries)
+      .select(col("vec_id").as("query_id"),
+        explode(TopCells.cellsCol(
+          cents.map(c => (c.cid, c.cv, c.cnorm)), nprobe,
+          col("v"), col("norm"))).as("cell"),
+        col("v").as("v1"), col("norm").as("n1"))
+      .collect()
+    val probedCells = probeRows.map(_.getLong(1)).distinct.toSeq
+    val probe = probeRows.toSeq
+      .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Double](2), r.getDouble(3)))
+      .toDF("query_id", "cell", "v1", "n1")
     val corpus = spark.read.parquet(s"$indexDir/cells")
       .withColumn("cell", col("cell").cast("long"))
       .filter(col("cell").isin(probedCells: _*))
@@ -1577,14 +1514,15 @@ object Similarity {
   def buildIvfPqIndex(spark: SparkSession, dir: String, indexDir: String,
       numCells: Int = NumCells): (Seq[Centroid], PqBook) = {
     val key = (sessionKey(spark), dir, indexDir, numCells)
-    // scheme-aware like buildIvfIndex's probe — see the comment there
+    // a memo hit is honored only while every artifact exists, probed
+    // through the indexDir's OWN FileSystem scheme (FsUtil.allExist): a
+    // scheme-blind java.nio check reports remote artifacts missing
     def artifactIntact: Boolean = ivfPqArtifactIntact(spark, indexDir)
     pqIndexMemo.get(key) match {
       case Some(v) if artifactIntact => v
       case _ =>
-        // the artifact is about to reflect THIS schedule (the n7 rebuild
-        // rule): sibling entries for the same dir would pair stale
-        // metadata with the new codes/
+        // the artifact is about to reflect THIS schedule: sibling entries
+        // for the same dir would pair stale metadata with the new codes/
         pqIndexMemo.keys
           .filter(k => k._3 == indexDir && k != key)
           .foreach(pqIndexMemo.remove)
@@ -1676,15 +1614,17 @@ object Similarity {
     (cents, book)
   }
 
+  private def centsSig(cents: Seq[Centroid]): Int =
+    cents.map(c => (c.cid, c.cnorm)).hashCode()
+
   private def probeIvfPqScored(spark: SparkSession, dir: String,
       indexDir: String, nprobe: Int): DataFrame = {
     import spark.implicits._
     val (cents, book) = readIvfPqQuantizers(spark, indexDir)
-    // probe-plan memo, the n7 probeMemo discipline: for a fixed corpus,
-    // artifact and nprobe the ≤ |Q|·nprobe collected rows are immutable,
-    // so repeat probes (bench reps, every consumer after the first) skip
-    // the collect job; the centroid signature ties the entry to the EXACT
-    // quantizer read back from disk
+    // probe-plan memo: for a fixed corpus, quantizer and nprobe the
+    // ≤ |Q|·nprobe collected rows are immutable, so n15 reuses the plan
+    // n13 collected and skips the collect job; the centroid signature
+    // ties the entry to the EXACT quantizer read back from disk
     val memoKey = (sessionKey(spark), indexDir, dir, nprobe, centsSig(cents))
     val (probePairs, probedCells) = pqProbeMemo.getOrElseUpdate(memoKey, {
       val probeRows = pqCorpus(spark, dir).filter(col("vec_id") < NumQueries)
@@ -1819,12 +1759,10 @@ object Similarity {
     */
   private[queries] val LedgerBuckets = 16L
 
-  /** The persisted IVF+PQ artifact's full shape — ONE definition shared
-    * by every memo family's freshness probe (the n13 build memo, the
-    * n16/n17 composition memo), so the families can never
-    * drift into validating different artifact shapes (the r20 review's
-    * lockstep-edit hazard: adding `ledger` meant editing three scattered
-    * copies identically).
+  /** The persisted IVF+PQ artifact's full shape, checked by n13's build
+    * memo before it serves a hit. It checks that each artifact EXISTS,
+    * not that its contents are whole: a memo hit over a partly deleted
+    * `codes/` serves the damaged artifact.
     */
   private def ivfPqArtifactIntact(spark: SparkSession, indexDir: String): Boolean =
     graft.core.FsUtil.allExist(spark,
@@ -2008,41 +1946,13 @@ object Similarity {
       .parquet(ledgerRoot)
   }
 
-  /** Composition memo of the MAINTAINED registry twins (n16, n17): one
-    * entry per (session, corpus, index dir) — each twin owns its own
-    * index dir, so one memo serves both.
-    */
-  private val maintainedIdxMemo =
-    new BoundedMemo[(String, String, String), Unit](MemoCapacity)
-
-  /** A registry twin's maintained artifact, composed once per (session,
-    * corpus, index dir): `compose` (a cold build plus one maintenance
-    * batch) runs unless a memo entry exists AND the artifact survives on
-    * disk — the [[buildIvfPqIndex]] discipline (sibling entries for the
-    * dir evicted before the artifact is rewritten; probe plans for the
-    * dir dropped with them).
-    */
-  private def maintainedIvfPqIndex(spark: SparkSession, dir: String,
-      indexDir: String)(compose: => Unit): Unit = {
-    val key = (sessionKey(spark), dir, indexDir)
-    def artifactIntact: Boolean = ivfPqArtifactIntact(spark, indexDir)
-    maintainedIdxMemo.get(key) match {
-      case Some(_) if artifactIntact => ()
-      case _ =>
-        maintainedIdxMemo.keys
-          .filter(k => k._3 == indexDir && k != key)
-          .foreach(maintainedIdxMemo.remove)
-        pqProbeMemo.keys.filter(_._2 == indexDir).foreach(pqProbeMemo.remove)
-        compose
-        maintainedIdxMemo.put(key, ())
-    }
-  }
-
   /** n16: INCREMENTAL INDEX MAINTENANCE — the persisted IVF+PQ index
     * built over the BASE split, the DELTA split landed under frozen
     * quantizers ([[upsertIvfPqIndex]] — its ledger lookup finds no old
     * cell for a new id, so an insert batch rewrites only its destination
-    * cells), then probed exactly like n13.
+    * cells), then probed exactly like n13. The twin composes the artifact
+    * (base build + insert) on every call, so its Bench entry times
+    * build + insert + probe.
     *
     * Oracle: n12's CTE chain over the UNION corpus with every quantizer
     * CTE pinned to the BASE corpus — with frozen quantizers,
@@ -2060,10 +1970,8 @@ object Similarity {
     */
   def ivfPqAppendTopK(spark: SparkSession, dir: String): DataFrame = {
     val idx = indexDirFor(spark, "ivfpq_append_index", dir)
-    maintainedIvfPqIndex(spark, dir, idx) {
-      buildIvfPqBaseIndex(spark, dir, idx)
-      upsertIvfPqIndex(spark, idx, appendDelta(spark, dir))
-    }
+    buildIvfPqBaseIndex(spark, dir, idx)
+    upsertIvfPqIndex(spark, idx, appendDelta(spark, dir))
     probeIvfPqIndex(spark, dir, idx, NumProbe)
   }
 
@@ -2328,10 +2236,11 @@ object Similarity {
     ("upsert", upsertIvfPqIndex(spark, indexDir, delta))
 
   /** n17: VECTOR UPDATE on the persisted IVF+PQ index — the full-corpus
-    * index built once, the negated split UPSERTED under frozen quantizers
+    * index built, the negated split UPSERTED under frozen quantizers
     * ([[upsertIvfPqIndex]]: stale rows located through the ledger, old
     * and new cell partitions rewritten, emptied partitions deleted),
-    * then probed exactly like n13.
+    * then probed exactly like n13. Like n16 the twin composes on every
+    * call, so its Bench entry times build + upsert + probe.
     *
     * Oracle: n12's chain over the POST-UPSERT corpus with every
     * quantizer CTE pinned to the ORIGINAL corpus — with frozen
@@ -2350,11 +2259,9 @@ object Similarity {
     */
   def ivfPqUpsertTopK(spark: SparkSession, dir: String): DataFrame = {
     val idx = indexDirFor(spark, "ivfpq_upsert_index", dir)
-    maintainedIvfPqIndex(spark, dir, idx) {
-      buildIvfPqIndexCold(spark, dir, idx, NumCells,
-        trainKey = dir, keep = lit(true))
-      upsertIvfPqIndex(spark, idx, upsertBatch(spark, dir))
-    }
+    buildIvfPqIndexCold(spark, dir, idx, NumCells,
+      trainKey = dir, keep = lit(true))
+    upsertIvfPqIndex(spark, idx, upsertBatch(spark, dir))
     probeIvfPqIndex(spark, dir, idx, NumProbe)
   }
 

@@ -50,14 +50,21 @@ object AuditScan {
     }
   }
 
+  /** Pattern occurrences in code lines: per line, or with `joined` over
+    * the lines joined by newlines, so a pattern may span a line break.
+    */
+  private def count(lines: Seq[String], pattern: Regex, joined: Boolean): Int =
+    if (joined) pattern.findAllIn(lines.mkString("\n")).size
+    else lines.map(l => pattern.findAllIn(l).size).sum
+
   /** Pattern occurrences in source TEXT under the same rule (the specs'
     * fixtures for the rule and the patterns).
     */
-  def countIn(src: String, pattern: Regex): Int = {
+  def countIn(src: String, pattern: Regex, joined: Boolean = false): Int = {
     val f = Files.createTempFile("auditscan", ".scala")
     try {
       Files.write(f, src.getBytes("UTF-8"))
-      codeLines(f).map(l => pattern.findAllIn(l).size).sum
+      count(codeLines(f), pattern, joined)
     } finally Files.delete(f)
   }
 
@@ -65,14 +72,11 @@ object AuditScan {
     * `.scala` under `root`, dropping zero-count files. Paths are
     * root-relative strings, matching the specs' Audited maps.
     */
-  def scan(root: Path, pattern: Regex): Map[String, Int] =
+  def scan(root: Path, pattern: Regex, joined: Boolean = false): Map[String, Int] =
     Using.resource(Files.walk(root)) { walk =>
       walk.iterator().asScala
         .filter(p => p.toString.endsWith(".scala"))
-        .map { p =>
-          root.relativize(p).toString ->
-            codeLines(p).map(l => pattern.findAllIn(l).size).sum
-        }
+        .map(p => root.relativize(p).toString -> count(codeLines(p), pattern, joined))
         .filter(_._2 > 0)
         .toMap
     }

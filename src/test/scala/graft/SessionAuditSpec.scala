@@ -11,8 +11,9 @@ import graft.core.GraftSession
   * every harness plan under one conf list. A `SparkSession.builder` (or a
   * `.builder()` chained on the next line) anywhere else in `src/main` or
   * `src/test` would bring back a hand-rolled conf list that can drift
-  * from it, so the pinned count is zero. Counting follows [[AuditScan]]'s
-  * rule, comments excluded.
+  * from it, so the pinned count is zero. The per-session memo fields
+  * are pinned per file too. Counting follows [[AuditScan]]'s rule,
+  * comments excluded.
   */
 class SessionAuditSpec extends AnyFunSuite {
 
@@ -46,6 +47,32 @@ class SessionAuditSpec extends AnyFunSuite {
     assert(countOf(s"// $b is a process-wide singleton") == 0)
     assert(countOf(s"/** built like $b()\n  *   ." + "builder()\n  */") == 0)
     assert(countOf("""val s = GraftSession.local("graft-test", cores = 4)""") == 0)
+  }
+
+  // Per-session memo fields per file. Each one serves an artifact that
+  // another query or call reuses within one pass; a memo that only a
+  // repeat of the same call would hit makes a Bench rep a warm read.
+  private val MemoFields = Map(
+    "graft/queries/Dedup.scala" -> 3,
+    "graft/queries/Similarity.scala" -> 5)
+
+  // a field holding a memo, its constructor on the same or the next line,
+  // or built by Dedup's frame-memo factory
+  private val MemoField =
+    "\\bval\\s+\\w+\\s*(?::[^=\\n]*)?=\\s*(?:new\\s+BoundedMemo\\b|newFrameMemo\\b)".r
+
+  test("BoundedMemo fields are pinned per file") {
+    val found = AuditScan.scan(Paths.get("src/main/scala"), MemoField, joined = true)
+    val drift = AuditScan.drift(found, MemoFields)
+    assert(drift.isEmpty,
+      "BoundedMemo fields drifted from the pins:\n  " + drift.mkString("\n  ") +
+        "\nPin a new memo only with the query or call that reuses it within one pass.")
+    def countOf(src: String) = AuditScan.countIn(src, MemoField, joined = true)
+    assert(countOf("private val quantMemo = new BoundedMemo[(String, Int), Seq[Int]](8)") == 1)
+    assert(countOf("private val clusterMemo =\n    new BoundedMemo[(Int, String), Int](8)") == 1)
+    assert(countOf("private val sigMemo = newFrameMemo") == 1)
+    assert(countOf("private def newFrameMemo: BoundedMemo[Int, Int] =\n  new BoundedMemo(8)") == 0)
+    assert(countOf("/** the memo was `val x = new BoundedMemo(8)` */") == 0)
   }
 
   test("the test session runs under GraftSession's conf list at cores = 4") {

@@ -35,8 +35,8 @@ abstract class SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 
   /** Recursive (path, length, mtime) fingerprint of every file under
     * `dir`, listed through the path's OWN Hadoop FileSystem (so it works
-    * on scheme-qualified dirs) — the memo-hit proofs in the index specs
-    * assert this is bit-unchanged across a repeat build.
+    * on scheme-qualified dirs) — the index specs compare it across a
+    * call to prove which artifact files the call left unchanged.
     */
   def fsFingerprint(dir: String): Seq[(String, Long, Long)] = {
     val p = new org.apache.hadoop.fs.Path(dir)

@@ -53,24 +53,28 @@ class IvfIndexSpec extends SparkTestBase {
     assert(norm(got) == norm(Similarity.ivfTopK(spark, SfDir)))
   }
 
-  test("memo hit on scheme-qualified (file:) artifacts: repeat build never rewrites") {
-    // r16's freshness probe checked artifact existence via scheme-blind
-    // java.nio Files.exists — a scheme-qualified indexDir (file: here,
-    // any remote FS in production) looked missing, so every build request
-    // silently rebuilt the whole index, defeating build-once/probe-many.
-    // Fingerprint the artifacts through the path's OWN FileSystem and pin
-    // that a second build is a memo hit: the identical memoized instance
-    // back, zero bytes rewritten.
+  test("a file: indexDir builds and probes to ivfTopK's answer") {
+    // a scheme-qualified indexDir (file: here, any remote FS in
+    // production): the writers and the pruned read must resolve through
+    // the path's OWN FileSystem, never scheme-blind java.nio
     val idx = "file:" + scratch("ivf_idx_scheme")
-    val c1 = Similarity.buildIvfIndex(spark, SfDir, idx)
-    val f1 = fsFingerprint(idx)
-    assert(f1.nonEmpty, "build wrote no artifacts under the file: indexDir")
-    val c2 = Similarity.buildIvfIndex(spark, SfDir, idx)
-    assert(c2 eq c1, "second build must be a memo hit (same instance), not a rebuild")
-    assert(fsFingerprint(idx) == f1, "memo hit must not rewrite any artifact file")
-    // and the scheme-qualified index serves the canonical answer
+    Similarity.buildIvfIndex(spark, SfDir, idx)
+    assert(fsFingerprint(idx).nonEmpty, "build wrote no artifacts under the file: indexDir")
     assert(norm(Similarity.probeIvfIndex(spark, SfDir, idx, nprobe = 2)) ==
       norm(Similarity.ivfTopK(spark, SfDir)))
+  }
+
+  test("the n7 twin rebuilds per call: a deleted probed cell leaves its answer intact") {
+    // the twin builds on every call, so damage between calls never
+    // reaches an answer (a memo that trusts cells/ because it EXISTS
+    // would serve the damaged artifact)
+    val first = norm(Similarity.ivfIndexTopK(spark, SfDir))
+    val cell = first.head(3) // (query_id, rank, neighbor_id, cell, cos)
+    val idx = Similarity.indexDirFor(spark, "ivf_index", SfDir)
+    val cellDir = Paths.get(s"$idx/cells/cell=$cell")
+    assert(Files.isDirectory(cellDir), s"probed cell dir $cellDir is missing")
+    graft.core.FsUtil.deleteRecursively(cellDir.toString)
+    assert(norm(Similarity.ivfIndexTopK(spark, SfDir)) == first)
   }
 
   test("index layout: hive-partitioned cells plus a metadata-scale centroid table") {

@@ -306,4 +306,29 @@ class IvfPqUpsertSpec extends SparkTestBase {
     val explicit = norm(Similarity.probeIvfPqIndex(spark, SfDir, idx, nprobe = 2))
     assert(norm(Similarity.ivfPqAppendTopK(spark, SfDir)) == explicit)
   }
+
+  // ---- the registry twins compose their index on every call, so a
+  // probed cell partition deleted between calls never reaches an answer
+  // (a memo that trusts codes/ because it EXISTS would serve the damage)
+
+  private def answerSurvivesDeletedCell(family: String,
+      twin: () => org.apache.spark.sql.DataFrame): Unit = {
+    val first = norm(twin())
+    val cell = first.head(3) // (query_id, rank, neighbor_id, cell, adist)
+    val idx = Similarity.indexDirFor(spark, family, SfDir)
+    val cellDir = Paths.get(s"$idx/codes/cell=$cell")
+    assert(Files.isDirectory(cellDir), s"probed cell dir $cellDir is missing")
+    graft.core.FsUtil.deleteRecursively(cellDir.toString)
+    assert(norm(twin()) == first)
+  }
+
+  test("the n16 twin recomposes per call: a deleted probed cell leaves its answer intact") {
+    answerSurvivesDeletedCell("ivfpq_append_index",
+      () => Similarity.ivfPqAppendTopK(spark, SfDir))
+  }
+
+  test("the n17 twin recomposes per call: a deleted probed cell leaves its answer intact") {
+    answerSurvivesDeletedCell("ivfpq_upsert_index",
+      () => Similarity.ivfPqUpsertTopK(spark, SfDir))
+  }
 }
