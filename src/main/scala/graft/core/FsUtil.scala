@@ -4,20 +4,18 @@ import java.nio.file.{Files, Path, Paths}
 
 /** Driver-side filesystem helpers (never used inside a distributed
   * operator): local-path cleanup for fixture/test zones, plus the
-  * scheme-aware existence probe index freshness checks route through.
+  * scheme-aware existence probe and metadata signature the index
+  * artifacts' freshness checks route through.
   */
 object FsUtil {
 
   /** Whether every path exists, each resolved through the Hadoop
     * [[FileSystem]] of the path's OWN scheme — `file:`, `hdfs://`,
-    * `s3a://` alike — with ONE Hadoop conf construction for the batch
-    * (n13's build memo probes on every warm build request, and
-    * newHadoopConf copies the whole session conf per call). The
-    * java.nio spelling this replaces is scheme-blind: on a remote FS it
-    * reports every artifact missing, so a build-once/probe-many memo
-    * silently rebuilds its index on every probe — the exact hazard class
-    * the round-15 sweep killed in Layout.compactRoundtrip (SCALING.md).
-    * n13's build memo and the ledger self-heal probe through it.
+    * `s3a://` alike — with ONE Hadoop conf construction for the batch.
+    * The java.nio spelling this replaces is scheme-blind: on a remote FS
+    * it reports every artifact missing — the hazard class the round-15
+    * sweep killed in Layout.compactRoundtrip (SCALING.md). Its one caller
+    * is the IVF+PQ ledger self-heal's probe for `ledger/`.
     */
   def allExist(spark: org.apache.spark.sql.SparkSession,
       paths: Seq[String]): Boolean = {
@@ -28,11 +26,12 @@ object FsUtil {
     }
   }
   /** Metadata signature of every file under the given paths (recursive):
-    * each file's qualified path, length, and mtime, sorted — two cheap
-    * metadata listings, no Spark jobs. Used to key process-resident caches
-    * of small immutable artifacts (the quantizer-read memo): any rewrite
-    * changes the part-file names (task UUIDs) and mtimes, so a stale cache
-    * entry can never match a mutated artifact. A missing path contributes
+    * each file's qualified path, length, and mtime, sorted — one metadata
+    * listing per path, no Spark jobs. Used to key process-resident caches
+    * of persisted artifacts (the quantizer-read memo, n13's build memo):
+    * any rewrite changes the part-file names (task UUIDs) and mtimes, and
+    * a deleted file drops out of the listing, so a stale cache entry can
+    * never match a mutated artifact. A missing path contributes
     * a distinct `absent:` token rather than throwing — the caller's actual
     * read supplies the real error.
     */

@@ -46,9 +46,16 @@ import graft.queries.Sampling
   * own scheme — NEVER `java.io.File`/`java.nio.file` — so a zone on
   * `hdfs://`/`s3a://` (any real 100 TB deployment) sees exactly the same
   * metadata the data writers see. A local-FS metadata layer on a remote
-  * zone would silently see NOTHING: a populated zone would "verify
-  * vacuously" as new and adopt a possibly-wrong shard count — precisely
-  * the doc→shard remap hazard the marker machinery exists to kill.
+  * zone would silently see NOTHING: a populated zone would read as new
+  * and be rewritten under a possibly-wrong shard count — precisely the
+  * doc→shard remap hazard the marker machinery exists to kill.
+  *
+  * One zone format: every zone holds its `_graft_shards` marker before
+  * its first shard write (creation commits marker → shards → manifest),
+  * so a crash leaves either a zone the next run completes or a
+  * marker-only directory. A root holding shard data or a manifest but
+  * no marker is not a state this code writes; every operation refuses
+  * it (see [[resolveZoneShards]]).
   */
 object ExportJob {
 
@@ -128,8 +135,10 @@ object ExportJob {
     * (atomic on HDFS and the local FS); a filesystem with no
     * AbstractFileSystem binding (some object-store mounts) falls back to
     * delete-then-rename — a weaker publish with a crash window in which
-    * the file is ABSENT. For the marker/manifest that reads as a
-    * legacy/manifest-less zone (self-healing paths exist); for the layout
+    * the file is ABSENT. The marker never meets that window: it is
+    * written only where none exists (zone creation, reshard staging).
+    * An absent MANIFEST reads as the manifest-less crash state, which
+    * maintenance diffs against pre-op fingerprints; for the layout
     * POINTER an absent file would silently resolve a versioned zone as
     * flat, so [[zoneDataRoot]] detects the orphaned-versioned-dirs
     * signature and refuses loudly instead.
@@ -176,43 +185,27 @@ object ExportJob {
     * pointer whose target is missing means the live layout was deleted by
     * hand (NOT by [[vacuumLayouts]], which only drops non-pointed dirs) —
     * refuse loudly rather than mistake a populated-but-broken zone for a
-    * fresh one.
+    * fresh one. Likewise versioned layout dirs with NO pointer and NO
+    * flat layout: not a state this code writes (crashed staging leaves
+    * the flat layout; vacuum keeps the pointer) but the signature of a
+    * pointer lost to a non-atomic-rename filesystem's delete+rename
+    * window, which would otherwise resolve a POPULATED zone as new.
     */
   def zoneDataRoot(outDir: String): String = readLayoutPointer(outDir) match {
     case None =>
-      // ORPHANED-ZONE detection, one root listing (free on nonexistent
-      // paths). Two states would otherwise resolve a POPULATED zone as
-      // empty/new — the silent-remap hazard — so both refuse loudly,
-      // naming the repair:
-      //  - versioned layout dirs with NO pointer and NO flat layout: not
-      //    a state this code ever writes (crashed staging leaves the flat
-      //    layout; vacuum keeps the pointer) — the signature of a pointer
-      //    lost to a non-atomic-rename filesystem's delete+rename window;
-      //  - an absent/empty root with legacy two-rename debris at the
-      //    sibling path: a pre-versioned reshard crashed between its
-      //    renames (only reshard repairs this — a delete/upsert/export
-      //    must not quietly no-op or recreate a fresh zone beside the
-      //    stranded data).
+      // orphaned-pointer detection: one root listing (free on
+      // nonexistent paths)
       val names = rootChildNames(outDir)
       val flatLayout = names.exists(_.startsWith("shard_id=")) ||
         names.contains(ManifestName)
-      if (!flatLayout) {
-        val versioned = names.filter(LayoutDirPattern.matches).sorted
-        if (versioned.nonEmpty)
-          throw new IllegalStateException(
-            s"export zone $outDir has versioned layout directories " +
-              s"(${versioned.mkString(", ")}) but no $LayoutPointerName " +
-              "pointer and no flat layout - the pointer was likely lost " +
-              "to a non-atomic metadata filesystem; restore it by writing " +
-              s"$LayoutPointerName naming the live directory")
-        val legacy = legacySibling(outDir, ".__reshard_old__")
-        if (isDirPath(legacy))
-          throw new IllegalStateException(
-            s"export zone $outDir is absent or empty but legacy reshard " +
-              s"debris exists at $legacy - a pre-versioned reshard " +
-              "crashed between its renames; run ExportJob.reshard on the " +
-              "zone to roll it back before any other maintenance")
-      }
+      val versioned = names.filter(LayoutDirPattern.matches).sorted
+      if (!flatLayout && versioned.nonEmpty)
+        throw new IllegalStateException(
+          s"export zone $outDir has versioned layout directories " +
+            s"(${versioned.mkString(", ")}) but no $LayoutPointerName " +
+            "pointer and no flat layout - the pointer was likely lost " +
+            "to a non-atomic metadata filesystem; restore it by writing " +
+            s"$LayoutPointerName naming the live directory")
       outDir
     case Some(name) =>
       require(LayoutDirPattern.matches(name),
@@ -230,21 +223,12 @@ object ExportJob {
     catch { case _: java.io.FileNotFoundException => Seq.empty }
   }
 
-  /** Sibling path of the zone root (`<outDir><suffix>`), built from the
-    * NORMALIZED parent/name — raw string concatenation would turn a
-    * trailing-slash `outDir` into a CHILD path and silently miss the
-    * legacy debris the old two-rename scheme wrote as a true sibling.
-    */
-  private def legacySibling(outDir: String, suffix: String): Path = {
-    val base = new Path(outDir)
-    Option(base.getParent)
-      .map(new Path(_, base.getName + suffix))
-      .getOrElse(new Path(base.getName + suffix))
-  }
-
-  /** CREATION-TIME shard count in incremental mode; once a zone exists its
-    * authoritative count is the persisted [[zoneShards]] marker, and this
-    * value only matters for brand-new zones.
+  /** CREATION-TIME shard count in incremental mode: the count a new zone
+    * gets from either creating writer (an export without
+    * `requestedShards`, or an upsert that lands rows on a path holding no
+    * zone). Once a zone exists its authoritative count is the persisted
+    * [[zoneShards]] marker; this value is never assumed for a populated
+    * zone that lacks one (that zone is refused, see [[resolveZoneShards]]).
     *
     * THIS is the deployment knob that keeps fixed-size zone maintenance
     * O(1): a delete/upsert pays |affected shards| × (zone / shards), so
@@ -264,10 +248,10 @@ object ExportJob {
     */
   private val ShardsMarkerName = "_graft_shards"
 
-  /** The persisted shard count of a zone — written at zone creation (or
-    * adopted on first use of a pre-marker zone) and authoritative from
-    * then on: every maintenance op derives its doc→shard mapping from the
-    * marker, never from session configuration, so a session configured
+  /** The persisted shard count of a zone — written at zone creation,
+    * before the first shard write, and authoritative from then on: every
+    * maintenance op derives its doc→shard mapping from the marker, never
+    * from session configuration, so a session configured
     * with a different count cannot silently remap docs to wrong shards
     * (the data-safety hazard: a delete computed under the wrong modulus
     * rewrites the wrong shards and leaves "deleted" docs in place). An
@@ -312,7 +296,7 @@ object ExportJob {
   }
 
   /** The zone's shard-directory ids, from one file listing — shared by
-    * the full-zone read, the adoption check, and the has-layout test.
+    * the full-zone read, reshard, and the has-layout test.
     */
   private def zoneLayoutIds(root: String): Seq[Long] = {
     val p = new Path(root)
@@ -325,7 +309,7 @@ object ExportJob {
 
   /** Whether the layout root materially IS a zone: it holds shard data or
     * a manifest (a manifest-only zone — every shard emptied — still
-    * counts).
+    * counts). Such a root without a marker is refused by every operation.
     */
   private def zoneHasLayout(root: String): Boolean = {
     val m = new Path(root, ManifestName)
@@ -336,23 +320,23 @@ object ExportJob {
     * the fixed-per-zone-lifetime contract: the zone's marker wins; a
     * conflicting EXPLICIT request (the `requestedShards` argument) throws,
     * pointing at [[reshard]].
-    * A marker-less zone that already holds data (written before markers
-    * existed) verifies the adopted count against the zone itself
-    * ([[verifyAdoptedShards]]) and then persists it — otherwise the
-    * adoption would just persist the same silent-remap hazard the marker
-    * exists to kill. A path with NO layout at all resolves the count but
+    * A root that holds shard data or a manifest but NO marker throws: its
+    * count is unknown, and assuming one is the silent-remap hazard the
+    * marker exists to kill. The creating writers commit the marker first,
+    * so no crash leaves that state; the repair is to delete the zone and
+    * re-export it. A path with NO layout at all resolves the count but
     * persists NOTHING: a pure-maintenance op against a nonexistent or
     * mistyped path must stay a harmless no-op, not conjure a marker-only
     * directory that pins a possibly-wrong count on a path that may later
     * receive the real zone — writers persist the marker themselves when
-    * they first materialize the zone.
+    * they first materialize the zone. Every operation resolves its count
+    * before it touches the zone, so a refusal leaves the zone as it was.
     */
-  private[pipeline] def resolveZoneShards(spark: SparkSession,
-      outDir: String, requested: Option[Int]): Int =
-    resolveRootShards(spark, zoneDataRoot(outDir), requested)
+  private[pipeline] def resolveZoneShards(outDir: String,
+      requested: Option[Int]): Int =
+    resolveRootShards(zoneDataRoot(outDir), requested)
 
-  private def resolveRootShards(spark: SparkSession,
-      root: String, requested: Option[Int]): Int = {
+  private def resolveRootShards(root: String, requested: Option[Int]): Int = {
     val explicit = requested.map(v => math.max(1, v))
     rootShards(root) match {
       case Some(n) =>
@@ -364,45 +348,13 @@ object ExportJob {
         }
         n
       case None =>
-        val n = explicit.getOrElse(IncrementalShards)
-        if (zoneHasLayout(root)) {
-          verifyAdoptedShards(spark, root, n)
-          writeShardsMarker(root, n)
-        }
-        n
+        if (zoneHasLayout(root))
+          throw new IllegalStateException(
+            s"export zone $root holds shard data or a manifest but no " +
+              s"$ShardsMarkerName marker, so its shard count is unknown - " +
+              "delete the zone and re-export it")
+        explicit.getOrElse(IncrementalShards)
     }
-  }
-
-  /** Check an adopted (marker-less legacy zone) shard count against the
-    * zone's own layout before persisting it: every shard directory id
-    * must be below the count, and every row of up to three PROBE
-    * directories — lowest, median, and highest id — must hash back to its
-    * own directory under the adopted modulus. A bounded read (≤ 3 shard
-    * directories), not a zone scan: a too-small adopted count fails the
-    * name check outright, a divisor-of-the-true-count adoption fails the
-    * row check, and spreading the probes across the id range keeps a
-    * sparse or unluckily-small single directory from blessing a wrong
-    * count by chance (every probe row is checked, none sampled). New
-    * zones (no shard directories) verify vacuously.
-    */
-  private def verifyAdoptedShards(spark: SparkSession, root: String,
-      n: Int): Unit = {
-    val ids = zoneLayoutIds(root)
-    if (ids.isEmpty) return
-    def fail(detail: String): Nothing = throw new IllegalStateException(
-      s"export zone $root predates shard markers and its layout is " +
-        s"inconsistent with the configured count $n ($detail): pass the " +
-        "count the zone was written with to writeTrainingShardsIncremental(" +
-        "..., requestedShards = Some(n)) (it will then persist it), or " +
-        "rebuild the zone")
-    if (ids.max >= n) fail(s"directory shard_id=${ids.max} exists")
-    val probes = Seq(ids.head, ids(ids.size / 2), ids.last).distinct
-    val sample = readShards(spark, root, probes)
-    val bad = sample.filter(
-      pmod(hash60(concat(lit(IncrementalSalt), col("doc_id").cast("string"))),
-        lit(n.toLong)) =!= col("shard_id")).count()
-    if (bad > 0)
-      fail(s"$bad rows of probe shards ${probes.mkString(",")} hash elsewhere")
   }
 
   /** Salt of the stable shard key — shared by the incremental export and
@@ -451,7 +403,7 @@ object ExportJob {
   def writeTrainingShardsIncremental(spark: SparkSession, dir: String,
       outDir: String, requestedShards: Option[Int] = None): DataFrame = {
     val root = zoneDataRoot(outDir)
-    val nShards = resolveRootShards(spark, root, requestedShards)
+    val nShards = resolveRootShards(root, requestedShards)
     val docs = graft.core.Tables(spark, dir).documents
       .select("doc_id", "text", "lang", "source")
     val assigned = docs.withColumn("shard_id",
@@ -463,6 +415,10 @@ object ExportJob {
       val fps = fingerprints(assigned)
       val prev = readManifest(root)
       val changed = fps.keys.filter(k => !prev.get(k).contains(fps(k))).toSeq.sorted
+      // the export creates the zone: marker first, then shards, then the
+      // manifest — a crash leaves a marker-only or manifest-less zone,
+      // and this same call completes either
+      if (rootShards(root).isEmpty) writeShardsMarker(root, nShards)
       if (changed.nonEmpty)
         // dynamic = replace ONLY the partitions present in the frame
         writeShardPartitions(assigned.filter(col("shard_id").isin(changed: _*)),
@@ -470,10 +426,6 @@ object ExportJob {
       // shards the previous export had that now hold zero rows: dynamic
       // overwrite never saw them — drop their directories
       for (gone <- prev.keySet -- fps.keySet) dropShardDir(root, gone)
-      // the export is the zone-creating writer: a brand-new zone gets its
-      // marker here, at the moment data materializes (resolveZoneShards
-      // deliberately does not conjure one for layoutless paths)
-      if (rootShards(root).isEmpty) writeShardsMarker(root, nShards)
       writeManifest(root, fps)
     } finally assigned.unpersist()
     assigned
@@ -511,7 +463,7 @@ object ExportJob {
       docIds: Seq[Long]): Unit = {
     if (docIds.isEmpty) return
     val root = zoneDataRoot(outDir)
-    val nShards = resolveRootShards(spark, root, None)
+    val nShards = resolveRootShards(root, None)
     val affected = docIds.distinct.map(shardOf(_, nShards)).distinct.sorted
     val victims = docIds.toSet
     val preOp = readShards(spark, root, affected)
@@ -528,9 +480,9 @@ object ExportJob {
     *
     * Unlike the delete, the upsert payload is DATA-sized, so nothing about
     * it goes through the driver except the affected shard-id list (at most
-    * [[IncrementalShards]] values): the replace is a distributed left-anti
-    * join of the affected shards' rows against the upsert keys, then a
-    * union with the upserts. Idempotent by fingerprint: re-landing the
+    * the zone's shard count of values): the replace is a distributed
+    * left-anti join of the affected shards' rows against the upsert keys,
+    * then a union with the upserts. Idempotent by fingerprint: re-landing the
     * same upsert finds every affected shard's post-merge fingerprint equal
     * to the manifest and rewrites nothing (the redelivery contract,
     * spec-pinned).
@@ -543,7 +495,7 @@ object ExportJob {
   def upsertShards(spark: SparkSession, outDir: String,
       upserts: DataFrame): Unit = {
     val root = zoneDataRoot(outDir)
-    val nShards = resolveRootShards(spark, root, None)
+    val nShards = resolveRootShards(root, None)
     val up = upserts
       .select(col("doc_id").cast("long").as("doc_id"), col("text"),
         col("lang"), col("source"))
@@ -602,11 +554,13 @@ object ExportJob {
     * pointer on the old layout (the half-built directory is never
     * referenced and is swept at the next reshard's entry); a crash after
     * the pointer write leaves the new layout live with the old one as
-    * debris for vacuum. Re-running at the zone's current count is a
-    * no-op; re-running after a crash restarts from whichever layout the
-    * pointer names. Unlike delete/upsert the cost is deliberately
-    * zone-sized — it IS the migration — but flat in the target shard
-    * count (same rows, one rebalance).
+    * debris for vacuum. Re-running at the zone's current count (the
+    * marker, resolved like every other operation's, so a populated zone
+    * without one is refused before the sweep) is a no-op; re-running
+    * after a crash restarts from whichever layout the pointer names.
+    * Unlike delete/upsert the cost is deliberately zone-sized — it IS the
+    * migration — but flat in the target shard count (same rows, one
+    * rebalance).
     *
     * A resharded zone's data lives under the versioned directory, which a
     * naive `spark.read.json(outDir)` cannot see (underscore prefix):
@@ -617,19 +571,6 @@ object ExportJob {
     require(newShards >= 1, s"newShards must be >= 1, got $newShards")
     val zonePath = new Path(outDir)
     val fs = fsOf(zonePath)
-    // pre-versioned-scheme debris (the old two-rename swap): a crash
-    // between its renames left the zone at '<out>.__reshard_old__' with no
-    // live dir — roll it back; a finished swap's leftover next to a live
-    // zone is debris — drop it. Zones written by this scheme never create
-    // these paths, so this is pure migration/repair.
-    val legacyOld = legacySibling(outDir, ".__reshard_old__")
-    if (isDirPath(legacyOld)) {
-      if (fs.exists(zonePath)) fs.delete(legacyOld, true)
-      else require(fs.rename(legacyOld, zonePath),
-        s"failed to roll back legacy reshard debris $legacyOld to $outDir")
-    }
-    val legacyTmp = legacySibling(outDir, ".__reshard__")
-    if (isDirPath(legacyTmp)) fs.delete(legacyTmp, true)
     // a migration needs a zone: refuse a path that holds neither data nor
     // metadata rather than conjuring an empty marker-only directory
     require(isDirPath(zonePath),
@@ -640,6 +581,9 @@ object ExportJob {
     // case) or the retained recovery copy (dangling case) and then tell
     // the operator to repair a zone the same call just emptied
     val root = zoneDataRoot(outDir)
+    // the current count likewise: a populated root without a marker is
+    // refused here, before the sweep deletes anything
+    val cur = resolveRootShards(root, None)
     // the sweep's keep-name derives from the VALIDATED root — a second
     // pointer read here could disagree with the one zoneDataRoot just
     // validated (concurrent publish, or the non-atomic fallback's absent
@@ -653,15 +597,6 @@ object ExportJob {
          if st.isDirectory && LayoutDirPattern.matches(st.getPath.getName)
          if !pointed.contains(st.getPath.getName))
       fs.delete(st.getPath, true)
-    val cur = rootShards(root).getOrElse {
-      // legacy-zone adoption verifies like resolveZoneShards: an adopted
-      // count that happens to equal newShards would otherwise no-op AND
-      // persist a wrong marker
-      val n = IncrementalShards
-      verifyAdoptedShards(spark, root, n)
-      writeShardsMarker(root, n)
-      n
-    }
     if (cur == newShards) return
     val nextV = pointed.map { name =>
       val LayoutDirPattern(v) = name: @unchecked
@@ -806,8 +741,8 @@ object ExportJob {
 
   /** Shared tail of [[deleteFromShards]]/[[upsertShards]]: given the
     * post-operation content of the AFFECTED shards, fingerprint it (at
-    * most [[IncrementalShards]] driver rows, not data), rewrite only the
-    * shards whose fingerprint actually changed, drop the ones whose
+    * most the zone's shard count of driver rows, not data), rewrite only
+    * the shards whose fingerprint actually changed, drop the ones whose
     * directory existed and emptied, and update the manifest -- so an id
     * absent from the zone (delete) or a byte-identical redelivery
     * (upsert) leaves every file and mtime untouched. The honest cost is
@@ -815,7 +750,8 @@ object ExportJob {
     * touches nothing on a path with no prior manifest also WRITES
     * nothing: a delete aimed at a nonexistent or mistyped zone stays a
     * pure no-op instead of conjuring metadata there (an upsert that lands
-    * rows is zone CREATION, and persists the marker with its manifest).
+    * rows is zone CREATION: marker, then shards, then manifest, the
+    * export's commit order).
     */
   private def rewriteAffectedShards(spark: SparkSession, root: String,
       nShards: Int, affected: Seq[Long], preOp: DataFrame,
@@ -825,21 +761,26 @@ object ExportJob {
       val fps = fingerprints(content)
       val prevAll = readManifest(root)
       // diff basis: the manifest where it knows the shard; for affected
-      // shards a pre-manifest (legacy) zone holds but the manifest does
-      // not list, fingerprint their PRE-op rows — with an empty basis
-      // every affected shard would read as changed and rewrite
-      // byte-identically, breaking the untouched-mtime contract (the
-      // first maintenance op on a legacy zone seeds manifest entries for
-      // its affected shards; the next full export completes the rest)
+      // shards the zone holds but the manifest does not list (a crash
+      // between a creating write's shards and its manifest, or a manifest
+      // lost in the non-atomic fallback's window), fingerprint their
+      // PRE-op rows — with an empty basis every affected shard would read
+      // as changed and rewrite byte-identically, breaking the
+      // untouched-mtime contract (this op seeds manifest entries for its
+      // affected shards; the next full export completes the rest)
       val missing = affected.filter(k => !prevAll.contains(k) &&
         isDir(root, s"shard_id=$k"))
       val basis = if (missing.isEmpty) prevAll
         else prevAll ++ fingerprints(
           preOp.filter(col("shard_id").isin(missing: _*)))
       val changed = fps.keySet.filter(k => !basis.get(k).contains(fps(k)))
-      if (changed.nonEmpty)
+      if (changed.nonEmpty) {
+        // an upsert that lands rows on a path with no zone creates it:
+        // marker before the first shard write, as in the export
+        if (rootShards(root).isEmpty) writeShardsMarker(root, nShards)
         writeShardPartitions(content.filter(col("shard_id").isin(changed.toSeq: _*)),
           root, "dynamic")
+      }
       // emptied = affected shards with no surviving rows whose directory
       // exists (to drop) OR that the manifest still lists (to prune — a
       // crash between a prior run's directory drop and its manifest write
@@ -851,10 +792,8 @@ object ExportJob {
       emptied.foreach(dropShardDir(root, _))
       val manifestPath = new Path(root, ManifestName)
       if (changed.nonEmpty || emptied.nonEmpty ||
-          fsOf(manifestPath).exists(manifestPath)) {
-        if (rootShards(root).isEmpty) writeShardsMarker(root, nShards)
+          fsOf(manifestPath).exists(manifestPath))
         writeManifest(root, prevAll -- emptied ++ fps)
-      }
     } finally content.unpersist()
   }
 
@@ -878,7 +817,7 @@ object ExportJob {
     * v1 values that would parse as current and diff against a stale
     * basis, a silent one-time byte-identical rewrite of every touched
     * shard, the exact invisible event this field exists to surface.
-    * Legacy zones therefore take the documented visible re-fingerprint
+    * Such manifests therefore take the documented visible re-fingerprint
     * path once, and every manifest written since carries the header.
     */
   private val ManifestVersion = "graft_fp_v2"

@@ -58,27 +58,6 @@ object ImageOps {
       encodeJpeg(out, quality = 0.9f)
     }
 
-  /** Mean (r, g, b) over all pixels — the simplest real feature extraction
-    * (per-channel statistics), the shape a model-input featurizer takes.
-    */
-  def meanRgb(bytes: Array[Byte]): Option[(Double, Double, Double)] =
-    Option(ImageIO.read(new ByteArrayInputStream(bytes))).map { img =>
-      val (w, h) = (img.getWidth, img.getHeight)
-      var (r, g, b) = (0L, 0L, 0L)
-      var y = 0
-      while (y < h) {
-        var x = 0
-        while (x < w) {
-          val p = img.getRGB(x, y)
-          r += (p >> 16) & 0xff; g += (p >> 8) & 0xff; b += p & 0xff
-          x += 1
-        }
-        y += 1
-      }
-      val n = w.toLong * h
-      (r.toDouble / n, g.toDouble / n, b.toDouble / n)
-    }
-
   /** 64-bit average-hash (aHash), the standard perceptual image
     * fingerprint: decode → 8×8 bilinear downscale → luminance → each bit =
     * pixel ≥ mean. Stable under re-encoding and resizing, one Long per

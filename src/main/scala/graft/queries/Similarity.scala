@@ -1485,8 +1485,15 @@ object Similarity {
 
   // ----------------------------------------------------------- n13
 
+  /** n13's build memo: the built quantizers with the artifact's
+    * [[ivfPqArtifactSig]] taken right after the build. A hit is served
+    * only while the signature still matches, so a deleted or rewritten
+    * `codes/cell=<c>` partition (or any other artifact file) rebuilds
+    * instead of being served damaged — the [[readIvfPqQuantizers]]
+    * pattern.
+    */
   private val pqIndexMemo = new BoundedMemo[
-    (String, String, String, Int), (Seq[Centroid], PqBook)](MemoCapacity)
+    (String, String, String, Int), (String, (Seq[Centroid], PqBook))](MemoCapacity)
 
   /** n13's probe-plan memo — (query_id, cell) pairs + the distinct probed
     * cells, ≤ |Q|·nprobe rows of driver metadata (see probeIvfPqIndex).
@@ -1514,12 +1521,8 @@ object Similarity {
   def buildIvfPqIndex(spark: SparkSession, dir: String, indexDir: String,
       numCells: Int = NumCells): (Seq[Centroid], PqBook) = {
     val key = (sessionKey(spark), dir, indexDir, numCells)
-    // a memo hit is honored only while every artifact exists, probed
-    // through the indexDir's OWN FileSystem scheme (FsUtil.allExist): a
-    // scheme-blind java.nio check reports remote artifacts missing
-    def artifactIntact: Boolean = ivfPqArtifactIntact(spark, indexDir)
     pqIndexMemo.get(key) match {
-      case Some(v) if artifactIntact => v
+      case Some((sig, v)) if sig == ivfPqArtifactSig(spark, indexDir) => v
       case _ =>
         // the artifact is about to reflect THIS schedule: sibling entries
         // for the same dir would pair stale metadata with the new codes/
@@ -1529,7 +1532,7 @@ object Similarity {
         pqProbeMemo.keys.filter(_._2 == indexDir).foreach(pqProbeMemo.remove)
         val v = buildIvfPqIndexCold(spark, dir, indexDir, numCells,
           trainKey = dir, keep = lit(true))
-        pqIndexMemo.put(key, v)
+        pqIndexMemo.put(key, (ivfPqArtifactSig(spark, indexDir), v))
         v
     }
   }
@@ -1759,13 +1762,13 @@ object Similarity {
     */
   private[queries] val LedgerBuckets = 16L
 
-  /** The persisted IVF+PQ artifact's full shape, checked by n13's build
-    * memo before it serves a hit. It checks that each artifact EXISTS,
-    * not that its contents are whole: a memo hit over a partly deleted
-    * `codes/` serves the damaged artifact.
+  /** Metadata signature of every file of the persisted IVF+PQ artifact
+    * ([[graft.core.FsUtil.filesSig]]: path, length and mtime through the
+    * indexDir's OWN FileSystem, listings only, no jobs) — n13's build memo
+    * serves a hit only while it is unchanged.
     */
-  private def ivfPqArtifactIntact(spark: SparkSession, indexDir: String): Boolean =
-    graft.core.FsUtil.allExist(spark,
+  private def ivfPqArtifactSig(spark: SparkSession, indexDir: String): String =
+    graft.core.FsUtil.filesSig(spark,
       Seq("centroids.parquet", "codebooks.parquet", "codes", "ledger")
         .map(a => s"$indexDir/$a"))
 
@@ -2083,7 +2086,7 @@ object Similarity {
 
   /** The post-upsert corpus (original rows with the batch's replacing
     * them) — what a frozen rebuild after the upsert would code; the
-    * equivalence arm IvfPqUpsertSpec and the scale harness recode.
+    * equivalence arm IvfPqUpsertSpec recodes.
     */
   private[graft] def postUpsertCorpus(spark: SparkSession, dir: String): DataFrame =
     Tables(spark, dir).embeddings

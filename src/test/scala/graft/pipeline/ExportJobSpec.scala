@@ -282,10 +282,10 @@ class ExportJobSpec extends SparkTestBase {
     }
     assert(e.getMessage.contains("reshard"))
     // a non-conflicting implicit use keeps working (marker wins silently)
-    assert(ExportJob.resolveZoneShards(spark, out, None) === ExportJob.IncrementalShards)
+    assert(ExportJob.resolveZoneShards(out, None) === ExportJob.IncrementalShards)
     // requested counts are clamped to >= 1 (0 would pmod-by-zero)
     val fresh = scratch("marker-clamp")
-    assert(ExportJob.resolveZoneShards(spark, fresh, Some(0)) === 1)
+    assert(ExportJob.resolveZoneShards(fresh, Some(0)) === 1)
     assert(ExportJob.shardOf(12345L, 1) === 0L)
     // a migration needs a zone: nonexistent path refused, not conjured
     intercept[IllegalArgumentException] {
@@ -372,8 +372,8 @@ class ExportJobSpec extends SparkTestBase {
     docs.write.mode("overwrite").parquet(s"$corpus/documents.parquet")
     val out = scratch("nomanifest-export")
     val first = ExportJob.writeTrainingShardsIncremental(spark, corpus, out).collect()
-    // zone predates manifests (marker kept: the shard count is not in
-    // question here, only the diff basis)
+    // a crash between the creating write's shards and its manifest (the
+    // marker, committed first, is present: only the diff basis is missing)
     assert(new File(out, "_graft_manifest.tsv").delete())
     val victimShard = first.head.getAs[Long]("shard_id")
     val victims = first.filter(_.getAs[Long]("shard_id") == victimShard)
@@ -458,38 +458,80 @@ class ExportJobSpec extends SparkTestBase {
     assert(spark.read.json(out).count() === first.length.toLong)
   }
 
-  test("legacy zone (no marker) refuses to adopt a count its own data contradicts") {
+  /** Every operation on a populated zone without a marker — export,
+    * delete, upsert, reshard — throws naming the repair before it touches
+    * anything: no file's path, length or mtime moves and no marker is
+    * written. `out` may be scheme-qualified.
+    */
+  private def assertRefusesEveryOp(out: String, corpus: String,
+      docId: Long): Unit = {
+    import spark.implicits._
+    val before = fsFingerprint(out)
+    val ops = Seq[(String, () => Unit)](
+      "export" -> (() => ExportJob.writeTrainingShardsIncremental(spark, corpus, out)),
+      "export at the written count" -> (() =>
+        ExportJob.writeTrainingShardsIncremental(spark, corpus, out,
+          requestedShards = Some(8))),
+      "delete" -> (() => ExportJob.deleteFromShards(spark, out, Seq(docId))),
+      "upsert" -> (() => ExportJob.upsertShards(spark, out,
+        Seq((docId, "x", "en", "web")).toDF("doc_id", "text", "lang", "source"))),
+      "reshard" -> (() => ExportJob.reshard(spark, out, 5)),
+      "same-count reshard" -> (() =>
+        ExportJob.reshard(spark, out, ExportJob.IncrementalShards)))
+    for ((name, op) <- ops) {
+      val e = intercept[IllegalStateException](op())
+      assert(e.getMessage.contains("delete the zone and re-export"),
+        s"$name: ${e.getMessage}")
+      assert(fsFingerprint(out) === before, s"$name touched the zone")
+      assert(ExportJob.zoneShards(out) === None, s"$name wrote a marker")
+    }
+  }
+
+  test("a populated zone without a marker refuses every operation and touches nothing") {
     val docs = spark.read.parquet(s"$Sf/documents.parquet")
-    val corpus = scratch("legacy-corpus")
+    val corpus = scratch("nomarker-corpus")
     docs.write.mode("overwrite").parquet(s"$corpus/documents.parquet")
-    val out = scratch("legacy-export")
+    val out = scratch("nomarker-export")
     val first = ExportJob.writeTrainingShardsIncremental(spark, corpus, out,
       requestedShards = Some(8)).collect()
-    // simulate a zone written before markers existed
+    // shard data and a manifest without a marker: the creating writers
+    // commit the marker first, so this is no crash state — the count is
+    // unknown, and assuming one would remap docs to the wrong shards
     assert(new File(out, "_graft_shards").delete())
-    assert(ExportJob.zoneShards(out) === None)
-    // maintenance under the (wrong) 16-shard default must throw BEFORE
-    // touching anything, not persist the remap
-    val t0 = shardMtimes(out)
-    val e = intercept[IllegalStateException] {
-      ExportJob.deleteFromShards(spark, out, Seq(first.head.getAs[Long]("doc_id")))
+    assertRefusesEveryOp(out, corpus, first.head.getAs[Long]("doc_id"))
+    // the named repair: delete the zone and re-export
+    graft.core.FsUtil.deleteRecursively(out)
+    ExportJob.writeTrainingShardsIncremental(spark, corpus, out)
+    assert(ExportJob.zoneShards(out) === Some(ExportJob.IncrementalShards))
+    assert(ExportJob.readZone(spark, out).count() === first.length.toLong)
+  }
+
+  test("a crash after each creation commit point re-runs to the uncrashed zone") {
+    val docs = spark.read.parquet(s"$Sf/documents.parquet")
+    val corpus = scratch("commit-corpus")
+    docs.write.mode("overwrite").parquet(s"$corpus/documents.parquet")
+    val ref = scratch("commit-ref")
+    ExportJob.writeTrainingShardsIncremental(spark, corpus, ref)
+    def meta(zone: String, name: String): String =
+      new String(java.nio.file.Files.readAllBytes(new File(zone, name).toPath), "UTF-8")
+    def state(zone: String) = (
+      ExportJob.readZone(spark, zone).collect().map(_.toSeq)
+        .sortBy(_.head.asInstanceOf[Long]).toSeq,
+      meta(zone, "_graft_shards"), meta(zone, "_graft_manifest.tsv"))
+    val want = state(ref)
+    // creation commits marker -> shards -> manifest; each point keeps the
+    // root entries (checksum sidecars included) that commit leaves behind
+    val points = Seq[(String, String => Boolean)](
+      "marker" -> (_.contains("_graft_shards")),
+      "marker+shards" -> (!_.contains("_graft_manifest.tsv")),
+      "marker+shards+manifest" -> (_ => true))
+    for (((point, keep), i) <- points.zipWithIndex) {
+      val out = scratch(s"commit-point-$i")
+      for (entry <- new File(ref).listFiles() if keep(entry.getName))
+        org.apache.commons.io.FileUtils.copyToDirectory(entry, new File(out))
+      ExportJob.writeTrainingShardsIncremental(spark, corpus, out)
+      assert(state(out) === want, s"re-run after a crash at '$point'")
     }
-    assert(e.getMessage.contains("inconsistent"))
-    // and it names the route that fixes it, the API argument
-    assert(e.getMessage.contains("requestedShards"), e.getMessage)
-    assert(ExportJob.zoneShards(out) === None, "wrong adoption was persisted")
-    assert(shardMtimes(out) === t0, "failed adoption touched the zone")
-    // same for reshard's adoption path (an adopted-equals-target count
-    // would otherwise no-op and persist the wrong marker)
-    intercept[IllegalStateException] { ExportJob.reshard(spark, out, 16) }
-    assert(ExportJob.zoneShards(out) === None)
-    // the TRUE count verifies against the data, restores the marker, and
-    // the re-export rewrites nothing (fingerprints still match)
-    Thread.sleep(1100)
-    ExportJob.writeTrainingShardsIncremental(spark, corpus, out,
-      requestedShards = Some(8))
-    assert(ExportJob.zoneShards(out) === Some(8))
-    assert(shardMtimes(out) === t0, "verified re-adoption rewrote a shard")
   }
 
   test("reshard migrates the zone: same rows, new count, honest manifest, working maintenance") {
@@ -698,46 +740,10 @@ class ExportJobSpec extends SparkTestBase {
     assert(ExportJob.zoneShards(out) === Some(5))
   }
 
-  test("reshard repairs pre-versioned-scheme crash debris") {
-    val docs = spark.read.parquet(s"$Sf/documents.parquet")
-    val corpus = scratch("legacydebris-corpus")
-    docs.write.mode("overwrite").parquet(s"$corpus/documents.parquet")
-    val out = scratch("legacydebris-export")
-    ExportJob.writeTrainingShardsIncremental(spark, corpus, out)
-    val rows = ExportJob.readZone(spark, out).count()
-    val old = new File(out + ".__reshard_old__")
-    val tmp = new File(out + ".__reshard__")
-
-    // crash BETWEEN the old scheme's two renames: zone stranded at the
-    // sibling path, no live dir — reshard must roll it back, then migrate
-    java.nio.file.Files.move(new File(out).toPath, old.toPath)
-    assert(!new File(out).exists())
-    // every OTHER operation must refuse the stranded state loudly, naming
-    // reshard as the repair: a delete quietly no-op'ing (victims live on
-    // in the debris) or an export recreating a fresh zone BESIDE the
-    // stranded data would be the silent hazard class again
-    val e = intercept[IllegalStateException] { ExportJob.zoneShards(out) }
-    assert(e.getMessage.contains("reshard"))
-    intercept[IllegalStateException] {
-      ExportJob.deleteFromShards(spark, out, Seq(1L))
-    }
-    assert(old.isDirectory, "the refusal must not touch the stranded data")
-    ExportJob.reshard(spark, out, 5)
-    assert(!old.exists() && ExportJob.zoneShards(out) === Some(5))
-    assert(ExportJob.readZone(spark, out).count() === rows)
-
-    // finished-swap leftovers next to a live zone: swept, not accumulated
-    java.nio.file.Files.createDirectories(old.toPath)
-    java.nio.file.Files.createDirectories(tmp.toPath)
-    ExportJob.reshard(spark, out, 5) // same-count entry repairs still run
-    assert(!old.exists() && !tmp.exists(), "legacy debris not cleaned")
-    assert(ExportJob.readZone(spark, out).count() === rows)
-  }
-
   test("zone metadata works on a scheme-qualified path (the hdfs/s3a deployment shape)") {
     // the r13 finding: a java.io.File metadata layer on a scheme path
-    // silently sees NOTHING — a populated zone "verifies vacuously" as
-    // new and adopts a possibly-wrong count. Everything here runs the
+    // silently sees NOTHING — a populated zone reads as new and is
+    // rewritten under a possibly-wrong count. Everything here runs the
     // Hadoop FS route with an explicit file: scheme.
     val docs = spark.read.parquet(s"$Sf/documents.parquet")
     val corpus = scratch("scheme-corpus")
@@ -758,22 +764,16 @@ class ExportJobSpec extends SparkTestBase {
       requestedShards = Some(8))
     assert(shardMtimes(out) === t0, "unchanged re-export rewrote a shard")
 
-    // the adoption hazard itself: marker gone, maintenance under the
-    // WRONG default count must refuse — on the scheme path the old
-    // local-FS layer saw an empty layout and would have verified
-    // vacuously, persisting the remap
-    assert(new File(outLocal, "_graft_shards").delete())
-    val e = intercept[IllegalStateException] {
-      ExportJob.deleteFromShards(spark, out,
-        Seq(first.head.getAs[Long]("doc_id")))
-    }
-    assert(e.getMessage.contains("inconsistent"))
-    // and it names the route that fixes it, the API argument
-    assert(e.getMessage.contains("requestedShards"), e.getMessage)
-    assert(ExportJob.zoneShards(out) === None, "wrong adoption was persisted")
-    // correct re-adoption restores the marker through the scheme
-    ExportJob.writeTrainingShardsIncremental(spark, corpus, out,
-      requestedShards = Some(8))
+    // the remap hazard itself: marker gone, every operation must refuse
+    // — on the scheme path the old local-FS layer saw an empty layout
+    // and would have treated the populated zone as new
+    val marker = new File(outLocal, "_graft_shards").toPath
+    val markerBytes = java.nio.file.Files.readAllBytes(marker)
+    java.nio.file.Files.delete(marker)
+    assertRefusesEveryOp(out, corpus, first.head.getAs[Long]("doc_id"))
+    // restore the marker by hand (same bytes, so its checksum sidecar
+    // still matches) and the zone resolves through the scheme again
+    java.nio.file.Files.write(marker, markerBytes)
     assert(ExportJob.zoneShards(out) === Some(8))
 
     // targeted delete via the scheme: victim gone, only its shard moved

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import graft.SparkTestBase
 
-/** The real (non-stub) image operators: crop, resize, feature extraction —
+/** The real (non-stub) image operators: crop, resize, perceptual hash —
   * all JDK javax.imageio, verified on deterministic stub-rendered pages.
   */
 class ImageOpsSpec extends SparkTestBase {
@@ -14,22 +14,6 @@ class ImageOpsSpec extends SparkTestBase {
     assert(thumb.isDefined)
     assert(ImageOps.decodeDims(thumb.get) === Some((64, 90)))
     assert((thumb.get(0) & 0xff) === 0xff && (thumb.get(1) & 0xff) === 0xd8)
-  }
-
-  test("mean-RGB features reflect the rendered page content (within JPEG loss)") {
-    // the stub page is a solid md5-derived fill + one 10px white band; the
-    // per-channel mean must sit between the fill color and white
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(FixtureBinaries.minimalPdf(1))
-    val fill = Seq((digest(0) & 0xff).toDouble, (digest(1) & 0xff).toDouble,
-      (digest(2) & 0xff).toDouble)
-    val Some((r, g, b)) = ImageOps.meanRgb(page)
-    Seq(r, g, b).zip(fill).foreach { case (mean, base) =>
-      assert(mean >= base - 8.0 && mean <= 255.0, s"mean $mean vs fill $base")
-      // the white band covers 10/350 of the page: mean must exceed the fill
-      // noticeably less than pure white would
-      assert(math.abs(mean - base) <= 8.0 + 245.0 * 10.0 / 350.0)
-    }
   }
 
   test("aHash is deterministic, survives re-encoding, and separates different images") {
@@ -77,7 +61,6 @@ class ImageOpsSpec extends SparkTestBase {
     val junk = Array[Byte](1, 2, 3, 4)
     assert(ImageOps.decodeDims(junk).isEmpty)
     assert(ImageOps.resizeJpeg(junk, 10, 10).isEmpty)
-    assert(ImageOps.meanRgb(junk).isEmpty)
     assert(ImageOps.cropJpeg(junk, 0, 0, 5, 5).isEmpty)
     assert(ImageOps.aHash(junk).isEmpty)
   }

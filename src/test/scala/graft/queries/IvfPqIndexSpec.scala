@@ -65,6 +65,20 @@ class IvfPqIndexSpec extends SparkTestBase {
       norm(Similarity.ivfPqTopK(spark, SfDir)))
   }
 
+  test("a probed codes partition deleted after the build is rebuilt, not served damaged") {
+    // the build memo must notice a damaged artifact, not only a missing
+    // one: serving it would drop the deleted cell's neighbors from every
+    // later call in the session
+    val want = norm(Similarity.ivfPqIndexTopK(spark, SfDir))
+    val cell = want.head(3) // the neighbor's cell column
+    val idx = Similarity.indexDirFor(spark, "ivfpq_index", SfDir)
+    val part = s"$idx/codes/cell=$cell"
+    assert(new File(part).isDirectory, s"probed partition $part must exist")
+    graft.core.FsUtil.deleteRecursively(part)
+    assert(norm(Similarity.ivfPqIndexTopK(spark, SfDir)) == want,
+      "the memo served the index with a probed partition missing")
+  }
+
   test("n15: rescore over the persisted probe equals from-scratch n14; pruned, no shuffle join") {
     val idx = scratch("ivfpq_idx_rescore")
     Similarity.buildIvfPqIndex(spark, SfDir, idx)
@@ -112,7 +126,7 @@ class IvfPqIndexSpec extends SparkTestBase {
 
   test("graft.index.root end-to-end: the registry twin builds and probes under a file:-scheme root") {
     // the string test above pins the DERIVATION; this pins the whole path
-    // through writers, freshness probes (FsUtil.allExist) and the
+    // through writers, freshness probes (FsUtil.filesSig) and the
     // partition-pruned read resolving via the root's OWN FileSystem —
     // the last untested edge of the r16→r18 scheme-awareness arc
     val root = "file:" + scratch("idx_root_scheme_e2e")
