@@ -41,19 +41,34 @@ case class Hash60(child: Expression) extends UnaryExpression {
 }
 
 object Hash60Util {
-  private val md = ThreadLocal.withInitial[MessageDigest](
-    () => MessageDigest.getInstance("MD5"))
+  // One digest and one 16-byte output buffer per thread, reused by every
+  // call: a slice hash allocates nothing.
+  private final class Scratch {
+    val md: MessageDigest = MessageDigest.getInstance("MD5")
+    val out = new Array[Byte](16)
+  }
+  private val scratch = ThreadLocal.withInitial[Scratch](() => new Scratch)
 
-  def hash(s: UTF8String): Long = {
-    val d = md.get()
-    d.reset()
-    val h = d.digest(s.getBytes)
+  /** hash60 of the `len` bytes of `bytes` starting at `from`: the value
+    * [[hash]] gives for a string whose UTF-8 bytes are exactly that slice.
+    */
+  def hash(bytes: Array[Byte], from: Int, len: Int): Long = {
+    val s = scratch.get()
+    s.md.reset()
+    s.md.update(bytes, from, len)
+    s.md.digest(s.out, 0, 16)
+    val h = s.out
     val be =
       ((h(0) & 0xffL) << 56) | ((h(1) & 0xffL) << 48) |
         ((h(2) & 0xffL) << 40) | ((h(3) & 0xffL) << 32) |
         ((h(4) & 0xffL) << 24) | ((h(5) & 0xffL) << 16) |
         ((h(6) & 0xffL) << 8) | (h(7) & 0xffL)
     be >>> 4
+  }
+
+  def hash(s: UTF8String): Long = {
+    val b = s.getBytes
+    hash(b, 0, b.length)
   }
 
   def hash(s: String): Long = hash(UTF8String.fromString(s))

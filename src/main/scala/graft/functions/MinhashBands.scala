@@ -69,9 +69,6 @@ object MinhashBandsUtil {
   private val P = TextHash.P
   private val RowsPerBand = NumPerms / Bands
 
-  private val md = java.lang.ThreadLocal.withInitial[java.security.MessageDigest](
-    () => java.security.MessageDigest.getInstance("MD5"))
-
   def bands(text: UTF8String): Array[Long] = {
     // One byte copy + one char->byte offset table per DOCUMENT, then every
     // shingle hashes a raw byte slice — zero per-shingle allocations
@@ -90,23 +87,13 @@ object MinhashBandsUtil {
       k += 1
     }
     offs(nChars) = bytes.length
-    val d = md.get()
-    val buf = new Array[Byte](16)
     val last = math.max(nChars - (ShingleK - 1), 1)
     val sigs = Array.fill(NumPerms)(P)
     var i = 0 // 0-based shingle start; chars [i, i+K) end-clamped
     while (i < last) {
       val from = offs(i)
       val until = offs(math.min(i + ShingleK, nChars))
-      d.reset()
-      d.update(bytes, from, until - from)
-      d.digest(buf, 0, 16)
-      val be =
-        ((buf(0) & 0xffL) << 56) | ((buf(1) & 0xffL) << 48) |
-          ((buf(2) & 0xffL) << 40) | ((buf(3) & 0xffL) << 32) |
-          ((buf(4) & 0xffL) << 24) | ((buf(5) & 0xffL) << 16) |
-          ((buf(6) & 0xffL) << 8) | (buf(7) & 0xffL)
-      val h = (be >>> 4) % P
+      val h = Hash60Util.hash(bytes, from, until - from) % P
       var j = 0
       while (j < NumPerms) {
         val v = (A(j) * h + B(j)) % P

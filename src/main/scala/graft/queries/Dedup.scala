@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.{BoundedMemo, Tables}
-import graft.functions.{TextHash, VectorLsh}
+import graft.functions.{Simhash, SimhashUtil, TextHash, VectorLsh}
 import graft.functions.VectorOps.dot
 import graft.functions.TextHash.{hash60, hash60Sql, P}
 
@@ -213,27 +213,27 @@ object Dedup {
     * configuration (Manku/Jain/Sarma, WWW'07, 64-bit simhash, hamming ≤3,
     * block pigeonhole).
     */
-  private val SimhashBits = 60
+  private val SimhashBits = SimhashUtil.Bits
   private val ChunkBits = 15 // 4 chunks
   private val ChunkMask = (1L << ChunkBits) - 1
 
-  /** Per-document 60-bit SimHash over whitespace tokens (with repetition —
-    * frequency-weighted, the standard formulation).
+  /** Per-document 60-bit SimHash over space-split tokens (with repetition —
+    * frequency-weighted, the standard formulation), one native
+    * [[graft.functions.Simhash]] call per row: spread → drop null texts →
+    * project. No token explode, no shuffle on `doc_id` and no per-bit
+    * aggregate; the only exchange is the round-robin spread that
+    * parallelizes the hashing. d3's plan carries no `Generate` and no
+    * `HashAggregate` (PlanSpec pins this).
+    *
+    * PRECONDITION: `doc_id` is the documents table's key. The oracle twin
+    * ([[simhashSigsSql]]) groups tokens BY doc_id, so one signature per
+    * ROW equals it only when no two rows share a doc_id. A null text
+    * yields no row (the oracle's unnest of a null list yields no token).
     */
-  private def simhashSigs(docs: DataFrame): DataFrame = {
-    val toks = Tables.spread(docs.select("doc_id", "text"))
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
-    val h = toks.select(col("doc_id"), hash60(col("tok")).as("h"))
-    val bitAggs = (0 until SimhashBits).map { j =>
-      sum(when(shiftright(col("h"), j).bitwiseAND(lit(1L)) === 1L, 1).otherwise(-1))
-        .as(s"bs_$j")
-    }
-    val bs = h.groupBy("doc_id").agg(bitAggs.head, bitAggs.tail: _*)
-    val sim = (0 until SimhashBits)
-      .map(j => when(col(s"bs_$j") > 0, lit(1L << j)).otherwise(lit(0L)))
-      .reduce(_ + _)
-    bs.select(col("doc_id"), sim.as("simhash"))
-  }
+  private def simhashSigs(docs: DataFrame): DataFrame =
+    Tables.spread(docs.select("doc_id", "text"))
+      .filter(col("text").isNotNull)
+      .select(col("doc_id"), Simhash.simhashCol(col("text")).as("simhash"))
 
   private val simhashSigsSql: String = {
     val bitSelect = (0 until SimhashBits)
@@ -252,21 +252,6 @@ object Dedup {
        |sims AS (SELECT doc_id, $simExpr AS simhash FROM bs)""".stripMargin
   }
 
-  /** [[simhashSigs]] memoized per (session, table dir): d3, d4, d9 and the
-    * t14 capstone all consume the same signatures, and a Verify/Bench run
-    * invokes them back to back — returning the SAME cached DataFrame
-    * instance lets every consumer (and every bench re-run) reuse one
-    * materialization instead of re-scanning and re-hashing the corpus per
-    * query. At scale this is one fewer full-corpus token explode per
-    * consumer; the cached frame itself is two longs per document.
-    *
-    * r16 memo hygiene (r15 verdict item 2): all three memos here are
-    * [[BoundedMemo]]s — LRU-capped at [[MemoCapacity]] corpora, purged of
-    * stopped sessions' keys on every touch, evicted frames unpersisted —
-    * so a long-lived multi-tenant session can no longer accumulate
-    * lineage-pinning entries without bound. Same best-effort race
-    * semantics as before (see [[clustersFor]]).
-    */
   /** Cap on distinct (session, corpus dir) keys held per memo: a
     * harness touches one or two corpora, a service a handful — beyond
     * that, the LRU entry's consumers have moved on and a recompute on
@@ -279,6 +264,15 @@ object Dedup {
       isDead = kv => kv._1.sparkContext.isStopped,
       onEvict = df => df.unpersist(false))
   private val sigMemo = newFrameMemo
+
+  /** [[simhashSigs]] cached and memoized per (session, table dir): d3, d4,
+    * d9 and the t14 capstone read the same signatures, and a Verify/Bench
+    * pass runs them back to back, so one corpus scan and one per-row
+    * signature pass serve them all. The cached frame is two longs per
+    * document. The memo is a [[BoundedMemo]] like the pair and cluster
+    * memos: LRU-capped at [[MemoCapacity]] corpora, purged of stopped
+    * sessions' keys on every touch, evicted frames unpersisted.
+    */
   private def sigsFor(spark: SparkSession, dir: String): DataFrame =
     sigMemo.getOrElseUpdate((spark, dir),
       simhashSigs(Tables(spark, dir).documents).cache())

@@ -51,6 +51,15 @@ class PlanSpec extends SparkTestBase {
     assert(!p.contains("HashAggregate"), "t11 must not aggregate")
   }
 
+  test("simhash signatures (d3) are one per-row pass — no token explode, no aggregate") {
+    // the cached signature plan prints inside d3's plan: a Generate or a
+    // HashAggregate means the per-token explode and the per-bit sums are back
+    val p = plan("d3_simhash")
+    assert(!p.contains("Generate"), "d3 must not explode tokens")
+    assert(!p.contains("HashAggregate"), "d3 must not aggregate")
+    assert(p.contains("graft_simhash"), "d3 must sign with the native per-row expression")
+  }
+
   test("LSH ANN (n2) is an equi-join; only the brute-force baseline (n1) may nested-loop") {
     val p = plan("n2_lsh_bucket_topk")
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"))

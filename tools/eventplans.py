@@ -1,11 +1,23 @@
 #!/usr/bin/env python3
-"""Every SQL execution in a Spark event log, with its physical plan.
+"""Every SQL execution in a Spark event log, with its physical plan; or,
+with --jobs, the log's job timeline.
 
 Usage: python3 tools/eventplans.py <eventLogFile> [scanNeedle]
+       python3 tools/eventplans.py --jobs <eventLogFile>
 
 Prints one block per SQL execution (id, description, job count, physical
 plan) and a header with the totals: executions, jobs, and how many scan
 nodes read a path containing scanNeedle (default "documents.parquet").
+
+--jobs prints one line per job instead, in submission order: the driver
+gap since the previous job ended (0 when the jobs overlap; the first job
+has none), the job's duration, the number of tasks it ran, and the first
+`graft.` frame of its result stage's call site, which names the line of
+graft code that started the job. A job that adaptive execution submits
+from its own thread has no graft frame; it shows its SQL execution's
+frame instead, tagged with the execution id. A footer gives the job
+count, the wall time from the first submission to the last end, and the
+sums of job durations (overlapping jobs each count) and of the gaps.
 Produce the log by running a main with Spark's event log on, e.g.
 
     sbt 'set run / javaOptions ++= Seq("-Dspark.eventLog.enabled=true",
@@ -24,7 +36,62 @@ import re
 import sys
 
 
+def graft_frame(details: str) -> str:
+    for frame in details.splitlines():
+        if frame.strip().startswith("graft."):
+            return frame.strip()
+    return "-"
+
+
+def jobs_timeline(path: str) -> None:
+    jobs, running, exec_frames = {}, [], {}
+    with open(path) as f:
+        for line in f:
+            ev = json.loads(line)
+            kind = ev.get("Event", "")
+            if kind.endswith("SparkListenerSQLExecutionStart"):
+                exec_frames[ev["executionId"]] = graft_frame(ev.get("details", ""))
+            elif kind == "SparkListenerJobStart":
+                result = max(ev["Stage Infos"], key=lambda s: s["Stage ID"])
+                eid = ev.get("Properties", {}).get("spark.sql.execution.id")
+                jobs[ev["Job ID"]] = {
+                    "start": ev["Submission Time"], "end": None, "tasks": 0,
+                    "stages": set(ev["Stage IDs"]),
+                    "frame": graft_frame(result.get("Details", "")),
+                    "exec": None if eid is None else int(eid)}
+                running.append(ev["Job ID"])
+            elif kind == "SparkListenerJobEnd":
+                jobs[ev["Job ID"]]["end"] = ev["Completion Time"]
+                running.remove(ev["Job ID"])
+            elif kind == "SparkListenerTaskEnd":
+                # a task belongs to the latest running job that lists its stage
+                for jid in reversed(running):
+                    if ev["Stage ID"] in jobs[jid]["stages"]:
+                        jobs[jid]["tasks"] += 1
+                        break
+    print(f"{'job':>4} {'gap_s':>7} {'dur_s':>7} {'tasks':>5}  first graft frame")
+    prev_end, gaps, durs = None, 0.0, 0.0
+    for jid in sorted(jobs, key=lambda j: (jobs[j]["start"], j)):
+        j = jobs[jid]
+        frame = j["frame"]
+        if frame == "-" and j["exec"] is not None:
+            frame = f"{exec_frames.get(j['exec'], '-')} [sql {j['exec']}]"
+        end = j["end"] if j["end"] is not None else j["start"]
+        gap = None if prev_end is None else max(j["start"] - prev_end, 0) / 1000.0
+        gaps += gap or 0.0
+        durs += (end - j["start"]) / 1000.0
+        print(f"{jid:>4} {'-' if gap is None else f'{gap:.3f}':>7} "
+              f"{(end - j['start']) / 1000.0:>7.3f} {j['tasks']:>5}  {frame}")
+        prev_end = end if prev_end is None else max(prev_end, end)
+    wall = (prev_end - min(j["start"] for j in jobs.values())) / 1000.0 if jobs else 0.0
+    print(f"jobs {len(jobs)}, first submission to last end {wall:.3f} s, "
+          f"job time {durs:.3f} s, driver gaps {gaps:.3f} s")
+
+
 def main() -> None:
+    if sys.argv[1] == "--jobs":
+        jobs_timeline(sys.argv[2])
+        return
     path = sys.argv[1]
     needle = sys.argv[2] if len(sys.argv) > 2 else "documents.parquet"
     execs, jobs = {}, {}
