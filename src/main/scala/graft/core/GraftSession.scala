@@ -15,8 +15,10 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  /** The runtime SQL confs for a session with `cores` task threads. */
-  def sqlConfs(cores: Int): Seq[(String, String)] = Seq(
+  /** The runtime SQL confs for a session with `cores` task threads,
+    * running in local mode or on a cluster.
+    */
+  def sqlConfs(cores: Int, local: Boolean): Seq[(String, String)] = Seq(
     "spark.sql.shuffle.partitions" -> cores.toString,
     "spark.sql.adaptive.enabled" -> "true",
     "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
@@ -49,7 +51,16 @@ object GraftSession {
     // above), matching how the DuckDB oracle reads the same files — so pin
     // every parquet timestamp to the session-tz TIMESTAMP type.
     "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false",
-    "spark.sql.sources.partitionOverwriteMode" -> "dynamic")
+    "spark.sql.sources.partitionOverwriteMode" -> "dynamic") ++
+    // list input files on the driver: past this many paths (default 32,
+    // and a file-stream glob names one path per file) Spark lists them in
+    // a distributed job. On a cluster that job spreads remote-storage
+    // calls; in local mode it runs on this JVM's own task threads, so it
+    // lists the same files and only adds scheduling and per-task Hadoop
+    // conf serialization, competing with the real work for the threads.
+    (if (local)
+      Seq("spark.sql.sources.parallelPartitionDiscovery.threshold" -> Int.MaxValue.toString)
+    else Nil)
 
   def local(appName: String = "graft", cores: Int = defaultCores,
       extraConfs: Map[String, String] = Map.empty): SparkSession = {
@@ -66,7 +77,7 @@ object GraftSession {
     // extraConfs LAST so a caller's conf beats any factory default above
     // (builder semantics: later config() wins) — an extraConf overlapping
     // a default must take effect, not silently lose to the factory
-    (sqlConfs(cores) ++ extraConfs).foreach { case (k, v) => builder.config(k, v) }
+    (sqlConfs(cores, local = true) ++ extraConfs).foreach { case (k, v) => builder.config(k, v) }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // getOrCreate silently IGNORES builder confs when a session already
@@ -90,10 +101,12 @@ object GraftSession {
     math.min(Runtime.getRuntime.availableProcessors(), 32)
 
   /** Set [[sqlConfs]] on a session this factory did not build (one
-    * handed to `SparkEntry.entry`), sized by its own parallelism.
+    * handed to `SparkEntry.entry`), sized by its own parallelism and
+    * with the local-mode listing only if its master is local.
     */
   def tune(spark: SparkSession): SparkSession = {
-    sqlConfs(spark.sparkContext.defaultParallelism)
+    val sc = spark.sparkContext
+    sqlConfs(sc.defaultParallelism, local = sc.isLocal)
       .foreach { case (k, v) => spark.conf.set(k, v) }
     spark
   }

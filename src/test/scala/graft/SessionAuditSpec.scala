@@ -77,7 +77,12 @@ class SessionAuditSpec extends AnyFunSuite {
 
   test("the test session runs under GraftSession's conf list at cores = 4") {
     val spark = TestSpark.spark
-    val drift = GraftSession.sqlConfs(4).collect {
+    // the local posture differs from a cluster's only in listing input
+    // files on the driver, so the suite lists files as Bench, Verify and
+    // the benchmark harness do
+    assert(GraftSession.sqlConfs(4, local = true).diff(GraftSession.sqlConfs(4, local = false)) ===
+      Seq("spark.sql.sources.parallelPartitionDiscovery.threshold" -> Int.MaxValue.toString))
+    val drift = GraftSession.sqlConfs(4, local = true).collect {
       case (k, v) if !spark.conf.getOption(k).contains(v) =>
         s"$k: list $v, session ${spark.conf.getOption(k).getOrElse("<unset>")}"
     }

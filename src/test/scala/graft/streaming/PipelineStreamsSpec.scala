@@ -1,11 +1,15 @@
 package graft.streaming
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.util.concurrent.ConcurrentLinkedQueue
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ListenerBusShim
 
 import graft.SparkTestBase
 import graft.core.WorkDirs
+import graft.pipeline.{FixtureBinaries, FixtureExtractor, Pipeline}
 
 /** Streaming semantics tests (§2.10): exactly-once file handling via the
   * checkpoint (replacing the reference's F3 existence checks) and idempotent
@@ -97,5 +101,45 @@ class PipelineStreamsSpec extends SparkTestBase {
     val q = spark.read.parquet(s"${clean}_quarantine").collect()
     assert(q.length === 1)
     assert(q(0).getAs[String]("raw").contains("not json"))
+  }
+
+  test("a wave past 32 silver files lists them on the driver: no listing job") {
+    // 10 provinces x both fixture flyers = 20 PDFs, 40 pages: the silver
+    // glob names 40 paths, past Spark's default threshold (32) for
+    // listing in a distributed job
+    val zones = Pipeline.Zones(scratch("stream-listing"))
+    val pages = scratch("stream-listing-pages")
+    val flyers = Seq("Gauteng/13_February_-_15_February_2026",
+      "Eastern_Cape/20_February_-_22_February_2026")
+    for (p <- 0 until 10; flyer <- flyers) {
+      val province = f"P$p%02d"
+      val date = flyer.split('/')(1)
+      for (page <- Seq("page_1.json", "page_2.json")) {
+        val dst = Paths.get(s"$pages/$province/$date/$page")
+        Files.createDirectories(dst.getParent)
+        Files.copy(Paths.get(s"$FixtureRoot/$flyer/$page"), dst)
+      }
+      val pdf = Paths.get(s"${zones.raw}/PnP/$province/$date.pdf")
+      Files.createDirectories(pdf.getParent)
+      Files.write(pdf, FixtureBinaries.minimalPdf(2))
+    }
+
+    val listing = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .filter(_.startsWith("Listing leaf files and directories"))
+          .foreach(listing.add)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      PipelineStreams.runDag(spark, zones, new FixtureExtractor(pages))
+      ListenerBusShim.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+
+    // complete: every fixture product is cleaned, every valid box cropped
+    assert(spark.read.parquet(zones.clean).count() === 10 * 13)
+    assert(Files.walk(Paths.get(zones.shr)).filter(_.toString.endsWith(".jpg")).count() === 10 * 10)
+    assert(listing.isEmpty, s"${listing.size} listing jobs, the first: ${listing.peek}")
   }
 }

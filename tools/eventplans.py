@@ -12,12 +12,16 @@ nodes read a path containing scanNeedle (default "documents.parquet").
 --jobs prints one line per job instead, in submission order: the driver
 gap since the previous job ended (0 when the jobs overlap; the first job
 has none), the job's duration, the number of tasks it ran, and the first
-`graft.` frame of its result stage's call site, which names the line of
-graft code that started the job. A job that adaptive execution submits
-from its own thread has no graft frame; it shows its SQL execution's
-frame instead, tagged with the execution id. A footer gives the job
-count, the wall time from the first submission to the last end, and the
-sums of job durations (overlapping jobs each count) and of the gaps.
+`graft.` (or benchmark harness `perfbench.`) frame of its result stage's
+call site, which names the line of code that started the job. A job that
+adaptive execution submits from its own thread, and a zero-partition job
+(no stages, 0 tasks), has no such frame; it shows its SQL execution's
+frame instead, tagged with the execution id. A job that carries a
+description (a streaming micro-batch names its query, a parallel file
+listing its path count) shows the description's first line after the
+frame, in quotes. A footer gives the job count, the wall time from the
+first submission to the last end, and the sums of job durations
+(overlapping jobs each count) and of the gaps.
 Produce the log by running a main with Spark's event log on, e.g.
 
     sbt 'set run / javaOptions ++= Seq("-Dspark.eventLog.enabled=true",
@@ -38,7 +42,7 @@ import sys
 
 def graft_frame(details: str) -> str:
     for frame in details.splitlines():
-        if frame.strip().startswith("graft."):
+        if frame.strip().startswith(("graft.", "perfbench.")):
             return frame.strip()
     return "-"
 
@@ -52,13 +56,17 @@ def jobs_timeline(path: str) -> None:
             if kind.endswith("SparkListenerSQLExecutionStart"):
                 exec_frames[ev["executionId"]] = graft_frame(ev.get("details", ""))
             elif kind == "SparkListenerJobStart":
-                result = max(ev["Stage Infos"], key=lambda s: s["Stage ID"])
-                eid = ev.get("Properties", {}).get("spark.sql.execution.id")
+                # a zero-partition job has no stages and runs no task
+                result = max(ev["Stage Infos"], key=lambda s: s["Stage ID"],
+                             default={})
+                props = ev.get("Properties", {})
+                eid = props.get("spark.sql.execution.id")
                 jobs[ev["Job ID"]] = {
                     "start": ev["Submission Time"], "end": None, "tasks": 0,
                     "stages": set(ev["Stage IDs"]),
                     "frame": graft_frame(result.get("Details", "")),
-                    "exec": None if eid is None else int(eid)}
+                    "exec": None if eid is None else int(eid),
+                    "desc": props.get("spark.job.description", "")}
                 running.append(ev["Job ID"])
             elif kind == "SparkListenerJobEnd":
                 jobs[ev["Job ID"]]["end"] = ev["Completion Time"]
@@ -76,6 +84,8 @@ def jobs_timeline(path: str) -> None:
         frame = j["frame"]
         if frame == "-" and j["exec"] is not None:
             frame = f"{exec_frames.get(j['exec'], '-')} [sql {j['exec']}]"
+        if j["desc"]:
+            frame += f" \"{j['desc'].split('<br/>')[0].splitlines()[0].rstrip(':')}\""
         end = j["end"] if j["end"] is not None else j["start"]
         gap = None if prev_end is None else max(j["start"] - prev_end, 0) / 1000.0
         gaps += gap or 0.0
