@@ -12,16 +12,18 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Native per-row MinHash LSH band hashes: `graft_minhash_bands(text)`
   * returns the [[graft.operators.TextDedup.Bands]] banded-signature hashes
   * of the document in ONE compiled pass over its character shingles — the
-  * stateless signature stage the streaming near-dup operator (st9) runs
-  * per arriving row.
+  * stateless signature stage of every near-dup operator
+  * ([[graft.operators.TextDedup.minhashBands]]: d2, d12, d13, d14 and the
+  * st9/st9b streams).
   *
   * Why native: the same computation as a higher-order-function fold
   * (`aggregate(transform(sequence...)) )` allocates a 16-field struct per
   * SHINGLE in interpreted lambdas — measured 7.1 s for the sf0.1 replay vs
   * ~2 s with this expression, which keeps the per-shingle work a primitive
-  * long loop sharing [[Hash60Util]]'s digest. The batch d2 path keeps its
-  * explode + codegen'd hash-aggregate (equivalent values, better plan for
-  * a full-corpus scan); StreamingNearDupSpec pins the two bit-identical.
+  * long loop sharing [[Hash60Util]]'s digest. Against the shingle explode +
+  * `doc_id` shuffle + 16-min aggregate formulation it emits no per-shingle
+  * rows and needs no shuffle; StreamingNearDupSpec and OperatorApiSpec keep
+  * that formulation as a test-only reference and pin the two bit-identical.
   *
   * Value contract (shared with the DuckDB oracle via the same constants):
   * shingle hashes `hash60(substring(text, i, K)) % P` for i in
@@ -75,7 +77,8 @@ object MinhashBandsUtil {
     // (substringSQL + UTF8String.getBytes would copy twice per shingle;
     // the digest writes into a reused 16-byte buffer). The hashed bytes
     // are exactly substring(text, i, K)'s UTF-8 bytes, so values match
-    // hash60(substring(...)) bit-for-bit (spec-pinned vs the batch path).
+    // hash60(substring(...)) bit-for-bit (spec-pinned vs the explode +
+    // aggregate reference).
     val bytes = text.getBytes
     val nChars = text.numChars()
     val offs = new Array[Int](nChars + 1)

@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Tables
 import graft.functions.{MinhashBands, TextHash}
-import graft.functions.TextHash.hash60
 
 /** Reusable text-deduplication OPERATORS over any (doc_id, text) frame —
   * the generic forms of the d1/d2 query shapes (graft.queries.Dedup
@@ -14,18 +13,18 @@ import graft.functions.TextHash.hash60
   * table; a user binds them to their own corpus.
   *
   * Scale shapes (unchanged from the query tier, see SCALING.md curves):
-  * exact dedup is one shuffle of 16-byte digests; MinHash/LSH shuffles
-  * 8-byte shingle hashes into per-doc signatures, equi-joins banded
+  * exact dedup is one shuffle of 16-byte digests; MinHash/LSH signs each
+  * document in one per-row pass ([[minhashBands]]: [[Bands]] hashes per
+  * doc, no per-shingle rows, no doc_id aggregate), equi-joins banded
   * bucket hashes for candidates, and verifies with broadcast candidate
-  * sets — the corpus text never shuffles in either operator.
+  * sets. The only shuffle of text is the round-robin spread before the
+  * signing pass.
   */
 object TextDedup {
 
   val ShingleK = 8      // char-shingle width
   val NumPerms = 16     // minhash signature length
   val Bands = 4         // LSH bands (x 4 rows each)
-  private val RowsPerBand = NumPerms / Bands
-  private val P = TextHash.P
 
   /** Exact dedup groups: keep-first by content digest. One shuffle of
     * (16-byte digest, id) pairs at any corpus size.
@@ -35,60 +34,11 @@ object TextDedup {
       .groupBy(md5(col("text")).as("text_md5"))
       .agg(min("doc_id").as("keep_doc_id"), count(lit(1)).as("n_copies"))
 
-  /** Banded LSH hashes from a `(doc_id, sig_0..sig_{NumPerms-1})` frame:
-    * one row per (doc, band) with the band's concatenated-signature hash.
-    * Shared by the batch aggregate path and the per-row streaming path so
-    * the two can never disagree about band values.
-    */
-  private def bandsOf(sigs: DataFrame): DataFrame = {
-    val bandStructs = (0 until Bands).map { b =>
-      val cat = (0 until RowsPerBand)
-        .map(r => col(s"sig_${RowsPerBand * b + r}").cast("string"))
-      struct(lit(b).as("band"), hash60(concat_ws(",", cat: _*)).as("bh"))
-    }
-    sigs
-      .select(col("doc_id"), explode(array(bandStructs: _*)).as("x"))
-      .select(col("doc_id"), col("x.band").as("band"), col("x.bh").as("bh"))
-  }
-
-  /** Minhash signatures via explode → ONE hash-aggregate (whole-stage
-    * codegen'd; measured 2x faster than the per-row higher-order-function
-    * pipeline, whose interpreted lambdas box every element) — the BATCH
-    * signature stage. No distinct before the aggregate: minhash minima are
-    * unaffected by duplicate shingles, so that shuffle is pure waste.
-    */
-  private[graft] def minhashSigsAgg(docs: DataFrame): DataFrame = {
-    // shingles via explode(sequence) + substring: identical values to
-    // charShingles but fully codegen'd — no interpreted transform building
-    // a ~|text|-element string array per row before the explode
-    // null text emits NO bands, matching the in-row expression path
-    // (nullSafeEval -> null array -> posexplode drops the row): without
-    // the filter, every null-text doc's all-null signature concat_ws'd to
-    // "" and they all shared the same 4 buckets — mutual near-dups in the
-    // batch path only, silently diverging from the streaming twin
-    val h = Tables.spread(docs.select("doc_id", "text")
-        .filter(col("text").isNotNull))
-      .select(col("doc_id"), col("text"),
-        explode(expr(s"sequence(1, greatest(length(text) - ${ShingleK - 1}, 1))")).as("i"))
-      .select(col("doc_id"),
-        (hash60(expr(s"substring(text, i, $ShingleK)")) % P).as("h"))
-    val sigAggs = (0 until NumPerms).map { i =>
-      min((lit(TextHash.MinhashA(i)) * col("h") + lit(TextHash.MinhashB(i))) % P)
-        .as(s"sig_$i")
-    }
-    h.groupBy("doc_id").agg(sigAggs.head, sigAggs.tail: _*)
-  }
-
-  /** Banded bucket hashes via the batch aggregate path (spec-compared
-    * bit-identical to [[minhashBandsInRow]]).
-    */
-  private[graft] def minhashBandsAgg(docs: DataFrame): DataFrame =
-    bandsOf(minhashSigsAgg(docs))
-
-  /** (doc_id, band, bh) computed IN-ROW — the stateless, shuffle-free form
-    * of the candidate-bucket stage (used by the st9 streaming near-dup
-    * operator; batch twin of the same verdicts: [[nearDupVerdicts]]).
-    * The per-shingle loop runs inside the native
+  /** (doc_id, band, bh): the MinHash band stage of every near-dup
+    * operator, batch (d2, d12, d13, d14) and streaming (st9, st9b) alike.
+    * Stateless and computed in-row: one output row per (doc, band), no
+    * per-shingle rows and no shuffle keyed by doc_id. A null text emits no
+    * bands. The per-shingle loop runs inside the native
     * [[graft.functions.MinhashBands]] expression (a higher-order-function
     * fold over the shingle array was measured 3.5x slower — interpreted
     * lambdas allocating a 16-field struct per shingle). The band array is
@@ -96,17 +46,22 @@ object TextDedup {
     * per emitted element (the d11 ExtractGenerator trap), so the expression
     * must land in the child projection, referenced by attribute.
     */
-  def minhashBandsInRow(docs: DataFrame, keep: Seq[String] = Nil): DataFrame = {
+  def minhashBands(docs: DataFrame, keep: Seq[String] = Nil): DataFrame = {
     val keepCols = keep.map(col)
     // spread BEFORE the per-row shingle loop: a single-file micro-batch (or
     // an unsplit scan) otherwise runs the corpus's entire per-shingle hash
     // work on one core — measured 6.5 s -> 0.7 s at sf0.1. The shuffle
-    // moves only the narrow (doc_id, text) rows, exactly like the batch
-    // signature stage's spread.
-    Tables.spread(docs.select(col("doc_id") +: keepCols :+ col("text"): _*))
+    // moves only the narrow (doc_id, text) rows.
+    // posexplode_OUTER: with null text dropped first, the band array is
+    // never null or empty, so it emits exactly posexplode's rows. For the
+    // plain generator the optimizer infers `size(bhs) > 0` and pushes it,
+    // band expression and all, below the spread, signing every document
+    // twice, the first time in the unspread scan task (PlanSpec pins it).
+    Tables.spread(docs.select(col("doc_id") +: keepCols :+ col("text"): _*)
+        .filter(col("text").isNotNull))
       .select(col("doc_id") +: keepCols :+
         MinhashBands.bandsCol(col("text")).as("bhs"): _*)
-      .select(col("doc_id") +: keepCols :+ posexplode(col("bhs")): _*)
+      .select(col("doc_id") +: keepCols :+ posexplode_outer(col("bhs")): _*)
       .select(col("doc_id") +: keepCols :+
         col("pos").cast("int").as("band") :+ col("col").as("bh"): _*)
   }
@@ -121,14 +76,14 @@ object TextDedup {
     * The bucket minimum is a WINDOW over the band rows, not a
     * groupBy-then-rejoin: Spark derives an unshared frame once per
     * consumer, so the join form re-ran the whole signature pipeline
-    * (scan → shingle explode → 16-perm aggregate) for EACH side — the
-    * window keeps it one derivation, one (band, bh) exchange, one doc_id
-    * aggregate. No pair materialization either way; cost is bounded by
-    * bucket occupancy exactly like the d2 candidate stage.
+    * (scan → spread → per-row band pass) for EACH side — the window keeps
+    * it one derivation, one (band, bh) exchange, one doc_id aggregate. No
+    * pair materialization either way; cost is bounded by bucket occupancy
+    * exactly like the d2 candidate stage.
     */
   def nearDupVerdicts(docs: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.partitionBy("band", "bh")
-    minhashBandsAgg(docs)
+    minhashBands(docs)
       .withColumn("mn", min("doc_id").over(w))
       .groupBy("doc_id")
       .agg(
@@ -183,13 +138,12 @@ object TextDedup {
     // batch signature pipeline on a cluster; the d13 lesson says that
     // duplication is the expensive failure mode, so the one small
     // materialization job stays).
-    incrementalVerdictsFromBands(minhashBandsAgg(batch).localCheckpoint(),
-      ledger)
+    incrementalVerdictsFromBands(minhashBands(batch).localCheckpoint(), ledger)
   }
 
   /** [[incrementalVerdicts]] for a caller that already holds the batch's
     * MATERIALIZED banded signature frame (doc_id, band, bh). Contract: the
-    * frame must be exactly `minhashBandsAgg(batch)` for the ingested batch
+    * frame must be exactly `minhashBands(batch)` for the ingested batch
     * and must be cheap to re-derive (materialized, or a filter over a
     * materialized frame) — every consumer below re-reads it, including two
     * broadcast builds. An ingest driver that signature-computes several
@@ -249,14 +203,15 @@ object TextDedup {
     // Candidate pairs are MATERIALIZED once (localCheckpoint): three
     // downstream branches consume them (both semi-join prunes + the verify
     // join), and Spark shares no work between plan branches, so the lazy
-    // form re-ran the full train-side signature pipeline (scan → shingle
-    // explode → 16-perm aggregate) once per consumer — measured 29.8 s vs
-    // 9.7 s at 500k docs (SCALING.md). The pair set stays DISTRIBUTED
+    // form re-ran the full train-side signature pipeline (scan → spread →
+    // band pass) once per consumer — measured 29.8 s vs 9.7 s at 500k docs
+    // (SCALING.md, then with a shingle-aggregate signature stage). The pair
+    // set stays DISTRIBUTED
     // (eval-corpus-bounded × bucket occupancy — too big for n4's
     // driver-literal trick, small next to the corpus), only its lineage is
     // truncated.
-    val cand = minhashBandsAgg(left)
-      .join(broadcast(minhashBandsAgg(right)
+    val cand = minhashBands(left)
+      .join(broadcast(minhashBands(right)
         .withColumnRenamed("doc_id", "eval_doc_id")), Seq("band", "bh"))
       .select(col("doc_id").as("train_doc_id"), col("eval_doc_id"))
       .distinct()
@@ -282,18 +237,18 @@ object TextDedup {
   }
 
   /** MinHash + LSH near-dup pairs above `threshold` exact Jaccard over
-    * char-[[ShingleK]]-shingle sets: explode → one hash-aggregate builds
-    * the [[NumPerms]]-permutation signature, [[Bands]] banded hashes
-    * equi-join for candidates, and the exact verify intersects broadcast
-    * per-doc shingle arrays — materialized ONLY for candidate docs, so
-    * the corpus is never shuffled and never re-shingled.
+    * char-[[ShingleK]]-shingle sets: the per-row [[minhashBands]] pass
+    * signs each doc with [[NumPerms]] permutations, its [[Bands]] banded
+    * hashes equi-join for candidates, and the exact verify intersects
+    * broadcast per-doc shingle arrays — materialized ONLY for candidate
+    * docs, so the corpus is never shuffled and never re-shingled.
     */
   def minhashPairs(docs: DataFrame, threshold: Double): DataFrame = {
-    val bands = minhashBandsAgg(docs)
+    val bands = minhashBands(docs)
     // candidate pairs MATERIALIZED once (localCheckpoint — the d13 lesson
     // applied to this sibling): cand feeds candDocs, withG1, and pairs,
     // and itself contains the bands self-join, so without it the full
-    // scan→shingle→16-perm signature pipeline re-executes per plan branch
+    // scan → spread → band pass re-executes per plan branch
     val cand = bands.as("a")
       .join(bands.as("b"),
         col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&

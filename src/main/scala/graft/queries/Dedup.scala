@@ -55,13 +55,12 @@ object Dedup {
     * banded hashes → bucket equi-join for candidates → exact Jaccard
     * verify ≥ 0.8.
     *
-    * Signature stage: explode → ONE hash-aggregate (whole-stage codegen'd;
-    * measured 2x faster than the per-row higher-order-function pipeline,
-    * whose interpreted lambdas box every element). No distinct before it —
-    * MinHash minima are unaffected by duplicate shingles, so that shuffle
-    * is pure waste. Verification never touches per-shingle rows: the tiny
-    * candidate set is broadcast against per-doc shingle-set ARRAYS and
-    * intersected in place, replacing the naive sh⋈sh self-join + two
+    * Signature stage: `TextDedup.minhashBands`, one per-row pass of the
+    * native `graft_minhash_bands` expression — no per-shingle rows, no
+    * doc_id shuffle, and no distinct (MinHash minima are unaffected by
+    * duplicate shingles). Verification never touches per-shingle rows: the
+    * tiny candidate set is broadcast against per-doc shingle-set ARRAYS
+    * and intersected in place, replacing the naive sh⋈sh self-join + two
     * count-table joins.
     */
   def minhashLsh(spark: SparkSession, dir: String): DataFrame =
@@ -129,7 +128,7 @@ object Dedup {
     */
   def incrementalVerdictsQuery(spark: SparkSession, dir: String): DataFrame = {
     val bands = graft.operators.TextDedup
-      .minhashBandsAgg(Tables(spark, dir).documents).localCheckpoint()
+      .minhashBands(Tables(spark, dir).documents).localCheckpoint()
     // max over no bands is NULL -> getLong would NPE; fail loudly
     val maxRow = bands.agg(max("doc_id")).first()
     require(!maxRow.isNullAt(0),

@@ -387,16 +387,17 @@ object DocumentStreams {
     * collision, recall-oriented; the batch d2 verify is the offline
     * refinement over the same buckets).
     *
-    * Shape: signatures are computed IN-ROW (TextDedup.minhashSigsInRow —
-    * one fold over the shingle array, stateless, no per-doc aggregation
-    * state), then the 4 band rows keyed by (band, bh) hit a
-    * flatMapGroupsWithState ledger holding ONE long per bucket — the
-    * smallest doc_id ever seen there. A doc's band emits hit=true iff the
-    * bucket already held a smaller id (state from prior batches, or an
-    * earlier doc of the same batch — in-batch rows fold in doc_id order).
-    * Append mode: each (doc, band) verdict is emitted exactly once, and
-    * per-arrival verdicts never retract — collapsing to per-doc flags is a
-    * plain max/sum (EventStreaming.collapseNearDup), no version column.
+    * Shape: band hashes are computed IN-ROW (TextDedup.minhashBands, the
+    * band stage d12 runs too — one native pass over each document,
+    * stateless, no per-doc aggregation state), then the 4 band rows keyed
+    * by (band, bh) hit a flatMapGroupsWithState ledger holding ONE long per
+    * bucket — the smallest doc_id ever seen there. A doc's band emits
+    * hit=true iff the bucket already held a smaller id (state from prior
+    * batches, or an earlier doc of the same batch — in-batch rows fold in
+    * doc_id order). Append mode: each (doc, band) verdict is emitted
+    * exactly once, and per-arrival verdicts never retract — collapsing to
+    * per-doc flags is a plain max/sum (EventStreaming.collapseNearDup), no
+    * version column.
     *
     * State: one entry per DISTINCT (band, band-hash) bucket ≤ 4x distinct
     * signatures — same unbounded-ledger semantics as [[dedupGroups]] (16
@@ -414,7 +415,7 @@ object DocumentStreams {
   def nearDupBandHits(docs: DataFrame): Dataset[BandHit] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.operators.TextDedup.minhashBandsInRow(docs)
+    graft.operators.TextDedup.minhashBands(docs)
       .select(col("doc_id"), col("band"), col("bh")).as[BandRow]
       .groupByKey(r => (r.band, r.bh))
       .flatMapGroupsWithState[Long, BandHit](
@@ -454,7 +455,7 @@ object DocumentStreams {
       horizonMs: Long): Dataset[BandHit] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.operators.TextDedup.minhashBandsInRow(docs, keep = Seq("event_ts"))
+    graft.operators.TextDedup.minhashBands(docs, keep = Seq("event_ts"))
       .select(col("doc_id"), col("band"), col("bh"), col("event_ts"))
       // same null-ingest-clock posture as dedupWithinWatermark: a null
       // event_ts row has no horizon position and would NPE in the typed

@@ -63,16 +63,16 @@ class OperatorApiSpec extends SparkTestBase {
     assert(got(9L) === ((0, 0L)))
   }
 
-  test("TextDedup.minhashBandsInRow: keep columns pass through, bands match the aggregate path") {
+  test("TextDedup.minhashBands: keep columns pass through, bands match the aggregate reference") {
     import spark.implicits._
     val docs = Seq(
       (1L, "alpha beta gamma delta epsilon zeta eta theta", "k1"),
       (2L, "totally different content with other words inside", "k2"))
       .toDF("doc_id", "text", "tag")
-    val inRow = TextDedup.minhashBandsInRow(docs, keep = Seq("tag"))
+    val inRow = TextDedup.minhashBands(docs, keep = Seq("tag"))
     assert(inRow.columns.toSeq === Seq("doc_id", "tag", "band", "bh"))
     val a = inRow.select("doc_id", "band", "bh").orderBy("doc_id", "band").collect()
-    val b = TextDedup.minhashBandsAgg(docs).orderBy("doc_id", "band").collect()
+    val b = MinhashBandsReference(docs).orderBy("doc_id", "band").collect()
     assert(a.toSeq === b.toSeq)
     // the kept column rides every band row of its doc
     assert(inRow.filter(col("doc_id") === 1L).select("tag").distinct().collect()
@@ -187,12 +187,12 @@ class OperatorApiSpec extends SparkTestBase {
       (2L, "the quick brown fox jumps over the lazy dog again"))
       .toDF("doc_id", "text")
     val ledger = TextDedup.emptyNearDupLedger(spark)
-    val (v, next) = graft.queries.Dedup.ingestStep(TextDedup.minhashBandsAgg(batch), ledger)
+    val (v, next) = graft.queries.Dedup.ingestStep(TextDedup.minhashBands(batch), ledger)
     assert(v.orderBy("doc_id").collect().map(_.getInt(1)).toSeq === Seq(0, 1))
     assert(next.schema.simpleString === ledger.schema.simpleString)
     val widened = ledger.withColumn("band", col("band").cast("long"))
     val e = intercept[IllegalArgumentException] {
-      graft.queries.Dedup.ingestStep(TextDedup.minhashBandsAgg(batch), widened)
+      graft.queries.Dedup.ingestStep(TextDedup.minhashBands(batch), widened)
     }
     assert(e.getMessage.contains("band:bigint"), e.getMessage)
   }
@@ -214,20 +214,20 @@ class OperatorApiSpec extends SparkTestBase {
 
   test("TextDedup: null-text docs emit zero bands on BOTH band paths") {
     import spark.implicits._
-    // the batch aggregate used to turn a null-text doc's all-null signature
-    // into concat_ws("") bands, making every null-text doc a mutual
-    // near-dup — while the in-row expression path emitted nothing, so the
-    // batch and streaming twins silently disagreed on the same corpus
+    // the explode+aggregate formulation used to turn a null-text doc's
+    // all-null signature into concat_ws("") bands, making every null-text
+    // doc a mutual near-dup — while the native in-row pass emitted nothing.
+    // The reference keeps its null filter; both paths must emit no bands
     val docs = Seq((1L, "the quick brown fox jumps over the lazy dog"),
       (2L, null: String), (3L, null: String)).toDF("doc_id", "text")
-    assert(TextDedup.minhashBandsAgg(docs)
+    assert(MinhashBandsReference(docs)
       .filter(col("doc_id") =!= 1L).count() === 0L,
-      "batch band path emitted bands for null text")
-    assert(TextDedup.minhashBandsInRow(docs)
+      "reference band path emitted bands for null text")
+    assert(TextDedup.minhashBands(docs)
       .filter(col("doc_id") =!= 1L).count() === 0L)
-    assert(TextDedup.minhashBandsAgg(docs)
+    assert(MinhashBandsReference(docs)
       .filter(col("doc_id") === 1L).count() === 4L,
-      "real docs must still band on the batch path")
+      "real docs must still band on the reference path")
   }
 
   test("VectorSearch: zero-norm vectors are excluded, never NaN-ranked first") {

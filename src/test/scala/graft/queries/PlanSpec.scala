@@ -1,5 +1,11 @@
 package graft.queries
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.graft.ListenerBusShim
+import org.apache.spark.sql.util.QueryExecutionListener
+
 import graft.SparkTestBase
 
 /** Physical-plan contracts for the 100 TB design claims: these assert the
@@ -58,6 +64,39 @@ class PlanSpec extends SparkTestBase {
     assert(!p.contains("Generate"), "d3 must not explode tokens")
     assert(!p.contains("HashAggregate"), "d3 must not aggregate")
     assert(p.contains("graft_simhash"), "d3 must sign with the native per-row expression")
+  }
+
+  test("MinHash bands (d12, d14) are one per-row pass — no shingle explode, no signature aggregate") {
+    // d14 checkpoints its band frame while the query is built, so that
+    // plan is read from the executions the build runs, beside the returned
+    // frame's. The band posexplode and the verdicts' doc_id aggregate stay
+    // legal; a shingle generator or an aggregate producing sig_ columns
+    // means the explode -> doc_id shuffle -> 16-min aggregate is back, and
+    // a Filter calling the band expression means each document is signed
+    // twice (the size > 0 filter Spark infers for a posexplode, pushed
+    // below the spread)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        seen.add(qe.executedPlan.toString)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val plans = try {
+      val d12 = plan("d12_dedup_verdicts")
+      val d14 = plan("d14_incremental_verdicts")
+      ListenerBusShim.drain(spark.sparkContext)
+      Seq("d12" -> d12, "d14" -> (d14 +: seen.asScala.toSeq).mkString("\n"))
+    } finally spark.listenerManager.unregister(listener)
+    val shingles = "explode\\(sequence\\(1, greatest\\(\\(?length\\(text".r
+    plans.foreach { case (q, p) =>
+      assert(p.contains("graft_minhash_bands"), s"$q must sign with the native per-row expression")
+      assert(shingles.findFirstIn(p).isEmpty, s"$q explodes shingles")
+      assert(!p.linesIterator.exists(l => l.contains("HashAggregate") && l.contains("sig_")),
+        s"$q aggregates minhash signatures")
+      assert(!p.linesIterator.exists(l => l.contains("Filter") && l.contains("graft_minhash_bands")),
+        s"$q evaluates the band expression in a filter")
+    }
   }
 
   test("LSH ANN (n2) is an equi-join; only the brute-force baseline (n1) may nested-loop") {

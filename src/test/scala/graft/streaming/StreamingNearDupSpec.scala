@@ -5,15 +5,15 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
 import graft.SparkTestBase
-import graft.operators.TextDedup
+import graft.operators.{MinhashBandsReference, TextDedup}
 import graft.queries.EventStreaming
 
 /** st9 streaming near-dup detection under deterministic multi-batch
   * replay: the per-arrival band-ledger verdicts must collapse to exactly
   * the batch d12 result on the same corpus, with duplicates flagged ACROSS
   * the batch boundary (the ledger state carrying), Append-mode
-  * exactly-once emission, and the two signature paths (in-row fold vs
-  * explode+aggregate) bit-identical.
+  * exactly-once emission, and the native in-row band pass bit-identical
+  * to the explode+aggregate reference formulation.
   */
 class StreamingNearDupSpec extends SparkTestBase {
 
@@ -23,8 +23,8 @@ class StreamingNearDupSpec extends SparkTestBase {
     spark.read.parquet(s"$SfDir/documents.parquet") // 500 docs
 
   test("native in-row band hashes equal the explode+aggregate batch path") {
-    val agg = TextDedup.minhashBandsAgg(docs).orderBy("doc_id", "band").collect()
-    val inRow = TextDedup.minhashBandsInRow(docs).orderBy("doc_id", "band").collect()
+    val agg = MinhashBandsReference(docs).orderBy("doc_id", "band").collect()
+    val inRow = TextDedup.minhashBands(docs).orderBy("doc_id", "band").collect()
     assert(agg.toSeq == inRow.toSeq)
     assert(agg.length == docs.count() * TextDedup.Bands)
   }
@@ -42,8 +42,8 @@ class StreamingNearDupSpec extends SparkTestBase {
       (4L, "emoji 😀🎉🚀 inside 🌍 the text 😀🎉🚀 again"),
       (5L, ""), (6L, "short"), (7L, "exactly8"), (8L, "9 chars!!"))
       .toDF("doc_id", "text")
-    val agg = TextDedup.minhashBandsAgg(tricky).orderBy("doc_id", "band").collect()
-    val inRow = TextDedup.minhashBandsInRow(tricky).orderBy("doc_id", "band").collect()
+    val agg = MinhashBandsReference(tricky).orderBy("doc_id", "band").collect()
+    val inRow = TextDedup.minhashBands(tricky).orderBy("doc_id", "band").collect()
     assert(agg.toSeq == inRow.toSeq)
   }
 

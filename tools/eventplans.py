@@ -34,6 +34,10 @@ Produce the log by running a main with Spark's event log on, e.g.
 
 Plans that a query builds eagerly (localCheckpoint, first(), collect())
 show up here; the lazy final plan is what Explain itself prints.
+
+Tests (stdlib unittest, over a synthetic event log):
+
+    python3 -m unittest discover -s tools/tests
 """
 import json
 import re
@@ -99,11 +103,15 @@ def jobs_timeline(path: str) -> None:
 
 
 def main() -> None:
-    if sys.argv[1] == "--jobs":
-        jobs_timeline(sys.argv[2])
+    args = sys.argv[1:]
+    if not args or (args[0] == "--jobs" and len(args) != 2):
+        print(__doc__.split("\n\n")[1], file=sys.stderr)
+        sys.exit(2)
+    if args[0] == "--jobs":
+        jobs_timeline(args[1])
         return
-    path = sys.argv[1]
-    needle = sys.argv[2] if len(sys.argv) > 2 else "documents.parquet"
+    path = args[0]
+    needle = args[1] if len(args) > 1 else "documents.parquet"
     execs, jobs = {}, {}
     with open(path) as f:
         for line in f:
