@@ -83,13 +83,14 @@ object TextDedup {
     */
   def nearDupVerdicts(docs: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.partitionBy("band", "bh")
-    minhashBands(docs)
-      .withColumn("mn", min("doc_id").over(w))
-      .groupBy("doc_id")
-      .agg(
-        max((col("doc_id") > col("mn")).cast("int")).as("is_near_dup"),
-        sum((col("doc_id") > col("mn")).cast("long")).as("n_hit_bands"))
+    verdictsOf(minhashBands(docs).withColumn("mn", min("doc_id").over(w)))
   }
+
+  /** Per-doc verdicts from band rows carrying their bucket minimum `mn`. */
+  private def verdictsOf(banded: DataFrame): DataFrame =
+    banded.groupBy("doc_id").agg(
+      max((col("doc_id") > col("mn")).cast("int")).as("is_near_dup"),
+      sum((col("doc_id") > col("mn")).cast("long")).as("n_hit_bands"))
 
   /** An empty near-dup ledger — the zero state [[incrementalVerdicts]]
     * folds batches into. Schema: one surviving minimum doc_id per
@@ -126,7 +127,9 @@ object TextDedup {
     * ledger rows through by concatenation, and the touched buckets'
     * minima recompute from batch rows + the pruned slice. The batch's
     * banded signature frame is materialized once (localCheckpoint, the
-    * d13 lesson) because both outputs consume it. Callers persist the
+    * d13 lesson) because the touched-slice join reads it twice, and the
+    * joined frame (band rows with their bucket minimum) once more because
+    * both outputs aggregate it; both are batch-sized. Callers persist the
     * returned ledger between ingests (parquet bucketed by (band, bh)
     * makes the scan+prune partition-local at any scale).
     */
@@ -151,31 +154,40 @@ object TextDedup {
     * slicing the combined frame by the batch key is identical to
     * per-batch computation) folds them through here one at a time without
     * paying one signature scan per batch — as d14's driver
-    * (`Dedup.incrementalVerdictsQuery`) does.
+    * (`Dedup.incrementalVerdictsQuery`) does. Both inputs' shapes are
+    * checked at entry, so the outputs' types are fixed: verdicts
+    * (doc_id: long, is_near_dup: int, n_hit_bands: long) and a ledger of
+    * the input ledger's shape.
     */
   private[graft] def incrementalVerdictsFromBands(bands: DataFrame,
       ledger: DataFrame): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.types.{IntegerType, LongType}
-    val shape = bands.schema.map(f => f.name -> f.dataType)
-    require(shape == Seq("doc_id" -> LongType, "band" -> IntegerType, "bh" -> LongType),
+    def shape(f: DataFrame) = f.schema.map(x => x.name -> x.dataType)
+    require(shape(bands) == Seq("doc_id" -> LongType, "band" -> IntegerType, "bh" -> LongType),
       s"banded signatures must be (doc_id: long, band: int, bh: long), got ${bands.schema.simpleString}")
-    val buckets = bands.select("band", "bh").distinct()
+    require(shape(ledger) == Seq("band" -> IntegerType, "bh" -> LongType, "min_doc_id" -> LongType),
+      s"the ledger must be (band: int, bh: long, min_doc_id: long), got ${ledger.schema.simpleString}")
+    // duplicates kept: the semi/anti joins it feeds ignore them, and a
+    // distinct cost a shuffle job per use
+    val buckets = bands.select("band", "bh")
     val touched = ledger
       .join(broadcast(buckets), Seq("band", "bh"), "left_semi")
       .withColumnRenamed("min_doc_id", "ledger_mn")
     val w = org.apache.spark.sql.expressions.Window.partitionBy("band", "bh")
+    // band rows with their bucket minimum over batch + ledger, which both
+    // outputs aggregate: MATERIALIZED once, lazily (adaptive execution runs
+    // its broadcasts and window exchange when it is marked; the first
+    // consumer's job fills it)
     val x = bands
       .join(broadcast(touched), Seq("band", "bh"), "left")
-      .withColumn("mn",
+      .select(col("doc_id"), col("band"), col("bh"),
         least(coalesce(col("ledger_mn"), col("doc_id")),
-          min("doc_id").over(w)))
-    val verdicts = x.groupBy("doc_id").agg(
-      max((col("doc_id") > col("mn")).cast("int")).as("is_near_dup"),
-      sum((col("doc_id") > col("mn")).cast("long")).as("n_hit_bands"))
+          min("doc_id").over(w)).as("mn"))
+      .localCheckpoint(false)
     val untouched = ledger.join(broadcast(buckets), Seq("band", "bh"), "left_anti")
     val updated = x.groupBy("band", "bh")
       .agg(min(col("mn")).as("min_doc_id"))
-    (verdicts, untouched.unionByName(updated))
+    (verdictsOf(x), untouched.unionByName(updated))
   }
 
   /** CROSS-CORPUS near-dup pairs — fuzzy decontamination: for each doc of

@@ -227,7 +227,10 @@ object TextAnalysis {
     val toks = Tables.spread(docs.select("doc_id", "text"))
       .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
     val tf = toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-    val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
+    // counting through tf (always > 0) keeps tf's count in the df branch, so
+    // both branches share the (doc_id, term) exchange; count(1) or count(tf),
+    // which becomes count(1), let it be pruned and re-explode (PlanSpec pin)
+    val df = tf.groupBy("term").agg(count(when(col("tf") > 0, true)).as("df"))
     val n = docs.agg(count(lit(1)).as("n"))
     val scored = tf.join(df, "term")
       .crossJoin(broadcast(n))

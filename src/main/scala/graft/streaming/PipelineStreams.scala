@@ -15,8 +15,9 @@ import graft.pipeline.{CleanJob, ConvertJob, CropJob, ExtractJob, ProductSchema,
   * better failure semantics than the reference's check-then-write race
   * (SURVEY §7.4 item 4).
   *
-  * `Trigger.AvailableNow` turns the same query into the `bulk_clean.sh`
-  * backfill (E3): drain everything outstanding, then stop.
+  * Every query runs under `Trigger.AvailableNow`, which turns it into the
+  * `bulk_clean.sh` backfill (E3) and the cron-driven DAG's hop: drain
+  * everything outstanding, then stop.
   */
 object PipelineStreams {
 
@@ -32,8 +33,7 @@ object PipelineStreams {
     * nothing-silently-disappears guarantee holds on the stream too.
     */
   def cleanStream(spark: SparkSession, silverGlob: String, cleanRoot: String,
-                  checkpoint: String, trigger: Trigger = Trigger.AvailableNow(),
-                  maxFilesPerTrigger: Int = 256): StreamingQuery = {
+                  checkpoint: String, maxFilesPerTrigger: Int = 256): StreamingQuery = {
     val silver = spark.readStream
       .schema(ProductSchema.silverWithCorrupt)
       .option("multiLine", "true")
@@ -45,7 +45,7 @@ object PipelineStreams {
     silver.writeStream
       .queryName("graft-clean-stream")
       .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
+      .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         // three downstream actions consume this batch (merge-key collect,
         // merged write, quarantine probe); without a cache each one
@@ -69,8 +69,8 @@ object PipelineStreams {
     */
   def backfill(spark: SparkSession, silverGlob: String, cleanRoot: String,
                checkpoint: String, maxFilesPerTrigger: Int = 256): Unit =
-    cleanStream(spark, silverGlob, cleanRoot, checkpoint,
-      Trigger.AvailableNow(), maxFilesPerTrigger).awaitTermination()
+    cleanStream(spark, silverGlob, cleanRoot, checkpoint, maxFilesPerTrigger)
+      .awaitTermination()
 
   /** The binaryFile source's fixed schema (streaming file sources require
     * one explicitly).
@@ -86,8 +86,7 @@ object PipelineStreams {
     * JPEGs.
     */
   def convertStream(spark: SparkSession, rawRoot: String, interimRoot: String,
-                    checkpoint: String,
-                    trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+                    checkpoint: String): StreamingQuery =
     spark.readStream.format("binaryFile")
       .option("pathGlobFilter", "*.pdf")
       .option("recursiveFileLookup", "true")
@@ -96,7 +95,7 @@ object PipelineStreams {
       .writeStream
       .queryName("graft-convert-stream")
       .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
+      .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         ConvertJob.writeImages(ConvertJob.pages(batch), interimRoot)
       }
@@ -106,8 +105,7 @@ object PipelineStreams {
     * images run through the extractor into silver JSON documents.
     */
   def extractStream(spark: SparkSession, interimRoot: String, silverRoot: String,
-                    extractor: VisionExtractor, checkpoint: String,
-                    trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+                    extractor: VisionExtractor, checkpoint: String): StreamingQuery =
     spark.readStream.format("binaryFile")
       .option("pathGlobFilter", "*.jpg")
       .option("recursiveFileLookup", "true")
@@ -116,7 +114,7 @@ object PipelineStreams {
       .writeStream
       .queryName("graft-extract-stream")
       .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
+      .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         ExtractJob.writeSilver(
           ExtractJob.extract(CropJob.pagesWithKey(batch), extractor), silverRoot)
@@ -128,8 +126,7 @@ object PipelineStreams {
     * their page images (read statically per batch) and crop.
     */
   def cropStream(spark: SparkSession, silverGlob: String, interimRoot: String,
-                 shrRoot: String, checkpoint: String,
-                 trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+                 shrRoot: String, checkpoint: String): StreamingQuery =
     spark.readStream
       .option("wholetext", "true")
       .text(silverGlob)
@@ -137,7 +134,7 @@ object PipelineStreams {
       .writeStream
       .queryName("graft-crop-stream")
       .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
+      .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val pages = CropJob.pagesWithKey(CropJob.readImages(spark, interimRoot))
         CropJob.writeCrops(
@@ -167,8 +164,7 @@ object PipelineStreams {
     // clean and crop both fan out FROM silver with independent sinks and
     // checkpoints — exactly the reference's two parallel S3-event edges
     // (`main.tf:251-263`) — so they drain concurrently
-    val cleanQ = cleanStream(spark, zones.silverGlob, zones.clean, ck.clean,
-      Trigger.AvailableNow())
+    val cleanQ = cleanStream(spark, zones.silverGlob, zones.clean, ck.clean)
     val cropQ =
       cropStream(spark, zones.silverGlob, zones.interim, zones.shr, ck.crop)
     cleanQ.awaitTermination()

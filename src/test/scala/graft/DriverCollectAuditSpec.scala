@@ -43,8 +43,9 @@ class DriverCollectAuditSpec extends AnyFunSuite {
     "graft/Bench.scala" -> 1,
     "graft/StreamScaleStress.scala" -> 3,
     "graft/pipeline/CleanJob.scala" -> 1,
+    "graft/operators/ConnectedComponents.scala" -> 1,
     "graft/pipeline/ExportJob.scala" -> 2,
-    "graft/queries/Dedup.scala" -> 2,
+    "graft/queries/Dedup.scala" -> 1,
     "graft/queries/Events.scala" -> 1,
     "graft/queries/Layout.scala" -> 1,
     "graft/queries/Sampling.scala" -> 2,

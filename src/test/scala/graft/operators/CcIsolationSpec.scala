@@ -1,4 +1,4 @@
-package graft.queries
+package graft.operators
 
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 
@@ -32,7 +32,7 @@ class CcIsolationSpec extends SparkTestBase {
     val ccF = Future {
       val df = edges.toDF("d1", "d2")
       started.countDown()
-      Dedup.connectedComponentsWithRounds(df)
+      ConnectedComponents.connectedComponentsWithRounds(df)
     }
 
     assert(started.await(30, TimeUnit.SECONDS), "loop never started")

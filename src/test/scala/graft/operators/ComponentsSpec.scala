@@ -1,4 +1,4 @@
-package graft.queries
+package graft.operators
 
 import graft.SparkTestBase
 
@@ -11,7 +11,7 @@ class ComponentsSpec extends SparkTestBase {
 
   private def cc(edges: Seq[(Long, Long)]): Map[Long, Long] = {
     import spark.implicits._
-    Dedup.connectedComponents(edges.toDF("d1", "d2"))
+    ConnectedComponents.connectedComponents(edges.toDF("d1", "d2"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 
@@ -42,7 +42,7 @@ class ComponentsSpec extends SparkTestBase {
     // the pointer-jump join) blows this bound by an order of magnitude.
     val edges = (0 until 127).map(i => (1000L + i + 1, 1000L + i))
     val (labels, rounds) =
-      Dedup.connectedComponentsWithRounds(edges.toDF("d1", "d2"))
+      ConnectedComponents.connectedComponentsWithRounds(edges.toDF("d1", "d2"))
     val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     (1000L to 1127L).foreach(n => assert(got(n) === 1000L, s"chain node $n"))
     assert(rounds <= 20, s"128-chain took $rounds rounds — halving regressed")

@@ -181,18 +181,18 @@ class OperatorApiSpec extends SparkTestBase {
     }
   }
 
-  test("Dedup.ingestStep: a ledger whose band is widened to long fails instead of truncating") {
+  test("TextDedup.incrementalVerdicts: a ledger whose band is widened to long fails instead of truncating") {
     import spark.implicits._
     val batch = Seq((1L, "the quick brown fox jumps over the lazy dog again"),
       (2L, "the quick brown fox jumps over the lazy dog again"))
       .toDF("doc_id", "text")
     val ledger = TextDedup.emptyNearDupLedger(spark)
-    val (v, next) = graft.queries.Dedup.ingestStep(TextDedup.minhashBands(batch), ledger)
+    val (v, next) = TextDedup.incrementalVerdicts(batch, ledger)
     assert(v.orderBy("doc_id").collect().map(_.getInt(1)).toSeq === Seq(0, 1))
     assert(next.schema.simpleString === ledger.schema.simpleString)
     val widened = ledger.withColumn("band", col("band").cast("long"))
     val e = intercept[IllegalArgumentException] {
-      graft.queries.Dedup.ingestStep(TextDedup.minhashBands(batch), widened)
+      TextDedup.incrementalVerdicts(batch, widened)
     }
     assert(e.getMessage.contains("band:bigint"), e.getMessage)
   }

@@ -2,6 +2,7 @@ package graft.queries
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.graft.ListenerBusShim
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -239,6 +240,48 @@ class PlanSpec extends SparkTestBase {
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"))
     assert(!p.contains("SortMergeJoin"),
       "no d14 join may shuffle both sides; the ledger must stay scan+broadcast-pruned")
+  }
+
+  test("incremental verdicts: both returned frames read the one checkpoint — neither re-plans the window") {
+    // the verdicts and the next ledger both aggregate the batch's band rows
+    // joined to the touched ledger slice; a Window in either plan means
+    // that consumer re-derives the join and the (band, bh) exchange
+    import graft.operators.TextDedup
+    val (verdicts, ledger) = TextDedup.incrementalVerdicts(
+      graft.core.Tables(spark, sf).documents, TextDedup.emptyNearDupLedger(spark))
+    Seq("verdicts" -> verdicts, "ledger" -> ledger).foreach { case (n, f) =>
+      val p = f.queryExecution.executedPlan.toString
+      assert(!p.contains("Window"), s"the $n frame re-plans the bucket-minimum window:\n$p")
+      assert(p.contains("Scan ExistingRDD"), s"the $n frame does not read a checkpoint:\n$p")
+    }
+  }
+
+  test("incremental verdicts (d14): one cold call at sf0.001 runs at most 26 jobs") {
+    // each step adds its band-minimum checkpoint and its ledger, and the
+    // verdicts aggregate once at the end; a step that re-derives its
+    // joined band frame per consumer shows here as extra jobs
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      graft.SparkEntry.queries("d14_incremental_verdicts")(spark, sf).collect()
+      ListenerBusShim.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get <= 26, s"d14 ran ${jobs.get} jobs")
+  }
+
+  test("tf-idf (t9) tokenizes once: the df branch reuses the (doc_id, term) exchange") {
+    // exchange reuse is an AQE stage decision, so it shows only in the
+    // final plan of an executed query
+    val t9 = graft.SparkEntry.queries("t9_tfidf_top_terms")(spark, sf)
+    t9.collect()
+    val p = t9.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+    assert(p.linesIterator.exists(l => l.contains("ReusedExchange") &&
+      l.contains("hashpartitioning(doc_id") && l.contains("term")),
+      s"t9's df branch re-explodes the tokens:\n$p")
+    assert(p.linesIterator.count(_.contains("Generate explode")) === 1, p)
   }
 
   test("heavy hitters (z4): the exact recount joins candidates by BROADCAST — the token stream never sort-merges") {

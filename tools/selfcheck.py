@@ -175,4 +175,7 @@ def main(sf_dir, out_dir):
 
 
 if __name__ == "__main__":
+    if len(sys.argv) != 3:
+        print(__doc__.split("\n\n")[1], file=sys.stderr)
+        sys.exit(2)
     sys.exit(main(sys.argv[1], sys.argv[2]))
