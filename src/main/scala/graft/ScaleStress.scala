@@ -346,7 +346,7 @@ object ScaleStress {
         (1 to reps).foreach { _ =>
           // cold per rep: no memoized signatures, no cached frames, fresh
           // GC baseline — the curve must measure end-to-end per-query cost
-          Dedup.clearMemos(); graft.queries.Similarity.clearQuantMemo()
+          Dedup.clearMemos(); graft.operators.VectorIndex.clearMemos()
           spark.catalog.clearCache()
           System.gc()
           val q0 = System.nanoTime()

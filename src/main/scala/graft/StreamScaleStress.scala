@@ -141,12 +141,6 @@ object StreamScaleStress {
     Files.write(done.toPath, Array.emptyByteArray)
   }
 
-  /** Timestamped twin of [[generateDocs]] for the bounded-dedup stream:
-    * every doc in slice i carries event_ts = epoch + i hours, so a 2-hour
-    * dedup horizon spans ~2 slices and watermark eviction is forced to
-    * happen DURING the replay (visible as state_rows_removed > 0 and a
-    * state_rows_max plateau well under the distinct-doc count).
-    */
   /** Slice the ScaleStress embeddings corpus into [[Slices]] id-range
     * files under outDir/embeddings.parquet/ (st16's streamed zone); same
     * base-id slicing rule as [[generateDocs]] — vec_ids repeat per replica
@@ -182,6 +176,12 @@ object StreamScaleStress {
     Files.write(done.toPath, Array.emptyByteArray)
   }
 
+  /** Timestamped twin of [[generateDocs]] for the bounded-dedup stream:
+    * every doc in slice i carries event_ts = epoch + i hours, so a 2-hour
+    * dedup horizon spans ~2 slices and watermark eviction is forced to
+    * happen DURING the replay (visible as state_rows_removed > 0 and a
+    * state_rows_max plateau well under the distinct-doc count).
+    */
   private def generateDocsTs(spark: SparkSession, scaleDir: String,
       outDir: String): Unit = {
     val done = new File(s"$outDir/_DOCSTS_GENERATED")
@@ -651,7 +651,7 @@ object StreamScaleStress {
       // the twin is the batch census under the SAME scaled quantizer.
       val st16Cells = ScaleStress.d11Cells(k)
       run("st16_vector_ingest", {
-          val assigned = graft.queries.Similarity.assignCellsToStream(
+          val assigned = graft.operators.VectorIndex.assignCellsToStream(
             spark, s"${ScaleStress.ScaleRoot}/x$k",
             DocumentStreams.readEmbeddings(spark, embZone,
               glob = "*.parquet", maxFilesPerTrigger = Some(1)),
@@ -662,7 +662,7 @@ object StreamScaleStress {
         OutputMode.Update(),
         EventStreaming.collapseVectorIngest,
         Some {
-          graft.queries.Similarity.assignCellsToStream(
+          graft.operators.VectorIndex.assignCellsToStream(
             spark, s"${ScaleStress.ScaleRoot}/x$k",
             spark.read.parquet(embZone).select("vec_id", "embedding"),
             numCells = st16Cells)

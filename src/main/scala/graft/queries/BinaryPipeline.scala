@@ -148,19 +148,6 @@ object BinaryPipeline {
 
   // ------------------------------------------------------------------ c3
 
-  /** Perceptual image dedup over the crop images: 64-bit aHash per crop
-    * (ImageOps.aHash — real decode, 8×8 luminance threshold) + same-hash
-    * group sizes. The multimodal twin of exact text dedup (d1): one Long
-    * per image, dup discovery is a groupBy on the hash — pixels never
-    * shuffle and are decoded exactly once. Pages render through
-    * PhotoRasterizer (seeded gradient+noise), so the hash sees continuous
-    * photographic-like luminance, not flat fills. Oracle: the pinned
-    * expected-value table [[cropAhashSql]] (DuckDB cannot decode JPEG, so
-    * recomputation is impossible — but the pipeline is deterministic, so
-    * the expected hashes are constants); pixel-level semantics are
-    * spec-tested (determinism, re-encode stability, near-dup across
-    * resize, separation of distinct photos).
-    */
   /** The photo-rendered crop pipeline with per-crop aHash — c3 and c4's
     * shared first half: render fixture pages through PhotoRasterizer,
     * crop, hash. One row per decodable crop, keyed by the full relative
@@ -186,6 +173,19 @@ object BinaryPipeline {
         concat_ws("/", col("page_key"), col("crop_file")).as("img"))
   }
 
+  /** Perceptual image dedup over the crop images: 64-bit aHash per crop
+    * (ImageOps.aHash — real decode, 8×8 luminance threshold) + same-hash
+    * group sizes. The multimodal twin of exact text dedup (d1): one Long
+    * per image, dup discovery is a groupBy on the hash — pixels never
+    * shuffle and are decoded exactly once. Pages render through
+    * PhotoRasterizer (seeded gradient+noise), so the hash sees continuous
+    * photographic-like luminance, not flat fills. Oracle: the pinned
+    * expected-value table [[cropAhashSql]] (DuckDB cannot decode JPEG, so
+    * recomputation is impossible — but the pipeline is deterministic, so
+    * the expected hashes are constants); pixel-level semantics are
+    * spec-tested (determinism, re-encode stability, near-dup across
+    * resize, separation of distinct photos).
+    */
   def cropAhash(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val k = split(col("page_key"), "/")

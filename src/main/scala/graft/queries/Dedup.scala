@@ -8,6 +8,7 @@ import graft.core.{BoundedMemo, Tables}
 import graft.functions.{Simhash, SimhashUtil, TextHash, VectorLsh}
 import graft.functions.VectorOps.dot
 import graft.functions.TextHash.{hash60, hash60Sql, P}
+import graft.operators.VectorIndex
 
 /** Document deduplication — the training-data-pipeline operator family
   * (extension tier; the reference ships `thefuzz` in `requirements.txt:13`
@@ -479,7 +480,8 @@ object Dedup {
     * arXiv:2303.09540): k-means-partition the embedding space, then drop
     * any vector with a smaller-id same-cell neighbor at cosine ≥
     * [[SemDedupThreshold]] — the embedding-space analogue of d1's
-    * keep-min-id rule. The cells come from [[Similarity.semanticCells]],
+    * keep-min-id rule. The cells come from
+    * [[graft.operators.VectorIndex.assignedCorpus]],
     * the SAME Lloyd-refined coarse quantizer n4's IVF index uses: one
     * clustering feeds both the ANN index and the dedup pass, exactly how
     * a production pipeline amortizes the quantizer.
@@ -511,7 +513,7 @@ object Dedup {
     * records the curve.
     */
   def semanticDedup(spark: SparkSession, dir: String, numCells: Int): DataFrame = {
-    // cells + vectors off one scan (semanticCellsFull): the previous
+    // cells + vectors off one scan (assignedCorpus): the previous
     // e ⋈ cells join re-shuffled the whole corpus by vec_id just to pair
     // each vector with its own cell id — assignment is an inline
     // projection now, so the only shuffle left is the by-cell pairing join
@@ -521,7 +523,7 @@ object Dedup {
     // output — and with ANSI off the 0/0 = NaN witness would flag every
     // cell-mate (both engines call NaN >= threshold). Same guard as d6
     // and the n-family prep; the twin SQL carries it too.
-    val m = Similarity.semanticCellsFull(spark, dir, numCells)
+    val m = VectorIndex.assignedCorpus(VectorIndex.corpus(spark, dir), numCells)._1
       .filter(col("norm") > 0 && !isnan(col("norm")))
     val a = m.select(col("vec_id").as("id1"), col("v").as("v1"),
       col("norm").as("n1"), col("cell"))
@@ -675,20 +677,6 @@ object Dedup {
     */
   val DecontamN = 4
 
-  /** Test-set DECONTAMINATION: flag training documents sharing any
-    * contiguous [[DecontamN]]-token gram with the eval set, with the count
-    * of distinct shared grams — the standard pre-training hygiene pass
-    * (an eval question leaking into training data inflates benchmarks).
-    *
-    * Scale design: grams are hashed to 60-bit longs INSIDE the per-row
-    * transform, so the explode emits scalars and the dedup shuffle carries
-    * (doc_id, long) — text never moves. The eval gram set is small by
-    * definition (benchmarks are thousands of docs, not billions) and
-    * broadcasts; the training corpus is never self-joined, so cost is one
-    * scan + one shuffle on the gram hash, linear in corpus size. Both
-    * sides of the oracle count distinct HASHES, so parity cannot be broken
-    * by a collision.
-    */
   /** Distinct (doc_id, gram-hash) pairs over the corpus — the shared front
     * half of d8 and d10. Grams hash to longs INSIDE the per-row transform,
     * so the explode emits scalars and every downstream shuffle carries
@@ -793,6 +781,20 @@ object Dedup {
        |WHERE round(CAST(inter AS DOUBLE) / (n1 + n2 - inter), 4) >= $FuzzyThreshold
        |ORDER BY train_doc_id, eval_doc_id""".stripMargin
 
+  /** Test-set DECONTAMINATION: flag training documents sharing any
+    * contiguous [[DecontamN]]-token gram with the eval set, with the count
+    * of distinct shared grams — the standard pre-training hygiene pass
+    * (an eval question leaking into training data inflates benchmarks).
+    *
+    * Scale design: grams are hashed to 60-bit longs INSIDE the per-row
+    * transform, so the explode emits scalars and the dedup shuffle carries
+    * (doc_id, long) — text never moves. The eval gram set is small by
+    * definition (benchmarks are thousands of docs, not billions) and
+    * broadcasts; the training corpus is never self-joined, so cost is one
+    * scan + one shuffle on the gram hash, linear in corpus size. Both
+    * sides of the oracle count distinct HASHES, so parity cannot be broken
+    * by a collision.
+    */
   def decontaminate(spark: SparkSession, dir: String): DataFrame = {
     val grams = docGramHashes(spark, dir)
     val evalGrams = grams.filter(col("doc_id") % EvalMod === 0)

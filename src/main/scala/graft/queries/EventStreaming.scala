@@ -408,7 +408,7 @@ object EventStreaming {
     * never the stream length.
     */
   def streamVectorIngest(spark: SparkSession, dir: String): DataFrame = {
-    val assigned = Similarity.assignCellsToStream(spark, dir,
+    val assigned = graft.operators.VectorIndex.assignCellsToStream(spark, dir,
       graft.streaming.DocumentStreams.readEmbeddings(spark, dir))
     val census = assigned.groupBy("cell").agg(
       count(lit(1)).as("n_vectors"), min("vec_id").as("first_vec_id"))

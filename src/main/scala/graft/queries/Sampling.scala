@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.{Tables, WorkDirs}
 import graft.functions.TextHash.{hash60, hash60Sql}
+import graft.operators.VectorIndex
 
 /** Corpus sampling and sharding — the two selection operators every
   * large-scale training-data pipeline runs between "cleaned" and "trained"
@@ -43,22 +44,6 @@ object Sampling {
 
   // ------------------------------------------------------------------ t8
 
-  /** Token-budget sharding: assign docs (in doc_id order) to consecutive
-    * shards of ~`Budget` whitespace tokens — the greedy packing step that
-    * turns a corpus into bounded training shards.
-    *
-    * A global running sum is inherently sequential, so it is computed as a
-    * two-level prefix sum instead of one giant single-partition window:
-    * per-BLOCK token totals (a small aggregate) get a running offset, and
-    * each doc adds its within-block prefix (windows partitioned by block).
-    * Only the block-level window is unpartitioned, over corpus/BLOCK rows —
-    * 256× reduction per level; at extreme scale the same construction
-    * recurses. The per-doc window shuffles once on the block id.
-    *
-    * `DIV` truncates toward zero, which equals floor division only on a
-    * non-negative domain — `doc_id >= 0` and token counts `>= 0` are
-    * preconditions here (they hold for any corpus keyed by unsigned ids).
-    */
   /** (doc_id, n_tokens, cum_before): each doc's whitespace-token count and
     * the total tokens of all SMALLER-id docs — the two-level prefix sum
     * shared by t8 (shard assignment) and t20 (sequence packing).
@@ -83,6 +68,22 @@ object Sampling {
       .select("doc_id", "n_tokens", "cum_before")
   }
 
+  /** Token-budget sharding: assign docs (in doc_id order) to consecutive
+    * shards of ~`Budget` whitespace tokens — the greedy packing step that
+    * turns a corpus into bounded training shards.
+    *
+    * A global running sum is inherently sequential, so it is computed as a
+    * two-level prefix sum instead of one giant single-partition window:
+    * per-BLOCK token totals (a small aggregate) get a running offset, and
+    * each doc adds its within-block prefix (windows partitioned by block).
+    * Only the block-level window is unpartitioned, over corpus/BLOCK rows —
+    * 256× reduction per level; at extreme scale the same construction
+    * recurses. The per-doc window shuffles once on the block id.
+    *
+    * `DIV` truncates toward zero, which equals floor division only on a
+    * non-negative domain — `doc_id >= 0` and token counts `>= 0` are
+    * preconditions here (they hold for any corpus keyed by unsigned ids).
+    */
   def tokenShards(spark: SparkSession, dir: String): DataFrame = {
     val Budget = 5000L
     withGlobalOffset(Tables(spark, dir).documents)
@@ -446,7 +447,7 @@ object Sampling {
     * Θ(√n), so per-cell window sorts stay narrow as the corpus grows.
     */
   def clusterCap(spark: SparkSession, dir: String): DataFrame =
-    clusterCap(spark, dir, numCells = Similarity.NumCells)
+    clusterCap(spark, dir, numCells = VectorIndex.NumCells)
 
   /** The K-parameterized form the scale study runs under the shared √n
     * cell schedule (ScaleStress.d11Cells) — survivors then grow as
@@ -454,7 +455,7 @@ object Sampling {
     */
   def clusterCap(spark: SparkSession, dir: String, numCells: Int): DataFrame = {
     val w = Window.partitionBy("cell").orderBy("h", "vec_id")
-    Similarity.semanticCells(spark, dir, numCells = numCells)
+    VectorIndex.semanticCells(spark, dir, numCells = numCells)
       .withColumn("h",
         hash60(concat(lit("graft-ccap|"), col("vec_id").cast("string"))))
       .withColumn("rk", row_number().over(w))
@@ -474,7 +475,7 @@ object Sampling {
        |ORDER BY vec_id""".stripMargin
   }
 
-  lazy val clusterCapSql: String = clusterCapSqlFor(Similarity.NumCells)
+  lazy val clusterCapSql: String = clusterCapSqlFor(VectorIndex.NumCells)
 
   // ------------------------------------------------------------------ x3
 
@@ -598,23 +599,6 @@ object Sampling {
   val TempMixBudget = 20000L
   val TempMixSalt = "graft-mix|"
 
-  /** t25: TEMPERATURE-SCALED SOURCE MIXING — the α<1 mixture weighting a
-    * multi-source pretraining corpus uses to keep big sources from
-    * drowning small ones (GPT-3 / The Pile recipe): source weight ∝
-    * tokens^α, here α = 1/2 so every quantity stays INTEGER-EXACT across
-    * engines — `floor(sqrt(bigint))` is reproducible because IEEE sqrt is
-    * correctly rounded, and everything after it is integer multiply/DIV
-    * (the RankFusion fixed-point discipline applied to sampling rates).
-    * Per source: rate_permille = min(1000, (1000·B·w_s) DIV (Σw·tok_s))
-    * — expected kept tokens ≈ budget·w_s/Σw — then each doc keeps iff its
-    * salted hash lands under its source's rate (t7's deterministic
-    * mechanism, so the draw is reproducible at any parallelism and on any
-    * corpus superset restricted to the same docs).
-    *
-    * Scale shape: one per-source token aggregate (|sources| rows — tiny),
-    * weights broadcast back, then a pure scan filter. The corpus is
-    * never shuffled; the only exchange carries |sources| partial sums.
-    */
   /** The per-source admission-rate plan (source, rate_permille) — t25's
     * "planning" half, computed from the corpus snapshot: |sources| rows.
     * Exposed separately because the streaming twin (st15) plans rates
@@ -654,6 +638,23 @@ object Sampling {
         lit(1000L)) < col("rate_permille"))
       .select("doc_id", "source", "n_tok", "rate_permille")
 
+  /** t25: TEMPERATURE-SCALED SOURCE MIXING — the α<1 mixture weighting a
+    * multi-source pretraining corpus uses to keep big sources from
+    * drowning small ones (GPT-3 / The Pile recipe): source weight ∝
+    * tokens^α, here α = 1/2 so every quantity stays INTEGER-EXACT across
+    * engines — `floor(sqrt(bigint))` is reproducible because IEEE sqrt is
+    * correctly rounded, and everything after it is integer multiply/DIV
+    * (the RankFusion fixed-point discipline applied to sampling rates).
+    * Per source: rate_permille = min(1000, (1000·B·w_s) DIV (Σw·tok_s))
+    * — expected kept tokens ≈ budget·w_s/Σw — then each doc keeps iff its
+    * salted hash lands under its source's rate (t7's deterministic
+    * mechanism, so the draw is reproducible at any parallelism and on any
+    * corpus superset restricted to the same docs).
+    *
+    * Scale shape: one per-source token aggregate (|sources| rows — tiny),
+    * weights broadcast back, then a pure scan filter. The corpus is
+    * never shuffled; the only exchange carries |sources| partial sums.
+    */
   def temperatureMix(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables(spark, dir).documents
       .select(col("doc_id"), col("source"),
@@ -706,14 +707,6 @@ object Sampling {
   /** DuckDB-side fresh-id mapping for added rows. */
   private val addedIdSql = "-(doc_id + 1)"
 
-  /** x5: CORPUS DIFF between two snapshot versions — which documents were
-    * added/removed/modified (graft.operators.CorpusDiff bound to the
-    * documents table against a deterministically perturbed "next
-    * release"). The operator reduces both sides to (doc_id, digest) in the
-    * scan, so the full-outer join moves 16-byte digests, never text, and
-    * the output is diff-sized (unchanged rows are filtered inside the
-    * operator) — see CorpusDiff's scaladoc for the scale contract.
-    */
   /** The deterministic next-snapshot perturbation over any (doc_id, text)
     * frame — batch OR streaming (pure column ops + a self-union, legal on
     * both): the shared fixture of x5 and its streaming twin st12.
@@ -728,6 +721,14 @@ object Sampling {
         .filter(pmod(col("doc_id"), lit(DiffAddMod)) === 0L)
         .select(addedId(col("doc_id")).as("doc_id"), col("text")))
 
+  /** x5: CORPUS DIFF between two snapshot versions — which documents were
+    * added/removed/modified (graft.operators.CorpusDiff bound to the
+    * documents table against a deterministically perturbed "next
+    * release"). The operator reduces both sides to (doc_id, digest) in the
+    * scan, so the full-outer join moves 16-byte digests, never text, and
+    * the output is diff-sized (unchanged rows are filtered inside the
+    * operator) — see CorpusDiff's scaladoc for the scale contract.
+    */
   def corpusDiff(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables(spark, dir).documents.select("doc_id", "text")
     graft.operators.CorpusDiff.diff(docs, nextSnapshotOf(docs)).orderBy("doc_id")
@@ -810,16 +811,6 @@ object Sampling {
 
   // ----------------------------------------------------------------- x7
 
-  /** x7: SNAPSHOT DRIFT REPORT — per-dimension distribution counts of
-    * the current corpus vs the same deterministic "next release" the x5
-    * diff uses (graft.operators.CorpusDrift bound to the documents
-    * table): language mix, source mix, and a 100-char length histogram,
-    * old and new side by side with absences as zero. x5 answers WHICH
-    * rows changed; x7 answers whether the SHAPE of the corpus moved —
-    * the release-gate signal (a source doubling, a language vanishing, a
-    * length distribution collapsing). Each side is one scan with the
-    * dimensions exploded in-row; the join is dimension-sized.
-    */
   /** The x5 perturbation over FULL document rows (text modified,
     * lang/source carried) — shared by x7 and its streaming twin st14;
     * pure column ops + a self-union, legal on batch and streaming frames.
@@ -840,6 +831,16 @@ object Sampling {
     "source" -> col("source"),
     "len_x100" -> expr("length(text) DIV 100"))
 
+  /** x7: SNAPSHOT DRIFT REPORT — per-dimension distribution counts of
+    * the current corpus vs the same deterministic "next release" the x5
+    * diff uses (graft.operators.CorpusDrift bound to the documents
+    * table): language mix, source mix, and a 100-char length histogram,
+    * old and new side by side with absences as zero. x5 answers WHICH
+    * rows changed; x7 answers whether the SHAPE of the corpus moved —
+    * the release-gate signal (a source doubling, a language vanishing, a
+    * length distribution collapsing). Each side is one scan with the
+    * dimensions exploded in-row; the join is dimension-sized.
+    */
   def driftReport(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables(spark, dir).documents
       .select("doc_id", "text", "lang", "source")

@@ -81,6 +81,23 @@ object AuditScan {
         .toMap
     }
 
+  /** `file:line` of every pattern match in the RAW text of each `.scala`
+    * under `root`, comments included — for rules about the comments
+    * themselves. The line is the one where the match ends; paths are
+    * root-relative and the list is sorted.
+    */
+  def rawSites(root: Path, pattern: Regex): Seq[String] =
+    Using.resource(Files.walk(root)) { walk =>
+      walk.iterator().asScala
+        .filter(p => p.toString.endsWith(".scala"))
+        .flatMap { p =>
+          val text = new String(Files.readAllBytes(p), "UTF-8")
+          pattern.findAllMatchIn(text).map(m =>
+            s"${root.relativize(p)}:${text.substring(0, m.end).count(_ == '\n') + 1}")
+        }
+        .toSeq.sorted
+    }
+
   /** Audited-vs-found drift lines (empty = in sync). */
   def drift(found: Map[String, Int], audited: Map[String, Int]): Seq[String] =
     (found.keySet ++ audited.keySet).toSeq.sorted.flatMap { f =>

@@ -36,6 +36,7 @@ class BroadcastAuditSpec extends AnyFunSuite {
     "graft/StreamScaleStress.scala" -> 2,
     "graft/operators/Rollups.scala" -> 2,
     "graft/operators/TextDedup.scala" -> 11,
+    "graft/operators/VectorIndex.scala" -> 6,
     "graft/operators/VectorSearch.scala" -> 6,
     "graft/pipeline/CropJob.scala" -> 1,
     "graft/pipeline/FetchJob.scala" -> 1,
@@ -43,7 +44,7 @@ class BroadcastAuditSpec extends AnyFunSuite {
     "graft/queries/EventStreaming.scala" -> 4,
     "graft/queries/Relational.scala" -> 9,
     "graft/queries/Sampling.scala" -> 1,
-    "graft/queries/Similarity.scala" -> 12,
+    "graft/queries/Similarity.scala" -> 4,
     "graft/queries/Sketches.scala" -> 2,
     "graft/queries/TextAnalysis.scala" -> 5)
 

@@ -44,12 +44,12 @@ class DriverCollectAuditSpec extends AnyFunSuite {
     "graft/StreamScaleStress.scala" -> 3,
     "graft/pipeline/CleanJob.scala" -> 1,
     "graft/operators/ConnectedComponents.scala" -> 1,
+    "graft/operators/VectorIndex.scala" -> 10,
     "graft/pipeline/ExportJob.scala" -> 2,
     "graft/queries/Dedup.scala" -> 1,
     "graft/queries/Events.scala" -> 1,
     "graft/queries/Layout.scala" -> 1,
     "graft/queries/Sampling.scala" -> 2,
-    "graft/queries/Similarity.scala" -> 12,
     "graft/queries/Sketches.scala" -> 5,
     "graft/queries/TextAnalysis.scala" -> 1)
 

@@ -54,7 +54,7 @@ class SessionAuditSpec extends AnyFunSuite {
   // repeat of the same call would hit makes a Bench rep a warm read.
   private val MemoFields = Map(
     "graft/queries/Dedup.scala" -> 3,
-    "graft/queries/Similarity.scala" -> 5)
+    "graft/operators/VectorIndex.scala" -> 5)
 
   // a field holding a memo, its constructor on the same or the next line,
   // or built by Dedup's frame-memo factory

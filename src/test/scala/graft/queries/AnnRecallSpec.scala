@@ -24,9 +24,9 @@ class AnnRecallSpec extends SparkTestBase {
     val ivf2 = Similarity.ivfTopK(spark, sf, nprobe = 2)
     val ivf4 = Similarity.ivfTopK(spark, sf, nprobe = 4)
 
-    val rLsh = Similarity.recallAtK(exact, lsh)
-    val rIvf2 = Similarity.recallAtK(exact, ivf2)
-    val rIvf4 = Similarity.recallAtK(exact, ivf4)
+    val rLsh = AnnRecall.recallAtK(exact, lsh)
+    val rIvf2 = AnnRecall.recallAtK(exact, ivf2)
+    val rIvf4 = AnnRecall.recallAtK(exact, ivf4)
     info(f"recall@5: n2_lsh=$rLsh%.3f n4_ivf(np2)=$rIvf2%.3f n4_ivf(np4)=$rIvf4%.3f (sf0.01)")
 
     // floors from measurement minus margin (np2=0.64, np4 higher; the
@@ -46,7 +46,7 @@ class AnnRecallSpec extends SparkTestBase {
     // rescoring should lose almost nothing to int8 rounding even on the
     // iid-hostile fixture — this is the high-recall end of the dial
     // (contrast the LSH pruner's 0.03 floor above)
-    val rQ = Similarity.recallAtK(exact, Similarity.quantizedRescoreTopK(spark, sf))
+    val rQ = AnnRecall.recallAtK(exact, Similarity.quantizedRescoreTopK(spark, sf))
     info(f"recall@5: n6_quantized_rescore=$rQ%.3f (sf0.01)")
     assert(rQ >= 0.9, f"n6 quantized-rescore recall@5 regressed: $rQ%.3f < 0.9")
   }
@@ -77,9 +77,9 @@ class AnnRecallSpec extends SparkTestBase {
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
 
     val exact = Similarity.bruteForceTopK(spark, dir)
-    val raw = Similarity.recallAtK(exact,
+    val raw = AnnRecall.recallAtK(exact,
       Similarity.ivfTopK(spark, dir, nprobe = 2, lloydIters = 0))
-    val refined = Similarity.recallAtK(exact,
+    val refined = AnnRecall.recallAtK(exact,
       Similarity.ivfTopK(spark, dir, nprobe = 2))
     info(f"clustered recall@5 (nprobe=2): raw_seeds=$raw%.3f lloyd=$refined%.3f")
     assert(refined > raw + 0.1,

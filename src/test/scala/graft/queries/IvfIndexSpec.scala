@@ -4,6 +4,7 @@ import java.io.File
 import java.nio.file.{Files, Paths}
 
 import graft.SparkTestBase
+import graft.operators.VectorIndex
 
 /** Contracts for the persisted IVF index (n7): the probe must reproduce the
   * from-scratch IVF exactly, run standalone against the artifacts (no
@@ -19,17 +20,17 @@ class IvfIndexSpec extends SparkTestBase {
 
   test("probe over the persisted index equals the from-scratch IVF, twice, without rebuilding") {
     val idx = scratch("ivf_idx_eq")
-    Similarity.buildIvfIndex(spark, SfDir, idx)
+    VectorIndex.buildIvfIndex(spark, SfDir, idx)
     val want = norm(Similarity.ivfTopK(spark, SfDir))
-    assert(norm(Similarity.probeIvfIndex(spark, SfDir, idx, nprobe = 2)) == want)
+    assert(norm(VectorIndex.probeIvfIndex(spark, SfDir, idx, nprobe = 2)) == want)
     // second probe: same artifacts, no rebuild — the standalone contract
-    assert(norm(Similarity.probeIvfIndex(spark, SfDir, idx, nprobe = 2)) == want)
+    assert(norm(VectorIndex.probeIvfIndex(spark, SfDir, idx, nprobe = 2)) == want)
   }
 
   test("the probed-cells predicate reaches the file index as a partition filter") {
     val idx = scratch("ivf_idx_plan")
-    Similarity.buildIvfIndex(spark, SfDir, idx)
-    val plan = Similarity.probeIvfIndex(spark, SfDir, idx, nprobe = 2)
+    VectorIndex.buildIvfIndex(spark, SfDir, idx)
+    val plan = VectorIndex.probeIvfIndex(spark, SfDir, idx, nprobe = 2)
       .queryExecution.executedPlan.toString
     // non-empty filter content on the cell column — "PartitionFilters: ["
     // alone also matches an empty list (r18 advice)
@@ -38,7 +39,7 @@ class IvfIndexSpec extends SparkTestBase {
 
   test("pruning is real: a poisoned unprobed cell directory never fails a probe") {
     val idx = scratch("ivf_idx_poison")
-    Similarity.buildIvfIndex(spark, SfDir, idx)
+    VectorIndex.buildIvfIndex(spark, SfDir, idx)
     // cell id 999 can never be probed (no such centroid); a garbage file
     // there kills any reader that opens it
     val poison = Paths.get(s"$idx/cells/cell=999/garbage.parquet")
@@ -49,7 +50,7 @@ class IvfIndexSpec extends SparkTestBase {
       spark.read.parquet(s"$idx/cells").count()
     }
     // ...while the pruned probe never opens it
-    val got = Similarity.probeIvfIndex(spark, SfDir, idx, nprobe = 2)
+    val got = VectorIndex.probeIvfIndex(spark, SfDir, idx, nprobe = 2)
     assert(norm(got) == norm(Similarity.ivfTopK(spark, SfDir)))
   }
 
@@ -58,9 +59,9 @@ class IvfIndexSpec extends SparkTestBase {
     // production): the writers and the pruned read must resolve through
     // the path's OWN FileSystem, never scheme-blind java.nio
     val idx = "file:" + scratch("ivf_idx_scheme")
-    Similarity.buildIvfIndex(spark, SfDir, idx)
+    VectorIndex.buildIvfIndex(spark, SfDir, idx)
     assert(fsFingerprint(idx).nonEmpty, "build wrote no artifacts under the file: indexDir")
-    assert(norm(Similarity.probeIvfIndex(spark, SfDir, idx, nprobe = 2)) ==
+    assert(norm(VectorIndex.probeIvfIndex(spark, SfDir, idx, nprobe = 2)) ==
       norm(Similarity.ivfTopK(spark, SfDir)))
   }
 
@@ -79,7 +80,7 @@ class IvfIndexSpec extends SparkTestBase {
 
   test("index layout: hive-partitioned cells plus a metadata-scale centroid table") {
     val idx = scratch("ivf_idx_layout")
-    Similarity.buildIvfIndex(spark, SfDir, idx)
+    VectorIndex.buildIvfIndex(spark, SfDir, idx)
     val cellDirs = new File(s"$idx/cells").listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("cell="))
     assert(cellDirs.nonEmpty, "cells must be written as cell=N partitions")

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 
 import graft.SparkTestBase
 import graft.core.WorkDirs
+import graft.operators.VectorIndex
 
 /** Contracts for the persisted IVF+PQ index (n13), mirroring IvfIndexSpec:
   * the disk probe must reproduce n12's from-scratch result exactly, run
@@ -20,16 +21,16 @@ class IvfPqIndexSpec extends SparkTestBase {
 
   test("probe over the persisted index equals from-scratch IVF+PQ, twice") {
     val idx = scratch("ivfpq_idx_eq")
-    Similarity.buildIvfPqIndex(spark, SfDir, idx)
+    VectorIndex.buildIvfPqIndex(spark, SfDir, idx)
     val want = norm(Similarity.ivfPqTopK(spark, SfDir))
-    assert(norm(Similarity.probeIvfPqIndex(spark, SfDir, idx, nprobe = 2)) == want)
-    assert(norm(Similarity.probeIvfPqIndex(spark, SfDir, idx, nprobe = 2)) == want)
+    assert(norm(VectorIndex.probeIvfPqIndex(spark, SfDir, idx, nprobe = 2)) == want)
+    assert(norm(VectorIndex.probeIvfPqIndex(spark, SfDir, idx, nprobe = 2)) == want)
   }
 
   test("the probed-cells predicate partition-prunes the codes table") {
     val idx = scratch("ivfpq_idx_plan")
-    Similarity.buildIvfPqIndex(spark, SfDir, idx)
-    val plan = Similarity.probeIvfPqIndex(spark, SfDir, idx, nprobe = 2)
+    VectorIndex.buildIvfPqIndex(spark, SfDir, idx)
+    val plan = VectorIndex.probeIvfPqIndex(spark, SfDir, idx, nprobe = 2)
       .queryExecution.executedPlan.toString
     // a NON-EMPTY filter list on the cell column — "PartitionFilters: ["
     // alone also matches an empty list (r18 advice)
@@ -38,14 +39,14 @@ class IvfPqIndexSpec extends SparkTestBase {
 
   test("pruning is real: a poisoned unprobed codes partition never fails a probe") {
     val idx = scratch("ivfpq_idx_poison")
-    Similarity.buildIvfPqIndex(spark, SfDir, idx)
+    VectorIndex.buildIvfPqIndex(spark, SfDir, idx)
     val poison = Paths.get(s"$idx/codes/cell=999/garbage.parquet")
     Files.createDirectories(poison.getParent)
     Files.write(poison, "this is not a parquet file".getBytes("UTF-8"))
     intercept[Throwable] {
       spark.read.parquet(s"$idx/codes").count()
     }
-    val got = Similarity.probeIvfPqIndex(spark, SfDir, idx, nprobe = 2)
+    val got = VectorIndex.probeIvfPqIndex(spark, SfDir, idx, nprobe = 2)
     assert(norm(got) == norm(Similarity.ivfPqTopK(spark, SfDir)))
   }
 
@@ -55,13 +56,13 @@ class IvfPqIndexSpec extends SparkTestBase {
     // file:-qualified (or remote) path still memo-hits instead of
     // silently rebuilding centroids + codebooks + codes on every request
     val idx = "file:" + scratch("ivfpq_idx_scheme")
-    val v1 = Similarity.buildIvfPqIndex(spark, SfDir, idx)
+    val v1 = VectorIndex.buildIvfPqIndex(spark, SfDir, idx)
     val f1 = fsFingerprint(idx)
     assert(f1.nonEmpty, "build wrote no artifacts under the file: indexDir")
-    val v2 = Similarity.buildIvfPqIndex(spark, SfDir, idx)
+    val v2 = VectorIndex.buildIvfPqIndex(spark, SfDir, idx)
     assert(v2 eq v1, "second build must be a memo hit (same instance), not a rebuild")
     assert(fsFingerprint(idx) == f1, "memo hit must not rewrite any artifact file")
-    assert(norm(Similarity.probeIvfPqIndex(spark, SfDir, idx, nprobe = 2)) ==
+    assert(norm(VectorIndex.probeIvfPqIndex(spark, SfDir, idx, nprobe = 2)) ==
       norm(Similarity.ivfPqTopK(spark, SfDir)))
   }
 
@@ -81,8 +82,8 @@ class IvfPqIndexSpec extends SparkTestBase {
 
   test("n15: rescore over the persisted probe equals from-scratch n14; pruned, no shuffle join") {
     val idx = scratch("ivfpq_idx_rescore")
-    Similarity.buildIvfPqIndex(spark, SfDir, idx)
-    val df = Similarity.rescoreProbedIndex(spark, SfDir, idx)
+    VectorIndex.buildIvfPqIndex(spark, SfDir, idx)
+    val df = VectorIndex.rescoreProbedIndex(spark, SfDir, idx)
     // plan read BEFORE collect, uncached: the probed-cells predicate must
     // still partition-prune the codes table with the rescore stage on top,
     // and every join in both stages rides a broadcast
@@ -97,14 +98,14 @@ class IvfPqIndexSpec extends SparkTestBase {
 
   test("n15 pruning is real: a poisoned unprobed codes partition never fails the rescore") {
     val idx = scratch("ivfpq_idx_rescore_poison")
-    Similarity.buildIvfPqIndex(spark, SfDir, idx)
+    VectorIndex.buildIvfPqIndex(spark, SfDir, idx)
     val poison = Paths.get(s"$idx/codes/cell=999/garbage.parquet")
     Files.createDirectories(poison.getParent)
     Files.write(poison, "this is not a parquet file".getBytes("UTF-8"))
     intercept[Throwable] {
       spark.read.parquet(s"$idx/codes").count()
     }
-    val got = Similarity.rescoreProbedIndex(spark, SfDir, idx)
+    val got = VectorIndex.rescoreProbedIndex(spark, SfDir, idx)
     assert(norm(got) == norm(Similarity.ivfPqRescoreTopK(spark, SfDir)))
   }
 
@@ -163,18 +164,18 @@ class IvfPqIndexSpec extends SparkTestBase {
 
   test("index layout: hive-partitioned codes, metadata-scale quantizer tables") {
     val idx = scratch("ivfpq_idx_layout")
-    Similarity.buildIvfPqIndex(spark, SfDir, idx)
+    VectorIndex.buildIvfPqIndex(spark, SfDir, idx)
     val cellDirs = new File(s"$idx/codes").listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("cell="))
     assert(cellDirs.nonEmpty, "codes must be written as cell=N partitions")
     val cents = spark.read.parquet(s"$idx/centroids.parquet")
     assert(cents.count() == 8 && cents.columns.sorted.toSeq == Seq("cid", "cnorm", "cv"))
     val books = spark.read.parquet(s"$idx/codebooks.parquet")
-    assert(books.count() == Similarity.PqM.toLong * Similarity.PqK)
+    assert(books.count() == VectorIndex.PqM.toLong * VectorIndex.PqK)
     assert(books.columns.sorted.toSeq == Seq("cid", "cv", "m"))
     // the codes table carries ONLY ids and code bytes — never raw vectors
     val codes = spark.read.parquet(s"$idx/codes")
     assert(codes.columns.sorted.toSeq ==
-      ("cell" +: "vec_id" +: (0 until Similarity.PqM).map(m => s"c$m")).sorted)
+      ("cell" +: "vec_id" +: (0 until VectorIndex.PqM).map(m => s"c$m")).sorted)
   }
 }

@@ -3,9 +3,10 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
+import graft.operators.VectorIndex
 
 /** [[Similarity.maintainIvfPqIndex]] survives only as the benchmark
-  * harness's entry point: a delegate to [[Similarity.upsertIvfPqIndex]].
+  * harness's entry point: a delegate to [[VectorIndex.upsertIvfPqIndex]].
   * Pinned here so the delegate can never drift from the writer it names —
   * it must land exactly the direct upsert's codes and ledger.
   */
@@ -15,7 +16,7 @@ class IvfPqMaintainSpec extends SparkTestBase {
 
   private def codesRows(idx: String): Seq[Seq[Any]] = {
     val cols = col("vec_id") +: col("cell").cast("long").as("cell") +:
-      (0 until Similarity.PqM).map(m => col(s"c$m"))
+      (0 until VectorIndex.PqM).map(m => col(s"c$m"))
     spark.read.parquet(s"$idx/codes").select(cols: _*)
       .collect().map(_.toSeq).toSeq.sortBy(_.toString)
   }
@@ -35,7 +36,7 @@ class IvfPqMaintainSpec extends SparkTestBase {
       corpus = spark.emptyDataFrame)
     assert(label == "upsert")
     assert(touched.nonEmpty &&
-      touched == Similarity.upsertIvfPqIndex(spark, idxD, delta))
+      touched == VectorIndex.upsertIvfPqIndex(spark, idxD, delta))
     assert(codesRows(idxM) == codesRows(idxD),
       "the delegate must land the direct upsert's codes")
     assert(ledgerRows(idxM) == ledgerRows(idxD),

@@ -5,11 +5,12 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
 import graft.core.Tables
+import graft.operators.VectorIndex
 
 /** MODEL-BASED sequence test for the maintenance family: a chain of four
   * interleaved upsert batches — cross-cell moves, deletes, move-backs,
   * re-inserts-after-delete, with deliberate overlap between the classes —
-  * applied (a) to the real artifact through [[Similarity.upsertIvfPqIndex]]
+  * applied (a) to the real artifact through [[VectorIndex.upsertIvfPqIndex]]
   * and (b) to a plain DataFrame MODEL whose upsert is three lines
   * (anti-join ∪ batch). After the chain, the artifact must equal a frozen
   * recode of the model corpus — codes AND ledger. The single-step specs
@@ -26,7 +27,7 @@ class IvfPqUpsertSequenceSpec extends SparkTestBase {
 
   private def codesRows(idx: String): Seq[Seq[Any]] = {
     val cols = col("vec_id") +: col("cell").cast("long").as("cell") +:
-      (0 until Similarity.PqM).map(m => col(s"c$m"))
+      (0 until VectorIndex.PqM).map(m => col(s"c$m"))
     spark.read.parquet(s"$idx/codes").select(cols: _*)
       .collect().map(_.toSeq).toSeq.sortBy(_.toString)
   }
@@ -48,7 +49,7 @@ class IvfPqUpsertSequenceSpec extends SparkTestBase {
   test("four interleaved maintenance batches equal one frozen recode of the model corpus") {
     val idx = scratch("ivfpq_seq")
     val idxR = scratch("ivfpq_seq_ref")
-    Similarity.buildIvfPqIndex(spark, SfDir, idx)
+    VectorIndex.buildIvfPqIndex(spark, SfDir, idx)
 
     val base = Tables(spark, SfDir).embeddings.select("vec_id", "embedding")
     // one donor embedding (a vector of some other cell) for the move batch
@@ -78,7 +79,7 @@ class IvfPqUpsertSequenceSpec extends SparkTestBase {
 
     var model = base
     for (b <- Seq(b1, b2, b3, b4)) {
-      Similarity.upsertIvfPqIndex(spark, idx, b)
+      VectorIndex.upsertIvfPqIndex(spark, idx, b)
       model = modelUpsert(model, b)
     }
     // every class must be non-trivially exercised by the fixture
@@ -88,8 +89,8 @@ class IvfPqUpsertSequenceSpec extends SparkTestBase {
     // the model corpus, which replaces codes/ and ledger/ wholesale — a
     // pure coding, so ids the chain DELETED and never re-inserted have no
     // row in either artifact
-    Similarity.buildIvfPqIndex(spark, SfDir, idxR)
-    Similarity.recodeIvfPqIndex(spark, idxR, model)
+    VectorIndex.buildIvfPqIndex(spark, SfDir, idxR)
+    VectorIndex.recodeIvfPqIndex(spark, idxR, model)
 
     assert(codesRows(idx) == codesRows(idxR),
       "four chained upserts must land exactly the one-shot frozen recode's codes")

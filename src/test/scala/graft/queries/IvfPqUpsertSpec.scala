@@ -7,11 +7,12 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
 import graft.core.Tables
+import graft.operators.VectorIndex
 
-/** Contracts for [[Similarity.upsertIvfPqIndex]], the one writer that
+/** Contracts for [[VectorIndex.upsertIvfPqIndex]], the one writer that
   * maintains a persisted IVF+PQ index. For UPDATE batches (n17) an
   * upserted index must be indistinguishable from a frozen-quantizer
-  * rebuild ([[Similarity.recodeIvfPqIndex]]) over the POST-update corpus
+  * rebuild ([[VectorIndex.recodeIvfPqIndex]]) over the POST-update corpus
   * — which means a moved id leaves NO stale row in its old cell, a cell
   * emptied by the moves loses its partition directory, a guard-rejected
   * update deletes, a re-landed batch is content-idempotent. For INSERT
@@ -30,12 +31,22 @@ class IvfPqUpsertSpec extends SparkTestBase {
   private def norm(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(_.toSeq).toSeq
 
+  /** The post-upsert corpus (original rows with the demo batch's
+    * replacing them) — what a frozen rebuild after the upsert would code;
+    * the equivalence arm recodes it.
+    */
+  private def postUpsertCorpus(dir: String): org.apache.spark.sql.DataFrame =
+    Tables(spark, dir).embeddings
+      .filter(!Similarity.upsertPredicate)
+      .select("vec_id", "embedding")
+      .unionByName(Similarity.upsertBatch(spark, dir))
+
   /** Full codes content, engine-canonical (cell partition values read
     * back as long), order-insensitive.
     */
   private def codesRows(idx: String): Seq[Seq[Any]] = {
     val cols = col("vec_id") +: col("cell").cast("long").as("cell") +:
-      (0 until Similarity.PqM).map(m => col(s"c$m"))
+      (0 until VectorIndex.PqM).map(m => col(s"c$m"))
     spark.read.parquet(s"$idx/codes").select(cols: _*)
       .collect().map(_.toSeq).toSeq.sortBy(_.toString)
   }
@@ -59,19 +70,19 @@ class IvfPqUpsertSpec extends SparkTestBase {
   test("upsert-then-probe equals frozen-quantizer rebuild over the post-update corpus") {
     val idxU = scratch("ivfpq_upsert_eq_u")
     val idxR = scratch("ivfpq_upsert_eq_r")
-    Similarity.buildIvfPqIndex(spark, SfDir, idxU)
-    val touched = Similarity.upsertIvfPqIndex(spark, idxU,
+    VectorIndex.buildIvfPqIndex(spark, SfDir, idxU)
+    val touched = VectorIndex.upsertIvfPqIndex(spark, idxU,
       Similarity.upsertBatch(spark, SfDir))
     assert(touched.nonEmpty, "the fixture batch must touch some cell")
     // frozen rebuild over the POST-update corpus: a fresh full-corpus
     // base gives the artifact its (frozen) quantizers, then the recode
     // replaces codes/ and ledger/ wholesale with a pure fresh coding of
     // (originals minus the split) ∪ (negated split)
-    Similarity.buildIvfPqIndex(spark, SfDir, idxR)
-    Similarity.recodeIvfPqIndex(spark, idxR,
-      Similarity.postUpsertCorpus(spark, SfDir))
-    val u = norm(Similarity.probeIvfPqIndex(spark, SfDir, idxU, nprobe = 2))
-    val r = norm(Similarity.probeIvfPqIndex(spark, SfDir, idxR, nprobe = 2))
+    VectorIndex.buildIvfPqIndex(spark, SfDir, idxR)
+    VectorIndex.recodeIvfPqIndex(spark, idxR,
+      postUpsertCorpus(SfDir))
+    val u = norm(VectorIndex.probeIvfPqIndex(spark, SfDir, idxU, nprobe = 2))
+    val r = norm(VectorIndex.probeIvfPqIndex(spark, SfDir, idxR, nprobe = 2))
     assert(u.nonEmpty && u == r,
       "an upserted index must serve exactly what a frozen rebuild over the post-update corpus serves")
     assert(codesRows(idxU) == codesRows(idxR),
@@ -82,7 +93,7 @@ class IvfPqUpsertSpec extends SparkTestBase {
 
   test("a moved id leaves no stale row; old partitions rewritten; ledger follows") {
     val idx = scratch("ivfpq_upsert_move")
-    Similarity.buildIvfPqIndex(spark, SfDir, idx)
+    VectorIndex.buildIvfPqIndex(spark, SfDir, idx)
     val before = ledgerMap(idx)
     val countBefore = spark.read.parquet(s"$idx/codes").count()
     val batch = Similarity.upsertBatch(spark, SfDir)
@@ -90,7 +101,7 @@ class IvfPqUpsertSpec extends SparkTestBase {
     assert(batchIds.nonEmpty)
     val fpBefore = before.values.toSeq.distinct.sorted
       .map(c => c -> fsFingerprint(s"$idx/codes/cell=$c")).toMap
-    Similarity.upsertIvfPqIndex(spark, idx, batch)
+    VectorIndex.upsertIvfPqIndex(spark, idx, batch)
     val after = ledgerMap(idx)
     val moved = batchIds.filter(id =>
       before.get(id).exists(c => after.get(id).exists(_ != c)))
@@ -120,7 +131,7 @@ class IvfPqUpsertSpec extends SparkTestBase {
 
   test("a cell emptied by the upsert loses its partition directory") {
     val idx = scratch("ivfpq_upsert_empty")
-    Similarity.buildIvfPqIndex(spark, SfDir, idx)
+    VectorIndex.buildIvfPqIndex(spark, SfDir, idx)
     val ledger = ledgerMap(idx)
     val cellDirs = new File(s"$idx/codes").listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("cell="))
@@ -138,7 +149,7 @@ class IvfPqUpsertSpec extends SparkTestBase {
     val batch = victims.crossJoin(
       Tables(spark, SfDir).embeddings
         .filter(col("vec_id") === donorId).select("embedding"))
-    val touched = Similarity.upsertIvfPqIndex(spark, idx, batch)
+    val touched = VectorIndex.upsertIvfPqIndex(spark, idx, batch)
     assert(touched.contains(c0) && touched.contains(donorCell))
     assert(!new File(s"$idx/codes/cell=$c0").exists(),
       "an emptied partition must be deleted, not left as a stale directory")
@@ -153,7 +164,7 @@ class IvfPqUpsertSpec extends SparkTestBase {
 
   test("a guard-rejected update DELETES the stale row from codes and ledger") {
     val idx = scratch("ivfpq_upsert_guard")
-    Similarity.buildIvfPqIndex(spark, SfDir, idx)
+    VectorIndex.buildIvfPqIndex(spark, SfDir, idx)
     val ledger = ledgerMap(idx)
     val victim = ledger.keys.max
     val oldCell = ledger(victim)
@@ -162,7 +173,7 @@ class IvfPqUpsertSpec extends SparkTestBase {
     // post-update corpus drops it (pqCorpus guard), so the upsert must too
     val batch = Seq((victim,
       Seq.fill(graft.functions.VectorLsh.Dim)(0.0f))).toDF("vec_id", "embedding")
-    val touched = Similarity.upsertIvfPqIndex(spark, idx, batch)
+    val touched = VectorIndex.upsertIvfPqIndex(spark, idx, batch)
     assert(touched == Seq(oldCell),
       "the delete's only touched cell is the victim's old one")
     assert(spark.read.parquet(s"$idx/codes")
@@ -174,25 +185,25 @@ class IvfPqUpsertSpec extends SparkTestBase {
     // other ids, so dynamic overwrite rewrites it). A delete batch
     // covering a bucket's ENTIRE id population would keep that bucket's
     // rows on disk — the documented, deliberate ledger/codes truncation
-    // asymmetry (see mergeLedger's scaladoc): a stale ledger row cannot
+    // asymmetry (see VectorIndex.mergePartitions): a stale ledger row cannot
     // change an answer, only widen a later touched set.
   }
 
   test("re-landing the same upsert batch is content-idempotent") {
     val idx = scratch("ivfpq_upsert_idem")
-    Similarity.buildIvfPqIndex(spark, SfDir, idx)
+    VectorIndex.buildIvfPqIndex(spark, SfDir, idx)
     val batch = Similarity.upsertBatch(spark, SfDir)
-    val t1 = Similarity.upsertIvfPqIndex(spark, idx, batch)
+    val t1 = VectorIndex.upsertIvfPqIndex(spark, idx, batch)
     val once = codesRows(idx)
     val onceLedger = ledgerMap(idx)
-    val probeOnce = norm(Similarity.probeIvfPqIndex(spark, SfDir, idx, nprobe = 2))
-    val t2 = Similarity.upsertIvfPqIndex(spark, idx, batch)
+    val probeOnce = norm(VectorIndex.probeIvfPqIndex(spark, SfDir, idx, nprobe = 2))
+    val t2 = VectorIndex.upsertIvfPqIndex(spark, idx, batch)
     assert(t2.toSet.subsetOf(t1.toSet),
       "a re-landed upsert touches at most the first landing's cells " +
         "(the ledger already points the ids at their new homes)")
     assert(codesRows(idx) == once && ledgerMap(idx) == onceLedger,
       "a re-landed batch must not change the artifact's content")
-    assert(norm(Similarity.probeIvfPqIndex(spark, SfDir, idx, nprobe = 2)) == probeOnce)
+    assert(norm(VectorIndex.probeIvfPqIndex(spark, SfDir, idx, nprobe = 2)) == probeOnce)
   }
 
   test("build and append keep ledger == codes projection; a deleted ledger self-heals") {
@@ -203,14 +214,14 @@ class IvfPqUpsertSpec extends SparkTestBase {
       "the ledger must be written hash-bucket-partitioned")
     assert(ledgerMap(idx) == codesProjection(idx),
       "build must write ledger == codes projection")
-    Similarity.upsertIvfPqIndex(spark, idx,
+    VectorIndex.upsertIvfPqIndex(spark, idx,
       Similarity.appendDelta(spark, SfDir))
     assert(ledgerMap(idx) == codesProjection(idx),
       "an insert batch must keep ledger == codes projection")
     // self-heal (the documented crash repair): ledger removed, the next
     // upsert re-derives it from codes before its old-cell lookup
     graft.core.FsUtil.deleteRecursively(s"$idx/ledger")
-    val touched = Similarity.upsertIvfPqIndex(spark, idx,
+    val touched = VectorIndex.upsertIvfPqIndex(spark, idx,
       Similarity.upsertBatch(spark, SfDir))
     assert(touched.nonEmpty && ledgerMap(idx) == codesProjection(idx),
       "after the self-heal and the upsert the invariant must hold again")
@@ -218,9 +229,9 @@ class IvfPqUpsertSpec extends SparkTestBase {
 
   test("the registry twin serves the explicitly composed artifact") {
     val idx = scratch("ivfpq_upsert_twin")
-    Similarity.buildIvfPqIndex(spark, SfDir, idx)
-    Similarity.upsertIvfPqIndex(spark, idx, Similarity.upsertBatch(spark, SfDir))
-    val explicit = norm(Similarity.probeIvfPqIndex(spark, SfDir, idx, nprobe = 2))
+    VectorIndex.buildIvfPqIndex(spark, SfDir, idx)
+    VectorIndex.upsertIvfPqIndex(spark, idx, Similarity.upsertBatch(spark, SfDir))
+    val explicit = norm(VectorIndex.probeIvfPqIndex(spark, SfDir, idx, nprobe = 2))
     assert(norm(Similarity.ivfPqUpsertTopK(spark, SfDir)) == explicit)
   }
 
@@ -233,15 +244,15 @@ class IvfPqUpsertSpec extends SparkTestBase {
     val idxA = scratch("ivfpq_insert_eq_a")
     val idxR = scratch("ivfpq_insert_eq_r")
     Similarity.buildIvfPqBaseIndex(spark, SfDir, idxA)
-    val touched = Similarity.upsertIvfPqIndex(spark, idxA,
+    val touched = VectorIndex.upsertIvfPqIndex(spark, idxA,
       Similarity.appendDelta(spark, SfDir))
     assert(touched.nonEmpty, "the fixture delta must land somewhere")
     // frozen-quantizer REBUILD: the whole union corpus recoded under the
     // base index's (frozen) quantizers
     Similarity.buildIvfPqBaseIndex(spark, SfDir, idxR)
-    Similarity.recodeIvfPqIndex(spark, idxR, unionCorpus)
-    val a = norm(Similarity.probeIvfPqIndex(spark, SfDir, idxA, nprobe = 2))
-    val r = norm(Similarity.probeIvfPqIndex(spark, SfDir, idxR, nprobe = 2))
+    VectorIndex.recodeIvfPqIndex(spark, idxR, unionCorpus)
+    val a = norm(VectorIndex.probeIvfPqIndex(spark, SfDir, idxA, nprobe = 2))
+    val r = norm(VectorIndex.probeIvfPqIndex(spark, SfDir, idxR, nprobe = 2))
     assert(a.nonEmpty && a == r,
       "a maintained index must serve exactly what a frozen-quantizer rebuild serves")
     assert(codesRows(idxA) == codesRows(idxR) && ledgerMap(idxA) == ledgerMap(idxR),
@@ -252,14 +263,14 @@ class IvfPqUpsertSpec extends SparkTestBase {
     val idx = scratch("ivfpq_insert_idem")
     Similarity.buildIvfPqBaseIndex(spark, SfDir, idx)
     val delta = Similarity.appendDelta(spark, SfDir)
-    val t1 = Similarity.upsertIvfPqIndex(spark, idx, delta)
-    val once = norm(Similarity.probeIvfPqIndex(spark, SfDir, idx, nprobe = 2))
+    val t1 = VectorIndex.upsertIvfPqIndex(spark, idx, delta)
+    val once = norm(VectorIndex.probeIvfPqIndex(spark, SfDir, idx, nprobe = 2))
     val codesOnce = spark.read.parquet(s"$idx/codes").count()
-    val t2 = Similarity.upsertIvfPqIndex(spark, idx, delta)
+    val t2 = VectorIndex.upsertIvfPqIndex(spark, idx, delta)
     assert(t2 == t1, "a redelivered batch must touch the same cells")
     assert(spark.read.parquet(s"$idx/codes").count() == codesOnce,
       "a redelivered batch must not duplicate any row (upsert semantics)")
-    assert(norm(Similarity.probeIvfPqIndex(spark, SfDir, idx, nprobe = 2)) == once)
+    assert(norm(VectorIndex.probeIvfPqIndex(spark, SfDir, idx, nprobe = 2)) == once)
   }
 
   test("insert batch: one vector rewrites exactly its cell partition") {
@@ -271,7 +282,7 @@ class IvfPqUpsertSpec extends SparkTestBase {
     assert(cellDirs.size > 1, "fixture must spread the base over >1 cell")
     val before = cellDirs.map(d => d -> fsFingerprint(s"$idx/codes/$d")).toMap
     val one = Similarity.appendDelta(spark, SfDir).limit(1)
-    val touched = Similarity.upsertIvfPqIndex(spark, idx, one)
+    val touched = VectorIndex.upsertIvfPqIndex(spark, idx, one)
     assert(touched.size == 1, s"one vector must touch one cell, got $touched")
     val touchedDir = s"cell=${touched.head}"
     cellDirs.filterNot(_ == touchedDir).foreach { d =>
@@ -291,7 +302,7 @@ class IvfPqUpsertSpec extends SparkTestBase {
     intercept[Throwable] {
       spark.read.parquet(s"$idx/codes").count()
     }
-    val touched = Similarity.upsertIvfPqIndex(spark, idx,
+    val touched = VectorIndex.upsertIvfPqIndex(spark, idx,
       Similarity.appendDelta(spark, SfDir))
     assert(touched.nonEmpty && !touched.contains(999L))
     // the poison survives the insert untouched — dynamic overwrite swapped
@@ -302,8 +313,8 @@ class IvfPqUpsertSpec extends SparkTestBase {
   test("insert batch: the n16 registry twin serves the explicitly composed artifact") {
     val idx = scratch("ivfpq_insert_twin")
     Similarity.buildIvfPqBaseIndex(spark, SfDir, idx)
-    Similarity.upsertIvfPqIndex(spark, idx, Similarity.appendDelta(spark, SfDir))
-    val explicit = norm(Similarity.probeIvfPqIndex(spark, SfDir, idx, nprobe = 2))
+    VectorIndex.upsertIvfPqIndex(spark, idx, Similarity.appendDelta(spark, SfDir))
+    val explicit = norm(VectorIndex.probeIvfPqIndex(spark, SfDir, idx, nprobe = 2))
     assert(norm(Similarity.ivfPqAppendTopK(spark, SfDir)) == explicit)
   }
 

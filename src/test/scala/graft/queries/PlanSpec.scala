@@ -8,6 +8,7 @@ import org.apache.spark.sql.graft.ListenerBusShim
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkTestBase
+import graft.operators.VectorIndex
 
 /** Physical-plan contracts for the 100 TB design claims: these assert the
   * SHAPE of the plan, not its output — a correctness-preserving regression
@@ -270,6 +271,37 @@ class PlanSpec extends SparkTestBase {
       ListenerBusShim.drain(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(listener)
     assert(jobs.get <= 26, s"d14 ran ${jobs.get} jobs")
+  }
+
+  test("coarse quantizer (n4, d11, n12, n7, st16): one cold sequence at sf0.001 trains it once") {
+    // n4 trains the memoized quantizer (seed collect + Lloyd aggregates);
+    // every later call in the sequence shares it, so a consumer that
+    // retrains or keys its frame apart shows here as extra jobs
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    def jobsOf(f: => Unit): Int = {
+      ListenerBusShim.drain(spark.sparkContext)
+      jobs.set(0)
+      f
+      ListenerBusShim.drain(spark.sparkContext)
+      jobs.get
+    }
+    val idx = scratch("plan_quantizer_jobs")
+    VectorIndex.clearMemos()
+    spark.sparkContext.addSparkListener(listener)
+    val counts = try Seq(
+      "n4" -> jobsOf(Similarity.ivfTopK(spark, sf).collect()),
+      "d11" -> jobsOf(VectorIndex.semanticCells(spark, sf).collect()),
+      "n12" -> jobsOf(Similarity.ivfPqTopK(spark, sf).collect()),
+      "n7" -> jobsOf(VectorIndex.buildIvfIndex(spark, sf, idx)),
+      "st16" -> jobsOf(VectorIndex.assignCellsToStream(spark, sf,
+        graft.core.Tables(spark, sf).embeddings).collect()))
+    finally spark.sparkContext.removeSparkListener(listener)
+    // n4 pays the seed collect and both Lloyd aggregates; d11, n12, n7
+    // and st16 pay only their own work
+    assert(counts === Seq("n4" -> 16, "d11" -> 3, "n12" -> 22, "n7" -> 4, "st16" -> 3))
   }
 
   test("tf-idf (t9) tokenizes once: the df branch reuses the (doc_id, term) exchange") {

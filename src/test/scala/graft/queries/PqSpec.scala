@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
+import graft.operators.VectorIndex
 
 /** Product-quantization harness (n10 encode, n11 ADC top-k): structural
   * invariants of the code table, Lloyd refinement actually reducing
@@ -15,13 +16,12 @@ class PqSpec extends SparkTestBase {
 
   test("n10 codes: M rows per vector, codes in the seed-cid set, mse finite") {
     val codes = Similarity.pqCodes(spark, sf).cache()
-    val e = Similarity.pqCorpus(spark, sf)
-    val book = Similarity.pqBookFor(spark, sf, e)
+    val book = VectorIndex.pqTrained(VectorIndex.corpus(spark, sf))._2
     try {
       val perVec = codes.groupBy("vec_id").count()
         .agg(min("count"), max("count")).head()
-      assert(perVec.getLong(0) === Similarity.PqM.toLong)
-      assert(perVec.getLong(1) === Similarity.PqM.toLong)
+      assert(perVec.getLong(0) === VectorIndex.PqM.toLong)
+      assert(perVec.getLong(1) === VectorIndex.PqM.toLong)
       val cidSet = book.cids.toSet
       val badCode = codes.filter(!col("code").isin(cidSet.toSeq.map(Long.box): _*))
       assert(badCode.count() === 0, "code outside the codeword-id universe")
@@ -36,13 +36,13 @@ class PqSpec extends SparkTestBase {
     // cross-engine tie determinism: each assign+mean round minimizes the
     // summed squared error for the previous codebook, so total error is
     // non-increasing across rounds (allow 1e-6 slack for the rounding).
-    val e = Similarity.pqCorpus(spark, sf).cache()
+    val e = VectorIndex.pqCorpus(spark, sf).cache()
     try {
-      val sub = Similarity.pqSub(e).cache()
+      val sub = VectorIndex.pqSub(e).cache()
       try {
-        def totalErr(book: Similarity.PqBook): Double = {
+        def totalErr(book: VectorIndex.PqBook): Double = {
           val cb = book.cids.indices.flatMap { ci =>
-            (0 until Similarity.PqM).map(m =>
+            (0 until VectorIndex.PqM).map(m =>
               (m.toLong, book.cids(ci), book.cbs(m)(ci).toSeq))
           }
           import spark.implicits._
@@ -57,9 +57,9 @@ class PqSpec extends SparkTestBase {
                 |  CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)""".stripMargin).as("err"))
             .agg(sum("err")).head().getDouble(0)
         }
-        val seeds = Similarity.pqSeeds(e)
-        val r1 = Similarity.pqRound(sub, seeds)
-        val r2 = Similarity.pqRound(sub, r1)
+        val seeds = VectorIndex.pqSeeds(e)
+        val r1 = VectorIndex.pqRound(sub, seeds)
+        val r2 = VectorIndex.pqRound(sub, r1)
         val (e0, e1, e2) = (totalErr(seeds), totalErr(r1), totalErr(r2))
         info(f"total sq reconstruction error: seeds=$e0%.4f r1=$e1%.4f r2=$e2%.4f")
         assert(e1 <= e0 + 1e-6, f"round 1 increased error: $e1%.6f > $e0%.6f")
@@ -82,7 +82,7 @@ class PqSpec extends SparkTestBase {
   test("n11 ADC recall@5 vs n1 exact; plan uses the heap aggregate, no window") {
     val exact = Similarity.bruteForceTopK(spark, sf)
     val adc = Similarity.pqAdcTopK(spark, sf)
-    val r = Similarity.recallAtK(exact, adc)
+    val r = AnnRecall.recallAtK(exact, adc)
     info(f"recall@5: n11_pq_adc=$r%.3f (sf0.01, M=4 K=16 on iid-random 64d)")
     // NOTE: L2-ADC ranking vs a cosine exact baseline on iid-random
     // vectors is the hostile floor for PQ (norms vary, 4 sub-codebooks of
@@ -101,8 +101,8 @@ class PqSpec extends SparkTestBase {
     val exact = Similarity.bruteForceTopK(spark, sf)
     val adc = Similarity.pqAdcTopK(spark, sf)
     val ivfpq = Similarity.ivfPqTopK(spark, sf)
-    val rAdc = Similarity.recallAtK(exact, adc)
-    val rIvfPq = Similarity.recallAtK(exact, ivfpq)
+    val rAdc = AnnRecall.recallAtK(exact, adc)
+    val rIvfPq = AnnRecall.recallAtK(exact, ivfpq)
     info(f"recall@5: n12_ivfpq=$rIvfPq%.3f vs n11_adc=$rAdc%.3f (sf0.01)")
     // NOTE: recall vs the EXACT baseline is NOT monotone under cell
     // pruning — the prune also removes ADC FALSE POSITIVES (candidates
@@ -165,7 +165,7 @@ class PqSpec extends SparkTestBase {
         joined.count().toDouble
     }
     val exact = Similarity.bruteForceTopK(spark, dir)
-    val rAdc = Similarity.recallAtK(exact, Similarity.pqAdcTopK(spark, dir))
+    val rAdc = AnnRecall.recallAtK(exact, Similarity.pqAdcTopK(spark, dir))
     val aAdc = blobAgreement(Similarity.pqAdcTopK(spark, dir))
     val aIvfPq = blobAgreement(Similarity.ivfPqTopK(spark, dir))
     info(f"clustered: exact-id recall@5=$rAdc%.3f, blob agreement " +
@@ -181,7 +181,7 @@ class PqSpec extends SparkTestBase {
     // n14 closes the measured gap: the same cell-pruned ADC stage, pooled
     // at RescorePool and exact-cosine re-ranked, must recover (nearly)
     // the whole true top-k — the production recipe, now pinned as a query
-    val rRescore = Similarity.recallAtK(exact,
+    val rRescore = AnnRecall.recallAtK(exact,
       Similarity.ivfPqRescoreTopK(spark, dir))
     info(f"clustered: n14_ivfpq_rescore exact-id recall@5=$rRescore%.3f " +
       f"(vs pure ADC $rAdc%.3f)")

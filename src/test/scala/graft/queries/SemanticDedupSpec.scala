@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
+import graft.operators.VectorIndex
 
 /** d11 semantic dedup: the drop list is non-trivial on the fixture, every
   * drop is witnessed at or above the threshold, and the SURVIVOR invariant
@@ -25,7 +26,7 @@ class SemanticDedupSpec extends SparkTestBase {
     val e = spark.read.parquet(s"$sf/embeddings.parquet")
       .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
       .withColumn("norm", sqrt(expr("aggregate(zip_with(v, v, (x, y) -> x * y), 0D, (s, x) -> s + x)")))
-      .join(Similarity.semanticCells(spark, sf), Seq("vec_id"))
+      .join(VectorIndex.semanticCells(spark, sf), Seq("vec_id"))
       .filter(!col("vec_id").isin(dropIds.toSeq: _*))
     val a = e.select(col("vec_id").as("id1"), col("v").as("v1"),
       col("norm").as("n1"), col("cell"))

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
+import graft.operators.VectorIndex
 
 /** Pins the two round-8 selection/sketch operators.
   *
@@ -106,7 +107,7 @@ class SketchSamplingSpec extends SparkTestBase {
     val again = Sampling.clusterCap(spark, SfDir).collect().map(_.getLong(0))
     assert(got.collect().map(_.getLong(0)).toSeq === again.toSeq)
     // any cell at or under the cap survives intact (the cap only prunes)
-    val cellSizes = Similarity.semanticCells(spark, SfDir)
+    val cellSizes = VectorIndex.semanticCells(spark, SfDir)
       .groupBy("cell").count().collect()
       .map(r => r.get(0) -> r.getLong(1)).toMap
     cellSizes.filter(_._2 <= Sampling.CapPerCell).foreach { case (cell, n) =>

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
 import graft.SparkTestBase
+import graft.operators.VectorIndex
 import graft.queries.{EventStreaming, Similarity}
 
 /** st16 streaming vector ingest under genuine multi-batch replay: the
@@ -27,7 +28,7 @@ class VectorIngestSpec extends SparkTestBase {
       (emb.filter(col("vec_id") % 3 === 2), s"$dir/f2.parquet", T0 + 120000L)
     ).foreach { case (df, dst, ts) => ReplayFixtures.writeOne(df, dst, ts) }
 
-    val assigned = Similarity.assignCellsToStream(spark, SfDir,
+    val assigned = VectorIndex.assignCellsToStream(spark, SfDir,
       DocumentStreams.readEmbeddings(
         spark, dir, glob = "*.parquet", maxFilesPerTrigger = Some(1)))
     val census = assigned.groupBy("cell").agg(
@@ -44,7 +45,7 @@ class VectorIngestSpec extends SparkTestBase {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
 
     // batch twin: the same assignment projection over the same zone
-    val batch = Similarity
+    val batch = VectorIndex
       .assignCellsToStream(spark, SfDir, // trains the same memoized quantizer
         spark.read.parquet(s"$SfDir/embeddings.parquet")
           .select("vec_id", "embedding"))
