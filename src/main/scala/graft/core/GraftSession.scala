@@ -12,6 +12,14 @@ import org.apache.spark.sql.SparkSession
   * skew-join splitting), dynamic partition overwrite (idempotent
   * per-partition rewrites mirroring the reference's `overwrite_partitions`
   * semantics, reference `data_cleaner/pnp-cleanerLambda.py:116`), UTC.
+  *
+  * A local session's `file:` filesystem is [[NioLocalFileSystem]] (and
+  * [[NioLocalFs]] for `FileContext`, the checkpoint logs): every
+  * zone of a local run is a `file:` path, and stock `LocalFileSystem`
+  * without the native libhadoop spawns a `chmod` process for each file,
+  * `.crc` and directory it creates. It is a static Hadoop conf of the
+  * builder, not one of [[sqlConfs]]: [[tune]] leaves the stores of a
+  * session built elsewhere alone.
   */
 object GraftSession {
 
@@ -74,6 +82,9 @@ object GraftSession {
       // one per app, so the test suite's tables never meet Bench's or Verify's
       .config("spark.sql.warehouse.dir", WorkDirs.target(s"warehouse/$appName"))
       .config("spark.ui.enabled", "false")
+      // `file:` writes set permissions in-process (see the object doc)
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NioLocalFs].getName)
     // extraConfs LAST so a caller's conf beats any factory default above
     // (builder semantics: later config() wins) — an extraConf overlapping
     // a default must take effect, not silently lose to the factory

@@ -132,7 +132,7 @@ object CleanJob {
     val spark = cleanedBatch.sparkSession
     val tmpRoot = new HPath(s"$cleanRoot.__merge_tmp")
     val livePath = new HPath(cleanRoot)
-    val fs = FileSystem.get(livePath.toUri, spark.sparkContext.hadoopConfiguration)
+    val fs = FileSystem.get(livePath.toUri, spark.sessionState.newHadoopConf())
     // restore any partition a previous crash left parked BEFORE reading the
     // zone or clearing the temp root — the parked copy may be the only one
     recoverParked(fs, tmpRoot, livePath)
@@ -244,7 +244,7 @@ object CleanJob {
     // scheme), and a local-only delete could never clear a remote orphan —
     // the LOCATION_ALREADY_EXISTS failure this exists to prevent
     val locPath = new org.apache.hadoop.fs.Path(loc)
-    locPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    locPath.getFileSystem(spark.sessionState.newHadoopConf())
       .delete(locPath, true)
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     df.write

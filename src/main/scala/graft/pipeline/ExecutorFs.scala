@@ -61,6 +61,12 @@ final class SerializableHadoopConf(@transient private var conf: Configuration)
   * bare executor-side `new Configuration()` is a silent-loss hazard. The
   * FileSystem handle is resolved once per partition (it is the per-scheme
   * cached instance, not per-row work).
+  *
+  * A `file:` root resolves to `graft.core.NioLocalFileSystem`, which the
+  * captured conf names (`GraftSession.local` sets `fs.file.impl`): stock
+  * `LocalFileSystem` sets each new file's, `.crc`'s and directory's
+  * permissions by running `chmod` when the native libhadoop is absent,
+  * which cost more than the write itself for one small page or crop.
   */
 private[pipeline] object ExecutorFs {
 

@@ -4,19 +4,30 @@ import java.awt.image.BufferedImage
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 
 import javax.imageio.{IIOImage, ImageIO, ImageWriteParam}
+import javax.imageio.stream.{MemoryCacheImageInputStream, MemoryCacheImageOutputStream}
 
 /** JVM-native image helpers for the crop path (P13; reference
   * `cropper/pnp-cropperLambda.py:85-97` uses PIL). javax.imageio ships with
   * the JDK, so — unlike the PDF renderer — this path is REAL, not stubbed.
   * Used from plain Scala UDFs: pixel decoding is inherently opaque to
   * Catalyst, so a UDF is the correct tool here (SURVEY §7.3).
+  *
+  * Every decode and encode streams through an in-memory cache: the
+  * `ImageIO` entry points that take a plain stream cache through a temp
+  * file under `java.io.tmpdir` per call while `ImageIO.getUseCache` is on
+  * (the JDK default, a JVM-wide switch this object leaves alone). Same
+  * bytes out, no file per image.
   */
 object ImageOps {
 
+  /** The decoded image, or None if no reader takes the bytes. */
+  private def decode(bytes: Array[Byte]): Option[BufferedImage] =
+    // read(ImageInputStream) closes the stream itself
+    Option(ImageIO.read(new MemoryCacheImageInputStream(new ByteArrayInputStream(bytes))))
+
   /** (width, height) of an encoded image, or None if undecodable. */
   def decodeDims(bytes: Array[Byte]): Option[(Int, Int)] =
-    Option(ImageIO.read(new ByteArrayInputStream(bytes)))
-      .map(i => (i.getWidth, i.getHeight))
+    decode(bytes).map(i => (i.getWidth, i.getHeight))
 
   /** Crop by float pixel coords (PIL-style truncation to int, clamped to
     * the image), re-encoded JPEG quality 90 (`pnp-cropperLambda.py:97`).
@@ -24,7 +35,7 @@ object ImageOps {
     */
   def cropJpeg(bytes: Array[Byte], left: Double, top: Double,
                right: Double, bottom: Double): Option[Array[Byte]] = {
-    Option(ImageIO.read(new ByteArrayInputStream(bytes))).flatMap { img =>
+    decode(bytes).flatMap { img =>
       val (w, h) = (img.getWidth, img.getHeight)
       val l = math.min(math.max(left.toInt, 0), w)
       val t = math.min(math.max(top.toInt, 0), h)
@@ -47,7 +58,7 @@ object ImageOps {
     * decode+render (JDK), not stubbed.
     */
   def resizeJpeg(bytes: Array[Byte], width: Int, height: Int): Option[Array[Byte]] =
-    Option(ImageIO.read(new ByteArrayInputStream(bytes))).map { img =>
+    decode(bytes).map { img =>
       val out = new BufferedImage(width, height, BufferedImage.TYPE_3BYTE_BGR)
       val g = out.createGraphics()
       try {
@@ -66,7 +77,7 @@ object ImageOps {
     * on the hash, never a pixel comparison.
     */
   def aHash(bytes: Array[Byte]): Option[Long] =
-    Option(ImageIO.read(new ByteArrayInputStream(bytes))).map { img =>
+    decode(bytes).map { img =>
       // pyramid-downscale by halving: one-step bilinear to 8x8 samples only
       // a 2x2 neighborhood per output pixel (point sampling on big images),
       // which would break hash stability under resizing — the property the
@@ -108,7 +119,7 @@ object ImageOps {
     params.setCompressionMode(ImageWriteParam.MODE_EXPLICIT)
     params.setCompressionQuality(quality)
     val out = new ByteArrayOutputStream()
-    val ios = ImageIO.createImageOutputStream(out)
+    val ios = new MemoryCacheImageOutputStream(out)
     try {
       writer.setOutput(ios)
       writer.write(null, new IIOImage(img, null, null), params)

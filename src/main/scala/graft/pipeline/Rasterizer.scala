@@ -5,6 +5,7 @@ import java.io.ByteArrayOutputStream
 import java.security.MessageDigest
 
 import javax.imageio.ImageIO
+import javax.imageio.stream.MemoryCacheImageOutputStream
 
 /** PDF→page-image rasterization (P14/G2; reference
   * `pdf_converter/gen_pdf_imgLambda.py:51-57` uses poppler via pdf2image).
@@ -62,7 +63,9 @@ object StubRasterizer extends PageRasterizer {
       g.fillRect(0, (pageIdx * 13) % PageHeight, PageWidth, 10)
     } finally g.dispose()
     val out = new ByteArrayOutputStream()
-    ImageIO.write(img, "jpg", out)
+    // an in-memory cache, not ImageIO's temp file per call (see ImageOps)
+    val ios = new MemoryCacheImageOutputStream(out)
+    try ImageIO.write(img, "jpg", ios) finally ios.close()
     out.toByteArray
   }
 }

@@ -370,7 +370,7 @@ object DocumentStreams {
     */
   private def requireFreshCheckpoint(spark: SparkSession, path: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     require(!fs.exists(p) || fs.listStatus(p).isEmpty,
       s"reseedCdc requires a FRESH checkpoint location, but $path is " +
         "non-empty: restarting from the old checkpoint would restore the " +

@@ -185,6 +185,21 @@ class CleanJobSpec extends SparkTestBase {
     assert(!Files.exists(Paths.get(s"$root.__merge_tmp")))
   }
 
+  test("mergeWriteClean swaps through the session's Hadoop conf, as its write does") {
+    // a scheme bound only in the session conf: Spark's merge write resolves
+    // it, so the swap that installs what the write wrote must resolve it too
+    val root = scratch("clean-merge-session-scheme")
+    val key = s"fs.${SessionSchemeFs.Scheme}.impl"
+    spark.conf.set(key, classOf[SessionSchemeFs].getName)
+    try {
+      val page1 = CleanJob.clean(CleanJob.readSilver(
+        spark, WorkDirs.fixture("silver/PnP/Gauteng/*/page_1.json")))
+      CleanJob.mergeWriteClean(page1, s"${SessionSchemeFs.Scheme}://$root")
+      assert(spark.read.parquet(root).count() === 4)
+      assert(!Files.exists(Paths.get(s"$root.__merge_tmp")))
+    } finally spark.conf.unset(key)
+  }
+
   test("schema drift: unknown extra keys are ignored, known keys still conform (§7.4 item 6)") {
     val silver = scratch("clean-drift")
     val dir = Paths.get(s"$silver/Gauteng/13_February_-_15_February_2026")
@@ -256,4 +271,16 @@ class CleanJobSpec extends SparkTestBase {
     // the live (albeit foreign-schema) data survived the refusal
     assert(spark.read.parquet(cleanRoot).count() === 1)
   }
+}
+
+/** The raw local filesystem under a scheme of its own, so a test can bind
+  * a scheme in one session's conf and nowhere else.
+  */
+class SessionSchemeFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create(s"${SessionSchemeFs.Scheme}:///")
+  override def getScheme: String = SessionSchemeFs.Scheme
+}
+
+object SessionSchemeFs {
+  val Scheme = "graftsession"
 }

@@ -3,9 +3,11 @@ package graft.pipeline
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, ObjectInputStream, ObjectOutputStream}
 
 import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{LocalFileSystem, Path}
 import org.apache.spark.sql.Row
 
 import graft.SparkTestBase
+import graft.core.{NioLocalFileSystem, NioRawLocalFileSystem}
 
 /** Pins the executor-sink configuration contract: the sinks resolve
   * filesystems from a serialized snapshot of the DRIVER's effective
@@ -27,6 +29,24 @@ class ExecutorFsSpec extends SparkTestBase {
       // this is exactly what the sinks did before the capture fix
       assert(new Configuration().get(key) === null)
     } finally spark.sparkContext.hadoopConfiguration.unset(key)
+  }
+
+  test("file: resolves to NioLocalFileSystem on the driver and through the shipped conf") {
+    val probe = new Path(s"file://${scratch("executorfs-impl")}")
+    val shipped = {
+      val bos = new ByteArrayOutputStream()
+      val oos = new ObjectOutputStream(bos)
+      oos.writeObject(ExecutorFs.capture(spark))
+      oos.close()
+      new ObjectInputStream(new ByteArrayInputStream(bos.toByteArray))
+        .readObject().asInstanceOf[SerializableHadoopConf].value
+    }
+    for (conf <- Seq(spark.sessionState.newHadoopConf(), shipped)) {
+      val fs = probe.getFileSystem(conf)
+      assert(fs.getClass === classOf[NioLocalFileSystem])
+      // the checksummed wrapper stays: only the raw layer is replaced
+      assert(fs.asInstanceOf[LocalFileSystem].getRaw.isInstanceOf[NioRawLocalFileSystem])
+    }
   }
 
   test("SerializableHadoopConf survives the java-serialization trip into a closure") {

@@ -11,7 +11,9 @@ nodes read a path containing scanNeedle (default "documents.parquet").
 
 --jobs prints one line per job instead, in submission order: the driver
 gap since the previous job ended (0 when the jobs overlap; the first job
-has none), the job's duration, the number of tasks it ran, and the first
+has none), the job's duration, the number of tasks it ran, its wait (the
+first task's launch minus the job's submission: time queued for a task
+slot, or spent in the scheduler; `-` for a job with no task), and the first
 `graft.` (or benchmark harness `perfbench.`) frame of its result stage's
 call site, which names the line of code that started the job. A job that
 adaptive execution submits from its own thread, and a zero-partition job
@@ -67,6 +69,7 @@ def jobs_timeline(path: str) -> None:
                 eid = props.get("spark.sql.execution.id")
                 jobs[ev["Job ID"]] = {
                     "start": ev["Submission Time"], "end": None, "tasks": 0,
+                    "launch": None,
                     "stages": set(ev["Stage IDs"]),
                     "frame": graft_frame(result.get("Details", "")),
                     "exec": None if eid is None else int(eid),
@@ -78,10 +81,14 @@ def jobs_timeline(path: str) -> None:
             elif kind == "SparkListenerTaskEnd":
                 # a task belongs to the latest running job that lists its stage
                 for jid in reversed(running):
-                    if ev["Stage ID"] in jobs[jid]["stages"]:
-                        jobs[jid]["tasks"] += 1
+                    j = jobs[jid]
+                    if ev["Stage ID"] in j["stages"]:
+                        j["tasks"] += 1
+                        t = ev["Task Info"]["Launch Time"]
+                        j["launch"] = t if j["launch"] is None else min(j["launch"], t)
                         break
-    print(f"{'job':>4} {'gap_s':>7} {'dur_s':>7} {'tasks':>5}  first graft frame")
+    print(f"{'job':>4} {'gap_s':>7} {'dur_s':>7} {'tasks':>5} {'wait_s':>7}  "
+          "first graft frame")
     prev_end, gaps, durs = None, 0.0, 0.0
     for jid in sorted(jobs, key=lambda j: (jobs[j]["start"], j)):
         j = jobs[jid]
@@ -94,8 +101,9 @@ def jobs_timeline(path: str) -> None:
         gap = None if prev_end is None else max(j["start"] - prev_end, 0) / 1000.0
         gaps += gap or 0.0
         durs += (end - j["start"]) / 1000.0
+        wait = "-" if j["launch"] is None else f"{(j['launch'] - j['start']) / 1000.0:.3f}"
         print(f"{jid:>4} {'-' if gap is None else f'{gap:.3f}':>7} "
-              f"{(end - j['start']) / 1000.0:>7.3f} {j['tasks']:>5}  {frame}")
+              f"{(end - j['start']) / 1000.0:>7.3f} {j['tasks']:>5} {wait:>7}  {frame}")
         prev_end = end if prev_end is None else max(prev_end, end)
     wall = (prev_end - min(j["start"] for j in jobs.values())) / 1000.0 if jobs else 0.0
     print(f"jobs {len(jobs)}, first submission to last end {wall:.3f} s, "
